@@ -9,8 +9,9 @@ The reference exposes three distance functions over VECTOR columns
                                    ORDER BY it ascending)
   ``inner_product``                plain dot product (no negation)
 
-All are built from ``zip_with`` + ``aggregate`` higher-order functions, which
-stay inside whole-stage codegen on the JVM — this is the 100 TB-safe hot path
+All are built from ``zip_with`` + ``aggregate`` higher-order functions (the
+fold-exact Column folds of ``bustub_vectordb_spark.fold``), which stay
+inside whole-stage codegen on the JVM — this is the 100 TB-safe hot path
 (an equivalent Python UDF would be ~100x slower and break pushdown).
 
 Inputs are cast to array<double> so float32 embedding columns and double
@@ -24,6 +25,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from ..fold import col_dot, col_l2_sq, col_norm_sq
 
 ColumnOrName = Column | str
 
@@ -43,29 +46,16 @@ def vec_lit(values: Sequence[float]) -> Column:
 
 def inner_product(a: ColumnOrName | Sequence[float], b: ColumnOrName | Sequence[float]) -> Column:
     """Dot product (ref vector_expression.h:33-39)."""
-    a, b = _as_double_array(a), _as_double_array(b)
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
+    return col_dot(_as_double_array(a), _as_double_array(b))
 
 
 def l2_norm(a: ColumnOrName | Sequence[float]) -> Column:
-    a = _as_double_array(a)
-    return F.sqrt(
-        F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v)
-    )
+    return F.sqrt(col_norm_sq(_as_double_array(a)))
 
 
 def l2_dist(a: ColumnOrName | Sequence[float], b: ColumnOrName | Sequence[float]) -> Column:
     """Euclidean distance, the ``<->`` operator (ref vector_expression.h:17-31)."""
-    a, b = _as_double_array(a), _as_double_array(b)
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
+    return F.sqrt(col_l2_sq(_as_double_array(a), _as_double_array(b)))
 
 
 def cosine_similarity(
@@ -98,7 +88,7 @@ def embedding_flags(vec: ColumnOrName, expected_dim: int) -> Column:
     nonfinite = F.exists(
         v, lambda x: x.isNull() | F.isnan(x) | (F.abs(x) == float("inf"))
     )
-    sq = F.aggregate(F.transform(v, lambda x: x * x), F.lit(0.0), lambda s, x: s + x)
+    sq = col_norm_sq(v)
     return F.struct(
         v.isNull().alias("is_null"),
         (~v.isNull() & (F.size(v) != expected_dim)).alias("wrong_dim"),

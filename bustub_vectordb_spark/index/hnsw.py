@@ -16,12 +16,11 @@ Spark's execution model. The engine therefore offers two modes:
     dimension tables / ≤ a few million vectors. The finished graph is
     persisted as DataFrames (vertices + per-layer edge lists) so probes and
     downstream jobs are distributed even though the build was not.
-  * ``build_partitioned`` — scale mode: each Spark partition builds its own
-    subgraph via ``mapInPandas`` (Arrow batches), probes search every
-    subgraph and merge top-k. Recall stays high (each subgraph is an
-    independent HNSW over a random shard) and the build parallelizes
-    linearly; this is the standard sharded-ANN design used at 100 TB, at the
-    cost of probe work ∝ #shards.
+  * ``build_routed`` — scale mode: coarse k-means centroids route each
+    vector to a spatially coherent shard, every shard builds its own graph
+    in parallel (``applyInPandas``), and a probe searches only the
+    ``n_probe`` shards nearest the query, merging their top-k — the
+    IVF-over-HNSW layering FAISS and SPANN-style systems use at scale.
 
 Batch search (``search_batch``) broadcasts the graph and runs mapInPandas
 over the query DataFrame — Arrow transfer, no per-row Python overhead.
@@ -35,6 +34,8 @@ import random
 from dataclasses import dataclass, field
 
 import numpy as np
+
+from .. import fold
 
 
 def _rotate_rows_exact(mat: np.ndarray, rot: np.ndarray) -> np.ndarray:
@@ -109,38 +110,6 @@ def _pin_cpu_groups(df, *keys):
 _BITS256 = np.unpackbits(
     np.arange(256, dtype=np.uint8)[:, None], axis=1
 ).astype(np.float64)
-
-
-class _LazyWalkTable:
-    """Frontier-time LUT walk distances for quantized graphs ABOVE the
-    full-table gate (VERDICT r12 #3: the 1.2M merged serving graphs fell
-    back to the decode-heavy per-batch ``_walk_dists``). Implements
-    exactly the read API the walks use — fancy indexing by a list of
-    vertex indexes — and computes each request through the same
-    per-query LUT gathers as the full-table branch, in the same
-    accumulation order, so a vertex's walk distance is bit-identical
-    whichever side of the gate a graph falls on; only the cost model
-    changes (O(|idxs|·m) per call, no n-sized pass or allocation)."""
-
-    __slots__ = ("_ev",)
-
-    def __init__(self, ev):
-        self._ev = ev
-
-    def __getitem__(self, idxs):
-        return self._ev(np.asarray(idxs, dtype=np.int64))
-
-
-def _one_dist(dist: str, a, b) -> float:
-    """Single-pair distance in index-internal orientation (smaller = nearer)."""
-    if dist == "l2":
-        return float(math.dist(a, b))
-    dot = float(np.dot(a, b))
-    if dist == "ip":
-        return -dot
-    na = float(np.linalg.norm(a)) or 1e-300
-    nb = float(np.linalg.norm(b)) or 1e-300
-    return -dot / (na * nb)
 
 
 class _PackedAdj:
@@ -365,9 +334,7 @@ class _Graph:
         else:
             self.codes = self._encode_sq8(self.vecs)
         self.vecs = None
-        dec = self._mat_rows(slice(None))
-        self._norms = np.maximum(np.linalg.norm(dec, axis=1), 1e-300)
-        self._norms_sq = (dec * dec).sum(axis=1)
+        self._refresh_norms()
 
     def _encode_bq(self, mat: np.ndarray) -> np.ndarray:
         if getattr(self, "bq_rot", None) is not None:
@@ -427,9 +394,7 @@ class _Graph:
         else:
             self.bq_codes = self._encode_bq(self.vecs)
         self.vecs = None
-        dec = self._mat_rows(slice(None))
-        self._norms = np.maximum(np.linalg.norm(dec, axis=1), 1e-300)
-        self._norms_sq = (dec * dec).sum(axis=1)
+        self._refresh_norms()
 
     def _encode_pq(self, mat: np.ndarray, cells: np.ndarray | None = None) -> np.ndarray:
         """Per-subspace nearest-codebook-centroid codes (first-min ties) —
@@ -458,11 +423,7 @@ class _Graph:
         cents = self.pq_centers
         if len(cents) == 1:
             return np.zeros(len(mat), dtype=np.int64)
-        d = np.zeros((len(mat), len(cents)), dtype=np.float64)
-        for j in range(mat.shape[1]):
-            diff = mat[:, j : j + 1] - cents[:, j]
-            d += diff * diff
-        return np.argmin(d, axis=1)
+        return np.argmin(fold.l2_sq_pairwise(mat, cents), axis=1)
 
     def quantize_pq(self, books, bounds, centers=None) -> None:
         """Swap the float64 matrix for product-quantization codes: with
@@ -522,15 +483,28 @@ class _Graph:
             else:
                 self.pq_codes = self._encode_pq(self.vecs)
         self.vecs = None
+        self._refresh_norms()
+
+    # -- core primitives (paper Alg. 2/3/5) -------------------------------
+    def _row(self, idx: int) -> np.ndarray:
+        # float graphs hand out a VIEW of the stored row (the buffer every
+        # BLAS walk kernel has always seen); quantized graphs decode it
+        return self.vecs[idx] if self.vecs is not None else self._mat_rows([idx])[0]
+
+    def _refresh_norms(self) -> None:
         dec = self._mat_rows(slice(None))
         self._norms = np.maximum(np.linalg.norm(dec, axis=1), 1e-300)
         self._norms_sq = (dec * dec).sum(axis=1)
 
-    # -- core primitives (paper Alg. 2/3/5) -------------------------------
+    def _sq_norms(self) -> np.ndarray:
+        if getattr(self, "_norms_sq", None) is None:  # pre-upgrade pickles
+            self._refresh_norms()
+        return self._norms_sq
+
     def _dist_many(self, q: np.ndarray, idxs: list[int]) -> np.ndarray:
         """RETURNED distances q→vecs[idxs] — the values surfaced by
-        search(), computed FOLD-EXACTLY (per-dim sequential accumulation,
-        vectorized across the ≤k result rows).
+        search(), computed FOLD-EXACTLY (fold.py: per-dim sequential
+        accumulation, vectorized across the ≤k result rows).
 
         Not BLAS: a matvec's summation order depends on the matrix
         buffer's alignment, and the blob matrices are allocated by
@@ -541,59 +515,42 @@ class _Graph:
         reduction order to vary, self-distances are exactly 0 by
         construction, and the offline replays call this same function.
         Cost is k×dim elementwise ops once per search — negligible next
-        to the walk (_walk_dists stays BLAS: its values only steer the
+        to the walk (walk distances stay BLAS: their values only steer the
         beam, where a 1-ulp flip is possible in principle but has never
         been observed to change membership; the RETURNED values are the
         oracle-compared surface and are now deterministic)."""
-        m = self._mat_rows(idxs) if self.vecs is None else self.vecs[idxs]
+        m = self._mat_rows(idxs)
         if self.dist == "l2":
-            d2 = np.zeros(len(m), dtype=np.float64)
-            for j in range(m.shape[1] if len(m) else 0):
-                diff = m[:, j] - q[j]
-                d2 = d2 + diff * diff
-            return np.sqrt(d2)
-        dots = np.zeros(len(m), dtype=np.float64)
-        for j in range(m.shape[1] if len(m) else 0):
-            dots = dots + m[:, j] * q[j]
+            return np.sqrt(fold.l2_sq_rows(m, q))
+        dots = fold.dot_rows(m, q)
         if self.dist == "ip":
             return -dots
         qn = float(np.linalg.norm(q)) or 1e-300
         return -dots / (self._norms[idxs] * qn)
 
-    def _walk_dists(self, q: np.ndarray, idxs: list[int], qq: float) -> np.ndarray:
-        """WALK-ordering distances: for l2 this is the SQUARED distance
-        (strictly monotone in the true distance, so every heap comparison
-        and neighbor selection orders identically while the hot path skips
-        the sqrt + clamp passes and reuses the hoisted ``qq = q·q``); other
-        metrics are identical to _dist_many. True distances are only
-        computed once, on the final top-k, in search()."""
-        m = self._mat_rows(idxs) if self.vecs is None else self.vecs[idxs]
+    def _walk_from_dots(self, dots, qq: float, qn: float, sel):
+        """Turn q·row dot products into WALK-ordering distances: for l2
+        the SQUARED distance (strictly monotone in the true distance, so
+        every heap comparison and neighbor selection orders identically
+        while the hot path skips the sqrt, reusing the hoisted
+        ``qq = q·q``); ip / cosine the negated similarity. True distances
+        are only computed once, on the final top-k (_dist_many). ``sel``
+        picks the matching norm rows (a slice or an index list)."""
         if self.dist == "l2":
-            ns = getattr(self, "_norms_sq", None)
-            if ns is None:  # graphs unpickled from pre-upgrade saves
-                ns = self._norms_sq = (self.vecs * self.vecs).sum(axis=1)
-            return ns[idxs] - 2.0 * (m @ q) + qq
-        dots = m @ q
+            return self._sq_norms()[sel] - 2.0 * dots + qq
         if self.dist == "ip":
             return -dots
-        qn = float(np.linalg.norm(q)) or 1e-300
-        return -dots / (self._norms[idxs] * qn)
+        return -dots / (self._norms[sel] * qn)
 
-    def _walk_from_dots(self, dots, qq: float, qn: float, sel=None):
-        """Turn q·row dot products into walk-ordering distances (the tail
-        shared by the full-table and lazy-LUT branches). ``sel`` picks the
-        matching norm rows: None = all, a slice for ``upto`` prefixes, an
-        index array for lazy frontier requests."""
-        if self.dist == "l2":
-            ns = getattr(self, "_norms_sq", None)
-            if ns is None:  # graphs unpickled from pre-upgrade saves
-                dec = self._mat_rows(slice(None))
-                ns = self._norms_sq = (dec * dec).sum(axis=1)
-            return (ns if sel is None else ns[sel]) - 2.0 * dots + qq
-        if self.dist == "ip":
-            return -dots
-        nrm = self._norms if sel is None else self._norms[sel]
-        return -dots / (nrm * qn)
+    def _walk_dists(self, q: np.ndarray, idxs, qq: float) -> np.ndarray:
+        """Batched BLAS walk distances for one frontier batch — graph
+        pruning, and every walk on a float graph above the table gate."""
+        qn = (float(np.linalg.norm(q)) or 1e-300) if self.dist == "cosine" else 1.0
+        return self._walk_from_dots(self._mat_rows(idxs) @ q, qq, qn, idxs)
+
+    def _batched_ev(self, q: np.ndarray):
+        qq = float(q @ q) if self.dist == "l2" else 0.0
+        return lambda idxs: self._walk_dists(q, idxs, qq)
 
     def _bq_luts(self, q: np.ndarray):
         """Per-query BQ byte-LUT tables (VERDICT r12 #2): dot(q, row) for a
@@ -610,40 +567,45 @@ class _Graph:
         base = float(self.bq_lo @ q)
         return luts, base
 
-    def _walk_table(self, q: np.ndarray, qq: float, upto: int | None = None):
-        """Per-query WALK-distance table over all (or the first ``upto``)
-        vertices; a :class:`_LazyWalkTable` for quantized graphs too large
-        for a full table (see WALK_TABLE_MAX_ELEMS); or None (float graphs
-        above the gate — their batched ``_walk_dists`` is already a single
-        gemv per frontier). One gemv (float / SQ8), one set of PQ-LUT
-        gathers (Jégou et al. 2011's ADC table trick), or one set of BQ
-        byte-LUT gathers per query turns every frontier-batch distance
-        call inside _search_layer into a fancy-index lookup — the walk's
+    def _walk_eval(self, q: np.ndarray, upto: int | None = None):
+        """Per-query WALK-distance evaluator ``ev(idxs)`` over all (or the
+        first ``upto``) vertices, one per storage form: an einsum over the
+        float rows, PQ-LUT gathers (Jégou et al. 2011's ADC table trick),
+        BQ byte-LUT gathers, or an SQ8 einsum over the codes
+        (dot(q, mn + c·scale) = q·mn + c·(q·scale)).
+
+        Below WALK_TABLE_MAX_ELEMS the evaluator runs ONCE over the vertex
+        range (in row chunks, bounding the float temp) and walks read the
+        resulting table: every frontier-batch distance call inside
+        _search_layer becomes a fancy-index lookup, and the walk's
         numpy-dispatch overhead, the dominant cost of small-graph builds
-        and sharded serving, disappears. Values are the same per-row
-        kernels as _walk_dists up to BLAS summation order (walk distances
-        only steer the beam; RETURNED distances stay _dist_many's
-        fold-exact values, and online + offline consumers share this code
-        path). The full-table and lazy branches of one storage form
-        accumulate in the SAME order, so a graph's walk distances do not
-        depend on which side of the size gate it falls."""
+        and sharded serving, disappears. Above the gate a quantized graph
+        evaluates frontier rows only (O(|idxs|·m) per call, no n-sized
+        pass — VERDICT r12 #3, the 1.2M merged serving graphs) through the
+        SAME function, so a vertex's walk distance is bit-identical on
+        both sides of the gate; a float graph above it falls back to the
+        batched BLAS ``_walk_dists`` (already one gemv per frontier).
+        Walk distances only steer the beam; RETURNED distances stay
+        _dist_many's fold-exact values, and online + offline consumers
+        share this code path."""
         n = len(self.ids) if upto is None else upto
-        if not n:
-            return None
-        qn = 1.0
-        if self.dist == "cosine":
-            qn = float(np.linalg.norm(q)) or 1e-300
+        qq = float(q @ q) if self.dist == "l2" else 0.0
+        qn = (float(np.linalg.norm(q)) or 1e-300) if self.dist == "cosine" else 1.0
         if self.vecs is not None:
-            if n * self.vecs.shape[1] > self.WALK_TABLE_MAX_ELEMS:
-                return None
-            v = self.vecs if upto is None else self.vecs[:n]
+            width = self.vecs.shape[1]
+            if n * width > self.WALK_TABLE_MAX_ELEMS:
+                return self._batched_ev(q)
+            vecs = self.vecs
             # einsum, not gemv: a table-sized matvec crosses OpenBLAS's
             # internal threading threshold and pays ~1.3 ms of pool handoff
             # per call in any process whose numpy loaded before the
             # one-thread env cap (einsum never threads; 2000×64 measured
             # ~80 µs, and the per-row sum order is fixed by the kernel, not
-            # by pool geometry)
-            dots = np.einsum("ij,j->i", v, q)
+            # by pool geometry or chunking)
+
+            def dots(ii):
+                return np.einsum("ij,j->i", vecs[ii], q)
+
         elif getattr(self, "pq_codes", None) is not None:
             codes = self.pq_codes
             cell = getattr(self, "pq_cell", None)
@@ -656,94 +618,80 @@ class _Graph:
                 if getattr(self, "pq_centers", None) is not None
                 else None
             )
-            if n * len(self.pq_books) > self.WALK_TABLE_MAX_ELEMS:
-                # lazy: same gathers, frontier rows only (the chunked-LUT
-                # answer to VERDICT r12 #3 — merged 1.2M serving graphs)
-                def ev(ii, luts=luts, codes=codes, cdots=cdots, cell=cell):
-                    d = np.zeros(len(ii), dtype=np.float64)
-                    for i, lut in enumerate(luts):
-                        d = d + lut[codes[ii, i]]
-                    if cdots is not None:
-                        d = d + cdots[cell[ii]]
-                    return self._walk_from_dots(d, qq, qn, sel=ii)
+            width = len(luts)
 
-                return _LazyWalkTable(ev)
-            codes = codes if upto is None else codes[:n]
-            dots = np.zeros(n, dtype=np.float64)
-            for i, lut in enumerate(luts):
-                dots = dots + lut[codes[:, i]]
-            if cdots is not None:
-                dots = dots + cdots[cell if upto is None else cell[:n]]
+            def dots(ii):
+                c = codes[ii]
+                d = np.zeros(len(c), dtype=np.float64)
+                for i, lut in enumerate(luts):
+                    d = d + lut[c[:, i]]
+                if cdots is not None:
+                    d = d + cdots[cell[ii]]
+                return d
+
         elif getattr(self, "bq_codes", None) is not None:
             luts, base = self._bq_luts(q)
             bcodes = self.bq_codes
-            if n * self.bq_dim > self.WALK_TABLE_MAX_ELEMS:
+            width = self.bq_dim
 
-                def ev(ii, luts=luts, base=base, bcodes=bcodes):
-                    d = np.zeros(len(ii), dtype=np.float64)
-                    for b in range(luts.shape[0]):
-                        d = d + luts[b][bcodes[ii, b]]
-                    d = d + base
-                    return self._walk_from_dots(d, qq, qn, sel=ii)
+            def dots(ii):
+                c = bcodes[ii]
+                d = np.zeros(len(c), dtype=np.float64)
+                for b in range(luts.shape[0]):
+                    d = d + luts[b][c[:, b]]
+                return d + base
 
-                return _LazyWalkTable(ev)
-            bcodes = bcodes if upto is None else bcodes[:n]
-            dots = np.zeros(n, dtype=np.float64)
-            for b in range(luts.shape[0]):
-                dots = dots + luts[b][bcodes[:, b]]
-            dots = dots + base
-        elif getattr(self, "codes", None) is not None:
-            # SQ8: dot(q, mn + c·scale) = q·mn + c·(q·scale); chunked cast
-            # bounds the float temp regardless of n
+        else:
             w = self.qscale * q
             base = float(self.qmn @ q)
             scodes = self.codes
-            if n * self.codes.shape[1] > self.WALK_TABLE_MAX_ELEMS:
+            width = scodes.shape[1]
 
-                def ev(ii, w=w, base=base, scodes=scodes):
-                    d = (
-                        np.einsum("ij,j->i", scodes[ii].astype(np.float64), w)
-                        + base
-                    )
-                    return self._walk_from_dots(d, qq, qn, sel=ii)
+            def dots(ii):
+                return np.einsum("ij,j->i", scodes[ii].astype(np.float64), w) + base
 
-                return _LazyWalkTable(ev)
-            scodes = scodes if upto is None else scodes[:n]
-            dots = np.empty(n, dtype=np.float64)
-            step = 65536
-            for i in range(0, n, step):
-                dots[i : i + step] = (
-                    np.einsum("ij,j->i", scodes[i : i + step].astype(np.float64), w)
-                    + base
-                )
-        else:
-            return None
-        return self._walk_from_dots(
-            dots, qq, qn, sel=None if upto is None else slice(0, n)
-        )
+        if n * width > self.WALK_TABLE_MAX_ELEMS:
+            return lambda ii: self._walk_from_dots(dots(ii), qq, qn, ii)
+        tab = np.empty(n, dtype=np.float64)
+        step = 65536
+        for i in range(0, n, step):
+            tab[i : i + step] = dots(slice(i, min(i + step, n)))
+        return self._walk_from_dots(tab, qq, qn, slice(0, n)).__getitem__
 
     def _search_layer(
         self,
-        q: np.ndarray,
         entries: list[int],
         ef: int,
         level: int,
+        ev,
+        allowed: set | None = None,
         seen: list | None = None,
         stop_n: int | None = None,
-        dtab: np.ndarray | None = None,
     ) -> list[int]:
-        """``dtab`` (optional): precomputed per-query walk-distance table
-        (_walk_table) — distance evaluation becomes a fancy-index lookup;
-        admissions/termination logic is unchanged.
+        """SearchLayer (ref hnsw_index.cpp:86-130): greedy best-first walk
+        with a candidate min-heap and an ef-bounded result max-heap. ``ev``
+        is the query's walk-distance evaluator (_walk_eval).
+
+        ``allowed`` (optional set of INTERNAL indexes) = filtered search:
+        traversal visits every vertex for NAVIGATION (disallowed vertices
+        still route the walk, so recall does not collapse when the filter
+        is selective), but only allowed vertices enter the result heap,
+        the harvest and the stop_n tracker — the standard filtered-HNSW
+        approach (hnswlib's filtered searchBaseLayerST). None admits every
+        vertex, and the walk is then exactly the unfiltered one: the stop
+        rule's ``len(result) >= ef`` guard (an allowed-only beam may start
+        empty and must keep expanding) never decides an unfiltered walk,
+        because until the beam holds ef vertices every frontier entry is
+        also in it, so the nearest candidate cannot lie beyond it.
 
         ``seen`` (optional, the DiskANN serving trick): a caller-owned
-        list collecting (walk_dist, vertex) for EVERY vertex whose distance
-        this walk computes — each vertex exactly once (the visited-set
-        check gates distance evaluation). search(shortlist=...) harvests a
-        deep ADC candidate list from it WITHOUT widening the beam; with
-        ``stop_n`` None the walk itself is unchanged (same admissions,
-        same termination), so passing None keeps every existing path
-        bit-identical.
+        list collecting (walk_dist, vertex) for EVERY admissible vertex
+        whose distance this walk computes — each vertex exactly once (the
+        visited-set check gates distance evaluation). search(shortlist=...)
+        harvests a deep ADC candidate list from it WITHOUT widening the
+        beam; with ``stop_n`` None the walk itself is unchanged (same
+        admissions, same termination), so passing None keeps every
+        existing path bit-identical.
 
         ``stop_n`` (r12, harvest-ALIGNED termination): align the walk's
         stopping rule with what the harvest returns — terminate only when
@@ -768,9 +716,6 @@ class _Graph:
         stabilizes — no shard size or ef mis-configuration can silently
         starve the shortlist again."""
         edges = self.edges[level]
-        qq = 0.0
-        if dtab is None:
-            qq = float(q @ q) if self.dist == "l2" else 0.0
         visited = set(entries)
         cand: list[tuple[float, int]] = []
         result: list[tuple[float, int]] = []  # max-heap via negated dist
@@ -778,9 +723,10 @@ class _Graph:
         # values only — it exists to provide the alignment thresholds, the
         # harvest itself still comes from the caller's full `seen` sort
         short: list[float] | None = [] if stop_n is not None else None
-        ed = dtab[entries] if dtab is not None else self._walk_dists(q, entries, qq)
-        for e, d in zip(entries, ed):
+        for e, d in zip(entries, ev(entries)):
             heapq.heappush(cand, (d, e))
+            if allowed is not None and e not in allowed:
+                continue
             heapq.heappush(result, (-d, e))
             if seen is not None:
                 seen.append((float(d), e))
@@ -790,32 +736,36 @@ class _Graph:
                     heapq.heappop(short)
         while cand:
             d, v = heapq.heappop(cand)
-            if d > -result[0][0] and (
-                short is None or (len(short) >= stop_n and d > -short[0])
+            if (
+                len(result) >= ef
+                and d > -result[0][0]
+                and (short is None or (len(short) >= stop_n and d > -short[0]))
             ):
                 break
             nbs = [nb for nb in edges.get(v, ()) if nb not in visited]
             if not nbs:
                 continue
             visited.update(nbs)
-            nd = dtab[nbs] if dtab is not None else self._walk_dists(q, nbs, qq)
-            for nb, dn in zip(nbs, nd):
-                if seen is not None:
-                    seen.append((float(dn), nb))
+            for nb, dn in zip(nbs, ev(nbs)):
+                ok = allowed is None or nb in allowed
                 improves_short = False
-                if short is not None:
-                    # checked BEFORE pushing dn (improves the shortlist as
-                    # it stood — a vertex can't justify expansion by its
-                    # own membership)
-                    improves_short = len(short) < stop_n or dn < -short[0]
-                    heapq.heappush(short, -dn)
-                    if len(short) > stop_n:
-                        heapq.heappop(short)
+                if ok:
+                    if seen is not None:
+                        seen.append((float(dn), nb))
+                    if short is not None:
+                        # checked BEFORE pushing dn (improves the shortlist
+                        # as it stood — a vertex can't justify expansion by
+                        # its own membership)
+                        improves_short = len(short) < stop_n or dn < -short[0]
+                        heapq.heappush(short, -dn)
+                        if len(short) > stop_n:
+                            heapq.heappop(short)
                 if len(result) < ef or dn < -result[0][0]:
                     heapq.heappush(cand, (dn, nb))
-                    heapq.heappush(result, (-dn, nb))
-                    if len(result) > ef:
-                        heapq.heappop(result)
+                    if ok:
+                        heapq.heappush(result, (-dn, nb))
+                        if len(result) > ef:
+                            heapq.heappop(result)
                 elif improves_short:
                     # frontier admission for shortlist alignment: expand
                     # it, but do NOT let it displace the ef-beam (the
@@ -825,108 +775,15 @@ class _Graph:
         out = sorted(((-nd, v) for nd, v in result))
         return [v for _, v in out]
 
-    def _search_layer_filtered(
-        self,
-        q: np.ndarray,
-        entries: list[int],
-        ef: int,
-        level: int,
-        allowed: set,
-        seen: list | None = None,
-        stop_n: int | None = None,
-        dtab: np.ndarray | None = None,
-    ) -> list[int]:
-        """SearchLayer with an allowed-set: traversal visits every vertex for
-        NAVIGATION (disallowed vertices still route the walk, so recall does
-        not collapse when the filter is selective), but only allowed vertices
-        enter the result heap. This is the standard filtered-HNSW approach
-        (hnswlib's filtered searchBaseLayerST); reference surface:
-        SearchLayer (src/storage/index/hnsw_index.cpp:86-130) composed with
-        filter semantics. Kept separate from _search_layer so the unfiltered
-        path (and every existing offline-replay oracle) stays bit-identical.
-        ``stop_n`` (r12) = the harvest-ALIGNED termination of
-        _search_layer, over the ALLOWED visited set only (the shortlist a
-        filtered rerank feeds is allowed-only, so both the tracker and the
-        admission clause must be too)."""
-        edges = self.edges[level]
-        qq = 0.0
-        if dtab is None:
-            qq = float(q @ q) if self.dist == "l2" else 0.0
-        visited = set(entries)
-        cand: list[tuple[float, int]] = []
-        result: list[tuple[float, int]] = []  # max-heap via negated dist
-        short: list[float] | None = [] if stop_n is not None else None
-        ed = dtab[entries] if dtab is not None else self._walk_dists(q, entries, qq)
-        for e, d in zip(entries, ed):
-            heapq.heappush(cand, (d, e))
-            if e in allowed:
-                heapq.heappush(result, (-d, e))
-                if seen is not None:
-                    seen.append((float(d), e))
-                if short is not None:
-                    heapq.heappush(short, -d)
-                    if len(short) > stop_n:
-                        heapq.heappop(short)
-        while cand:
-            d, v = heapq.heappop(cand)
-            # stop only once ef allowed results exist AND the nearest
-            # remaining candidate can't improve them (an empty result heap
-            # must keep expanding — entries may all be filtered out); with
-            # stop_n, additionally only once the allowed top-stop_n can't
-            # improve either
-            if (
-                len(result) >= ef
-                and d > -result[0][0]
-                and (
-                    short is None
-                    or (len(short) >= stop_n and d > -short[0])
-                )
-            ):
-                break
-            nbs = [nb for nb in edges.get(v, ()) if nb not in visited]
-            if not nbs:
-                continue
-            visited.update(nbs)
-            nd = dtab[nbs] if dtab is not None else self._walk_dists(q, nbs, qq)
-            for nb, dn in zip(nbs, nd):
-                improves_short = False
-                if nb in allowed:
-                    if seen is not None:
-                        # harvest collects ALLOWED visits only — the
-                        # shortlist is a candidate set for the exact
-                        # rerank, and a disallowed row must never reach it
-                        seen.append((float(dn), nb))
-                    if short is not None:
-                        improves_short = len(short) < stop_n or dn < -short[0]
-                        heapq.heappush(short, -dn)
-                        if len(short) > stop_n:
-                            heapq.heappop(short)
-                if len(result) < ef or dn < -result[0][0]:
-                    heapq.heappush(cand, (dn, nb))
-                    if nb in allowed:
-                        heapq.heappush(result, (-dn, nb))
-                        if len(result) > ef:
-                            heapq.heappop(result)
-                elif improves_short:
-                    heapq.heappush(cand, (dn, nb))
-        out = sorted(((-nd, v) for nd, v in result))
-        return [v for _, v in out]
-
-    def _select_neighbors(
-        self, q: np.ndarray, cands: list[int], m: int,
-        dtab: np.ndarray | None = None,
-    ) -> list[int]:
+    @staticmethod
+    def _select_neighbors(ev, cands: list[int], m: int) -> list[int]:
         # simple m-nearest selection (the reference's SelectNeighbors);
         # walk metric — monotone ↔ true distance, identical selection
-        if dtab is not None:
-            scored = sorted(zip(dtab[cands], cands))
-        else:
-            qq = float(q @ q) if self.dist == "l2" else 0.0
-            scored = sorted(zip(self._walk_dists(q, cands, qq), cands))
+        scored = sorted(zip(ev(cands), cands))
         return [c for _, c in scored[:m]]
 
     def _insert(self, idx: int) -> None:
-        q = self._mat_rows([idx])[0] if self.vecs is None else self.vecs[idx]
+        q = self._row(idx)
         level = int(-math.log(self.rng.random() + 1e-300) * self.m_l)
         # capture the top layer BEFORE extending — extending first would make
         # `level > top` unreachable and the entry point never promoted
@@ -939,25 +796,23 @@ class _Graph:
                 self.edges[lv][idx] = []
             return
         # add_all inserts id-ordered, so every already-inserted vertex sits
-        # below idx — the walk table only needs the [0, idx) prefix
-        qq = float(q @ q) if self.dist == "l2" else 0.0
-        dtab = self._walk_table(q, qq, upto=idx)
+        # below idx — the walk evaluator only needs the [0, idx) prefix
+        ev = self._walk_eval(q, upto=idx)
         ep = [self.entry]
         for lv in range(top, level, -1):
-            ep = self._search_layer(q, ep, 1, lv, dtab=dtab)[:1]
+            ep = self._search_layer(ep, 1, lv, ev)[:1]
         for lv in range(min(level, top), -1, -1):
-            cands = self._search_layer(q, ep, self.efc, lv, dtab=dtab)
+            cands = self._search_layer(ep, self.efc, lv, ev)
             m_max = self.m_max_0 if lv == 0 else self.m_max
-            nbs = self._select_neighbors(q, cands, self.m, dtab=dtab)
+            nbs = self._select_neighbors(ev, cands, self.m)
             self.edges[lv][idx] = list(nbs)
             for nb in nbs:
                 lst = self.edges[lv].setdefault(nb, [])
                 lst.append(idx)
                 if len(lst) > m_max:
+                    # graph pruning: batched walk distances from nb
                     self.edges[lv][nb] = self._select_neighbors(
-                        self._mat_rows([nb])[0] if self.vecs is None else self.vecs[nb],
-                        lst,
-                        m_max,
+                        self._batched_ev(self._row(nb)), lst, m_max
                     )
             ep = cands
         if level > top:
@@ -983,27 +838,17 @@ class _Graph:
                 )
             else:
                 self.pq_codes = np.vstack([self.pq_codes, self._encode_pq(new)])
-            dec = self._mat_rows(slice(None))
-            self._norms = np.maximum(np.linalg.norm(dec, axis=1), 1e-300)
-            self._norms_sq = (dec * dec).sum(axis=1)
         elif getattr(self, "bq_codes", None) is not None:
             # quantized graph: encode new rows with the FROZEN thresholds
             self.bq_codes = np.vstack(
                 [self.bq_codes, self._encode_bq(np.asarray(mat, dtype=np.float64))]
             )
-            dec = self._mat_rows(slice(None))
-            self._norms = np.maximum(np.linalg.norm(dec, axis=1), 1e-300)
-            self._norms_sq = (dec * dec).sum(axis=1)
         elif getattr(self, "codes", None) is not None:
             # quantized graph: encode new rows with the FROZEN affine params
             self.codes = np.vstack([self.codes, self._encode_sq8(np.asarray(mat, dtype=np.float64))])
-            dec = self._mat_rows(slice(None))
-            self._norms = np.maximum(np.linalg.norm(dec, axis=1), 1e-300)
-            self._norms_sq = (dec * dec).sum(axis=1)
         else:
             self.vecs = mat if self.vecs is None else np.vstack([self.vecs, mat])
-            self._norms = np.maximum(np.linalg.norm(self.vecs, axis=1), 1e-300)
-            self._norms_sq = (self.vecs * self.vecs).sum(axis=1)
+        self._refresh_norms()
         self.ids.extend(ids)
         self._id_map = None
         self._allowed_cache = None
@@ -1071,8 +916,7 @@ class _Graph:
         # multi-entry at the same ef). Multi-layer HNSW graphs never set
         # this; their upper layers already provide the coarse routing.
         ep = list(getattr(self, "entry_points", None) or [self.entry])
-        qq = float(q @ q) if self.dist == "l2" else 0.0
-        dtab = self._walk_table(q, qq)
+        ev = self._walk_eval(q)
         if allowed_ids is not None and len(ep) > self.FILTERED_SEED_CAP:
             # Filtered walks pay per-seed frontier cost with none of the
             # multi-basin recall benefit measured for them (r8 1.2M drill:
@@ -1082,8 +926,7 @@ class _Graph:
             # Keep only the nearest few seeds; the unfiltered batch path
             # keeps the full set (free there, and it carries the merged
             # tier's 0.966 recall).
-            sd = dtab[ep] if dtab is not None else self._walk_dists(q, ep, qq)
-            ranked = sorted(zip(sd, ep))
+            ranked = sorted(zip(ev(ep), ep))
             ep = [v for _, v in ranked[: self.FILTERED_SEED_CAP]]
         # Seeding cost honesty (ADVICE r8, re-measured r9): an untrimmed
         # seed set makes _search_layer's result heap start at |entries|
@@ -1100,7 +943,7 @@ class _Graph:
         # FILTERED_SEED_CAP above (there the per-seed frontier cost buys
         # no recall — r8/r9 drills).
         for lv in range(len(self.edges) - 1, 0, -1):
-            ep = self._search_layer(q, ep, 1, lv, dtab=dtab)[:1]
+            ep = self._search_layer(ep, 1, lv, ev)[:1]
         seen: list | None = None
         stop_n: int | None = None
         if shortlist is not None:
@@ -1117,15 +960,12 @@ class _Graph:
                 # small-ef graph or tiny shard can no longer silently
                 # truncate exploration at the ef-th best).
                 stop_n = max(int(shortlist), k)
-        if allowed_ids is None:
-            found = self._search_layer(
-                q, ep, ef, 0, seen=seen, stop_n=stop_n, dtab=dtab
-            )[:k]
-        else:
-            allowed = self._internal_allowed(allowed_ids)
-            found = self._search_layer_filtered(
-                q, ep, ef, 0, allowed, seen=seen, stop_n=stop_n, dtab=dtab
-            )[:k]
+        allowed = (
+            None if allowed_ids is None else self._internal_allowed(allowed_ids)
+        )
+        found = self._search_layer(
+            ep, ef, 0, ev, allowed=allowed, seen=seen, stop_n=stop_n
+        )[:k]
         if seen is not None:
             # harvest: N nearest visited, (walk_dist, vertex) order — walk
             # dists are squared l2 (monotone) so the ordering matches the
@@ -1191,7 +1031,7 @@ class HNSWIndex:
     # driver-mode build materializes the whole table on the driver — a
     # deliberate choice for dimension-table scale, a scale-killer past it.
     # build() refuses above this row count; callers with big tables must use
-    # build_routed/build_partitioned (sql._create_index routes automatically).
+    # build_routed (sql._create_index routes automatically).
     DRIVER_BUILD_MAX_ROWS = 2_000_000
 
     @classmethod
@@ -1357,62 +1197,6 @@ class HNSWIndex:
         return _spread_queries(queries).mapInPandas(run, schema)
 
     @classmethod
-    def build_partitioned(
-        cls,
-        df,
-        vec_col: str,
-        id_col: str,
-        shards: int,
-        m: int = 8,
-        ef_construction: int = 64,
-        ef_search: int = 64,
-        dist: str = "l2",
-        seed: int = 42,
-    ) -> "ShardedHNSW":
-        """Scale-mode build: hash-partition rows into `shards`, build an
-        independent HNSW per shard inside mapInPandas (linear speedup, no
-        sequential bottleneck), keep each shard's graph as a pickled blob
-        row. Probe cost ∝ shards; recall ≈ single-graph (each shard is a
-        full HNSW over a random subset, merged top-k is near-exact for
-        k ≪ shard size)."""
-        import pickle
-
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        from ..shipping import ensure_package_on_workers
-
-        ensure_package_on_workers(df.sparkSession)
-        parts = df.select(id_col, vec_col).repartition(shards, F.col(id_col))
-
-        def build_one(batches):
-            ids, vecs = [], []
-            for pdf in batches:
-                ids.extend(pdf[id_col].tolist())
-                vecs.extend(pdf[vec_col].tolist())
-            if not ids:
-                yield pd.DataFrame({"shard": [], "blob": []})
-                return
-            g = _Graph(m, ef_construction, ef_search, dist, seed)
-            g.add_all(ids, np.asarray(vecs, dtype=np.float64))
-            # deterministic shard id: Python hash() is per-process salted for
-            # strings (PYTHONHASHSEED), so it would differ across executors/
-            # runs — derive from a stable digest of the member ids instead
-            import hashlib
-
-            key = repr(sorted(ids)[:3]).encode()
-            shard = int.from_bytes(hashlib.md5(key).digest()[:8], "big") >> 1
-            yield pd.DataFrame({"shard": [shard], "blob": [pickle.dumps(g)]})
-
-        blobs = parts.mapInPandas(build_one, "shard long, blob binary")
-        return ShardedHNSW(
-            vec_col, id_col, dist, blobs.cache(), df.sparkSession,
-            id_type=_id_type(df, id_col),
-            params=dict(m=m, ef_construction=ef_construction,
-                        ef_search=ef_search, seed=seed, replicated=False),
-        )
-
-    @classmethod
     def build_routed(
         cls,
         df,
@@ -1431,9 +1215,7 @@ class HNSWIndex:
     ) -> "ShardedHNSW":
         """IVF-routed sharded build — the 100 TB ANN design.
 
-        ``build_partitioned`` hash-shards, so every shard is a random sample
-        of the space and a probe must search ALL of them. Here shards are
-        spatially coherent: coarse k-means centroids (trained exactly like
+        Shards are spatially coherent: coarse k-means centroids (trained exactly like
         IVFFlat's, driver-side on a bounded sample) route each vector to its
         nearest centroid's shard, one HNSW is built per shard via
         ``applyInPandas`` (parallel across shards), and a probe ranks the
@@ -1580,8 +1362,7 @@ class HNSWIndex:
         )
         g.ids = [r[id_col] for r in verts]
         g.vecs = np.asarray([list(r["vec"]) for r in verts], dtype=np.float64)
-        g._norms = np.maximum(np.linalg.norm(g.vecs, axis=1), 1e-300)
-        g._norms_sq = (g.vecs * g.vecs).sum(axis=1)
+        g._refresh_norms()
         edges = spark.read.parquet(f"{path}/edges").collect()
         n_levels = max(r["level"] for r in edges) + 1
         g.edges = [{} for _ in range(n_levels)]
@@ -1596,10 +1377,10 @@ class ShardedHNSW:
     """Sharded HNSW: one independent graph per shard, stored as blob rows.
 
     probe(query, k): shards search their own graphs (a narrow Spark job
-    over the blobs DataFrame), results union → global top-k. Hash-sharded
-    builds (``build_partitioned``) must search every shard; routed builds
+    over the blobs DataFrame), results union → global top-k. Routed builds
     (``build_routed``) carry the coarse centroid table, and a probe with
-    ``n_probe`` set searches only the nearest shards — the filter on the
+    ``n_probe`` set searches only the nearest shards (without it, every
+    shard) — the filter on the
     shard column prunes the rest before any graph is even unpickled. This
     is the 100 TB design: build is embarrassingly parallel, probe fan-out
     is n_probe, and no single machine ever holds more than one shard.
@@ -1750,7 +1531,7 @@ class ShardedHNSW:
             crows = spark.read.parquet(f"{path}/centroids").orderBy("shard").collect()
             centroids = [list(r["centroid"]) for r in crows]
         except Exception:
-            pass  # hash-sharded build: no centroid table
+            pass  # a hash-sharded save from an earlier version: no centroids
         raw = meta["params"] if "params" in meta.__fields__ else None
         return cls(
             meta["vec_col"], meta["id_col"], meta["dist"], blobs.cache(), spark,
@@ -1761,7 +1542,7 @@ class ShardedHNSW:
     @property
     def _maybe_replicated(self) -> bool:
         """True unless the build provably assigned every id to exactly ONE
-        shard (hash-sharded, or routed with replicate_eps=0) — then probe
+        shard (routed with replicate_eps=0) — then probe
         results are already id-unique and the post-walk dedupe shuffle is
         skipped. Pre-upgrade saves lack the flag and default to True (safe
         dedupe)."""
@@ -2079,18 +1860,7 @@ class ShardedHNSW:
         same scoring orientation as IVFFlat.rank_buckets."""
         if self.centroids is None:
             raise ValueError("rank_shards requires a routed build")
-
-        def score(c: list[float]) -> float:
-            if self.dist == "l2":
-                return math.dist(c, query)
-            dot = sum(x * y for x, y in zip(c, query))
-            if self.dist == "ip":
-                return -dot
-            na = math.sqrt(sum(x * x for x in c)) or 1e-300
-            nb = math.sqrt(sum(y * y for y in query)) or 1e-300
-            return -(dot / (na * nb))
-
-        return sorted(range(len(self.centroids)), key=lambda i: score(self.centroids[i]))
+        return fold.rank_centroids(self.dist, self.centroids, query)
 
     def _chunked_queries(self, routed, qid_col: str):
         """Group routed queries per shard in BOUNDED chunks: collect_list
@@ -2166,7 +1936,7 @@ class ShardedHNSW:
         per-qid window takes the global top-k (dedup first: replicated
         builds surface the same id from several shards).
 
-        Hash-sharded builds (no centroids) search every shard. Offline
+        Without ``n_probe`` every shard is searched. Offline
         replay: ``offline_routed_batch`` reproduces routing + hits exactly.
         ``allowed`` applies the traversal-time filter (see probe()) inside
         every probed shard's walk, for every query — routing itself stays
@@ -2197,29 +1967,15 @@ class ShardedHNSW:
             # the batch path while keeping it on probe()
             n_probe = self.default_n_probe
         if n_probe is not None and self.centroids is not None:
-            from .ivfflat import _centroid_literal, _l2_sq
+            from .ivfflat import _centroid_literal
 
-            if self.dist == "l2":
-                score = lambda c: _l2_sq(qv, c)  # noqa: E731
-            else:
-                dot = lambda c: F.aggregate(  # noqa: E731
-                    F.zip_with(qv, c, lambda x, y: x * y),
-                    F.lit(0.0),
-                    lambda s, v: s + v,
-                )
-                if self.dist == "ip":
-                    score = lambda c: -dot(c)  # noqa: E731
-                else:
-                    norm = lambda v: F.sqrt(  # noqa: E731
-                        F.aggregate(v, F.lit(0.0), lambda s, x: s + x * x)
-                    )
-                    score = lambda c: -(  # noqa: E731
-                        dot(c) / (norm(qv) * norm(c))
-                    )
             scored = F.array_sort(
                 F.transform(
                     _centroid_literal(self.centroids),
-                    lambda c, i: F.struct(score(c).alias("d"), i.alias("b")),
+                    lambda c, i: F.struct(
+                        fold.col_centroid_score(self.dist, qv, c).alias("d"),
+                        i.alias("b"),
+                    ),
                 )
             )
             routed = queries.select(
@@ -2562,7 +2318,7 @@ class ShardedHNSW:
         ``allowed`` (iterable of ids or a one-column DataFrame) enables
         filtered vector search on the routed/sharded variant: each probed
         shard's graph walk filters at traversal time
-        (_search_layer_filtered), so the per-shard top-k is taken among
+        (_search_layer(allowed=...)), so the per-shard top-k is taken among
         matching rows. Shard pruning (n_probe) still applies — the filter
         composes with, not replaces, centroid routing.
 
@@ -2707,17 +2463,6 @@ def offline_graph(
     return g
 
 
-def _l2_sq_fold(v: list, c: list) -> float:
-    """Sequential left-fold sum of squared diffs — replicates Spark's
-    F.aggregate(zip_with(...)) evaluation order (ivfflat._l2_sq) so argmin
-    routing ties and float results match the distributed assignment."""
-    s = 0.0
-    for x, y in zip(v, c):
-        d = x - y
-        s = s + d * d
-    return s
-
-
 def offline_routed(
     parquet_path: str,
     vec_col: str,
@@ -2754,8 +2499,7 @@ def offline_routed(
 
     members: dict[int, tuple[list, list]] = {}
     for i, v in zip(ids, vecs):
-        dists = [_l2_sq_fold(v, c) for c in centroids]
-        b = dists.index(min(dists))  # first-min ties, like array_position
+        b = fold.nearest(v, centroids)
         members.setdefault(b, ([], []))[0].append(i)
         members[b][1].append(v)
 
@@ -2779,18 +2523,7 @@ def offline_routed_probe(
     """Replay ``ShardedHNSW.probe`` (rank shards → search n_probe graphs →
     dedupe → global top-k; ``allowed_ids`` replays the filtered walk).
     Returns [(id, signed_distance)]."""
-
-    def score(c: list[float]) -> float:
-        if dist == "l2":
-            return math.dist(c, query)
-        dot = sum(x * y for x, y in zip(c, query))
-        if dist == "ip":
-            return -dot
-        na = math.sqrt(sum(x * x for x in c)) or 1e-300
-        nb = math.sqrt(sum(y * y for y in query)) or 1e-300
-        return -(dot / (na * nb))
-
-    ranked = sorted(range(len(centroids)), key=lambda i: score(centroids[i]))
+    ranked = fold.rank_centroids(dist, centroids, query)
     sign = -1.0 if dist in ("ip", "cosine") else 1.0
     q = np.asarray(query, dtype=np.float64)
     hits: dict = {}
@@ -2920,18 +2653,7 @@ def _offline_quantized_probe(
     """Shared post-quantize walk+rerank of the offline probe replays (the
     graphs arrive already quantized; the arithmetic below is unchanged
     from the original sq8 replay — bit-compatibility is the contract)."""
-
-    def score(c: list[float]) -> float:
-        if dist == "l2":
-            return math.dist(c, query)
-        dot = sum(x * y for x, y in zip(c, query))
-        if dist == "ip":
-            return -dot
-        na = math.sqrt(sum(x * x for x in c)) or 1e-300
-        nb = math.sqrt(sum(y * y for y in query)) or 1e-300
-        return -(dot / (na * nb))
-
-    ranked = sorted(range(len(centroids)), key=lambda i: score(centroids[i]))
+    ranked = fold.rank_centroids(dist, centroids, query)
     q = np.asarray(query, dtype=np.float64)
     cand: set = set()
     for b in ranked[:n_probe]:
@@ -2940,25 +2662,11 @@ def _offline_quantized_probe(
             continue
         for hid, _d in _offline_rerank_walk(g, q, k, rerank_mult, ef=ef):
             cand.add(hid)
-
-    def fold(vals) -> float:
-        s = 0.0
-        for v in vals:
-            s = s + v
-        return s
-
-    def exact(v: list[float]) -> float:
-        if dist == "l2":
-            return math.sqrt(fold((x - y) * (x - y) for x, y in zip(v, query)))
-        dot = fold(x * y for x, y in zip(v, query))
-        if dist == "ip":
-            return dot
-        na = math.sqrt(fold(x * x for x in v))
-        nb = math.sqrt(fold(y * y for y in query))
-        return dot / (na * nb)
-
     asc = dist == "l2"
-    scored = [(hid, exact([float(x) for x in vectors_by_id[hid]])) for hid in cand]
+    scored = [
+        (hid, fold.exact(dist, [float(x) for x in vectors_by_id[hid]], query))
+        for hid in cand
+    ]
     scored.sort(key=lambda t: (t[1] if asc else -t[1], t[0]))
     return scored[:k]
 
@@ -3019,7 +2727,7 @@ def _offline_quantized_batch(
 ) -> list[tuple]:
     out = []
     for qid, qv in queries:
-        ranked = sorted((_l2_sq_fold(qv, c), b) for b, c in enumerate(centroids))
+        ranked = sorted((fold.l2_sq(qv, c), b) for b, c in enumerate(centroids))
         cand: set = set()
         for _, b in ranked[:n_probe]:
             g = graphs.get(b)
@@ -3029,15 +2737,10 @@ def _offline_quantized_batch(
                 g, np.asarray(qv, dtype=np.float64), k, rerank_mult, ef=ef
             ):
                 cand.add(hid)
-
-        def exact(v: list[float]) -> float:
-            s = 0.0
-            for x, y in zip(v, qv):
-                d = x - y
-                s = s + d * d
-            return math.sqrt(s)
-
-        scored = [(hid, exact([float(x) for x in vectors_by_id[hid]])) for hid in cand]
+        scored = [
+            (hid, fold.exact("l2", [float(x) for x in vectors_by_id[hid]], qv))
+            for hid in cand
+        ]
         scored.sort(key=lambda t: (t[1], t[0]))
         for hid, d in scored[:k]:
             out.append((qid, hid, d))
@@ -3163,47 +2866,10 @@ def offline_routed_pq_probe(
     mirrors the _serve_ef override (pass params['rerank_harvest_ef'] for
     stamped indexes). Returns [(id, exact_distance)]."""
     _quantize_pq_like_sharded(graphs, centroids, model, residual, pq_centers, local_mk)
-
-    def score(c: list[float]) -> float:
-        if dist == "l2":
-            return math.dist(c, query)
-        dot = sum(x * y for x, y in zip(c, query))
-        if dist == "ip":
-            return -dot
-        na = math.sqrt(sum(x * x for x in c)) or 1e-300
-        nb = math.sqrt(sum(y * y for y in query)) or 1e-300
-        return -(dot / (na * nb))
-
-    ranked = sorted(range(len(centroids)), key=lambda i: score(centroids[i]))
-    q = np.asarray(query, dtype=np.float64)
-    cand: set = set()
-    for b in ranked[:n_probe]:
-        g = graphs.get(b)
-        if g is None:
-            continue
-        for hid, _d in _offline_rerank_walk(g, q, k, rerank_mult, ef=ef):
-            cand.add(hid)
-
-    def fold(vals) -> float:
-        s = 0.0
-        for v in vals:
-            s = s + v
-        return s
-
-    def exact(v: list[float]) -> float:
-        if dist == "l2":
-            return math.sqrt(fold((x - y) * (x - y) for x, y in zip(v, query)))
-        dot = fold(x * y for x, y in zip(v, query))
-        if dist == "ip":
-            return dot
-        na = math.sqrt(fold(x * x for x in v))
-        nb = math.sqrt(fold(y * y for y in query))
-        return dot / (na * nb)
-
-    asc = dist == "l2"
-    scored = [(hid, exact([float(x) for x in vectors_by_id[hid]])) for hid in cand]
-    scored.sort(key=lambda t: (t[1] if asc else -t[1], t[0]))
-    return scored[:k]
+    return _offline_quantized_probe(
+        centroids, graphs, vectors_by_id, query, k, n_probe, dist,
+        rerank_mult, ef,
+    )
 
 
 def offline_routed_pq_batch(
@@ -3230,31 +2896,10 @@ def offline_routed_pq_batch(
     _serve_ef override (pass params['rerank_harvest_ef'] for stamped
     indexes). Returns [(qid, id, d)]."""
     _quantize_pq_like_sharded(graphs, centroids, model, residual, pq_centers, local_mk)
-    out = []
-    for qid, qv in queries:
-        ranked = sorted((_l2_sq_fold(qv, c), b) for b, c in enumerate(centroids))
-        cand: set = set()
-        for _, b in ranked[:n_probe]:
-            g = graphs.get(b)
-            if g is None:
-                continue
-            for hid, _d in _offline_rerank_walk(
-                g, np.asarray(qv, dtype=np.float64), k, rerank_mult, ef=ef
-            ):
-                cand.add(hid)
-
-        def exact(v: list[float]) -> float:
-            s = 0.0
-            for x, y in zip(v, qv):
-                d = x - y
-                s = s + d * d
-            return math.sqrt(s)
-
-        scored = [(hid, exact([float(x) for x in vectors_by_id[hid]])) for hid in cand]
-        scored.sort(key=lambda t: (t[1], t[0]))
-        for hid, d in scored[:k]:
-            out.append((qid, hid, d))
-    return out
+    return _offline_quantized_batch(
+        centroids, graphs, vectors_by_id, queries, k, n_probe, rerank_mult,
+        ef,
+    )
 
 
 def offline_routed_insert(
@@ -3273,9 +2918,7 @@ def offline_routed_insert(
     sorted add_all does). Mutates and returns ``graphs``."""
     members: dict[int, list[tuple]] = {}
     for i, v in rows:
-        dists = [_l2_sq_fold(v, c) for c in centroids]
-        b = dists.index(min(dists))  # first-min ties, like array_position
-        members.setdefault(b, []).append((i, v))
+        members.setdefault(fold.nearest(v, centroids), []).append((i, v))
     for b, recs in sorted(members.items()):
         recs.sort(key=lambda t: t[0])
         g = graphs.get(b)
@@ -3306,7 +2949,7 @@ def offline_routed_batch(
         raise ValueError("offline_routed_batch replicates the l2 routing path only")
     out = []
     for qid, qv in queries:
-        ranked = sorted((_l2_sq_fold(qv, c), b) for b, c in enumerate(centroids))
+        ranked = sorted((fold.l2_sq(qv, c), b) for b, c in enumerate(centroids))
         hits: dict = {}
         for _, b in ranked[:n_probe]:
             g = graphs.get(b)

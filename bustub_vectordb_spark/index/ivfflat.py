@@ -36,20 +36,14 @@ scan.
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .. import fold
 from ..functions.vector import vec_lit
 
 BUCKET_COL = "__bucket"
-
-
-def _l2_sq(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda s, v: s + v
-    )
 
 
 def _centroid_literal(centroids: list[list[float]]) -> Column:
@@ -85,7 +79,7 @@ def _lloyds_numpy(
 def _nearest_centroid(vec: Column, centroids: list[list[float]]) -> Column:
     """0-based index of the nearest centroid (ties → lowest index, matching
     the reference's sequential argmin FindCentroid, ivfflat_index.cpp:46-57)."""
-    dists = F.transform(_centroid_literal(centroids), lambda c: _l2_sq(vec, c))
+    dists = F.transform(_centroid_literal(centroids), lambda c: fold.col_l2_sq(vec, c))
     # array_position returns the FIRST position of the min → lowest index wins ties
     return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
@@ -212,7 +206,7 @@ def route_overlap(
         scored = F.transform(
             _centroid_literal(centroids),
             lambda c, i: F.struct(
-                _l2_sq(F.col(vec_col), c).alias("d"), i.alias("b")
+                fold.col_l2_sq(F.col(vec_col), c).alias("d"), i.alias("b")
             ),
         )
         return (
@@ -271,18 +265,13 @@ def route_overlap(
                 # x.shape[1] would raise IndexError
                 continue
             x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            # FOLD-EXACT distances: accumulate (x_d - c_d)² sequentially
-            # over dims, vectorized across rows — the same float64 op
-            # order as Spark's aggregate(zip_with) left fold (_l2_sq), so
-            # the (1+eps)× threshold fires bit-identically to the literal
-            # expression AND to the offline replay's _l2_sq_fold. A plain
-            # matmul decomposition computes different last-ulp floats and
-            # could flip boundary memberships — unlike argmin, a threshold
-            # compare has no tie rule to hide behind.
-            d = np.zeros((len(x), len(cents)), dtype=np.float64)
-            for j in range(x.shape[1]):
-                diff = x[:, j : j + 1] - cents[None, :, j]
-                d += diff * diff
+            # FOLD-EXACT distances (fold.py): the same float64 op order
+            # as the literal expression's Spark fold and the offline
+            # replays, so the (1+eps)× threshold fires bit-identically on
+            # all three. A plain matmul decomposition computes different
+            # last-ulp floats and could flip boundary memberships — unlike
+            # argmin, a threshold compare has no tie rule to hide behind.
+            d = fold.l2_sq_pairwise(x, cents)
             thr = d.min(axis=1) * thr_mult
             keep = d <= thr[:, None]
             # stable argsort == (d, centroid index) order — identical
@@ -423,13 +412,9 @@ def split_oversized_cells(
                 x = np.asarray(
                     pdf.loc[mask, vec_col].tolist(), dtype=np.float64
                 )
-                # fold-exact distances (NOTES alignment rule): sequential
-                # per-dim accumulation, vectorized across rows; np.argmin
-                # keeps the lowest index on ties like every router here
-                d = np.zeros((len(x), len(sm)), dtype=np.float64)
-                for j in range(x.shape[1]):
-                    diff = x[:, j : j + 1] - sm[None, :, j]
-                    d += diff * diff
+                # fold-exact distances (fold.py); np.argmin keeps the
+                # lowest index on ties like every router here
+                d = fold.l2_sq_pairwise(x, sm)
                 new[mask] = base[int(cell)] + np.argmin(d, axis=1)
             out = pdf[cols].copy()
             out[out_col] = new.astype(shard_np)
@@ -589,18 +574,7 @@ class IVFFlatIndex:
         """Centroid ranking happens on the centroid set only (driver-side,
         lists entries) — mirrors the reference's probe step 1, which uses the
         index's own distance function (ivfflat_index.cpp FindCentroid)."""
-
-        def score(c: list[float]) -> float:
-            if self.dist == "l2":
-                return math.dist(c, query)
-            dot = sum(x * y for x, y in zip(c, query))
-            if self.dist == "ip":
-                return -dot  # larger dot = nearer
-            na = math.sqrt(sum(x * x for x in c)) or 1e-300
-            nb = math.sqrt(sum(y * y for y in query)) or 1e-300
-            return -(dot / (na * nb))  # cosine: larger similarity = nearer
-
-        return sorted(range(self.lists), key=lambda i: score(self.centroids[i]))
+        return fold.rank_centroids(self.dist, self.centroids, query)
 
     def probe(
         self,
@@ -634,21 +608,6 @@ class IVFFlatIndex:
         out = cand.withColumn(dist_col, fn(F.col(self.vec_col), query))
         order = F.col(dist_col).asc() if ASCENDING[self.dist] else F.col(dist_col).desc()
         return out.orderBy(order).limit(k).drop(BUCKET_COL)
-
-    def _centroid_score(self, qvec: Column, c: Column) -> Column:
-        """Query→centroid score in 'smaller is nearer' orientation (same
-        orientation as the driver-side rank_buckets)."""
-        if self.dist == "l2":
-            return _l2_sq(qvec, c)
-        dot = F.aggregate(
-            F.zip_with(qvec, c, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v
-        )
-        if self.dist == "ip":
-            return -dot
-        norm = lambda v: F.sqrt(  # noqa: E731
-            F.aggregate(v, F.lit(0.0), lambda s, x: s + x * x)
-        )
-        return -dot / (norm(qvec) * norm(c))
 
     def probe_batch(
         self,
@@ -692,7 +651,8 @@ class IVFFlatIndex:
         scored = F.transform(
             _centroid_literal(self.centroids),
             lambda c, i: F.struct(
-                self._centroid_score(qvec, c).alias("d"), i.alias("b")
+                fold.col_centroid_score(self.dist, qvec, c).alias("d"),
+                i.alias("b"),
             ),
         )
         buckets = F.slice(F.array_sort(scored), 1, p)

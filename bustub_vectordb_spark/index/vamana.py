@@ -72,25 +72,14 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .hnsw import _Graph, _id_type, _l2_sq_fold, _pin_cpu_groups, _spread_queries
+from .. import fold
+from .hnsw import _Graph, _id_type, _pin_cpu_groups, _spread_queries
 
 
 def _centroid_mean(centroids: list[list[float]]) -> list[float]:
     """Pseudo-medoid query point: numpy mean over the (driver-resident)
     centroid list — computed identically by build and offline replay."""
     return [float(x) for x in np.asarray(centroids, dtype=np.float64).mean(axis=0)]
-
-
-def _fold_l2_rows(mat: np.ndarray, v: np.ndarray) -> np.ndarray:
-    """sqrt(Σ(x_d−v_d)²) accumulated SEQUENTIALLY per dim, vectorized
-    across rows — the NOTES fold-exact rule: no BLAS reduction order to
-    vary between a zero-copy Arrow slice (worker) and a fresh driver
-    array, and the same float op order as Spark's l2 left-fold."""
-    s = np.zeros(len(mat), dtype=np.float64)
-    for j in range(mat.shape[1] if len(mat) else 0):
-        d = mat[:, j] - v[j]
-        s = s + d * d
-    return np.sqrt(s)
 
 
 def _robust_prune(
@@ -134,7 +123,7 @@ def _robust_prune(
         return []
     sv = np.array(src_vec, dtype=np.float64)
     mat = np.array(cand_mat, dtype=np.float64)
-    d_src = _fold_l2_rows(mat, sv)
+    d_src = np.sqrt(fold.l2_sq_rows(mat, sv))
     order = sorted(range(n), key=lambda i: (d_src[i], cand_ids[i]))
     kept_idx: list = []
     occluded = np.zeros(n, dtype=bool)
@@ -160,7 +149,7 @@ def _robust_prune(
                 if occluded[i]:
                     continue
                 kept_idx.append(i)
-                d_kept = _fold_l2_rows(mat, mat[i])
+                d_kept = np.sqrt(fold.l2_sq_rows(mat, mat[i]))
                 occluded |= alpha * d_kept <= d_src
                 occluded[i] = True
     for i in order:
@@ -171,7 +160,7 @@ def _robust_prune(
         kept_idx.append(i)
         if len(kept_idx) >= r:
             break
-        d_kept = _fold_l2_rows(mat, mat[i])
+        d_kept = np.sqrt(fold.l2_sq_rows(mat, mat[i]))
         occluded |= alpha * d_kept <= d_src
         occluded[i] = True
     kept_idx.sort(key=lambda i: (d_src[i], cand_ids[i]))
@@ -186,7 +175,7 @@ def _lloyds_fold_exact(
     iteration cap, 1e-9 movement stop) but with the assignment distances
     accumulated per-dim elementwise instead of a BLAS matmul: the matmul
     kernel's summation order is buffer-alignment/architecture-dependent
-    (see the module's _sims_for_ids note), and a ULP flip in an argmin
+    (see bustub_vectordb_spark/fold.py), and a ULP flip in an argmin
     here changes which rows form a sub-cell — and therefore the entry
     seeds — between a Spark worker and the driver-side offline replay.
     Elementwise accumulation has no reduction order to vary; the centroid
@@ -194,11 +183,7 @@ def _lloyds_fold_exact(
     reduction, deterministic for equal shapes)."""
     cents = init.copy()
     for _ in range(max_iter):
-        d = np.zeros((len(x), len(cents)), dtype=np.float64)
-        for j in range(x.shape[1]):
-            diff = x[:, j : j + 1] - cents[:, j]
-            d += diff * diff
-        assign = np.argmin(d, axis=1)
+        assign = np.argmin(fold.l2_sq_pairwise(x, cents), axis=1)
         new = cents.copy()
         for c in range(len(cents)):
             members = x[assign == c]
@@ -234,10 +219,7 @@ def _cell_entry_points(
         np.asarray(mat, dtype=np.float64), np.asarray(mat[:e], dtype=np.float64),
         max_iter,
     )
-    d = np.zeros((len(mat), len(ecents)), dtype=np.float64)
-    for j in range(mat.shape[1]):
-        diff = mat[:, j : j + 1] - ecents[:, j]
-        d += diff * diff
+    d = fold.l2_sq_pairwise(mat, ecents)
     assign = np.argmin(d, axis=1)  # first-min ties, like the codegen argmin
     out: list[int] = []
     for c in range(len(ecents)):
@@ -317,12 +299,7 @@ def _attach_unreached(
     # expansion (walks start at the seeds), which dominates an arbitrary
     # interior donor for discoverability at any ef.
     seeds = sorted({int(entry), *(int(x) for x in (entry_points or []))})
-    smat = mat[seeds]
-    amat = mat[anchors]
-    d = np.zeros((len(anchors), len(seeds)), dtype=np.float64)
-    for j in range(mat.shape[1]):
-        diff = amat[:, j : j + 1] - smat[:, j]
-        d += diff * diff
+    d = fold.l2_sq_pairwise(mat[anchors], mat[seeds])
     donors = np.argmin(d, axis=1)  # first-min ties -> lowest seed id
     for v, ui in zip(anchors, donors):  # id-ordered appends
         u = seeds[int(ui)]
@@ -337,16 +314,7 @@ def _normalize_expr(vec):
     through unchanged instead of dividing by zero)."""
     from pyspark.sql import functions as F
 
-    nrm = F.greatest(
-        F.sqrt(
-            F.aggregate(
-                F.transform(vec, lambda x: x * x),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        ),
-        F.lit(1e-300),
-    )
+    nrm = F.greatest(F.sqrt(fold.col_norm_sq(vec)), F.lit(1e-300))
     return F.transform(vec, lambda x: x / nrm)
 
 
@@ -368,11 +336,7 @@ def _sims_for_ids(g: "_Graph", hit_ids: list, q: list[float]) -> list:
         import bisect
 
         idx = np.asarray([bisect.bisect_left(ids, h) for h in hit_ids], dtype=np.int64)
-    mat = g.vecs[idx]
-    s = np.zeros(len(mat), dtype=np.float64)
-    for j in range(mat.shape[1] if len(mat) else 0):
-        s = s + mat[:, j] * qn[j]
-    return [float(x) for x in s]
+    return [float(x) for x in fold.dot_rows(g.vecs[idx], qn)]
 
 
 def _prep_query(dist: str, q: list[float]) -> list[float]:
@@ -391,10 +355,7 @@ def _normalize_row(v: list) -> list[float]:
     """Python twin of :func:`_normalize_expr` — same fold order, same
     guard, same per-element divide, so offline replays normalize to the
     exact floats Spark stores."""
-    s = 0.0
-    for x in v:
-        s = s + x * x
-    n = max(math.sqrt(s), 1e-300)
+    n = max(math.sqrt(fold.norm_sq(v)), 1e-300)
     return [x / n for x in v]
 
 
@@ -407,12 +368,7 @@ def _transform_rows(dist: str, vecs: list) -> list:
     if dist == "cosine":
         return [_normalize_row([float(x) for x in v]) for v in vecs]
     if dist == "ip":
-        sqs = []
-        for v in vecs:
-            s = 0.0
-            for x in v:
-                s = s + float(x) * float(x)
-            sqs.append(s)
+        sqs = [fold.norm_sq([float(x) for x in v]) for v in vecs]
         m2 = max(sqs)
         return [
             [float(x) for x in v] + [math.sqrt(max(m2 - s, 0.0))]
@@ -543,11 +499,7 @@ class PartitionedVamanaServing:
             )
         qsq = queries.select(
             F.col(qid_col),
-            F.aggregate(
-                F.transform(qcast, lambda x: x * x),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ).alias("__qsq"),
+            fold.col_norm_sq(qcast).alias("__qsq"),
         )
         return (
             out.join(qsq, qid_col)
@@ -782,11 +734,7 @@ class VamanaIndex:
             # exact inner products. M² = max row-norm fold, collected
             # once and inlined as a literal (exact double round-trip);
             # replayed bit-exactly by offline_vamana.
-            sq = F.aggregate(
-                F.transform(vec, lambda x: x * x),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
+            sq = fold.col_norm_sq(vec)
             m2 = float(df.select(F.max(sq).alias("m")).collect()[0]["m"])
             extra_params["ip_m2"] = m2
             vec = F.concat(
@@ -980,14 +928,14 @@ class VamanaIndex:
         # mean, (dist, id) ties. On the full-table training path srows IS
         # the id-sorted corpus, so the medoid computes driver-side with the
         # same sequential per-dim fold the codegen l2 expression (and
-        # offline_vamana's fold_l2) evaluates — identical doubles, identical
+        # offline_vamana's fold.exact) evaluates — identical doubles, identical
         # tie order, one less Spark job (~0.5 s of TopN scheduling at bench
         # scale). The sampled big-table path keeps the distributed TopN.
         pm = _centroid_mean(centroids)
         if frac >= 1.0:
             pmv = np.asarray(pm, dtype=np.float64)
             smat_pm = np.asarray([list(row["v"]) for row in srows], dtype=np.float64)
-            pd_d = _fold_l2_rows(smat_pm, pmv)
+            pd_d = np.sqrt(fold.l2_sq_rows(smat_pm, pmv))
             entry_id = min(
                 zip(pd_d.tolist(), (row["__id"] for row in srows))
             )[1]
@@ -1375,8 +1323,7 @@ class VamanaIndex:
             g = _Graph(r_deg, efc, efs, "l2", seed)
             g.ids = list(ids)
             g.vecs = mat
-            g._norms = np.maximum(np.linalg.norm(mat, axis=1), 1e-300)
-            g._norms_sq = (mat * mat).sum(axis=1)
+            g._refresh_norms()
             idmap = {e: i for i, e in enumerate(ids)}
             layer0: dict[int, list[int]] = {i: [] for i in range(len(ids))}
             for i, nbs in enumerate(pdf["__nbs"].tolist()):
@@ -1499,9 +1446,7 @@ class VamanaIndex:
             g.pq_codes = np.asarray(
                 [list(row["codes"]) for row in rows], dtype=np.uint8
             )
-            dec = g._mat_rows(slice(None))
-            g._norms = np.maximum(np.linalg.norm(dec, axis=1), 1e-300)
-            g._norms_sq = (dec * dec).sum(axis=1)
+            g._refresh_norms()
         else:
             verts = sorted(
                 self.vertices.collect(), key=lambda row: row[self.id_col]
@@ -1510,8 +1455,7 @@ class VamanaIndex:
             g.vecs = np.asarray(
                 [list(row["vec"]) for row in verts], dtype=np.float64
             )
-            g._norms = np.maximum(np.linalg.norm(g.vecs, axis=1), 1e-300)
-            g._norms_sq = (g.vecs * g.vecs).sum(axis=1)
+            g._refresh_norms()
         idmap = {ext: i for i, ext in enumerate(g.ids)}
         layer0: dict[int, list[int]] = {i: [] for i in range(len(g.ids))}
         for row in self.edges.collect():
@@ -1881,7 +1825,7 @@ def offline_vamana(
     ml = min(min_lists, shards)
     members: dict[int, tuple[list, list]] = {}
     for i, v in zip(ids, vecs):
-        dists = [_l2_sq_fold(v, c) for c in centroids]
+        dists = [fold.l2_sq(v, c) for c in centroids]
         thr = min(dists) * thr_mult
         ranked = [b for _, b in sorted((d, b) for b, d in enumerate(dists))]
         top = set(ranked[:ml])
@@ -1902,13 +1846,6 @@ def offline_vamana(
 
     by_id = dict(zip(ids, vecs))
 
-    def fold_l2(a: list[float], b: list[float]) -> float:
-        s = 0.0
-        for x, y in zip(a, b):
-            d = x - y
-            s = s + d * d
-        return math.sqrt(s)
-
     adj_ext: dict = {}
     cand_by_src: dict = {}
     for s, d in sym:
@@ -1922,7 +1859,7 @@ def offline_vamana(
         )
 
     pm = _centroid_mean(centroids)
-    entry_ext = min(ids, key=lambda i: (fold_l2(by_id[i], pm), i))
+    entry_ext = min(ids, key=lambda i: (fold.exact("l2", by_id[i], pm), i))
 
     # multi-entry seeds — the SAME shared kernel the Spark build's
     # full-table path runs (_cell_entry_points: id-ordered k-means init,
@@ -1943,8 +1880,7 @@ def offline_vamana(
     order = sorted(ids)
     g.ids = list(order)
     g.vecs = np.asarray([by_id[i] for i in order], dtype=np.float64)
-    g._norms = np.maximum(np.linalg.norm(g.vecs, axis=1), 1e-300)
-    g._norms_sq = (g.vecs * g.vecs).sum(axis=1)
+    g._refresh_norms()
     idmap = {ext: i for i, ext in enumerate(order)}
     layer0: dict[int, list[int]] = {i: [] for i in range(len(order))}
     for s, nbs in adj_ext.items():
@@ -2009,7 +1945,7 @@ def offline_vamana_partitioned(
         replicate_cap = VamanaIndex.REPLICATE_CAP_DEFAULT
     members: dict[int, list] = {}
     for i, v in zip(ids, vecs):
-        dists = [_l2_sq_fold(v, c) for c in centroids]
+        dists = [fold.l2_sq(v, c) for c in centroids]
         if replicate_eps > 0:
             # closure assignment: ball ∩ top-replicate_cap ∪ top-1, ties
             # on (d, cell) — route_overlap's exact rule over the same
@@ -2051,8 +1987,7 @@ def offline_vamana_partitioned(
         sg = _Graph(r_deg, efc, efs, "l2", seed)
         sg.ids = list(mids)
         sg.vecs = mat
-        sg._norms = np.maximum(np.linalg.norm(mat, axis=1), 1e-300)
-        sg._norms_sq = (mat * mat).sum(axis=1)
+        sg._refresh_norms()
         idmap = {e: k for k, e in enumerate(mids)}
         layer0: dict[int, list[int]] = {}
         for k, e in enumerate(mids):
@@ -2099,16 +2034,8 @@ def offline_vamana_pq_probe(
     hits = g.search(
         np.asarray(query, dtype=np.float64), k, shortlist=k * rerank_mult
     )
-
-    def fold_l2(a, b) -> float:
-        s = 0.0
-        for x, y in zip(a, b):
-            d = x - y
-            s = s + d * d
-        return math.sqrt(s)
-
     scored = [
-        (hid, fold_l2([float(x) for x in vectors_by_id[hid]], query))
+        (hid, fold.exact("l2", [float(x) for x in vectors_by_id[hid]], query))
         for hid, _d in hits
     ]
     scored.sort(key=lambda t: (t[1], t[0]))
@@ -2143,21 +2070,13 @@ def offline_vamana_pq_batch(
     books = [[[float(x) for x in row] for row in b] for b in model.centroids]
     bounds = [[int(s), int(e)] for s, e in model.bounds]
     g.quantize_pq(books, bounds, centers=centers)
-
-    def fold_l2(a, b) -> float:
-        s = 0.0
-        for x, y in zip(a, b):
-            d = x - y
-            s = s + d * d
-        return math.sqrt(s)
-
     out = []
     for qid, qv in queries:
         hits = g.search(
             np.asarray(qv, dtype=np.float64), k, shortlist=k * rerank_mult
         )
         scored = [
-            (hid, fold_l2([float(x) for x in vectors_by_id[hid]], qv))
+            (hid, fold.exact("l2", [float(x) for x in vectors_by_id[hid]], qv))
             for hid, _d in hits
         ]
         scored.sort(key=lambda t: (t[1], t[0]))

@@ -27,6 +27,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import fold
 from .functions import text as X
 from .functions.ranking import bm25_search_sql, tfidf_top_terms_sql
 from .functions.repetition import repetition_metrics_sql
@@ -1849,12 +1850,10 @@ def q_source_partitioned_pruning(spark, sf_dir):
 
 
 def _ivfflat_probe_oracle() -> str:
-    import math
-
     values, cents = _ivfflat_oracle_cents()
     # driver-side bucket ranking, same as IVFFlatIndex.rank_buckets (l2;
     # stable sort → lowest index on ties)
-    buckets = sorted(range(len(cents)), key=lambda i: math.dist(cents[i], QUERY_VEC))[:4]
+    buckets = fold.rank_centroids("l2", cents, QUERY_VEC)[:4]
     blist = ", ".join(str(b) for b in buckets)
     q = _vec_sql_literal(QUERY_VEC)
     return f"""
@@ -1932,10 +1931,8 @@ def q_ann_ivfflat_probe(spark, sf_dir):  # recall also asserted in tests/test_iv
 
 
 def _ivfflat_filtered_probe_oracle() -> str:
-    import math
-
     values, cents = _ivfflat_oracle_cents()
-    buckets = sorted(range(len(cents)), key=lambda i: math.dist(cents[i], QUERY_VEC))[:4]
+    buckets = fold.rank_centroids("l2", cents, QUERY_VEC)[:4]
     blist = ", ".join(str(b) for b in buckets)
     q = _vec_sql_literal(QUERY_VEC)
     return f"""
@@ -2287,10 +2284,8 @@ def _ivf_sq8_rerank_oracle() -> str:
     centroids (deterministic training, same as the partial-probe oracles),
     SQ8 stats computed in SQL, ADC evaluated per row as an in-order list
     fold (rounded to 9 like the Spark side), exact re-rank of the top-40."""
-    import math
-
     values, cents = _ivfflat_oracle_cents()
-    buckets = sorted(range(len(cents)), key=lambda i: math.dist(cents[i], QUERY_VEC))[:4]
+    buckets = fold.rank_centroids("l2", cents, QUERY_VEC)[:4]
     blist = ", ".join(str(b) for b in buckets)
     q = _vec_sql_literal(QUERY_VEC)
     # decoded value for dim i (1-based lists), matching SQ8Model.encode/
@@ -2343,10 +2338,8 @@ def _ivf_bq_rerank_oracle() -> str:
     midrange thresholds computed in SQL (exact min/max — order-independent),
     per-row Hamming as a bit-mismatch fold (INTEGER — no rounding), exact
     re-rank of the top-40 rounded to 8 like the Spark side."""
-    import math
-
     values, cents = _ivfflat_oracle_cents()
-    buckets = sorted(range(len(cents)), key=lambda i: math.dist(cents[i], QUERY_VEC))[:4]
+    buckets = fold.rank_centroids("l2", cents, QUERY_VEC)[:4]
     blist = ", ".join(str(b) for b in buckets)
     q = _vec_sql_literal(QUERY_VEC)
     return f"""
@@ -2410,10 +2403,8 @@ def _ivf_bq_local_rerank_oracle() -> str:
     midranges from its own members (exact min/max per (bucket, dim)), and
     the query's bits are recomputed against each probed bucket's
     thresholds."""
-    import math
-
     values, cents = _ivfflat_oracle_cents()
-    buckets = sorted(range(len(cents)), key=lambda i: math.dist(cents[i], QUERY_VEC))[:4]
+    buckets = fold.rank_centroids("l2", cents, QUERY_VEC)[:4]
     blist = ", ".join(str(b) for b in buckets)
     q = _vec_sql_literal(QUERY_VEC)
     return f"""
@@ -2497,13 +2488,7 @@ def _ivf_sq8_rerank_cosine_oracle() -> str:
 
     values, cents = _ivfflat_oracle_cents()
 
-    def cos_score(c):  # rank_buckets' exact float arithmetic, negated-cos
-        dot = sum(x * y for x, y in zip(c, QUERY_VEC))
-        na = math.sqrt(sum(x * x for x in c)) or 1e-300
-        nb = math.sqrt(sum(y * y for y in QUERY_VEC)) or 1e-300
-        return -(dot / (na * nb))
-
-    buckets = sorted(range(len(cents)), key=lambda i: cos_score(cents[i]))[:4]
+    buckets = fold.rank_centroids("cosine", cents, QUERY_VEC)[:4]
     blist = ", ".join(str(b) for b in buckets)
     q = _vec_sql_literal(QUERY_VEC)
     qn = repr(math.sqrt(sum(float(x) * float(x) for x in QUERY_VEC)) or 1e-300)
@@ -2797,7 +2782,7 @@ def _hnsw_filtered_probe_oracle() -> str:
 def q_ann_hnsw_filtered_probe(spark, sf_dir):
     # FILTERED vector search on HNSW (twin of ann_ivfflat_filtered_probe):
     # the metadata predicate (label = 2) becomes an allowed-id set enforced
-    # DURING the graph walk (_search_layer_filtered) — top-k among matching
+    # DURING the graph walk (_search_layer(allowed=...)) — top-k among matching
     # rows with full recall, not a post-filter that can come up short.
     # Exact offline-replay oracle: same graph, same filtered walk, numpy-only.
     idx = _hnsw_for(spark, sf_dir)
@@ -3415,7 +3400,7 @@ def _vamana_filtered_oracle() -> str:
 def q_ann_vamana_filtered(spark, sf_dir):
     # Filtered search on the merged graph: the metadata predicate
     # (label = 2) becomes an allowed-id set enforced DURING the beam walk
-    # (_search_layer_filtered — disallowed vertices still navigate) —
+    # (_search_layer(allowed=...) — disallowed vertices still navigate) —
     # top-k among matching rows, not a post-filter. Exact offline replay.
     from .index.vamana import VamanaIndex
 
@@ -3788,20 +3773,11 @@ def _offline_vamana_pqr_model_cached():
     if key not in _VAMANA_PQR_MEMO:
         g = _offline_vamana_l2_cached()
         centers = [[float(x) for x in g.vecs[i]] for i in (g.entry_points or [])]
-
-        def fold_l2_sq(v, c):
-            s = 0.0
-            for x, y in zip(v, c):
-                d = x - y
-                s = s + d * d
-            return s
-
         cmat = np.asarray(centers, dtype=np.float64)
         res_rows = []
         for i in range(len(g.ids)):
             v = [float(x) for x in g.vecs[i]]
-            dists = [fold_l2_sq(v, c) for c in centers]
-            b = dists.index(min(dists))
+            b = fold.nearest(v, centers)
             res_rows.append(np.asarray(v, dtype=np.float64) - cmat[b])
         model = PQModel.train_rows(
             np.asarray(res_rows, dtype=np.float64), m=16, k=32
@@ -4244,18 +4220,13 @@ def _vamana_ip_partitioned_oracle() -> str:
     # M^2 is RE-DERIVED from the parquet with the same folds the build
     # evaluates (oracle independence: nothing is read back from the Spark
     # index); |q|^2 is the same fold the serving facade inlines
-    qsq = 0.0
-    for x in QUERY_VEC:
-        qsq = qsq + float(x) * float(x)
+    qsq = fold.norm_sq([float(x) for x in QUERY_VEC])
     import pyarrow.parquet as pq
 
     t = pq.read_table(f"{_oracle_sf()}/embeddings.parquet", columns=["embedding"])
     m2 = 0.0
     for v in t["embedding"].to_pylist():
-        s = 0.0
-        for x in v:
-            s = s + float(x) * float(x)
-        m2 = max(m2, s)
+        m2 = max(m2, fold.norm_sq([float(x) for x in v]))
     qn = _prep_query("ip", [float(x) for x in QUERY_VEC])
     hits = offline_routed_probe(cents, graphs, qn, 10, 3)
     # augmented-l2 -> inner product: ip = (M^2 + |q|^2 - d^2) / 2 — the
@@ -4614,20 +4585,11 @@ def _offline_pqr_model_cached():
             f"{key}/embeddings.parquet", columns=["vec_id", "embedding"]
         )
         vecs = dict(zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist()))
-
-        def fold_l2_sq(v, c):
-            s = 0.0
-            for x, y in zip(v, c):
-                d = x - y
-                s = s + d * d
-            return s
-
         cmat = np.asarray(cents, dtype=np.float64)
         res_rows = []
         for rid in sorted(vecs):
             v = [float(x) for x in vecs[rid]]
-            dists = [fold_l2_sq(v, c) for c in cents]
-            b = dists.index(min(dists))
+            b = fold.nearest(v, cents)
             res_rows.append(np.asarray(v, dtype=np.float64) - cmat[b])
         _PQR_MEMO[key] = PQModel.train_rows(
             np.asarray(res_rows, dtype=np.float64), m=16, k=32
@@ -7540,7 +7502,7 @@ _GATE_WINDOW = [
     # --- r13 rotation (optimization round 2): every path this round's
     # optimizations touch where digits CAN move re-gates hard.
     # (a) BQ graphs now walk on a per-query byte-LUT table (hnsw.py
-    # _walk_table) — walk-steering values move in ulps vs the old batched
+    # _walk_eval) — walk-steering values move in ulps vs the old batched
     # unpack+matmul, so every BQ-graph serving entry re-gates;
     "ann_hnsw_routed_bq_rerank",
     "ann_hnsw_routed_bq_batch",

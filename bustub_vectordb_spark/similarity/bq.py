@@ -76,6 +76,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..fold import col_dot, col_l2_sq
 from .quantize import dim_stats
 
 # 32 bits per word, stored in (signed) longs: the MSB-first fold acc*2+b
@@ -98,7 +99,7 @@ WORD_BITS = 32
 # bit-identical IEEE op sequences (verified: same 64-dim dot product
 # returns the same double in all three). BLAS matmuls are NOT used for
 # any value that crosses the engine boundary (their summation order is
-# buffer-alignment-dependent — see index/hnsw._dist_many).
+# buffer-alignment-dependent — see bustub_vectordb_spark/fold.py).
 
 
 def rotation_matrix(dim: int, seed: int) -> list[list[float]]:
@@ -132,11 +133,7 @@ def rotate_col(vec: Column | str, rotation: list[list[float]]) -> Column:
     )
     out = F.transform(
         F.sequence(F.lit(1), F.lit(dim)),
-        lambda d: F.aggregate(
-            F.zip_with(v, F.element_at(rot, d), lambda x, r: x * r),
-            F.lit(0.0),
-            lambda s, y: s + y,
-        ),
+        lambda d: col_dot(v, F.element_at(rot, d)),
     )
     return F.when(ok.isNull(), out)  # assert_true is NULL on success
 
@@ -364,18 +361,7 @@ class BQModel:
         short = self.hamming_topk(df, vec_col, id_col, query, shortlist)
         q = F.array(*[F.lit(float(x)) for x in query])
         exact = F.round(
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with(
-                        F.col(vec_col).cast("array<double>"),
-                        q,
-                        lambda x, qq: (x - qq) * (x - qq),
-                    ),
-                    F.lit(0.0),
-                    lambda s, v: s + v,
-                )
-            ),
-            6,
+            F.sqrt(col_l2_sq(F.col(vec_col).cast("array<double>"), q)), 6
         )
         return (
             df.join(broadcast(short.select(id_col)), id_col, "inner")

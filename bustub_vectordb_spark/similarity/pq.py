@@ -35,11 +35,13 @@ The reference stores raw doubles in all of its indexes
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .. import fold
 from ..index.ivfflat import _lloyds_numpy
 
 
@@ -193,7 +195,7 @@ class PQModel:
         partial = F.zip_with(
             lut_lit, codes, lambda row, c: F.element_at(row, c + 1)
         )
-        total = F.aggregate(partial, F.lit(0.0), lambda a, v: a + v)
+        total = fold.col_seq_sum(partial)
         return F.sqrt(total) if metric == "l2" else total
 
     def adc_topk(
@@ -368,14 +370,12 @@ class IVFPQIndex:
                 )
             )
             adc = F.sqrt(
-                F.aggregate(
+                fold.col_seq_sum(
                     F.zip_with(
                         F.col("__lut"),
                         F.col("codes"),
                         lambda row, c: F.element_at(row, c + 1),
-                    ),
-                    F.lit(0.0),
-                    lambda a, v: a + v,
+                    )
                 )
             )
             shortlist = (
@@ -477,6 +477,20 @@ def offline_pq(
     return model, ids, model.encode_rows(mat)
 
 
+def _adc_fold(lut, row) -> float:
+    return fold.seq_sum(lut[i][int(c)] for i, c in enumerate(row))
+
+
+def _exact_rerank(vectors_by_id: dict, short, query, k: int) -> list[tuple]:
+    """Exact left-fold l2 of each shortlisted id, (d, id)-ordered top-k."""
+    out = [
+        (rid, fold.exact("l2", [float(x) for x in vectors_by_id[rid]], query))
+        for rid in short
+    ]
+    out.sort(key=lambda t: (t[1], t[0]))
+    return out[:k]
+
+
 def offline_pq_adc(
     model: PQModel,
     ids: list,
@@ -487,14 +501,10 @@ def offline_pq_adc(
 ) -> list[tuple]:
     """Replay adc_topk with the same left-fold arithmetic as the codegen
     expression (sequential adds over subspaces; sqrt for l2)."""
-    import math
-
     lut = model.lut(query, metric)
     out = []
     for rid, row in zip(ids, codes):
-        s = 0.0
-        for i, c in enumerate(row):
-            s = s + lut[i][int(c)]
+        s = _adc_fold(lut, row)
         out.append((rid, math.sqrt(s) if metric == "l2" else s))
     asc = metric == "l2"
     out.sort(key=lambda t: (t[1] if asc else -t[1], t[0]))
@@ -516,42 +526,20 @@ def offline_ivfpq_probe(
     argmin the codegen expression evaluates (first-min ties), driver-style
     bucket ranking (math.dist), ADC over probed buckets, exact left-fold
     l2 re-rank of the shortlist."""
-    import math
-
-    def fold_l2_sq(v, c):
-        s = 0.0
-        for x, y in zip(v, c):
-            d = x - y
-            s = s + d * d
-        return s
-
-    assign = {}
-    for rid in ids:
-        v = [float(x) for x in vectors_by_id[rid]]
-        dists = [fold_l2_sq(v, c) for c in centroids]
-        assign[rid] = dists.index(min(dists))
-    ranked = sorted(range(len(centroids)), key=lambda i: math.dist(centroids[i], query))
-    probed = set(ranked[:probe_lists])
+    assign = {
+        rid: fold.nearest([float(x) for x in vectors_by_id[rid]], centroids)
+        for rid in ids
+    }
+    probed = set(fold.rank_centroids("l2", centroids, query)[:probe_lists])
 
     lut = model.lut(query)
     adc = []
     for rid, row in zip(ids, codes):
         if assign[rid] not in probed:
             continue
-        s = 0.0
-        for i, c in enumerate(row):
-            s = s + lut[i][int(c)]
-        adc.append((rid, math.sqrt(s)))
+        adc.append((rid, math.sqrt(_adc_fold(lut, row))))
     adc.sort(key=lambda t: (t[1], t[0]))
-    out = []
-    for rid, _ in adc[:rerank]:
-        s = 0.0
-        for x, y in zip(vectors_by_id[rid], query):
-            d = float(x) - y
-            s = s + d * d
-        out.append((rid, math.sqrt(s)))
-    out.sort(key=lambda t: (t[1], t[0]))
-    return out[:k]
+    return _exact_rerank(vectors_by_id, [rid for rid, _ in adc[:rerank]], query, k)
 
 
 def offline_ivfpq_residual_probe(
@@ -569,31 +557,20 @@ def offline_ivfpq_residual_probe(
     order-free), PQ TRAINED ON THE ID-SORTED RESIDUALS (mirroring
     PQModel.train's full-table path over _residual_df), per-bucket query
     LUT from q − centroid[b], left-fold ADC, exact l2 re-rank."""
-    import math
-
-    def fold_l2_sq(v, c):
-        s = 0.0
-        for x, y in zip(v, c):
-            d = x - y
-            s = s + d * d
-        return s
-
     ids = sorted(vectors_by_id)
     cents = np.asarray(centroids, dtype=np.float64)
     assign = {}
     res_rows = []
     for rid in ids:
         v = [float(x) for x in vectors_by_id[rid]]
-        dists = [fold_l2_sq(v, c) for c in centroids]
-        b = dists.index(min(dists))
+        b = fold.nearest(v, centroids)
         assign[rid] = b
         res_rows.append(np.asarray(v, dtype=np.float64) - cents[b])
     res_mat = np.asarray(res_rows, dtype=np.float64)
     model = PQModel.train_rows(res_mat, m=m, k=k_codes)
     codes = model.encode_rows(res_mat)
 
-    ranked = sorted(range(len(centroids)), key=lambda i: math.dist(centroids[i], query))
-    probed = ranked[:probe_lists]
+    probed = fold.rank_centroids("l2", centroids, query)[:probe_lists]
     q = np.asarray(query, dtype=np.float64)
     luts = {b: model.lut([float(x) for x in (q - cents[b])]) for b in probed}
     probed_set = set(probed)
@@ -602,21 +579,9 @@ def offline_ivfpq_residual_probe(
         b = assign[rid]
         if b not in probed_set:
             continue
-        lut = luts[b]
-        s = 0.0
-        for i, c in enumerate(row):
-            s = s + lut[i][int(c)]
-        adc.append((rid, math.sqrt(s)))
+        adc.append((rid, math.sqrt(_adc_fold(luts[b], row))))
     adc.sort(key=lambda t: (t[1], t[0]))
-    out = []
-    for rid, _ in adc[:rerank]:
-        s = 0.0
-        for x, y in zip(vectors_by_id[rid], query):
-            d = float(x) - y
-            s = s + d * d
-        out.append((rid, math.sqrt(s)))
-    out.sort(key=lambda t: (t[1], t[0]))
-    return out[:k]
+    return _exact_rerank(vectors_by_id, [rid for rid, _ in adc[:rerank]], query, k)
 
 
 def offline_pq_rerank(
@@ -629,15 +594,5 @@ def offline_pq_rerank(
     rerank_mult: int = 4,
 ) -> list[tuple]:
     """Replay pq_rerank_topk: ADC shortlist, exact left-fold l2 rerank."""
-    import math
-
     short = [rid for rid, _ in offline_pq_adc(model, ids, codes, query, k * rerank_mult)]
-    out = []
-    for rid in short:
-        s = 0.0
-        for x, y in zip(vectors_by_id[rid], query):
-            d = float(x) - y
-            s = s + d * d
-        out.append((rid, math.sqrt(s)))
-    out.sort(key=lambda t: (t[1], t[0]))
-    return out[:k]
+    return _exact_rerank(vectors_by_id, short, query, k)

@@ -23,6 +23,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..fold import col_norm_sq
 from ..functions.vector import inner_product
 from .lsh_ann import make_planes
 
@@ -30,9 +31,7 @@ from .lsh_ann import make_planes
 def normalize(vec: Column | str) -> Column:
     """v / ||v|| (safe at the zero vector: returns zeros)."""
     v = (F.col(vec) if isinstance(vec, str) else vec).cast("array<double>")
-    norm = F.sqrt(
-        F.aggregate(F.transform(v, lambda x: x * x), F.lit(0.0), lambda s, t: s + t)
-    )
+    norm = F.sqrt(col_norm_sq(v))
     return F.transform(v, lambda x: F.when(norm == 0, F.lit(0.0)).otherwise(x / norm))
 
 

@@ -37,6 +37,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..fold import col_dot, col_l2_sq, col_norm_sq
+
 
 def dim_stats(df: DataFrame, vec_col: str) -> DataFrame:
     """(dim, mn, mx) per dimension — distributed, one shuffle keyed by dim."""
@@ -45,6 +47,10 @@ def dim_stats(df: DataFrame, vec_col: str) -> DataFrame:
         .groupBy("dim")
         .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
     )
+
+
+def _query_lit(query: list[float]) -> Column:
+    return F.array(*[F.lit(float(x)) for x in query])
 
 
 @dataclass
@@ -95,24 +101,12 @@ class SQ8Model:
     def adc_dist_sq(self, codes: Column | str, query: list[float]) -> Column:
         """Squared L2 between the full-precision query and the decoded codes
         (asymmetric: the query is never quantized)."""
-        decoded = self._decoded(codes)
-        q = F.array(*[F.lit(float(x)) for x in query])
-        return F.aggregate(
-            F.zip_with(decoded, q, lambda d, qq: (d - qq) * (d - qq)),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        )
+        return col_l2_sq(self._decoded(codes), _query_lit(query))
 
     def adc_ip(self, codes: Column | str, query: list[float]) -> Column:
         """Asymmetric inner product ⟨decoded, q⟩ — larger is nearer
         (vector_ip_ops; ops classes per reference catalog.h:322-331)."""
-        decoded = self._decoded(codes)
-        q = F.array(*[F.lit(float(x)) for x in query])
-        return F.aggregate(
-            F.zip_with(decoded, q, lambda d, qq: d * qq),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        )
+        return col_dot(self._decoded(codes), _query_lit(query))
 
     def adc_cosine(self, codes: Column | str, query: list[float]) -> Column:
         """Asymmetric cosine similarity: ⟨decoded,q⟩ / (‖decoded‖·‖q‖).
@@ -121,15 +115,8 @@ class SQ8Model:
         import math
 
         decoded = self._decoded(codes)
-        q = F.array(*[F.lit(float(x)) for x in query])
-        dot = F.aggregate(
-            F.zip_with(decoded, q, lambda d, qq: d * qq), F.lit(0.0), lambda s, v: s + v
-        )
-        dn = F.sqrt(
-            F.aggregate(
-                F.transform(decoded, lambda d: d * d), F.lit(0.0), lambda s, v: s + v
-            )
-        )
+        dot = col_dot(decoded, _query_lit(query))
+        dn = F.sqrt(col_norm_sq(decoded))
         qn = math.sqrt(sum(float(x) * float(x) for x in query)) or 1e-300
         return dot / (dn * F.lit(qn))
 

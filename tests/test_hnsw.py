@@ -100,7 +100,8 @@ def test_batch_search_spreads_single_split_queries(emb, hnsw, spark):
 
 
 def test_sharded_build_and_probe(emb):
-    sharded = HNSWIndex.build_partitioned(
+    """A probe without n_probe searches every shard and merges top-k."""
+    sharded = HNSWIndex.build_routed(
         emb, "embedding", "vec_id", shards=4, m=8, ef_construction=48, ef_search=48
     )
     exact = {r["vec_id"] for r in knn(emb, "embedding", QUERY, 10).collect()}
@@ -198,7 +199,7 @@ def test_string_id_column(spark):
     batch = idx.search_batch(queries, "qvec", k=2).collect()
     assert len(batch) == 10 and all(isinstance(r["doc_id"], str) for r in batch)
 
-    sharded = HNSWIndex.build_partitioned(
+    sharded = HNSWIndex.build_routed(
         df, "embedding", "doc_id", shards=2, m=4, ef_construction=16, ef_search=16
     )
     got = sharded.probe(q, 3).collect()
@@ -427,9 +428,8 @@ def test_plan_knn_filtered(emb):
 
 def test_sharded_insert_after_build(emb, spark):
     """ShardedHNSW.insert (the at-scale InsertVectorEntry): an inserted
-    duplicate of an existing vector must be findable by a pruned probe,
-    untouched shards' results are unchanged, and the hash-sharded variant
-    (no routing function) refuses."""
+    duplicate of an existing vector must be findable by a pruned probe and
+    untouched shards' results are unchanged."""
     routed = HNSWIndex.build_routed(
         emb, "embedding", "vec_id", shards=4, m=8, ef_construction=48, ef_search=48
     )
@@ -445,29 +445,6 @@ def test_sharded_insert_after_build(emb, spark):
     assert 88888 not in {r["vec_id"] for r in routed.probe(q, 3, n_probe=2).collect()}
     # shard count unchanged: the row routed into an existing shard
     assert extended.blobs.count() == routed.blobs.count()
-
-    hashed = HNSWIndex.build_partitioned(
-        emb, "embedding", "vec_id", shards=2, m=8, ef_construction=48, ef_search=48
-    )
-    with pytest.raises(ValueError, match="routed"):
-        hashed.insert(new)
-
-
-def test_partitioned_shard_ids_deterministic(spark):
-    """build_partitioned shard ids must be stable across builds/processes —
-    string ids previously went through Python hash(), which is per-process
-    salted (PYTHONHASHSEED) and differed between executors."""
-    rows = [(f"doc-{i:03d}", [float(i % 5), float(i % 3)]) for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id string, embedding array<double>")
-    a = HNSWIndex.build_partitioned(
-        df, "embedding", "doc_id", shards=2, m=4, ef_construction=16, ef_search=16
-    )
-    b = HNSWIndex.build_partitioned(
-        df, "embedding", "doc_id", shards=2, m=4, ef_construction=16, ef_search=16
-    )
-    ids_a = sorted(r["shard"] for r in a.blobs.select("shard").collect())
-    ids_b = sorted(r["shard"] for r in b.blobs.select("shard").collect())
-    assert ids_a == ids_b and len(set(ids_a)) == len(ids_a)
 
 
 def test_sharded_load_then_insert(spark, emb, tmp_path):
@@ -1620,17 +1597,17 @@ def test_harvest_aligned_guards_starving_geometry():
 def test_walk_table_bq_and_lazy_gate_parity():
     """r13: (a) BQ graphs get a byte-LUT walk table (they used to refuse
     one and pay per-frontier bit-unpack expansion); (b) quantized graphs
-    ABOVE the size gate get a _LazyWalkTable whose values are
+    ABOVE the size gate evaluate frontier rows only, with values
     bit-identical to the full table's (same per-query LUTs, same
     accumulation order), so a graph's walk distances cannot depend on
     which side of WALK_TABLE_MAX_ELEMS it falls; (c) search results are
     unchanged vs the batched _walk_dists fallback."""
     import numpy as np
 
-    from bustub_vectordb_spark.index.hnsw import (
-        _Graph,
-        _LazyWalkTable,
-    )
+    from bustub_vectordb_spark.index.hnsw import _Graph
+
+    def is_table(ev):  # a full table's walk evaluator is its lookup
+        return isinstance(getattr(ev, "__self__", None), np.ndarray)
 
     rng = np.random.RandomState(11)
     n, dim = 400, 32
@@ -1657,17 +1634,54 @@ def test_walk_table_bq_and_lazy_gate_parity():
         for quant in ("bq", "pq", "sq8"):
             g = fresh(quant)
             q = qs[0]
-            qq = float(q @ q)
-            full = g._walk_table(q, qq)
-            assert isinstance(full, np.ndarray), quant  # below gate: full table
+            full = g._walk_eval(q)
+            assert is_table(full), quant  # below gate: full table
             _Graph.WALK_TABLE_MAX_ELEMS = 0
-            lazy = g._walk_table(q, qq)
-            assert isinstance(lazy, _LazyWalkTable), quant
+            lazy = g._walk_eval(q)
+            assert not is_table(lazy), quant  # above gate: no full table
             # bit-identical values on both sides of the gate
-            assert np.array_equal(full, lazy[list(range(n))]), quant
+            assert np.array_equal(full(list(range(n))), lazy(list(range(n)))), quant
             res_lazy = [g.search(qv, 5) for qv in qs]
             _Graph.WALK_TABLE_MAX_ELEMS = old_gate
             res_full = [g.search(qv, 5) for qv in qs]
             assert res_full == res_lazy, quant
     finally:
         _Graph.WALK_TABLE_MAX_ELEMS = old_gate
+
+
+def test_filtered_walk_with_every_id_allowed_matches_unfiltered():
+    """Filtered and unfiltered search share one _search_layer: allowing
+    every id must return exactly the unfiltered (id, distance) list on
+    every storage form, with and without a harvested shortlist (here
+    deeper than the beam, so the stop_n clauses fire), and an empty
+    allowed set must return nothing."""
+    import numpy as np
+
+    from bustub_vectordb_spark.index.hnsw import _Graph
+
+    rng = np.random.RandomState(5)
+    n, dim = 300, 16
+    mat = rng.standard_normal((n, dim)) * 2.0
+    qs = rng.standard_normal((8, dim))
+    everyone = frozenset(range(n))
+    mins, maxs = mat.min(axis=0).tolist(), mat.max(axis=0).tolist()
+    for quant in ("float", "sq8", "pq", "bq"):
+        g = _Graph(8, 32, 16, "l2", 42)
+        if quant == "sq8":
+            g.quantize_sq8(mins, maxs)
+        elif quant == "bq":
+            g.quantize_bq(mins, maxs)
+        elif quant == "pq":
+            g.quantize_pq(
+                [mat[:16, i * 4 : (i + 1) * 4].copy() for i in range(4)],
+                [(i * 4, (i + 1) * 4) for i in range(4)],
+            )
+        g.add_all(list(range(n)), mat.copy())
+        for q in qs:
+            plain = g.search(q, 10)
+            assert len(plain) == 10, quant
+            assert g.search(q, 10, allowed_ids=everyone) == plain, quant
+            assert g.search(q, 10, allowed_ids=everyone, shortlist=40) == g.search(
+                q, 10, shortlist=40
+            ), quant
+            assert g.search(q, 10, allowed_ids=frozenset()) == [], quant

@@ -229,3 +229,48 @@ def test_funnel_single_user_shuffle(spark, sf_dir):
     # SinglePartition exchange is the only other one
     assert p.count("Exchange (") <= 2, p
     assert p.count("hashpartitioning(user_id") <= 1, p
+
+
+def _job_count(spark, group: str, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_index_build_job_counts(spark, tables):
+    """Spark job counts of the IVFFlat, routed-HNSW (with the blob
+    materialization) and vamana builds at the test scale factor — the job
+    analogue of the exchange counts above: at bench scale these builds are
+    bound by driver round trips and scheduling, so a refactor that adds a
+    job must show up here. The input carries a filter no other test uses,
+    so no earlier test's cached plan can satisfy a build's cache()."""
+    from bustub_vectordb_spark.index import HNSWIndex, IVFFlatIndex, VamanaIndex
+
+    emb = tables["embeddings"].filter(F.col("vec_id") != -7919)
+    built = {}
+    got = {
+        "ivfflat": _job_count(
+            spark, "jobs-ivfflat",
+            lambda: built.setdefault(
+                "ivf", IVFFlatIndex.build(emb, "embedding", lists=8)
+            ),
+        ),
+        "hnsw_routed": _job_count(
+            spark, "jobs-hnsw-routed",
+            lambda: built.setdefault(
+                "routed",
+                HNSWIndex.build_routed(emb, "embedding", "vec_id", shards=4),
+            ).blobs.count(),
+        ),
+        "vamana": _job_count(
+            spark, "jobs-vamana",
+            lambda: VamanaIndex.build(emb, "embedding", "vec_id", shards=4),
+        ),
+    }
+    built["ivf"].assignments.unpersist()
+    built["routed"].blobs.unpersist()
+    assert got == {"ivfflat": 8, "hnsw_routed": 8, "vamana": 6}, got

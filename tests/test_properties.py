@@ -157,7 +157,7 @@ def test_band_join_equals_naive(spark, left_ts, right_ts):
 # -------------------------------------------------------------------------
 # Filtered-HNSW recall under selective filters (VERDICT r4 #6)
 # -------------------------------------------------------------------------
-# _search_layer_filtered navigates THROUGH disallowed vertices (they still
+# _search_layer(allowed=...) navigates THROUGH disallowed vertices (they still
 # route the walk; only allowed ones enter the beam), so recall must not
 # collapse as the filter gets selective. Pinned here across selectivity
 # 0.01–0.9 vs exact filtered KNN over the sf0.01 embeddings (5k × 64).

@@ -181,3 +181,101 @@ def test_weighted_sample_no_id_bias_at_large_weights(spark):
     df2 = spark.createDataFrame([(1, [None, 1.0])], "id bigint, v array<double>")
     r = df2.select(embedding_flags("v", 2).alias("f")).collect()[0]["f"]
     assert r["nonfinite"] is True and r["zero_norm"] is False
+
+
+# -------------------------------------------------------------------------
+# fold.py: every Spark Column fold vs its Python / numpy twins, bit-for-bit
+# -------------------------------------------------------------------------
+_FOLD_DIM = 64
+
+
+def _fold_cases():
+    import numpy as np
+
+    from bustub_vectordb_spark import fold
+
+    def rows_l2(a, b):
+        return fold.l2_sq_rows(a, b[0]), np.diagonal(fold.l2_sq_pairwise(a, b))
+
+    def rows_dot(a, b):
+        return (fold.dot_rows(a, b[0]),)
+
+    def cos_score(v, c):
+        return -(fold.dot(v, c) / (math.sqrt(fold.norm_sq(v)) * math.sqrt(fold.norm_sq(c))))
+
+    # name -> (Column fold, Python scalar twin, numpy twins or None); the
+    # numpy twins get (rows of a, row 0 of b repeated) and return one
+    # value per row of a
+    return {
+        "l2_sq": (fold.col_l2_sq, fold.l2_sq, rows_l2),
+        "dot": (fold.col_dot, fold.dot, rows_dot),
+        "norm_sq": (lambda a, b: fold.col_norm_sq(a), lambda v, c: fold.norm_sq(v), None),
+        "seq_sum": (lambda a, b: fold.col_seq_sum(a), lambda v, c: fold.seq_sum(v), None),
+        "score_l2": (
+            lambda a, b: fold.col_centroid_score("l2", a, b), fold.l2_sq, None,
+        ),
+        "score_ip": (
+            lambda a, b: fold.col_centroid_score("ip", a, b),
+            lambda v, c: -fold.dot(v, c),
+            None,
+        ),
+        "score_cosine": (
+            lambda a, b: fold.col_centroid_score("cosine", a, b), cos_score, None,
+        ),
+        "exact_l2": (
+            lambda a, b: l2_dist(a, b), lambda v, c: fold.exact("l2", v, c), None,
+        ),
+        "exact_ip": (
+            lambda a, b: inner_product(a, b),
+            lambda v, c: fold.exact("ip", v, c),
+            None,
+        ),
+        "exact_cosine": (
+            lambda a, b: cosine_similarity(a, b),
+            lambda v, c: fold.exact("cosine", v, c),
+            None,
+        ),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_fold_cases()))
+def test_fold_twins_match_spark_bitwise(spark, name):
+    """The Python and numpy twins of each fold.py Column fold return the
+    SAME doubles Spark computes, on random 64-d rows — and the numpy forms
+    do so on a fresh array and on a buffer offset by one float (the NOTES
+    alignment hazard: BLAS reductions drift by an ulp there, the
+    dimension-sequential folds must not)."""
+    import numpy as np
+
+    col_fold, py_twin, np_twins = _fold_cases()[name]
+    rng = np.random.RandomState(17)
+    n = 24
+    a_mat = rng.standard_normal((n, _FOLD_DIM)) * 3.0
+    b_mat = rng.standard_normal((n, _FOLD_DIM))
+    a_rows, b_rows = a_mat.tolist(), b_mat.tolist()
+    df = spark.createDataFrame(
+        [(i, a_rows[i], b_rows[i], b_rows[0]) for i in range(n)],
+        "id int, a array<double>, b array<double>, b0 array<double>",
+    )
+    rows = (
+        df.select(
+            "id",
+            col_fold(F.col("a"), F.col("b")).alias("v"),
+            col_fold(F.col("a"), F.col("b0")).alias("v0"),
+        )
+        .orderBy("id")
+        .collect()
+    )
+    for i, r in enumerate(rows):
+        assert r["v"] == py_twin(a_rows[i], b_rows[i]), (name, i)
+    if np_twins is None:
+        return
+    # numpy forms score every row of a against row 0 of b
+    want = [r["v0"] for r in rows]
+    buf = np.empty(n * _FOLD_DIM + 1)
+    buf[1:] = a_mat.ravel()
+    offset = buf[1:].reshape(n, _FOLD_DIM)
+    assert offset.ctypes.data % 16 == 8  # not 16-byte aligned
+    for mat in (a_mat, offset):
+        for vals in np_twins(mat, np.tile(b_mat[0], (n, 1))):
+            assert [float(x) for x in vals] == want, name
