@@ -1,10 +1,11 @@
-from .hnsw import HNSWIndex, ShardedHNSW
+from .hnsw import DamagedIndexError, HNSWIndex, ShardedHNSW
 from .ivfflat import IVFFlatIndex
 from .registry import VectorIndexRegistry
 from .selection import KnnPlan, plan_knn
 from .vamana import PartitionedVamanaServing, VamanaIndex, load_partitioned
 
 __all__ = [
+    "DamagedIndexError",
     "HNSWIndex",
     "IVFFlatIndex",
     "PartitionedVamanaServing",

@@ -1237,7 +1237,7 @@ class HNSWIndex:
         from pyspark.sql import functions as F
 
         from ..shipping import ensure_package_on_workers
-        from .ivfflat import IVFFlatIndex, _lloyds_numpy, _nearest_centroid
+        from .ivfflat import IVFFlatIndex, _lloyds_numpy
 
         ensure_package_on_workers(df.sparkSession)
         vec = F.col(vec_col).cast("array<double>")
@@ -1372,6 +1372,10 @@ class HNSWIndex:
         return cls(vec_col, id_col, meta["dist"], g, _spark=spark, id_type=id_type)
 
 
+class DamagedIndexError(RuntimeError):
+    """A saved index lacks a part its own metadata says it was saved with."""
+
+
 @dataclass
 class ShardedHNSW:
     """Sharded HNSW: one independent graph per shard, stored as blob rows.
@@ -1498,11 +1502,13 @@ class ShardedHNSW:
                 self.dist,
                 self.id_type,
                 json.dumps(self.params) if self.params else None,
+                self.centroids is not None,
             )
         ]
         self._spark.createDataFrame(
             meta,
-            "vec_col string, id_col string, dist string, id_type string, params string",
+            "vec_col string, id_col string, dist string, id_type string, "
+            "params string, routed boolean",
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
         if self.centroids is not None:
             self._spark.createDataFrame(
@@ -1526,12 +1532,21 @@ class ShardedHNSW:
         blobs = spark.read.parquet(f"{path}/blobs").withColumn(
             "shard", F.col("shard").cast("long")
         )
+        # saves that predate the `routed` record may be hash-sharded ones
+        # without a centroid table; a save that records routing must have it
+        routed = meta["routed"] if "routed" in meta.__fields__ else None
         centroids = None
         try:
             crows = spark.read.parquet(f"{path}/centroids").orderBy("shard").collect()
             centroids = [list(r["centroid"]) for r in crows]
-        except Exception:
-            pass  # a hash-sharded save from an earlier version: no centroids
+        except Exception as e:
+            if routed:
+                raise DamagedIndexError(
+                    f"{path}: routed index, but its centroid table "
+                    f"(centroids/) is missing or unreadable: {e}"
+                ) from e
+        if routed and not centroids:
+            raise DamagedIndexError(f"{path}: routed index with an empty centroids/")
         raw = meta["params"] if "params" in meta.__fields__ else None
         return cls(
             meta["vec_col"], meta["id_col"], meta["dist"], blobs.cache(), spark,
@@ -1967,23 +1982,16 @@ class ShardedHNSW:
             # the batch path while keeping it on probe()
             n_probe = self.default_n_probe
         if n_probe is not None and self.centroids is not None:
-            from .ivfflat import _centroid_literal
-
-            scored = F.array_sort(
-                F.transform(
-                    _centroid_literal(self.centroids),
-                    lambda c, i: F.struct(
-                        fold.col_centroid_score(self.dist, qv, c).alias("d"),
-                        i.alias("b"),
-                    ),
-                )
+            # (score, shard) structs sorted by score then shard, built as
+            # one SQL expression (fold.py) — ties break like rank_shards
+            ranked = fold.sql_ranked_centroids(
+                self.dist, fold.sql_double_array(query_vec), self.centroids
             )
             routed = queries.select(
                 F.col(qid_col), qv.alias("__qv"),
-                F.explode(
-                    F.slice(
-                        F.transform(scored, lambda s: s["b"].cast("long")), 1, n_probe
-                    )
+                F.expr(
+                    f"explode(slice(transform({ranked}, __r -> CAST(__r.b AS BIGINT)),"
+                    f" 1, {int(n_probe)}))"
                 ).alias("__shard"),
             )
         else:

@@ -41,13 +41,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .. import fold
-from ..functions.vector import vec_lit
 
 BUCKET_COL = "__bucket"
-
-
-def _centroid_literal(centroids: list[list[float]]) -> Column:
-    return F.array(*[vec_lit(c) for c in centroids])
 
 
 def _lloyds_numpy(
@@ -76,12 +71,16 @@ def _lloyds_numpy(
     return cents.tolist()
 
 
-def _nearest_centroid(vec: Column, centroids: list[list[float]]) -> Column:
-    """0-based index of the nearest centroid (ties → lowest index, matching
-    the reference's sequential argmin FindCentroid, ivfflat_index.cpp:46-57)."""
-    dists = F.transform(_centroid_literal(centroids), lambda c: fold.col_l2_sq(vec, c))
+def _nearest_centroid(vec_col: str, centroids: list[list[float]]) -> Column:
+    """0-based index of the centroid nearest column ``vec_col`` (ties →
+    lowest index, matching the reference's sequential argmin FindCentroid,
+    ivfflat_index.cpp:46-57). One ``F.expr`` call (fold.py's SQL text)."""
+    dists = (
+        f"transform({fold.sql_vecs_lit(centroids)}, __cent -> "
+        f"{fold.sql_l2_sq(fold.sql_double_array(vec_col), '__cent')})"
+    )
     # array_position returns the FIRST position of the min → lowest index wins ties
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+    return F.expr(f"CAST(array_position({dists}, array_min({dists})) - 1 AS INT)")
 
 
 # literal-centroid assignment embeds lists × dim doubles into the plan; past
@@ -147,9 +146,7 @@ def assign_nearest(
     ``_LITERAL_ASSIGN_MAX_CELLS`` plan-literal cells, broadcast numpy
     argmin past it. ``vec_col`` must already be array<double>."""
     if len(centroids) * len(centroids[0]) <= _LITERAL_ASSIGN_MAX_CELLS:
-        return df.withColumn(
-            out_col, _nearest_centroid(F.col(vec_col), centroids)
-        )
+        return df.withColumn(out_col, _nearest_centroid(vec_col, centroids))
     return _assign_via_broadcast(df, vec_col, centroids, out_col=out_col)
 
 
@@ -203,11 +200,9 @@ def route_overlap(
     way, no ×lists row blowup before the filter."""
     dim = len(centroids[0])
     if len(centroids) * dim <= _LITERAL_ROUTE_MAX_CELLS:
-        scored = F.transform(
-            _centroid_literal(centroids),
-            lambda c, i: F.struct(
-                fold.col_l2_sq(F.col(vec_col), c).alias("d"), i.alias("b")
-            ),
+        scored = F.expr(
+            f"transform({fold.sql_vecs_lit(centroids)}, (__cent, __ci) -> struct("
+            f"{fold.sql_l2_sq(fold.sql_ident(vec_col), '__cent')} AS d, __ci AS b))"
         )
         return (
             base.withColumn("__sc", scored)
@@ -560,7 +555,7 @@ class IVFFlatIndex:
             src = src.repartition(want)
         if lists * dim <= _LITERAL_ASSIGN_MAX_CELLS:
             assignments = src.withColumn(
-                BUCKET_COL, _nearest_centroid(vec, centroids)
+                BUCKET_COL, _nearest_centroid(vec_col, centroids)
             )
         else:
             assignments = _assign_via_broadcast(src, vec_col, centroids)
@@ -605,7 +600,7 @@ class IVFFlatIndex:
         cand = self.assignments.filter(F.col(BUCKET_COL).isin(buckets))
         if where is not None:
             cand = cand.filter(where)
-        out = cand.withColumn(dist_col, fn(F.col(self.vec_col), query))
+        out = cand.withColumn(dist_col, fn(self.vec_col, query))
         order = F.col(dist_col).asc() if ASCENDING[self.dist] else F.col(dist_col).desc()
         return out.orderBy(order).limit(k).drop(BUCKET_COL)
 
@@ -645,21 +640,16 @@ class IVFFlatIndex:
         from ..similarity.brute import ASCENDING, DIST_FNS
 
         p = probe_lists if probe_lists is not None else self.probe_lists
-        qvec = F.col(query_vec).cast("array<double>")
-        # (score, idx) structs; array_sort orders by score then idx — same
-        # tie order as the driver-side rank_buckets (lowest index first)
-        scored = F.transform(
-            _centroid_literal(self.centroids),
-            lambda c, i: F.struct(
-                fold.col_centroid_score(self.dist, qvec, c).alias("d"),
-                i.alias("b"),
-            ),
-        )
-        buckets = F.slice(F.array_sort(scored), 1, p)
+        qvec = fold.sql_double_array(query_vec)
+        # (score, idx) structs sorted by score then idx — same tie order as
+        # the driver-side rank_buckets (lowest index first)
+        ranked = fold.sql_ranked_centroids(self.dist, qvec, self.centroids)
         q = queries.select(
             F.col(query_id).alias("qid"),
-            qvec.alias("__qv"),
-            F.explode(F.transform(buckets, lambda s: s["b"])).alias(BUCKET_COL),
+            F.expr(qvec).alias("__qv"),
+            F.expr(
+                f"explode(transform(slice({ranked}, 1, {int(p)}), __r -> __r.b))"
+            ).alias(BUCKET_COL),
         )
         # distance scoring below is CPU-bound; an under-partitioned query
         # side (one file split) would pin it to one core (cf. dedup.minhash
@@ -678,10 +668,7 @@ class IVFFlatIndex:
             q = q.repartition(want, "qid")
         items = self.assignments if where is None else self.assignments.filter(where)
         cand = q.join(items, BUCKET_COL)
-        out = cand.withColumn(
-            dist_col,
-            DIST_FNS[self.dist](F.col(self.vec_col).cast("array<double>"), F.col("__qv")),
-        )
+        out = cand.withColumn(dist_col, DIST_FNS[self.dist](self.vec_col, "__qv"))
         order = [
             F.col(dist_col).asc() if ASCENDING[self.dist] else F.col(dist_col).desc()
         ]
@@ -696,8 +683,7 @@ class IVFFlatIndex:
 
     # -- insert (frozen centroids, ref :92-95) ----------------------------
     def insert(self, rows: DataFrame) -> "IVFFlatIndex":
-        vec = F.col(self.vec_col).cast("array<double>")
-        new = rows.withColumn(BUCKET_COL, _nearest_centroid(vec, self.centroids))
+        new = rows.withColumn(BUCKET_COL, _nearest_centroid(self.vec_col, self.centroids))
         return IVFFlatIndex(
             self.vec_col,
             self.lists,

@@ -76,7 +76,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..fold import col_dot, col_l2_sq
+from ..fold import col_dot, sql_vecs_lit
+from ..functions.vector import l2_dist, vec_lit
 from .quantize import dim_stats
 
 # 32 bits per word, stored in (signed) longs: the MSB-first fold acc*2+b
@@ -120,13 +121,14 @@ def rotation_matrix(dim: int, seed: int) -> list[list[float]]:
 
 def rotate_col(vec: Column | str, rotation: list[list[float]]) -> Column:
     """array<double> of rotated coordinates, one sequential fold per output
-    dim. The matrix rides as ONE nested-array literal (a single foldable
-    Literal node — not a CreateArray re-evaluated per lambda iteration),
-    and row dimensionality is enforced: zip_with would silently NULL-pad a
-    short row into wrong-but-plausible rotated values."""
+    dim. The matrix rides as ONE nested-array literal, built in one
+    ``F.expr`` call and constant-folded into a single Literal node (not a
+    CreateArray re-evaluated per lambda iteration), and row dimensionality
+    is enforced: zip_with would silently NULL-pad a short row into
+    wrong-but-plausible rotated values."""
     dim = len(rotation)
     v = (F.col(vec) if isinstance(vec, str) else vec).cast("array<double>")
-    rot = F.lit([[float(x) for x in row] for row in rotation])
+    rot = F.expr(sql_vecs_lit(rotation))
     ok = F.assert_true(
         F.size(v) == F.lit(dim),
         F.lit(f"rotate: vector must have {dim} dims"),
@@ -202,7 +204,7 @@ class BQModel:
             # rotate_col enforces dimensionality itself (same assert_true
             # pattern), and its output is exactly self.dims wide
             v = rotate_col(vec, self.rotation)
-            thr = F.array(*[F.lit(float(t)) for t in self.thresholds])
+            thr = vec_lit(self.thresholds)
             return F.zip_with(
                 v,
                 thr,
@@ -213,7 +215,7 @@ class BQModel:
             F.size(v) == F.lit(self.dims),
             F.lit(f"BQ encode: vector must have {self.dims} dims"),
         )
-        thr = F.array(*[F.lit(float(t)) for t in self.thresholds])
+        thr = vec_lit(self.thresholds)
         bits = F.zip_with(
             v, thr, lambda x, t: F.when(x > t, F.lit(1)).otherwise(F.lit(0)).cast("long")
         )
@@ -257,7 +259,11 @@ class BQModel:
 
     def hamming(self, words: Column, query: list[float]) -> Column:
         """XOR + popcount over the packed words — exact integer distance."""
-        qwords = F.array(*[F.lit(w).cast("long") for w in self.encode_query(query)])
+        qwords = F.expr(
+            "array("
+            + ", ".join(f"CAST({int(w)} AS BIGINT)" for w in self.encode_query(query))
+            + ")"
+        )
         return F.aggregate(
             F.zip_with(words, qwords, lambda a, b: F.bit_count(a.bitwiseXOR(b))),
             F.lit(0).cast("long"),
@@ -359,10 +365,7 @@ class BQModel:
         from pyspark.sql.functions import broadcast
 
         short = self.hamming_topk(df, vec_col, id_col, query, shortlist)
-        q = F.array(*[F.lit(float(x)) for x in query])
-        exact = F.round(
-            F.sqrt(col_l2_sq(F.col(vec_col).cast("array<double>"), q)), 6
-        )
+        exact = F.round(l2_dist(vec_col, [float(x) for x in query]), 6)
         return (
             df.join(broadcast(short.select(id_col)), id_col, "inner")
             .select(F.col(id_col), exact.alias(dist_col))

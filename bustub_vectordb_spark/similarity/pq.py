@@ -189,9 +189,7 @@ class PQModel:
         whole-stage-codegen — table lookups on the scan, no UDF. l2 orders
         ascending; ip is a similarity, order it descending."""
         codes = F.col(codes_col) if isinstance(codes_col, str) else codes_col
-        lut_lit = F.array(
-            *[F.array(*[F.lit(v) for v in row]) for row in self.lut(query, metric)]
-        )
+        lut_lit = F.expr(fold.sql_vecs_lit(self.lut(query, metric)))
         partial = F.zip_with(
             lut_lit, codes, lambda row, c: F.element_at(row, c + 1)
         )

@@ -38,6 +38,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..fold import col_dot, col_l2_sq, col_norm_sq
+from ..functions.vector import vec_lit
 
 
 def dim_stats(df: DataFrame, vec_col: str) -> DataFrame:
@@ -47,10 +48,6 @@ def dim_stats(df: DataFrame, vec_col: str) -> DataFrame:
         .groupBy("dim")
         .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
     )
-
-
-def _query_lit(query: list[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in query])
 
 
 @dataclass
@@ -67,9 +64,7 @@ class SQ8Model:
         return cls([r["mn"] for r in rows], [r["mx"] for r in rows])
 
     def _lits(self) -> tuple[Column, Column]:
-        mn = F.array(*[F.lit(float(v)) for v in self.mins])
-        mx = F.array(*[F.lit(float(v)) for v in self.maxs])
-        return mn, mx
+        return vec_lit(self.mins), vec_lit(self.maxs)
 
     def encode(self, vec: Column | str) -> Column:
         """array<int> codes in 0..255; constant dimensions encode to 0."""
@@ -101,12 +96,12 @@ class SQ8Model:
     def adc_dist_sq(self, codes: Column | str, query: list[float]) -> Column:
         """Squared L2 between the full-precision query and the decoded codes
         (asymmetric: the query is never quantized)."""
-        return col_l2_sq(self._decoded(codes), _query_lit(query))
+        return col_l2_sq(self._decoded(codes), vec_lit(query))
 
     def adc_ip(self, codes: Column | str, query: list[float]) -> Column:
         """Asymmetric inner product ⟨decoded, q⟩ — larger is nearer
         (vector_ip_ops; ops classes per reference catalog.h:322-331)."""
-        return col_dot(self._decoded(codes), _query_lit(query))
+        return col_dot(self._decoded(codes), vec_lit(query))
 
     def adc_cosine(self, codes: Column | str, query: list[float]) -> Column:
         """Asymmetric cosine similarity: ⟨decoded,q⟩ / (‖decoded‖·‖q‖).
@@ -115,7 +110,7 @@ class SQ8Model:
         import math
 
         decoded = self._decoded(codes)
-        dot = col_dot(decoded, _query_lit(query))
+        dot = col_dot(decoded, vec_lit(query))
         dn = F.sqrt(col_norm_sq(decoded))
         qn = math.sqrt(sum(float(x) * float(x) for x in query)) or 1e-300
         return dot / (dn * F.lit(qn))

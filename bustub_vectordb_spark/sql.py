@@ -31,6 +31,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .catalog import Catalog
+from .fold import sql_distance
 from .index.registry import OPS_TO_DIST
 
 # ---------------------------------------------------------------------------
@@ -88,19 +89,9 @@ def _right_operand(s: str, at: int) -> int:
     return i
 
 
-# macro bodies — native higher-order-function SQL, expanded at rewrite time
-_DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x*y), 0D, (s, v) -> s + v)"
-_NORM = "sqrt(aggregate(transform({v}, x -> x*x), 0D, (s, v) -> s + v))"
-_MACROS = {
-    "l2_dist": (
-        "sqrt(aggregate(zip_with({a}, {b}, (x, y) -> (x-y)*(x-y)), "
-        "0D, (s, v) -> s + v))"
-    ),
-    "inner_product": _DOT,
-    "cosine_similarity": (
-        _DOT + " / (" + _NORM.format(v="{a}") + " * " + _NORM.format(v="{b}") + ")"
-    ),
-}
+# distance macros → fold.py's SQL text (native higher-order-function SQL),
+# expanded at rewrite time
+_MACROS = {"l2_dist": "l2", "inner_product": "ip", "cosine_similarity": "cosine"}
 
 
 def _split_args(args: str) -> list[str]:
@@ -123,7 +114,7 @@ def _expand_macros(sql: str) -> str:
     changed = True
     while changed:
         changed = False
-        for fn, body in _MACROS.items():
+        for fn, dist in _MACROS.items():
             m = re.search(rf"\b{fn}\s*\(", sql)
             if not m:
                 continue
@@ -140,7 +131,7 @@ def _expand_macros(sql: str) -> str:
             a, b = _split_args(sql[start + 1 : i])
             ca = f"CAST({a} AS ARRAY<DOUBLE>)"
             cb = f"CAST({b} AS ARRAY<DOUBLE>)"
-            sql = sql[: m.start()] + body.format(a=ca, b=cb) + sql[i + 1 :]
+            sql = sql[: m.start()] + sql_distance(dist, ca, cb) + sql[i + 1 :]
             changed = True
     return sql
 

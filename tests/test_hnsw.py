@@ -486,6 +486,34 @@ def test_sharded_save_load_roundtrip(spark, emb, tmp_path):
     assert after == before
 
 
+def test_sharded_load_refuses_routed_save_without_centroids(spark, emb, tmp_path):
+    """A routed save records that it is routed, so a damaged save whose
+    centroid table is gone fails to load with a named error instead of
+    loading unrouted (probe(n_probe=1) would silently search every shard).
+    A save from before the record, which may legitimately lack the table,
+    still loads without centroids."""
+    import shutil
+
+    from bustub_vectordb_spark.index import DamagedIndexError
+    from bustub_vectordb_spark.index.hnsw import ShardedHNSW
+
+    small = emb.orderBy("vec_id").limit(200)
+    routed = HNSWIndex.build_routed(small, "embedding", "vec_id", shards=4)
+    path = str(tmp_path / "damaged")
+    routed.save(path)
+    shutil.rmtree(f"{path}/centroids")
+    with pytest.raises(DamagedIndexError, match="centroids"):
+        ShardedHNSW.load(spark, path)
+
+    old_meta = spark.read.parquet(f"{path}/meta").drop("routed").collect()
+    spark.createDataFrame(
+        old_meta,
+        "vec_col string, id_col string, dist string, id_type string, params string",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    assert ShardedHNSW.load(spark, path).centroids is None
+    routed.blobs.unpersist()
+
+
 def test_routed_filtered_search_never_collects_allowed_set(emb):
     """The 100 TB contract for filtered search on the routed path: a
     DataFrame allowed-set must NEVER be materialized on the driver — it is

@@ -134,9 +134,7 @@ def test_broadcast_assignment_matches_literal(emb):
         r["vec_id"]: r[BUCKET_COL]
         for r in emb.select(
             "vec_id",
-            _nearest_centroid(
-                F.col("embedding").cast("array<double>"), idx.centroids
-            ).alias(BUCKET_COL),
+            _nearest_centroid("embedding", idx.centroids).alias(BUCKET_COL),
         ).collect()
     }
     bc = {

@@ -274,3 +274,79 @@ def test_index_build_job_counts(spark, tables):
     built["ivf"].assignments.unpersist()
     built["routed"].blobs.unpersist()
     assert got == {"ivfflat": 8, "hnsw_routed": 8, "vamana": 6}, got
+
+
+def _py4j_commands(spark, fn) -> int:
+    """py4j commands the driver sends to the JVM while ``fn`` runs. Proxy
+    garbage-collection commands are left out: they follow Python's
+    collector, not the code under test."""
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    send = client.send_command
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        fn()
+    finally:
+        del client.send_command
+    return len(sent)
+
+
+def test_vector_expression_round_trips_scale_free(spark):
+    """Building (not running) an IVFFlat probe, batch probe and insert and a
+    routed-HNSW batch search takes the same number of driver→JVM round
+    trips whatever the vector dimension and the centroid count: every
+    vector expression (query literal, centroid table, distance fold) goes
+    to the JVM as one piece of SQL text. Built node by node, a 64×256
+    centroid table alone was tens of thousands of round trips."""
+    import random
+
+    from bustub_vectordb_spark.index import IVFFlatIndex, ShardedHNSW
+
+    def ops(dim, lists):
+        rnd = random.Random(dim * 1000 + lists)
+
+        def vec():
+            return [rnd.gauss(0.0, 1.0) for _ in range(dim)]
+
+        cents = [vec() for _ in range(lists)]
+        ivf = IVFFlatIndex(
+            "v", lists, 2, "l2", cents,
+            spark.createDataFrame(
+                [(i, vec(), i % lists) for i in range(4)],
+                "id long, v array<double>, __bucket int",
+            ),
+        )
+        queries = spark.createDataFrame(
+            [(i, vec()) for i in range(3)], "qid long, qv array<double>"
+        )
+        rows = spark.createDataFrame([(99, vec())], "id long, v array<double>")
+        routed = ShardedHNSW(
+            "v", "id", "cosine",
+            spark.createDataFrame([(0, b"")], "shard long, blob binary"),
+            spark, centroids=cents, params={"replicated": False},
+        )
+        q = vec()
+        return {
+            "probe": lambda: ivf.probe(q, 5),
+            "probe_batch": lambda: ivf.probe_batch(queries, "qv", "qid", 5),
+            "insert": lambda: ivf.insert(rows),
+            "search_batch": lambda: routed.search_batch(
+                queries, "qv", "qid", 5, n_probe=2
+            ),
+        }
+
+    for fn in ops(8, 4).values():  # first calls ship the package, resolve classes
+        fn()
+    counts = {
+        (dim, lists): {
+            name: _py4j_commands(spark, fn) for name, fn in ops(dim, lists).items()
+        }
+        for dim, lists in [(8, 4), (256, 4), (8, 64), (256, 64)]
+    }
+    assert all(c == counts[(8, 4)] for c in counts.values()), counts

@@ -23,9 +23,9 @@ def engine(spark):
 def test_rewrite_operators():
     r = rewrite("SELECT a <-> b FROM t")
     assert "zip_with(CAST(a AS ARRAY<DOUBLE>), CAST(b AS ARRAY<DOUBLE>)" in r
-    assert "(x-y)*(x-y)" in r and r.startswith("SELECT sqrt(")
+    assert "(__x - __y) * (__x - __y)" in r and r.startswith("SELECT sqrt(")
     r = rewrite("ARRAY [1.0, 2.0] <=> v1")
-    assert "array(1.0, 2.0)" in r and "x*x" in r  # cosine: dot / norms
+    assert "array(1.0, 2.0)" in r and "__x * __x" in r  # cosine: dot / norms
     r = rewrite("SELECT v1, ARRAY [0.5, 1.0] <-> v1 as d FROM t1")
     assert r.startswith("SELECT v1, sqrt(") and r.endswith(" as d FROM t1")
     # function-call operands survive balanced-paren scanning

@@ -184,9 +184,51 @@ def test_weighted_sample_no_id_bias_at_large_weights(spark):
 
 
 # -------------------------------------------------------------------------
-# fold.py: every Spark Column fold vs its Python / numpy twins, bit-for-bit
+# fold.py: every Column fold and SQL-text fold vs the Python / numpy twins,
+# bit-for-bit
 # -------------------------------------------------------------------------
 _FOLD_DIM = 64
+_MAX = 1.7976931348623157e308
+
+
+def _bits(v):
+    """Bit pattern of a double; every NaN is one value (payloads are not
+    part of the contract)."""
+    import struct
+
+    return "nan" if v != v else struct.pack(">d", v).hex()
+
+
+def _fold_rows():
+    """24 random 64-d (a, b) row pairs; rows 1-9 carry -0.0, subnormals,
+    ±max, NaN and ±inf, and row 9 an exactly-zero dot product (so the
+    negated scores are -0.0). No row has a zero norm: a zero divisor is an
+    error under ANSI."""
+    import numpy as np
+
+    rng = np.random.RandomState(17)
+    n = 24
+    a = rng.standard_normal((n, _FOLD_DIM)) * 3.0
+    b = rng.standard_normal((n, _FOLD_DIM))
+    inf, nan = float("inf"), float("nan")
+    special = {
+        1: {"a": {0: -0.0, 1: 0.0}, "b": {0: -0.0, 1: -0.0}},
+        2: {"a": {2: 5e-324, 3: 2.2250738585072014e-308}, "b": {2: -2.5e-320, 3: 1e-310}},
+        3: {"a": {4: _MAX}, "b": {}},
+        4: {"a": {5: -_MAX}, "b": {5: _MAX}},
+        5: {"a": {6: nan}, "b": {}},
+        6: {"a": {7: inf}, "b": {}},
+        7: {"a": {}, "b": {8: -inf}},
+        8: {"a": {9: inf}, "b": {9: inf}},
+    }
+    for i, sides in special.items():
+        for j, v in sides["a"].items():
+            a[i, j] = v
+        for j, v in sides["b"].items():
+            b[i, j] = v
+    a[9], b[9] = 0.0, 0.0
+    a[9, 0], b[9, 1] = 1.5, -2.0
+    return a, b
 
 
 def _fold_cases():
@@ -203,79 +245,159 @@ def _fold_cases():
     def cos_score(v, c):
         return -(fold.dot(v, c) / (math.sqrt(fold.norm_sq(v)) * math.sqrt(fold.norm_sq(c))))
 
-    # name -> (Column fold, Python scalar twin, numpy twins or None); the
-    # numpy twins get (rows of a, row 0 of b repeated) and return one
-    # value per row of a
+    def score(dist):
+        return (
+            lambda a, b: fold.col_centroid_score(dist, a, b),
+            lambda a, b: fold.sql_centroid_score(dist, a, b),
+        )
+
+    def exact(dist):
+        return (
+            lambda a, b: fold.col_distance(dist, a, b),
+            lambda a, b: fold.sql_distance(dist, a, b),
+            lambda v, c: fold.exact(dist, v, c),
+            None,
+        )
+
+    # name -> (Column fold, SQL-text fold, Python scalar twin, numpy twins
+    # or None); the numpy twins get (rows of a, row 0 of b repeated) and
+    # return one value per row of a
     return {
-        "l2_sq": (fold.col_l2_sq, fold.l2_sq, rows_l2),
-        "dot": (fold.col_dot, fold.dot, rows_dot),
-        "norm_sq": (lambda a, b: fold.col_norm_sq(a), lambda v, c: fold.norm_sq(v), None),
-        "seq_sum": (lambda a, b: fold.col_seq_sum(a), lambda v, c: fold.seq_sum(v), None),
-        "score_l2": (
-            lambda a, b: fold.col_centroid_score("l2", a, b), fold.l2_sq, None,
-        ),
-        "score_ip": (
-            lambda a, b: fold.col_centroid_score("ip", a, b),
-            lambda v, c: -fold.dot(v, c),
+        "l2_sq": (fold.col_l2_sq, fold.sql_l2_sq, fold.l2_sq, rows_l2),
+        "dot": (fold.col_dot, fold.sql_dot, fold.dot, rows_dot),
+        "norm_sq": (
+            lambda a, b: fold.col_norm_sq(a),
+            lambda a, b: fold.sql_norm_sq(a),
+            lambda v, c: fold.norm_sq(v),
             None,
         ),
-        "score_cosine": (
-            lambda a, b: fold.col_centroid_score("cosine", a, b), cos_score, None,
-        ),
-        "exact_l2": (
-            lambda a, b: l2_dist(a, b), lambda v, c: fold.exact("l2", v, c), None,
-        ),
-        "exact_ip": (
-            lambda a, b: inner_product(a, b),
-            lambda v, c: fold.exact("ip", v, c),
+        "seq_sum": (
+            lambda a, b: fold.col_seq_sum(a),
+            lambda a, b: fold.sql_seq_sum(a),
+            lambda v, c: fold.seq_sum(v),
             None,
         ),
-        "exact_cosine": (
-            lambda a, b: cosine_similarity(a, b),
-            lambda v, c: fold.exact("cosine", v, c),
-            None,
-        ),
+        "score_l2": (*score("l2"), fold.l2_sq, None),
+        "score_ip": (*score("ip"), lambda v, c: -fold.dot(v, c), None),
+        "score_cosine": (*score("cosine"), cos_score, None),
+        "exact_l2": exact("l2"),
+        "exact_ip": exact("ip"),
+        "exact_cosine": exact("cosine"),
     }
+
+
+# the public functions.vector forms of the exact folds
+_PUBLIC = {
+    "exact_l2": l2_dist,
+    "exact_ip": inner_product,
+    "exact_cosine": cosine_similarity,
+}
 
 
 @pytest.mark.parametrize("name", sorted(_fold_cases()))
 def test_fold_twins_match_spark_bitwise(spark, name):
-    """The Python and numpy twins of each fold.py Column fold return the
-    SAME doubles Spark computes, on random 64-d rows — and the numpy forms
-    do so on a fresh array and on a buffer offset by one float (the NOTES
-    alignment hazard: BLAS reductions drift by an ulp there, the
-    dimension-sequential folds must not)."""
+    """The Python and numpy twins of each fold.py fold return the SAME
+    doubles Spark computes from the Column fold and from the SQL-text fold
+    (over columns, and over literals constant-folded on the driver), on
+    64-d rows that include -0.0, subnormals, ±max, NaN and ±inf. The
+    public functions.vector forms agree with Column and with name operands.
+    The numpy forms are checked on a fresh array and on a buffer offset by
+    one float (the NOTES alignment hazard: BLAS reductions drift by an ulp
+    there, the dimension-sequential folds must not)."""
     import numpy as np
 
-    col_fold, py_twin, np_twins = _fold_cases()[name]
-    rng = np.random.RandomState(17)
-    n = 24
-    a_mat = rng.standard_normal((n, _FOLD_DIM)) * 3.0
-    b_mat = rng.standard_normal((n, _FOLD_DIM))
+    from bustub_vectordb_spark import fold
+
+    col_fold, sql_fold, py_twin, np_twins = _fold_cases()[name]
+    a_mat, b_mat = _fold_rows()
+    n = len(a_mat)
     a_rows, b_rows = a_mat.tolist(), b_mat.tolist()
     df = spark.createDataFrame(
         [(i, a_rows[i], b_rows[i], b_rows[0]) for i in range(n)],
         "id int, a array<double>, b array<double>, b0 array<double>",
     )
-    rows = (
-        df.select(
-            "id",
-            col_fold(F.col("a"), F.col("b")).alias("v"),
-            col_fold(F.col("a"), F.col("b0")).alias("v0"),
+    a, b = fold.sql_ident("a"), fold.sql_ident("b")
+    cols = [
+        "id",
+        col_fold(F.col("a"), F.col("b")).alias("v"),
+        F.expr(sql_fold(a, b)).alias("s"),
+        col_fold(F.col("a"), F.col("b0")).alias("v0"),
+    ]
+    if name in _PUBLIC:
+        fn = _PUBLIC[name]
+        cols += [fn(F.col("a"), F.col("b")).alias("pc"), fn("a", "b").alias("pn")]
+    rows = df.select(*cols).orderBy("id").collect()
+    lits = (
+        spark.range(1)
+        .select(
+            *[
+                F.expr(
+                    sql_fold(fold.sql_vec_lit(a_rows[i]), fold.sql_vec_lit(b_rows[i]))
+                ).alias(f"l{i}")
+                for i in range(n)
+            ]
         )
-        .orderBy("id")
-        .collect()
+        .collect()[0]
     )
     for i, r in enumerate(rows):
-        assert r["v"] == py_twin(a_rows[i], b_rows[i]), (name, i)
+        want = _bits(py_twin(a_rows[i], b_rows[i]))
+        got = [r["v"], r["s"], lits[f"l{i}"]]
+        if name in _PUBLIC:
+            got += [r["pc"], r["pn"]]
+        assert [_bits(g) for g in got] == [want] * len(got), (name, i)
     if np_twins is None:
         return
     # numpy forms score every row of a against row 0 of b
-    want = [r["v0"] for r in rows]
+    want = [_bits(r["v0"]) for r in rows]
     buf = np.empty(n * _FOLD_DIM + 1)
     buf[1:] = a_mat.ravel()
     offset = buf[1:].reshape(n, _FOLD_DIM)
     assert offset.ctypes.data % 16 == 8  # not 16-byte aligned
-    for mat in (a_mat, offset):
-        for vals in np_twins(mat, np.tile(b_mat[0], (n, 1))):
-            assert [float(x) for x in vals] == want, name
+    with np.errstate(all="ignore"):
+        for mat in (a_mat, offset):
+            for vals in np_twins(mat, np.tile(b_mat[0], (n, 1))):
+                assert [_bits(float(x)) for x in vals] == want, name
+
+
+def test_sql_vec_lit_round_trips_bitwise(spark):
+    """The one-call literal reads back as the same doubles (sign of zero,
+    subnormals, ±max, NaN, ±inf) with the array<double> type the Column
+    literal had, containsNull included."""
+    from pyspark.sql.types import ArrayType, DoubleType
+
+    from bustub_vectordb_spark import fold
+
+    a_mat, _ = _fold_rows()
+    vals = [x for row in a_mat[:10].tolist() for x in row]
+    vals += [-_MAX, float("-inf"), -5e-324, 1e16, 0.1, 3]
+    df = spark.range(1).select(
+        vec_lit(vals).alias("v"),
+        F.expr(fold.sql_vecs_lit([vals[:3], vals[3:8]])).alias("m"),
+        F.array(*[F.lit(float(x)) for x in vals[:3]]).cast("array<double>").alias("c"),
+    )
+    assert df.schema["v"].dataType == ArrayType(DoubleType(), True)
+    assert df.schema["v"].dataType == df.schema["c"].dataType
+    r = df.collect()[0]
+    assert [_bits(x) for x in r["v"]] == [_bits(float(x)) for x in vals]
+    assert [[_bits(x) for x in row] for row in r["m"]] == [
+        [_bits(float(x)) for x in row] for row in (vals[:3], vals[3:8])
+    ]
+
+
+def test_sql_ident_reads_names_like_f_col(spark):
+    """sql_ident quotes a name so SQL text resolves it the way F.col does:
+    an unquoted dot reaches into a struct, a backticked dot is part of the
+    name, a doubled backtick is a literal one."""
+    from bustub_vectordb_spark import fold
+
+    df = spark.createDataFrame(
+        [(1.0, 2.0, (3.0,), 4.0)], "`a.b` double, a double, s struct<t: double>, `q``x` double"
+    )
+    for name in ["`a.b`", "a", "s.t", "`s`.t", "`q``x`"]:
+        want = df.select(F.col(name)).collect()[0][0]
+        assert df.select(F.expr(fold.sql_ident(name))).collect()[0][0] == want, name
+    assert fold.sql_ident("s.t") == "`s`.`t`"
+    assert fold.sql_ident("`a.b`") == "`a.b`"
+    for bad in ["a..b", "a.", "`a", "`a`b"]:
+        with pytest.raises(ValueError):
+            fold.sql_ident(bad)

@@ -2,14 +2,24 @@
 
 Runs every queries() entry on Spark and its oracle_sql() on DuckDB at the
 given sf dir, compares row count, column names, and an order-insensitive
-value hash (columns sorted by name, rows sorted, floats rounded to 9
-significant-ish decimals before hashing to absorb fp noise).
+value hash (columns sorted by name, rows sorted, floats rounded to 6
+significant digits before comparing to absorb fp noise).
+
+Every entry's line also carries two hashes of its Spark output: ``6g`` over
+that canonical form and ``repr`` over the same rows with full-precision
+``repr`` values, so two commits' outputs can be compared byte for byte:
+
+    python tools/check_oracle.py SF > a.txt   # at commit A
+    python tools/check_oracle.py SF > b.txt   # at commit B
+    diff <(grep -o '^[A-Za-z]* [^ :]*\|repr:[0-9a-f]*' a.txt) \
+         <(grep -o '^[A-Za-z]* [^ :]*\|repr:[0-9a-f]*' b.txt)
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 import sys
@@ -40,10 +50,20 @@ def norm_val(v):
     return str(v)
 
 
-def canon(cols, rows):
+def canon(cols, rows, norm=norm_val):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = sorted(tuple(norm_val(r[i]) for i in order) for r in rows)
+    out = sorted(tuple(norm(r[i]) for i in order) for r in rows)
     return [cols[i] for i in order], out
+
+
+def digest(cols, rows, norm=norm_val) -> str:
+    """Short hash of the canonical (sorted) form of a result."""
+    c, r = canon(cols, rows, norm)
+    return hashlib.sha256(repr((c, r)).encode()).hexdigest()[:16]
+
+
+def hashes(cols, rows) -> str:
+    return f"6g:{digest(cols, rows)} repr:{digest(cols, rows, repr)}"
 
 
 def main():
@@ -97,7 +117,10 @@ def main():
             n_fail += 1
             continue
         if name not in oracles:
-            print(f"weak {name}: rows={len(srows)} (no oracle) [{time.time()-t0:.1f}s]")
+            print(
+                f"weak {name}: rows={len(srows)} (no oracle) "
+                f"[{time.time()-t0:.1f}s] {hashes(scols, srows)}"
+            )
             n_weak += 1
             continue
         try:
@@ -122,9 +145,13 @@ def main():
             print(f"FAIL {name}: value mismatch, first diffs: {diffs}")
             ok = False
         if ok:
-            print(f"PASS {name} ({len(sr)} rows) [{time.time()-t0:.1f}s]")
+            print(
+                f"PASS {name} ({len(sr)} rows) [{time.time()-t0:.1f}s] "
+                f"{hashes(scols, srows)}"
+            )
             n_pass += 1
         else:
+            print(f"     {name} spark output {hashes(scols, srows)}")
             n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_weak} weak (rows-only)")
     spark.stop()
