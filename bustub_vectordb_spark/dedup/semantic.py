@@ -26,7 +26,7 @@ Spark-first shape (no self-join — the minhash in-bucket lesson):
 
   1. assignment — nearest frozen centroid per row via the shared
      :func:`..index.ivfflat.assign_nearest` scale dispatch (codegen
-     argmin literal below 1M plan cells, broadcast numpy past it);
+     argmin literal up to 65,536 plan cells, broadcast numpy past it);
   2. rank — one window per cluster on (round(d_to_centroid, 6) DESC, id);
   3. candidate pairs — groupBy(cluster) + collect_list + in-cluster pair
      expansion (rnk_e < rnk_l), cosine as the native zip_with/aggregate
@@ -101,7 +101,7 @@ def semantic_dedup(
         )
         ranked = (
             asg.join(F.broadcast(cents), CLUSTER_COL)
-            .withColumn("__d6", F.round(l2_dist("__v", "__c"), 6))
+            .withColumn("__d6", F.round(l2_dist(F.col("__v"), F.col("__c")), 6))
             .select(id_col, "__v", CLUSTER_COL, "__d6")
         )
         order = [
@@ -139,7 +139,7 @@ def semantic_dedup(
     )
     dropped = (
         pairs.withColumn(
-            "__cos", F.round(cosine_similarity("__p.__ev", "__p.__lv"), 6)
+            "__cos", F.round(cosine_similarity(F.col("__p.__ev"), F.col("__p.__lv")), 6)
         )
         .filter(F.col("__cos") >= threshold)
         .select(F.col("__p.__lid").alias(id_col))

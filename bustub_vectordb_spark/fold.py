@@ -11,14 +11,16 @@ depends on buffer alignment, an elementwise accumulation has none to
 vary). The numpy forms vectorize ACROSS rows (or rows × centroids) and
 loop over dimensions, never reducing along a row.
 
-The SQL-text folds (``sql_*``) are the textual definition of the same
-expressions, and the Column folds are kept only for operands that are real
-Column expressions. Every ``F.*`` call is a py4j round trip to the JVM (with
-a call-site capture under Spark 4.1), so a vector expression built node by
-node costs round trips in proportion to its dimension and centroid count; a
-text fold is handed to ``F.expr`` whole, one round trip whatever its size.
-The optimizer constant-folds both literal forms to the same value, so the
-two build the same plan.
+Vector LITERALS (query vectors, centroid tables, lookup tables) are built
+as SQL text (``sql_vec_lit``/``sql_vecs_lit``) and handed to ``F.expr``
+whole. Every ``F.*`` call is a py4j round trip to the JVM (with a call-site
+capture under Spark 4.1), so a literal built one ``F.lit`` per element costs
+round trips in proportion to its dimension and centroid count; the text
+form is one round trip whatever its size, and the optimizer constant-folds
+both to the same value. The Column folds are a fixed number of nodes at any
+dimension, so they stay the form the engine builds distances with; the
+SQL-text folds (``sql_*``) are what the SQL frontend's distance macros
+expand to.
 
 Reference anchor: one ``ComputeDistance`` per metric
 (src/include/execution/expressions/vector_expression.h:17-58).
@@ -63,63 +65,11 @@ def col_centroid_score(dist: str, q: Column, c: Column) -> Column:
     return -(col_dot(q, c) / (F.sqrt(col_norm_sq(q)) * F.sqrt(col_norm_sq(c))))
 
 
-def col_distance(dist: str, a: Column, b: Column) -> Column:
-    """l2 distance, inner product or cosine similarity (twin of :func:`exact`)."""
-    if dist == "l2":
-        return F.sqrt(col_l2_sq(a, b))
-    if dist == "ip":
-        return col_dot(a, b)
-    return col_dot(a, b) / (F.sqrt(col_norm_sq(a)) * F.sqrt(col_norm_sq(b)))
-
-
-# -- SQL-text folds (operands are SQL text) ---------------------------------
-# Each builds the same expression tree as its Column twin above. Lambda
-# variables carry ``__`` names: a column referenced inside a lambda body
-# (the query vector inside a centroid transform) must never be shadowed.
-# A result is not parenthesized as a whole (sql_distance's cosine is a bare
-# division): parenthesize it before putting it under a tighter operator.
-
-
-def sql_ident(name: str) -> str:
-    """``name`` as a quoted SQL column reference, read the way ``F.col``
-    reads it: unquoted dots separate nested fields (or a qualifier), a
-    backticked part is taken literally, a doubled backtick inside one is a
-    literal backtick."""
-    parts, cur, i, quoted = [], [], 0, False
-    bad = ValueError(f"malformed column name {name!r}")
-    while i < len(name):
-        ch = name[i]
-        if quoted:
-            if ch != "`":
-                cur.append(ch)
-            elif name[i + 1 : i + 2] == "`":
-                cur.append("`")
-                i += 1
-            else:
-                quoted = False
-                if name[i + 1 : i + 2] not in ("", "."):
-                    raise bad
-        elif ch == "`":
-            if cur:
-                raise bad
-            quoted = True
-        elif ch == ".":
-            if i == 0 or name[i - 1] == "." or i == len(name) - 1:
-                raise bad
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    if quoted:
-        raise bad
-    parts.append("".join(cur))
-    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
-
-
-def sql_double_array(name: str) -> str:
-    """Column ``name`` cast to array<double> (float32 embeddings widen)."""
-    return f"CAST({sql_ident(name)} AS ARRAY<DOUBLE>)"
+# -- SQL text (operands are SQL text) -------------------------------------
+# Each fold builds the same expression tree as its Column twin above and is
+# one self-contained operand (a function call or a parenthesized division),
+# so it can be spliced next to any operator. Lambda variables carry ``__``
+# names so they never shadow a column referenced inside the body.
 
 
 def sql_double(v) -> str:
@@ -163,34 +113,14 @@ def sql_norm_sq(a: str) -> str:
     return sql_seq_sum(f"transform({a}, __x -> __x * __x)")
 
 
-def sql_centroid_score(dist: str, q: str, c: str) -> str:
-    """Twin of :func:`col_centroid_score`."""
-    if dist == "l2":
-        return sql_l2_sq(q, c)
-    if dist == "ip":
-        return f"-({sql_dot(q, c)})"
-    return (
-        f"-({sql_dot(q, c)} / (sqrt({sql_norm_sq(q)}) * sqrt({sql_norm_sq(c)})))"
-    )
-
-
 def sql_distance(dist: str, a: str, b: str) -> str:
-    """Twin of :func:`col_distance`."""
+    """l2 distance, inner product or cosine similarity (twin of
+    :func:`exact` and of ``functions.vector``'s distances)."""
     if dist == "l2":
         return f"sqrt({sql_l2_sq(a, b)})"
     if dist == "ip":
         return sql_dot(a, b)
-    return f"{sql_dot(a, b)} / (sqrt({sql_norm_sq(a)}) * sqrt({sql_norm_sq(b)}))"
-
-
-def sql_ranked_centroids(dist: str, q: str, centroids) -> str:
-    """``(d, b)`` structs of q's score against every centroid (``b`` the
-    0-based index), sorted by score then index: the tie order of
-    :func:`rank_centroids`. Lambda names ``__cent``/``__ci``."""
-    return (
-        f"array_sort(transform({sql_vecs_lit(centroids)}, (__cent, __ci) -> "
-        f"struct({sql_centroid_score(dist, q, '__cent')} AS d, __ci AS b)))"
-    )
+    return f"({sql_dot(a, b)} / (sqrt({sql_norm_sq(a)}) * sqrt({sql_norm_sq(b)})))"
 
 
 # -- Python scalar twins ----------------------------------------------------

@@ -10,12 +10,9 @@ The reference exposes three distance functions over VECTOR columns
   ``inner_product``                plain dot product (no negation)
 
 All are built from ``zip_with`` + ``aggregate`` higher-order functions (the
-fold-exact folds of ``bustub_vectordb_spark.fold``), which stay inside
-whole-stage codegen on the JVM — this is the 100 TB-safe hot path (an
-equivalent Python UDF would be ~100x slower and break pushdown). When both
-operands are column names or literal sequences the whole expression is
-built from fold's SQL text in one ``F.expr`` call; a Column operand falls
-back to the Column folds.
+fold-exact Column folds of ``bustub_vectordb_spark.fold``), which stay
+inside whole-stage codegen on the JVM — this is the 100 TB-safe hot path
+(an equivalent Python UDF would be ~100x slower and break pushdown).
 
 Inputs are cast to array<double> so float32 embedding columns and double
 literals meet in the same precision (matches the reference, where all vector
@@ -29,66 +26,65 @@ from collections.abc import Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..fold import (
-    col_distance,
-    col_norm_sq,
-    sql_distance,
-    sql_double_array,
-    sql_vec_lit,
-)
+from ..fold import col_dot, col_l2_sq, col_norm_sq, sql_vec_lit, sql_vecs_lit
 
 ColumnOrName = Column | str
-Operand = ColumnOrName | Sequence[float]
 
 
-def _sql_operand(c: Operand) -> str | None:
-    """SQL text of a column-name or literal operand; None for a Column."""
+def _as_double_array(c: ColumnOrName | Sequence[float]) -> Column:
     if isinstance(c, (list, tuple)):
-        return sql_vec_lit(c)
-    if isinstance(c, str):
-        return sql_double_array(c)
-    return None
-
-
-def _as_double_array(c: Operand) -> Column:
-    s = _sql_operand(c)
-    return c.cast("array<double>") if s is None else F.expr(s)
-
-
-def _distance(dist: str, a: Operand, b: Operand) -> Column:
-    sa, sb = _sql_operand(a), _sql_operand(b)
-    if sa is not None and sb is not None:
-        return F.expr(sql_distance(dist, sa, sb))
-    return col_distance(dist, _as_double_array(a), _as_double_array(b))
+        return vec_lit(c)
+    col = F.col(c) if isinstance(c, str) else c
+    return col.cast("array<double>")
 
 
 def vec_lit(values: Sequence[float]) -> Column:
     """ARRAY [..] literal → array<double> (ref ArrayExpression,
-    src/include/execution/expressions/array_expression.h:27-44)."""
+    src/include/execution/expressions/array_expression.h:27-44), built in
+    one ``F.expr`` call (fold.py's SQL text), not one ``F.lit`` per element."""
     return F.expr(sql_vec_lit(values))
 
 
-def inner_product(a: Operand, b: Operand) -> Column:
+# one F.expr parse holds its whole parse tree at once: a 500×500 table in
+# one call ran a 1 GB driver heap out of memory, one call per row did not
+_ONE_CALL_MAX_CELLS = 65_536
+
+
+def vecs_lit(rows: Sequence[Sequence[float]]) -> Column:
+    """array<array<double>> literal of :func:`vec_lit` rows (a centroid
+    table, a lookup table, a rotation matrix): one ``F.expr`` call up to
+    ``_ONE_CALL_MAX_CELLS`` cells, one per row past it (the same
+    expression either way)."""
+    if sum(len(r) for r in rows) <= _ONE_CALL_MAX_CELLS:
+        return F.expr(sql_vecs_lit(rows))
+    return F.array(*[vec_lit(r) for r in rows])
+
+
+def inner_product(a: ColumnOrName | Sequence[float], b: ColumnOrName | Sequence[float]) -> Column:
     """Dot product (ref vector_expression.h:33-39)."""
-    return _distance("ip", a, b)
+    return col_dot(_as_double_array(a), _as_double_array(b))
 
 
-def l2_norm(a: Operand) -> Column:
+def l2_norm(a: ColumnOrName | Sequence[float]) -> Column:
     return F.sqrt(col_norm_sq(_as_double_array(a)))
 
 
-def l2_dist(a: Operand, b: Operand) -> Column:
+def l2_dist(a: ColumnOrName | Sequence[float], b: ColumnOrName | Sequence[float]) -> Column:
     """Euclidean distance, the ``<->`` operator (ref vector_expression.h:17-31)."""
-    return _distance("l2", a, b)
+    return F.sqrt(col_l2_sq(_as_double_array(a), _as_double_array(b)))
 
 
-def cosine_similarity(a: Operand, b: Operand) -> Column:
+def cosine_similarity(
+    a: ColumnOrName | Sequence[float], b: ColumnOrName | Sequence[float]
+) -> Column:
     """The reference's ``<=>``: plain cosine similarity dot/(|a||b|)
     (ref vector_expression.h:40-58)."""
-    return _distance("cosine", a, b)
+    return inner_product(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def cosine_distance(a: Operand, b: Operand) -> Column:
+def cosine_distance(
+    a: ColumnOrName | Sequence[float], b: ColumnOrName | Sequence[float]
+) -> Column:
     """1 - cosine similarity — used by the dedup/similarity extensions."""
     return 1.0 - cosine_similarity(a, b)
 

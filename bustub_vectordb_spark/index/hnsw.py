@@ -1982,16 +1982,23 @@ class ShardedHNSW:
             # the batch path while keeping it on probe()
             n_probe = self.default_n_probe
         if n_probe is not None and self.centroids is not None:
-            # (score, shard) structs sorted by score then shard, built as
-            # one SQL expression (fold.py) — ties break like rank_shards
-            ranked = fold.sql_ranked_centroids(
-                self.dist, fold.sql_double_array(query_vec), self.centroids
+            from ..functions.vector import vecs_lit
+
+            scored = F.array_sort(
+                F.transform(
+                    vecs_lit(self.centroids),
+                    lambda c, i: F.struct(
+                        fold.col_centroid_score(self.dist, qv, c).alias("d"),
+                        i.alias("b"),
+                    ),
+                )
             )
             routed = queries.select(
                 F.col(qid_col), qv.alias("__qv"),
-                F.expr(
-                    f"explode(slice(transform({ranked}, __r -> CAST(__r.b AS BIGINT)),"
-                    f" 1, {int(n_probe)}))"
+                F.explode(
+                    F.slice(
+                        F.transform(scored, lambda s: s["b"].cast("long")), 1, n_probe
+                    )
                 ).alias("__shard"),
             )
         else:

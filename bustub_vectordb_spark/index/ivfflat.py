@@ -26,8 +26,8 @@ best — batch index construction):
 
 At 100 TB: build cost is max_iter scans (each embarrassingly parallel);
 lists should be ~sqrt(N). Small centroid sets inline as plan literals
-(codegen argmin); past ``_LITERAL_ASSIGN_MAX_CELLS`` (e.g. 10k centroids ×
-768 dims ≈ 60 MB) the assignment switches to ``_assign_via_broadcast`` —
+(codegen argmin); past ``_LITERAL_ASSIGN_MAX_CELLS`` (65,536 cells, e.g.
+256 centroids × 256 dims) the assignment switches to ``_assign_via_broadcast`` —
 the centroid matrix broadcast once per executor, per-Arrow-batch numpy
 argmin, zero shuffle. Probe touches only probe_lists/lists of the data —
 with bucket-partitioned storage that is partition pruning, not a filter
@@ -41,6 +41,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .. import fold
+from ..functions.vector import vecs_lit
 
 BUCKET_COL = "__bucket"
 
@@ -71,25 +72,35 @@ def _lloyds_numpy(
     return cents.tolist()
 
 
-def _nearest_centroid(vec_col: str, centroids: list[list[float]]) -> Column:
-    """0-based index of the centroid nearest column ``vec_col`` (ties →
-    lowest index, matching the reference's sequential argmin FindCentroid,
-    ivfflat_index.cpp:46-57). One ``F.expr`` call (fold.py's SQL text)."""
-    dists = (
-        f"transform({fold.sql_vecs_lit(centroids)}, __cent -> "
-        f"{fold.sql_l2_sq(fold.sql_double_array(vec_col), '__cent')})"
+def _nearest_centroid(vec: Column, centroids: list[list[float]]) -> Column:
+    """0-based index of the nearest centroid (ties → lowest index, matching
+    the reference's sequential argmin FindCentroid, ivfflat_index.cpp:46-57).
+
+    One left-to-right pass over (l2², index) structs that keeps the first
+    strict minimum: null distances are skipped (a null vector → null), and
+    Spark orders NaN above every number, so an all-NaN row → 0 — the
+    answers of ``array_position(d, array_min(d)) - 1``, which would put the
+    centroid table into the plan twice (twice the analysis)."""
+    scored = F.transform(
+        vecs_lit(centroids),
+        lambda c, i: F.struct(fold.col_l2_sq(vec, c).alias("d"), i.alias("b")),
     )
-    # array_position returns the FIRST position of the min → lowest index wins ties
-    return F.expr(f"CAST(array_position({dists}, array_min({dists})) - 1 AS INT)")
+    none = F.struct(F.lit(None).cast("double").alias("d"), F.lit(None).cast("int").alias("b"))
+    return F.aggregate(
+        scored,
+        none,
+        lambda acc, s: F.when(
+            s["d"].isNotNull() & (acc["d"].isNull() | (s["d"] < acc["d"])), s
+        ).otherwise(acc),
+        lambda acc: acc["b"],
+    )
 
 
 # literal-centroid assignment embeds lists × dim doubles into the plan; past
-# this budget (~8 MB of literals) switch to the broadcast numpy variant
-_LITERAL_ASSIGN_MAX_CELLS = 1_000_000
-# route_overlap's literal branch is opt-in only (see its docstring): the
-# broadcast fold-exact kernel beat the k×-HOF literal scoring at every
-# measured scale, with bit-identical threshold behavior
-_LITERAL_ROUTE_MAX_CELLS = 0
+# this budget switch to the broadcast numpy variant. Analysis alone grows
+# with the cells (local[2], 1 GB driver heap: ~3 s at 256×256, ~16 s at
+# 500×500 for the table literal, out of memory at 1,000×1,000)
+_LITERAL_ASSIGN_MAX_CELLS = 65_536
 
 
 def _assign_via_broadcast(
@@ -146,7 +157,9 @@ def assign_nearest(
     ``_LITERAL_ASSIGN_MAX_CELLS`` plan-literal cells, broadcast numpy
     argmin past it. ``vec_col`` must already be array<double>."""
     if len(centroids) * len(centroids[0]) <= _LITERAL_ASSIGN_MAX_CELLS:
-        return df.withColumn(out_col, _nearest_centroid(vec_col, centroids))
+        return df.withColumn(
+            out_col, _nearest_centroid(F.col(vec_col), centroids)
+        )
     return _assign_via_broadcast(df, vec_col, centroids, out_col=out_col)
 
 
@@ -187,60 +200,14 @@ def route_overlap(
     each point to its ℓ closest centers for exactly this reason; the
     union keeps the ball's richer adaptive overlap on diffuse data while
     guaranteeing ℓ-way stitching everywhere else. Unlike
-    :func:`assign_nearest` (literal codegen argmin until 1M plan cells),
-    this DEFAULTS to the broadcast numpy path: the per-row k× HOF
-    scoring of the literal expression measured ~1.5-2× slower than the
-    vectorized fold-exact kernel at BOTH sf0.01 and sf0.1 (interleaved
-    in-session probe, round 7 — 0.22 vs 0.42 s and 0.39 vs 0.55 s), and
-    since the numpy kernel accumulates per-dim sequentially the (1+eps)
-    threshold fires bit-identically to the literal fold, so offline
-    oracle replays are unaffected by the dispatch. The literal
-    expression branch is kept for ``_LITERAL_ROUTE_MAX_CELLS``-sized
-    problems (opt-in / plan-inspection contexts); zero shuffle either
-    way, no ×lists row blowup before the filter."""
-    dim = len(centroids[0])
-    if len(centroids) * dim <= _LITERAL_ROUTE_MAX_CELLS:
-        scored = F.expr(
-            f"transform({fold.sql_vecs_lit(centroids)}, (__cent, __ci) -> struct("
-            f"{fold.sql_l2_sq(fold.sql_ident(vec_col), '__cent')} AS d, __ci AS b))"
-        )
-        return (
-            base.withColumn("__sc", scored)
-            .withColumn(
-                "__thr",
-                F.array_min(F.transform(F.col("__sc"), lambda s: s["d"]))
-                * thr_mult,
-            )
-            # (d, b) struct order via array_sort — the same deterministic
-            # tie rule as the numpy path's stable argsort. The ball
-            # membership is intersected with the top-max_lists and
-            # unioned with the top-min_lists floor.
-            .withColumn("__rk", F.array_sort(F.col("__sc")))
-            .withColumn("__top", F.slice(F.col("__rk"), 1, min_lists))
-            .withColumn(
-                "__cap",
-                F.slice(F.col("__rk"), 1, max_lists)
-                if max_lists is not None
-                else F.col("__rk"),
-            )
-            .select(
-                id_col,
-                vec_col,
-                F.explode(
-                    F.filter(
-                        F.col("__sc"),
-                        lambda s: (
-                            (s["d"] <= F.col("__thr"))
-                            & F.exists(
-                                F.col("__cap"), lambda t: t["b"] == s["b"]
-                            )
-                        )
-                        | F.exists(F.col("__top"), lambda t: t["b"] == s["b"]),
-                    )
-                ).alias("__e"),
-            )
-            .select(id_col, vec_col, F.col("__e.b").cast("int").alias(out_col))
-        )
+    :func:`assign_nearest` (literal codegen argmin up to 65,536 plan cells),
+    this always runs the broadcast numpy kernel: per-row k× HOF scoring of
+    a literal expression measured ~1.5-2× slower at BOTH sf0.01 and sf0.1
+    (interleaved in-session probe, round 7 — 0.22 vs 0.42 s and 0.39 vs
+    0.55 s), and since the kernel accumulates per-dim sequentially the
+    (1+eps) threshold fires bit-identically to fold.py's l2², so offline
+    oracle replays agree with it. Zero shuffle, no ×lists row blowup
+    before the filter."""
     import numpy as np
     import pandas as pd
 
@@ -261,7 +228,7 @@ def route_overlap(
                 continue
             x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
             # FOLD-EXACT distances (fold.py): the same float64 op order
-            # as the literal expression's Spark fold and the offline
+            # as fold.py's Spark and Python folds and the offline
             # replays, so the (1+eps)× threshold fires bit-identically on
             # all three. A plain matmul decomposition computes different
             # last-ulp floats and could flip boundary memberships — unlike
@@ -270,8 +237,7 @@ def route_overlap(
             thr = d.min(axis=1) * thr_mult
             keep = d <= thr[:, None]
             # stable argsort == (d, centroid index) order — identical
-            # tie rule to the literal branch's struct array_sort and
-            # the offline replays' sorted((d, b)) ranking
+            # tie rule to the offline replays' sorted((d, b)) ranking
             if max_lists is not None and max_lists < d.shape[1]:
                 order = np.argsort(d, axis=1, kind="stable")
                 in_cap = np.zeros_like(keep)
@@ -555,7 +521,7 @@ class IVFFlatIndex:
             src = src.repartition(want)
         if lists * dim <= _LITERAL_ASSIGN_MAX_CELLS:
             assignments = src.withColumn(
-                BUCKET_COL, _nearest_centroid(vec_col, centroids)
+                BUCKET_COL, _nearest_centroid(vec, centroids)
             )
         else:
             assignments = _assign_via_broadcast(src, vec_col, centroids)
@@ -600,7 +566,7 @@ class IVFFlatIndex:
         cand = self.assignments.filter(F.col(BUCKET_COL).isin(buckets))
         if where is not None:
             cand = cand.filter(where)
-        out = cand.withColumn(dist_col, fn(self.vec_col, query))
+        out = cand.withColumn(dist_col, fn(F.col(self.vec_col), query))
         order = F.col(dist_col).asc() if ASCENDING[self.dist] else F.col(dist_col).desc()
         return out.orderBy(order).limit(k).drop(BUCKET_COL)
 
@@ -640,16 +606,21 @@ class IVFFlatIndex:
         from ..similarity.brute import ASCENDING, DIST_FNS
 
         p = probe_lists if probe_lists is not None else self.probe_lists
-        qvec = fold.sql_double_array(query_vec)
-        # (score, idx) structs sorted by score then idx — same tie order as
-        # the driver-side rank_buckets (lowest index first)
-        ranked = fold.sql_ranked_centroids(self.dist, qvec, self.centroids)
+        qvec = F.col(query_vec).cast("array<double>")
+        # (score, idx) structs; array_sort orders by score then idx — same
+        # tie order as the driver-side rank_buckets (lowest index first)
+        scored = F.transform(
+            vecs_lit(self.centroids),
+            lambda c, i: F.struct(
+                fold.col_centroid_score(self.dist, qvec, c).alias("d"),
+                i.alias("b"),
+            ),
+        )
+        buckets = F.slice(F.array_sort(scored), 1, p)
         q = queries.select(
             F.col(query_id).alias("qid"),
-            F.expr(qvec).alias("__qv"),
-            F.expr(
-                f"explode(transform(slice({ranked}, 1, {int(p)}), __r -> __r.b))"
-            ).alias(BUCKET_COL),
+            qvec.alias("__qv"),
+            F.explode(F.transform(buckets, lambda s: s["b"])).alias(BUCKET_COL),
         )
         # distance scoring below is CPU-bound; an under-partitioned query
         # side (one file split) would pin it to one core (cf. dedup.minhash
@@ -668,7 +639,10 @@ class IVFFlatIndex:
             q = q.repartition(want, "qid")
         items = self.assignments if where is None else self.assignments.filter(where)
         cand = q.join(items, BUCKET_COL)
-        out = cand.withColumn(dist_col, DIST_FNS[self.dist](self.vec_col, "__qv"))
+        out = cand.withColumn(
+            dist_col,
+            DIST_FNS[self.dist](F.col(self.vec_col).cast("array<double>"), F.col("__qv")),
+        )
         order = [
             F.col(dist_col).asc() if ASCENDING[self.dist] else F.col(dist_col).desc()
         ]
@@ -683,7 +657,8 @@ class IVFFlatIndex:
 
     # -- insert (frozen centroids, ref :92-95) ----------------------------
     def insert(self, rows: DataFrame) -> "IVFFlatIndex":
-        new = rows.withColumn(BUCKET_COL, _nearest_centroid(self.vec_col, self.centroids))
+        vec = F.col(self.vec_col).cast("array<double>")
+        new = rows.withColumn(BUCKET_COL, _nearest_centroid(vec, self.centroids))
         return IVFFlatIndex(
             self.vec_col,
             self.lists,

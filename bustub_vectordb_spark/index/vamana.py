@@ -710,7 +710,7 @@ class VamanaIndex:
         import pandas as pd
         from pyspark.sql import Window, functions as F
 
-        from ..functions.vector import l2_dist
+        from ..functions.vector import l2_dist, vec_lit
         from ..shipping import ensure_package_on_workers
         from .ivfflat import IVFFlatIndex, _lloyds_numpy
 
@@ -941,7 +941,7 @@ class VamanaIndex:
             )[1]
         else:
             entry_id = (
-                base.select(id_col, l2_dist("__v", [float(x) for x in pm]).alias("__d"))
+                base.select(id_col, l2_dist(F.col("__v"), vec_lit(pm)).alias("__d"))
                 .orderBy(F.col("__d").asc(), F.col(id_col).asc())
                 .limit(1)
                 .collect()[0][id_col]
@@ -1021,7 +1021,7 @@ class VamanaIndex:
                     .select(
                         F.col(id_col),
                         F.col("__ecell"),
-                        l2_dist("__v", "__ec").alias("__ed"),
+                        l2_dist(F.col("__v"), F.col("__ec")).alias("__ed"),
                     )
                     .withColumn("__rn", F.row_number().over(w))
                     .filter(F.col("__rn") == 1)
@@ -1552,10 +1552,10 @@ class VamanaIndex:
             [(h,) for h, _ in hits], f"{self.id_col} {self.id_type}"
         )
         if by_sim:
-            exact = inner_product("vec", q).alias(dist_col)
+            exact = inner_product(F.col("vec"), q).alias(dist_col)
             order = [F.col(dist_col).desc(), F.col(self.id_col).asc()]
         else:
-            exact = l2_dist("vec", q).alias(dist_col)
+            exact = l2_dist(F.col("vec"), q).alias(dist_col)
             order = [F.col(dist_col).asc(), F.col(self.id_col).asc()]
         return (
             self.vertices.join(F.broadcast(short), self.id_col)
@@ -1663,9 +1663,9 @@ class VamanaIndex:
         from ..functions.vector import inner_product
 
         exact = (
-            inner_product("vec", "__qv")
+            inner_product(F.col("vec"), F.col("__qv"))
             if by_sim
-            else l2_dist("vec", "__qv")
+            else l2_dist(F.col("vec"), F.col("__qv"))
         ).alias(dist_col)
         w = Window.partitionBy(qid_col).orderBy(
             F.col(dist_col).desc() if by_sim else F.col(dist_col).asc(),

@@ -76,8 +76,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..fold import col_dot, sql_vecs_lit
-from ..functions.vector import l2_dist, vec_lit
+from ..fold import col_dot
+from ..functions.vector import l2_dist, vec_lit, vecs_lit
 from .quantize import dim_stats
 
 # 32 bits per word, stored in (signed) longs: the MSB-first fold acc*2+b
@@ -128,7 +128,7 @@ def rotate_col(vec: Column | str, rotation: list[list[float]]) -> Column:
     wrong-but-plausible rotated values."""
     dim = len(rotation)
     v = (F.col(vec) if isinstance(vec, str) else vec).cast("array<double>")
-    rot = F.expr(sql_vecs_lit(rotation))
+    rot = vecs_lit(rotation)
     ok = F.assert_true(
         F.size(v) == F.lit(dim),
         F.lit(f"rotate: vector must have {dim} dims"),

@@ -72,7 +72,7 @@ def knn_join(
     """
     q = F.broadcast(queries.select(F.struct("*").alias("__q")))
     joined = items.crossJoin(q)
-    d = DIST_FNS[dist](item_vec, f"__q.{query_vec}")
+    d = DIST_FNS[dist](F.col(item_vec), F.col(f"__q.{query_vec}"))
     joined = joined.withColumn(dist_col, d)
     order = F.col(dist_col).asc() if ASCENDING[dist] else F.col(dist_col).desc()
     w = Window.partitionBy(F.col("__q")).orderBy(order)

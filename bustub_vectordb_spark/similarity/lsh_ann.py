@@ -113,7 +113,7 @@ def lsh_knn(
     vec = F.col(vec_col)
     cand = df.filter(packed_code(vec, planes).isin(codes))
     return (
-        cand.select(F.col(id_col), cosine_similarity(vec_col, query).alias("__sim"))
+        cand.select(F.col(id_col), cosine_similarity(vec, query).alias("__sim"))
         .orderBy(F.col("__sim").desc(), F.col(id_col).asc())
         .limit(k)
         .select(id_col, F.round("__sim", 8).alias(sim_col))
@@ -173,7 +173,7 @@ def lsh_knn_batch(
     cands = q.join(corpus, "__code").select(
         query_id,
         id_col,
-        cosine_similarity("__qv", "__v").alias("__sim"),
+        cosine_similarity(F.col("__qv"), F.col("__v")).alias("__sim"),
     )
     w = Window.partitionBy(query_id).orderBy(F.col("__sim").desc(), F.col(id_col).asc())
     return (

@@ -36,7 +36,7 @@ def cosine_similarity_join(
     b = df.select(F.col(id_col).alias("id2"), F.col(vec_col).alias("__v2"))
     pairs = a.join(b, F.col("id1") < F.col("id2"))
     scored = pairs.withColumn(
-        "cosine", F.round(cosine_similarity("__v1", "__v2"), 6)
+        "cosine", F.round(cosine_similarity(F.col("__v1"), F.col("__v2")), 6)
     )
     return scored.filter(F.col("cosine") >= threshold).select("id1", "id2", "cosine")
 
@@ -109,6 +109,6 @@ def random_hyperplane_pairs(
         .dropDuplicates(["id1", "id2"])
     )
     scored = cands.withColumn(
-        "cosine", F.round(cosine_similarity("__v1", "__v2"), 6)
+        "cosine", F.round(cosine_similarity(F.col("__v1"), F.col("__v2")), 6)
     )
     return scored.filter(F.col("cosine") >= threshold).select("id1", "id2", "cosine")

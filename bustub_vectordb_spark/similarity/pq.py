@@ -42,6 +42,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .. import fold
+from ..functions.vector import vecs_lit
 from ..index.ivfflat import _lloyds_numpy
 
 
@@ -189,7 +190,7 @@ class PQModel:
         whole-stage-codegen — table lookups on the scan, no UDF. l2 orders
         ascending; ip is a similarity, order it descending."""
         codes = F.col(codes_col) if isinstance(codes_col, str) else codes_col
-        lut_lit = F.expr(fold.sql_vecs_lit(self.lut(query, metric)))
+        lut_lit = vecs_lit(self.lut(query, metric))
         partial = F.zip_with(
             lut_lit, codes, lambda row, c: F.element_at(row, c + 1)
         )

@@ -134,7 +134,9 @@ def test_broadcast_assignment_matches_literal(emb):
         r["vec_id"]: r[BUCKET_COL]
         for r in emb.select(
             "vec_id",
-            _nearest_centroid("embedding", idx.centroids).alias(BUCKET_COL),
+            _nearest_centroid(
+                F.col("embedding").cast("array<double>"), idx.centroids
+            ).alias(BUCKET_COL),
         ).collect()
     }
     bc = {
@@ -144,6 +146,32 @@ def test_broadcast_assignment_matches_literal(emb):
         .collect()
     }
     assert lit == bc and len(lit) > 0
+
+
+def test_nearest_centroid_edge_rows(spark):
+    """The one-pass argmin answers like ``array_position(d, array_min(d))
+    - 1``: lowest index on a tie (duplicate centroids), null for a null
+    vector or an all-null row, 0 for an all-NaN row, and NaN distances
+    rank last."""
+    from bustub_vectordb_spark import fold
+    from bustub_vectordb_spark.index.ivfflat import _nearest_centroid
+
+    inf, nan = float("inf"), float("nan")
+    cents = [[5.0, 5.0], [1.0, 0.0], [1.0, 0.0], [inf, 0.0], [0.0, -1.0]]
+    vecs = [
+        [1.0, 0.0], [0.0, -1.0], [1.0, -0.5], None, [None, None], [nan, nan],
+        [inf, 0.0], [-inf, 1.0], [None, 0.0], [4.0, 4.0], [1.0],
+    ]
+    df = spark.createDataFrame(list(enumerate(vecs)), "id int, v array<double>")
+    dists = F.transform(
+        F.expr(fold.sql_vecs_lit(cents)), lambda c: fold.col_l2_sq(F.col("v"), c)
+    )
+    ref = (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+    rows = df.select(
+        "id", _nearest_centroid(F.col("v"), cents).alias("got"), ref.alias("want")
+    ).orderBy("id").collect()
+    assert [r["got"] for r in rows] == [r["want"] for r in rows]
+    assert [r["got"] for r in rows][:6] == [1, 4, 1, None, None, 0]
 
 
 def test_offline_centroids_bit_identical(emb, ivf, sf_dir):
@@ -209,13 +237,14 @@ def test_filtered_batch_probe(ivf, emb):
 
 
 def test_route_overlap_broadcast_matches_literal(spark, tables):
-    """The large-centroid-set OVERLAP routing path (broadcast numpy,
-    zero shuffle) must produce membership-identical (id, shard) rows to
-    the literal (1+eps) codegen expression. The kernel is FOLD-EXACT
-    (per-dim sequential accumulation) so the threshold compare fires
-    bit-identically — a threshold, unlike argmin, has no tie rule to
-    absorb last-ulp drift."""
+    """The OVERLAP routing kernel (broadcast numpy, zero shuffle) must
+    produce membership-identical (id, shard) rows to the literal (1+eps)
+    rule evaluated with fold.py's Python l2² — with and without the
+    min/max list bounds. The kernel is FOLD-EXACT (per-dim sequential
+    accumulation) so the threshold compare fires bit-identically — a
+    threshold, unlike argmin, has no tie rule to absorb last-ulp drift."""
     import bustub_vectordb_spark.index.ivfflat as ivf
+    from bustub_vectordb_spark import fold
 
     emb = tables["embeddings"]
     idx = ivf.IVFFlatIndex.build(
@@ -226,22 +255,27 @@ def test_route_overlap_broadcast_matches_literal(spark, tables):
     base = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("__v")
     )
-    lit = {
-        (r["vec_id"], r["__shard"])
-        for r in ivf.route_overlap(base, "vec_id", "__v", idx.centroids, 1.44).collect()
-    }
-    old = ivf._LITERAL_ASSIGN_MAX_CELLS
-    ivf._LITERAL_ASSIGN_MAX_CELLS = 1  # force the broadcast path
-    try:
-        bc = {
+    rows = base.collect()
+    for bounds in ({}, {"min_lists": 2, "max_lists": 3}):
+        lo, hi = bounds.get("min_lists", 1), bounds.get("max_lists")
+        want = set()
+        for r in rows:
+            d = [fold.l2_sq(list(r["__v"]), c) for c in idx.centroids]
+            order = [b for _, b in sorted((x, b) for b, x in enumerate(d))]
+            cap, top = set(order[:hi]), set(order[:lo])
+            thr = min(d) * 1.44
+            want |= {
+                (r["vec_id"], b)
+                for b, x in enumerate(d)
+                if (x <= thr and b in cap) or b in top
+            }
+        got = {
             (r["vec_id"], r["__shard"])
             for r in ivf.route_overlap(
-                base, "vec_id", "__v", idx.centroids, 1.44
+                base, "vec_id", "__v", idx.centroids, 1.44, **bounds
             ).collect()
         }
-    finally:
-        ivf._LITERAL_ASSIGN_MAX_CELLS = old
-    assert lit == bc and len(lit) > emb.count()  # overlap replicates rows
+        assert got == want and len(got) > len(rows), bounds  # overlap replicates
 
 
 @pytest.mark.slow

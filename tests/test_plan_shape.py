@@ -301,9 +301,10 @@ def test_vector_expression_round_trips_scale_free(spark):
     """Building (not running) an IVFFlat probe, batch probe and insert and a
     routed-HNSW batch search takes the same number of driver→JVM round
     trips whatever the vector dimension and the centroid count: every
-    vector expression (query literal, centroid table, distance fold) goes
-    to the JVM as one piece of SQL text. Built node by node, a 64×256
-    centroid table alone was tens of thousands of round trips."""
+    vector literal (query, centroid table) goes to the JVM as one piece of
+    SQL text, and the distance folds are a fixed number of Column nodes.
+    Built one ``F.lit`` per element, a 64×256 centroid table alone was
+    tens of thousands of round trips."""
     import random
 
     from bustub_vectordb_spark.index import IVFFlatIndex, ShardedHNSW

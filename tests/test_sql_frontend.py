@@ -33,6 +33,22 @@ def test_rewrite_operators():
     assert "CAST(f(x, 1) AS ARRAY<DOUBLE>)" in r and "CAST(g(y) AS ARRAY<DOUBLE>)" in r
 
 
+def test_distance_macro_under_tighter_operator(engine):
+    """A macro expands to one self-contained operand: under ``/`` the
+    cosine's own division must not re-associate with the outer one
+    (``1 / dot / (‖a‖·‖b‖)`` would read 0.05 here, not 1.25)."""
+    from bustub_vectordb_spark import fold
+
+    cos = fold.exact("cosine", [1.0, 2.0], [2.0, 1.0])
+    r = engine.execute(
+        "SELECT 1 / cosine_similarity(ARRAY [1.0, 2.0], ARRAY [2.0, 1.0]) AS f, "
+        "1 / (ARRAY [1.0, 2.0] <=> ARRAY [2.0, 1.0]) AS o, "
+        "3 * inner_product(ARRAY [1.0, 2.0], ARRAY [2.0, 1.0]) / 2 AS i;"
+    ).collect()[0]
+    assert r["f"] == r["o"] == 1 / cos and abs(r["f"] - 1.25) < 1e-12
+    assert r["i"] == 6.0
+
+
 def test_vector01_insert_scan(engine):
     # SELECT with no FROM (Values plan node)
     r = engine.execute(

@@ -246,22 +246,20 @@ def _fold_cases():
         return -(fold.dot(v, c) / (math.sqrt(fold.norm_sq(v)) * math.sqrt(fold.norm_sq(c))))
 
     def score(dist):
-        return (
-            lambda a, b: fold.col_centroid_score(dist, a, b),
-            lambda a, b: fold.sql_centroid_score(dist, a, b),
-        )
+        return lambda a, b: fold.col_centroid_score(dist, a, b), None
 
-    def exact(dist):
+    def exact(dist, fn):
         return (
-            lambda a, b: fold.col_distance(dist, a, b),
+            lambda a, b: fn(a, b),
             lambda a, b: fold.sql_distance(dist, a, b),
             lambda v, c: fold.exact(dist, v, c),
             None,
         )
 
-    # name -> (Column fold, SQL-text fold, Python scalar twin, numpy twins
-    # or None); the numpy twins get (rows of a, row 0 of b repeated) and
-    # return one value per row of a
+    # name -> (Column fold, SQL-text fold or None, Python scalar twin, numpy
+    # twins or None); the numpy twins get (rows of a, row 0 of b repeated)
+    # and return one value per row of a. The exact distances' Column folds
+    # are the public functions.vector forms.
     return {
         "l2_sq": (fold.col_l2_sq, fold.sql_l2_sq, fold.l2_sq, rows_l2),
         "dot": (fold.col_dot, fold.sql_dot, fold.dot, rows_dot),
@@ -280,30 +278,22 @@ def _fold_cases():
         "score_l2": (*score("l2"), fold.l2_sq, None),
         "score_ip": (*score("ip"), lambda v, c: -fold.dot(v, c), None),
         "score_cosine": (*score("cosine"), cos_score, None),
-        "exact_l2": exact("l2"),
-        "exact_ip": exact("ip"),
-        "exact_cosine": exact("cosine"),
+        "exact_l2": exact("l2", l2_dist),
+        "exact_ip": exact("ip", inner_product),
+        "exact_cosine": exact("cosine", cosine_similarity),
     }
-
-
-# the public functions.vector forms of the exact folds
-_PUBLIC = {
-    "exact_l2": l2_dist,
-    "exact_ip": inner_product,
-    "exact_cosine": cosine_similarity,
-}
 
 
 @pytest.mark.parametrize("name", sorted(_fold_cases()))
 def test_fold_twins_match_spark_bitwise(spark, name):
     """The Python and numpy twins of each fold.py fold return the SAME
-    doubles Spark computes from the Column fold and from the SQL-text fold
-    (over columns, and over literals constant-folded on the driver), on
-    64-d rows that include -0.0, subnormals, ±max, NaN and ±inf. The
-    public functions.vector forms agree with Column and with name operands.
-    The numpy forms are checked on a fresh array and on a buffer offset by
-    one float (the NOTES alignment hazard: BLAS reductions drift by an ulp
-    there, the dimension-sequential folds must not)."""
+    doubles Spark computes from the Column fold and, where the fold has
+    one, from the SQL-text fold (over columns, and over literals
+    constant-folded on the driver), on 64-d rows that include -0.0,
+    subnormals, ±max, NaN and ±inf. The numpy forms are checked on a fresh
+    array and on a buffer offset by one float (the NOTES alignment hazard:
+    BLAS reductions drift by an ulp there, the dimension-sequential folds
+    must not)."""
     import numpy as np
 
     from bustub_vectordb_spark import fold
@@ -316,34 +306,33 @@ def test_fold_twins_match_spark_bitwise(spark, name):
         [(i, a_rows[i], b_rows[i], b_rows[0]) for i in range(n)],
         "id int, a array<double>, b array<double>, b0 array<double>",
     )
-    a, b = fold.sql_ident("a"), fold.sql_ident("b")
     cols = [
         "id",
         col_fold(F.col("a"), F.col("b")).alias("v"),
-        F.expr(sql_fold(a, b)).alias("s"),
         col_fold(F.col("a"), F.col("b0")).alias("v0"),
     ]
-    if name in _PUBLIC:
-        fn = _PUBLIC[name]
-        cols += [fn(F.col("a"), F.col("b")).alias("pc"), fn("a", "b").alias("pn")]
+    if sql_fold is not None:
+        cols.append(F.expr(sql_fold("a", "b")).alias("s"))
     rows = df.select(*cols).orderBy("id").collect()
-    lits = (
-        spark.range(1)
-        .select(
-            *[
-                F.expr(
-                    sql_fold(fold.sql_vec_lit(a_rows[i]), fold.sql_vec_lit(b_rows[i]))
-                ).alias(f"l{i}")
-                for i in range(n)
-            ]
+    lits = None
+    if sql_fold is not None:
+        lits = (
+            spark.range(1)
+            .select(
+                *[
+                    F.expr(
+                        sql_fold(fold.sql_vec_lit(a_rows[i]), fold.sql_vec_lit(b_rows[i]))
+                    ).alias(f"l{i}")
+                    for i in range(n)
+                ]
+            )
+            .collect()[0]
         )
-        .collect()[0]
-    )
     for i, r in enumerate(rows):
         want = _bits(py_twin(a_rows[i], b_rows[i]))
-        got = [r["v"], r["s"], lits[f"l{i}"]]
-        if name in _PUBLIC:
-            got += [r["pc"], r["pn"]]
+        got = [r["v"]]
+        if lits is not None:
+            got += [r["s"], lits[f"l{i}"]]
         assert [_bits(g) for g in got] == [want] * len(got), (name, i)
     if np_twins is None:
         return
@@ -384,20 +373,19 @@ def test_sql_vec_lit_round_trips_bitwise(spark):
     ]
 
 
-def test_sql_ident_reads_names_like_f_col(spark):
-    """sql_ident quotes a name so SQL text resolves it the way F.col does:
-    an unquoted dot reaches into a struct, a backticked dot is part of the
-    name, a doubled backtick is a literal one."""
-    from bustub_vectordb_spark import fold
+def test_vecs_lit_row_by_row_past_one_call_cap(spark, monkeypatch):
+    """Past ``_ONE_CALL_MAX_CELLS`` a table literal is parsed one row per
+    ``F.expr`` call; it is the same expression, type and bits as the
+    one-call form."""
+    import bustub_vectordb_spark.functions.vector as fv
 
-    df = spark.createDataFrame(
-        [(1.0, 2.0, (3.0,), 4.0)], "`a.b` double, a double, s struct<t: double>, `q``x` double"
-    )
-    for name in ["`a.b`", "a", "s.t", "`s`.t", "`q``x`"]:
-        want = df.select(F.col(name)).collect()[0][0]
-        assert df.select(F.expr(fold.sql_ident(name))).collect()[0][0] == want, name
-    assert fold.sql_ident("s.t") == "`s`.`t`"
-    assert fold.sql_ident("`a.b`") == "`a.b`"
-    for bad in ["a..b", "a.", "`a", "`a`b"]:
-        with pytest.raises(ValueError):
-            fold.sql_ident(bad)
+    rows = [[1.5, -0.0, float("nan")], [5e-324, float("inf"), -_MAX]]
+    one = fv.vecs_lit(rows)
+    monkeypatch.setattr(fv, "_ONE_CALL_MAX_CELLS", 2)
+    per_row = fv.vecs_lit(rows)
+    df = spark.range(1).select(one.alias("a"), per_row.alias("b"))
+    assert df.schema["a"].dataType == df.schema["b"].dataType
+    r = df.collect()[0]
+    want = [[_bits(x) for x in row] for row in rows]
+    assert [[_bits(x) for x in row] for row in r["a"]] == want
+    assert [[_bits(x) for x in row] for row in r["b"]] == want
