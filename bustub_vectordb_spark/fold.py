@@ -167,6 +167,16 @@ def exact(dist: str, v, q) -> float:
     return d / (math.sqrt(norm_sq(v)) * math.sqrt(norm_sq(q)))
 
 
+def exact_rerank(dist: str, vectors_by_id, ids, q, k: int) -> list[tuple]:
+    """The exact rerank of an ANN shortlist: [(id, :func:`exact` value)] for
+    the k best of ``ids``, (distance, id)-ordered for l2 and (similarity
+    desc, id) for ip / cosine — the rows Spark's rerank join returns."""
+    scored = [(i, exact(dist, [float(x) for x in vectors_by_id[i]], q)) for i in ids]
+    asc = dist == "l2"
+    scored.sort(key=lambda t: (t[1] if asc else -t[1], t[0]))
+    return scored[:k]
+
+
 def nearest(v, centroids) -> int:
     """Index of the l2²-nearest centroid, first-min ties (the codegen
     ``array_position(d, array_min(d))`` rule)."""
@@ -207,18 +217,20 @@ def l2_sq_pairwise(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
 
 
 def rank_centroids(dist: str, centroids, q) -> list[int]:
-    """Centroid indexes nearest-first (stable sort: ties to the lowest
-    index). l2 ranks by ``math.dist``; ip / cosine by the negated dot /
-    cosine (Python ``sum`` over the products)."""
+    """Centroid indexes nearest-first, ties to the lowest index: the order
+    Spark's ``array_sort`` gives over (:func:`col_centroid_score`, index)
+    structs, so a driver-side probe and a codegen-routed batch pick the
+    same cells. l2 ranks by :func:`l2_sq`; ip / cosine by the negated
+    :func:`dot` / cosine (a zero norm counts as 1e-300)."""
 
     def score(c) -> float:
         if dist == "l2":
-            return math.dist(c, q)
-        dt = sum(x * y for x, y in zip(c, q))
+            return l2_sq(q, c)
+        dt = dot(c, q)
         if dist == "ip":
             return -dt
-        na = math.sqrt(sum(x * x for x in c)) or 1e-300
-        nb = math.sqrt(sum(y * y for y in q)) or 1e-300
+        na = math.sqrt(norm_sq(c)) or 1e-300
+        nb = math.sqrt(norm_sq(q)) or 1e-300
         return -(dt / (na * nb))
 
     return sorted(range(len(centroids)), key=lambda i: score(centroids[i]))

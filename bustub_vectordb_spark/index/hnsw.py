@@ -1431,9 +1431,7 @@ class ShardedHNSW:
     # shells (ef 192) are unchanged; where shortlists outrun the beam
     # (BQ 16x+, past-clamp escalations) the walk no longer pays for
     # depth the visited set already contains — A/B'd at the 1.2M BQ
-    # geometry before flipping (drills/drill_1200k_r11_harvest.json).
-    # Class-level so A/B tools and the offline replays flip in lockstep.
-    RERANK_HARVEST = True
+    # geometry (drills/drill_1200k_r11_harvest.json).
 
     def members(self):
         """DataFrame[shard, id]: shard membership, extracted from the blobs
@@ -1952,7 +1950,7 @@ class ShardedHNSW:
         builds surface the same id from several shards).
 
         Without ``n_probe`` every shard is searched. Offline
-        replay: ``offline_routed_batch`` reproduces routing + hits exactly.
+        replay: ``offline_routed_search`` reproduces routing + hits exactly.
         ``allowed`` applies the traversal-time filter (see probe()) inside
         every probed shard's walk, for every query — routing itself stays
         UNfiltered (centroids are corpus geometry, not per-row metadata).
@@ -2020,15 +2018,8 @@ class ShardedHNSW:
         qid_type = {f.name: f.dataType.simpleString() for f in queries.schema}[qid_col]
         out_schema = f"{qid_col} {qid_type}, {id_col} {id_type}, {dist_col} double"
 
-        rerank_mult = self._rerank_mult(rerank_mult)
-        if rerank is not None and self.RERANK_HARVEST:
-            # shortlist depth decoupled from the walk beam (see the class
-            # attr note) — resolved at plan time so worker closures and
-            # an A/B flip on the driver agree
-            k_walk, n_short = k, k * rerank_mult
-        else:
-            k_walk = k * rerank_mult if rerank is not None else k
-            n_short = None
+        # shortlist depth decoupled from the walk beam (see the class note)
+        n_short = k * self._rerank_mult(rerank_mult) if rerank is not None else None
         ef_walk = self._serve_ef(ef) if rerank is not None else ef
 
         def run(batches):
@@ -2044,7 +2035,7 @@ class ShardedHNSW:
                     for q in qs:
                         arr = np.asarray(q["__qv"], dtype=np.float64)
                         for hid, d in g.search(
-                            arr, k_walk, ef=ef_walk, allowed_ids=aset,
+                            arr, k, ef=ef_walk, allowed_ids=aset,
                             shortlist=n_short,
                         ):
                             recs_q.append(q[qid_col])
@@ -2363,13 +2354,8 @@ class ShardedHNSW:
             else None
         )
 
-        rerank_mult = self._rerank_mult(rerank_mult)
-        if rerank is not None and self.RERANK_HARVEST:
-            # visited-set shortlist harvest — see search_batch / class attr
-            k_walk, n_short = k, k * rerank_mult
-        else:
-            k_walk = k * rerank_mult if rerank is not None else k
-            n_short = None
+        # shortlist depth decoupled from the walk beam (see the class note)
+        n_short = k * self._rerank_mult(rerank_mult) if rerank is not None else None
         ef_walk = self._serve_ef(ef) if rerank is not None else ef
 
         def search_shard(batches):
@@ -2381,7 +2367,7 @@ class ShardedHNSW:
                     g = pickle.loads(blob)
                     aset = set(local.iloc[i]) if local is not None else bset
                     for hid, d in g.search(
-                        np.asarray(q), k_walk, ef=ef_walk, allowed_ids=aset,
+                        np.asarray(q), k, ef=ef_walk, allowed_ids=aset,
                         shortlist=n_short,
                     ):
                         recs.append({id_col: hid, dist_col: sign * d})
@@ -2526,240 +2512,166 @@ def offline_routed(
     return centroids, graphs
 
 
-def offline_routed_probe(
+def offline_quantize(
+    graphs: dict[int, _Graph],
+    form: str,
+    mins: list[float] | None = None,
+    maxs: list[float] | None = None,
+    rotation_seed: int | None = None,
+    model=None,
+    centroids: list[list[float]] | None = None,
+    residual: bool = False,
+    pq_centers=None,
+    local_mk=None,
+) -> None:
+    """Quantize replayed graphs in place by the rule the distributed path
+    applies, before :func:`offline_routed_search` /
+    ``vamana.offline_vamana_search`` walk them.
+
+    - ``"sq8"``: ``ShardedHNSW.quantize(mins, maxs)``.
+    - ``"bq"``: ``quantize_bq(mins, maxs)`` with its local=True default —
+      each graph's OWN exact per-dim min/max (bit-identical to the
+      worker's, since the replayed build produces the same vectors); the
+      global stats serve only the empty-graph fallback. ``rotation_seed``
+      mirrors ``quantize_bq(rotation_seed=...)``: the same seeded
+      orthonormal rotation and rotated-space fallback bounds —
+      bit-identical HERE because quantize_bq derives its matrix
+      DRIVER-side and this replay runs in that same process (same LAPACK
+      build). Worker-side consumers must NOT re-run QR: they read the
+      frozen floats in params["bq_rot"] (the insert upsert closure does —
+      see ShardedHNSW.insert).
+    - ``"pq"``: ``quantize_pq(model)`` — global codebooks; ``residual``
+      adds each shard's routing centroid (``centroids[shard]``) as its
+      center; ``pq_centers`` instead ships ONE frozen multi-center set
+      into every graph (the vamana entry-cell residual mode);
+      ``local_mk`` = (m, k, max_iter) replays ``quantize_pq_local``
+      (train_local_pq run verbatim on each replayed graph's own rows —
+      the shard build is id-sorted both sides; ``model`` unused)."""
+    if form == "sq8":
+        for g in graphs.values():
+            g.quantize_sq8(mins, maxs)
+    elif form == "bq":
+        rot = None
+        if rotation_seed is not None:
+            from ..similarity.bq import rotation_matrix
+
+            rot = np.asarray(
+                rotation_matrix(len(mins), int(rotation_seed)), dtype=np.float64
+            )
+            mins, maxs = _rotate_bounds(mins, maxs, rot)
+        for g in graphs.values():
+            if g.vecs is not None and len(g.ids):
+                if rot is not None:
+                    g.quantize_bq(None, None, rot=rot)
+                else:
+                    g.quantize_bq(
+                        g.vecs.min(axis=0).tolist(), g.vecs.max(axis=0).tolist()
+                    )
+            else:
+                g.quantize_bq(mins, maxs, rot=rot)
+    elif form == "pq" and local_mk is not None:
+        m_i, k_i, it_i = local_mk
+        for g in graphs.values():
+            if g.vecs is not None and len(g.ids):
+                books, bounds = train_local_pq(g.vecs, m_i, k_i, it_i)
+                g.quantize_pq(books, bounds)
+    elif form == "pq":
+        books = [[[float(x) for x in row] for row in b] for b in model.centroids]
+        bounds = [[int(s), int(e)] for s, e in model.bounds]
+        for b, g in graphs.items():
+            g.quantize_pq(
+                books, bounds,
+                centers=(
+                    pq_centers
+                    if pq_centers is not None
+                    else [[float(x) for x in centroids[b]]] if residual else None
+                ),
+            )
+    else:
+        raise ValueError(f"unknown storage form {form!r}")
+
+
+def offline_routed_search(
     centroids: list[list[float]],
     graphs: dict[int, _Graph],
-    query: list[float],
+    queries: list[tuple],
     k: int,
     n_probe: int,
     dist: str = "l2",
     allowed_ids: set | None = None,
+    rerank: tuple | None = None,
 ) -> list[tuple]:
-    """Replay ``ShardedHNSW.probe`` (rank shards → search n_probe graphs →
-    dedupe → global top-k; ``allowed_ids`` replays the filtered walk).
-    Returns [(id, signed_distance)]."""
-    ranked = fold.rank_centroids(dist, centroids, query)
+    """Replay ``ShardedHNSW.probe`` and ``search_batch`` without Spark (a
+    point probe is a batch of one). Per (qid, vec) query: rank the shards
+    (fold.rank_centroids — the order of the codegen array_sort routing),
+    walk the ``n_probe`` nearest graphs, keep each id's best signed
+    distance, and return the top-k in (distance, id) order (similarity
+    desc for ip / cosine). ``allowed_ids`` replays the filtered walks.
+
+    ``rerank=(vectors_by_id, rerank_mult, ef)`` replays the quantized
+    serving shape (quantize the graphs first, :func:`offline_quantize`):
+    each walk harvests a k·rerank_mult shortlist from its visited set at
+    ``ef`` (None = the graph's frozen ef_search; pass
+    params['rerank_harvest_ef'] when replaying a stamped index — the
+    ``ShardedHNSW._serve_ef`` override), and the union of the shortlists
+    reranks with the exact left-fold arithmetic Spark's functions.vector
+    expressions evaluate (fold.exact_rerank). Returns [(qid, id, d)]."""
     sign = -1.0 if dist in ("ip", "cosine") else 1.0
-    q = np.asarray(query, dtype=np.float64)
-    hits: dict = {}
-    for b in ranked[:n_probe]:
-        g = graphs.get(b)
-        if g is None:
-            continue
-        for hid, d in g.search(q, k, allowed_ids=allowed_ids):
-            sd = sign * d
-            if hid not in hits or sd < hits[hid]:
-                hits[hid] = sd
     asc = dist == "l2"
-    out = sorted(hits.items(), key=lambda t: (t[1] if asc else -t[1], t[0]))
-    return out[:k]
-
-
-def offline_routed_sq8_probe(
-    centroids: list[list[float]],
-    graphs: dict[int, _Graph],
-    vectors_by_id: dict,
-    query: list[float],
-    k: int,
-    n_probe: int,
-    mins: list[float],
-    maxs: list[float],
-    dist: str = "l2",
-    rerank_mult: int = 4,
-    ef: int | None = None,
-) -> list[tuple]:
-    """Replay ``ShardedHNSW.quantize(mins, maxs).probe(..., rerank=src)``:
-    quantize the replayed graphs with the same affine params, walk each
-    probed shard for k·rerank_mult ADC candidates, then rerank the
-    candidate ids with EXACT distances computed by the same left-fold
-    arithmetic Spark's functions.vector expressions evaluate
-    (F.aggregate(zip_with(...))) — bit-matching the distributed result.
-    ``ef`` mirrors the serving-walk override resolved by
-    ``ShardedHNSW._serve_ef`` — replays of an index carrying
-    params['rerank_harvest_ef'] must pass it (r12: threaded through every
-    quantized wrapper so stamped indexes replay bit-exactly).
-    Returns [(id, exact_distance)] in the probe's output order."""
-    for g in graphs.values():
-        g.quantize_sq8(mins, maxs)
-    return _offline_quantized_probe(
-        centroids, graphs, vectors_by_id, query, k, n_probe, dist,
-        rerank_mult, ef,
-    )
-
-
-def _quantize_bq_like_sharded(graphs, mins, maxs, rotation_seed=None) -> None:
-    """The exact quantization rule ShardedHNSW.quantize_bq(local=True)
-    applies per shard: own exact min/max when the graph has vectors,
-    caller-supplied global stats otherwise. With ``rotation_seed``, the
-    same seeded orthonormal rotation (and rotated-space fallback bounds)
-    the distributed path derives — bit-identical HERE because quantize_bq
-    derives its matrix DRIVER-side and this replay runs in that same
-    process (same LAPACK build). Worker-side consumers must NOT re-run
-    QR: they read the frozen floats in params["bq_rot"] (the insert
-    upsert closure does — see ShardedHNSW.insert)."""
-    rot = None
-    if rotation_seed is not None:
-        from ..similarity.bq import rotation_matrix
-
-        rot = np.asarray(
-            rotation_matrix(len(mins), int(rotation_seed)), dtype=np.float64
-        )
-        mins, maxs = _rotate_bounds(mins, maxs, rot)
-    for g in graphs.values():
-        if g.vecs is not None and len(g.ids):
-            if rot is not None:
-                g.quantize_bq(None, None, rot=rot)
-            else:
-                g.quantize_bq(g.vecs.min(axis=0).tolist(), g.vecs.max(axis=0).tolist())
-        else:
-            g.quantize_bq(mins, maxs, rot=rot)
-
-
-def offline_routed_bq_probe(
-    centroids: list[list[float]],
-    graphs: dict[int, _Graph],
-    vectors_by_id: dict,
-    query: list[float],
-    k: int,
-    n_probe: int,
-    mins: list[float],
-    maxs: list[float],
-    dist: str = "l2",
-    rerank_mult: int = 16,
-    rotation_seed: int | None = None,
-    ef: int | None = None,
-) -> list[tuple]:
-    """Replay ``ShardedHNSW.quantize_bq(mins, maxs).probe(..., rerank=src)``
-    — the 1-bit twin of :func:`offline_routed_sq8_probe`. Mirrors the
-    distributed default (local=True): each replayed graph quantizes with
-    its OWN exact per-dim min/max (bit-identical to the worker's, since
-    the replayed build produces the same vectors); the global stats serve
-    only the empty-graph fallback. ``rotation_seed`` mirrors
-    ``quantize_bq(rotation_seed=...)``; ``ef`` the _serve_ef override
-    (pass params['rerank_harvest_ef'] when replaying a stamped index)."""
-    _quantize_bq_like_sharded(graphs, mins, maxs, rotation_seed)
-    return _offline_quantized_probe(
-        centroids, graphs, vectors_by_id, query, k, n_probe, dist,
-        rerank_mult, ef,
-    )
-
-
-def _offline_rerank_walk(
-    g: _Graph, q: np.ndarray, k: int, rerank_mult: int, ef: int | None = None
-):
-    """The quantized-rerank candidate walk, matching ShardedHNSW's serving
-    closures exactly: with RERANK_HARVEST on (the default) the walk runs
-    at the configured ef (the graph's frozen ef_search unless overridden
-    — replays of an index carrying params['rerank_harvest_ef'] must pass
-    it here) and the k·rerank_mult shortlist is harvested from its
-    visited set; off replays the pre-r11 coupled walk (beam widened to
-    k·rerank_mult). One shared function so the offline replays and any
-    A/B flip of the class attr stay in lockstep with the distributed
-    paths."""
-    if ShardedHNSW.RERANK_HARVEST:
-        return g.search(q, k, ef=ef, shortlist=k * rerank_mult)
-    return g.search(q, k * rerank_mult, ef=ef)
-
-
-def _offline_quantized_probe(
-    centroids, graphs, vectors_by_id, query, k, n_probe, dist, rerank_mult,
-    ef=None,
-) -> list[tuple]:
-    """Shared post-quantize walk+rerank of the offline probe replays (the
-    graphs arrive already quantized; the arithmetic below is unchanged
-    from the original sq8 replay — bit-compatibility is the contract)."""
-    ranked = fold.rank_centroids(dist, centroids, query)
-    q = np.asarray(query, dtype=np.float64)
-    cand: set = set()
-    for b in ranked[:n_probe]:
-        g = graphs.get(b)
-        if g is None:
-            continue
-        for hid, _d in _offline_rerank_walk(g, q, k, rerank_mult, ef=ef):
-            cand.add(hid)
-    asc = dist == "l2"
-    scored = [
-        (hid, fold.exact(dist, [float(x) for x in vectors_by_id[hid]], query))
-        for hid in cand
-    ]
-    scored.sort(key=lambda t: (t[1] if asc else -t[1], t[0]))
-    return scored[:k]
-
-
-def offline_routed_sq8_batch(
-    centroids: list[list[float]],
-    graphs: dict[int, _Graph],
-    vectors_by_id: dict,
-    queries: list[tuple],
-    k: int,
-    n_probe: int,
-    mins: list[float],
-    maxs: list[float],
-    rerank_mult: int = 4,
-    ef: int | None = None,
-) -> list[tuple]:
-    """Replay ``ShardedHNSW.quantize(...).search_batch(..., rerank=src)``
-    for l2 routed builds: same routing fold arithmetic as
-    offline_routed_batch, ADC walks for k·rerank_mult candidates, exact
-    left-fold l2 rerank, (d, id)-ordered top-k. ``ef`` mirrors the
-    _serve_ef override (pass params['rerank_harvest_ef'] for stamped
-    indexes). Returns [(qid, id, d)]."""
-    for g in graphs.values():
-        g.quantize_sq8(mins, maxs)
-    return _offline_quantized_batch(
-        centroids, graphs, vectors_by_id, queries, k, n_probe, rerank_mult,
-        ef,
-    )
-
-
-def offline_routed_bq_batch(
-    centroids: list[list[float]],
-    graphs: dict[int, _Graph],
-    vectors_by_id: dict,
-    queries: list[tuple],
-    k: int,
-    n_probe: int,
-    mins: list[float],
-    maxs: list[float],
-    rerank_mult: int = 16,
-    rotation_seed: int | None = None,
-    ef: int | None = None,
-) -> list[tuple]:
-    """Replay ``ShardedHNSW.quantize_bq(...).search_batch(..., rerank=src)``
-    — the 1-bit twin of :func:`offline_routed_sq8_batch` (local-threshold
-    default, see :func:`offline_routed_bq_probe`; ``ef`` = the _serve_ef
-    override for stamped indexes)."""
-    _quantize_bq_like_sharded(graphs, mins, maxs, rotation_seed)
-    return _offline_quantized_batch(
-        centroids, graphs, vectors_by_id, queries, k, n_probe, rerank_mult,
-        ef,
-    )
-
-
-def _offline_quantized_batch(
-    centroids, graphs, vectors_by_id, queries, k, n_probe, rerank_mult,
-    ef=None,
-) -> list[tuple]:
     out = []
     for qid, qv in queries:
-        ranked = sorted((fold.l2_sq(qv, c), b) for b, c in enumerate(centroids))
-        cand: set = set()
-        for _, b in ranked[:n_probe]:
+        q = np.asarray(qv, dtype=np.float64)
+        hits: dict = {}
+        for b in fold.rank_centroids(dist, centroids, qv)[:n_probe]:
             g = graphs.get(b)
             if g is None:
                 continue
-            for hid, _d in _offline_rerank_walk(
-                g, np.asarray(qv, dtype=np.float64), k, rerank_mult, ef=ef
-            ):
-                cand.add(hid)
-        scored = [
-            (hid, fold.exact("l2", [float(x) for x in vectors_by_id[hid]], qv))
-            for hid in cand
-        ]
-        scored.sort(key=lambda t: (t[1], t[0]))
-        for hid, d in scored[:k]:
-            out.append((qid, hid, d))
+            if rerank is None:
+                walk = g.search(q, k, allowed_ids=allowed_ids)
+            else:
+                walk = g.search(
+                    q, k, ef=rerank[2], allowed_ids=allowed_ids,
+                    shortlist=k * rerank[1],
+                )
+            for hid, d in walk:
+                sd = sign * d
+                if hid not in hits or sd < hits[hid]:
+                    hits[hid] = sd
+        if rerank is None:
+            top = sorted(hits.items(), key=lambda t: (t[1] if asc else -t[1], t[0]))
+        else:
+            top = fold.exact_rerank(dist, rerank[0], hits, qv, k)
+        out += [(qid, hid, d) for hid, d in top[:k]]
     return out
+
+
+def offline_routed_insert(
+    centroids: list[list[float]],
+    graphs: dict[int, _Graph],
+    rows: list[tuple],
+    m: int = 8,
+    ef_construction: int = 48,
+    ef_search: int = 48,
+    dist: str = "l2",
+    seed: int = 42,
+) -> dict[int, _Graph]:
+    """Replay ``ShardedHNSW.insert`` without Spark: route each (id, vec) by
+    the same left-fold argmin the distributed expression evaluates, then
+    extend each touched shard's graph in id order (exactly what the worker's
+    sorted add_all does). Mutates and returns ``graphs``."""
+    members: dict[int, list[tuple]] = {}
+    for i, v in rows:
+        members.setdefault(fold.nearest(v, centroids), []).append((i, v))
+    for b, recs in sorted(members.items()):
+        recs.sort(key=lambda t: t[0])
+        g = graphs.get(b)
+        if g is None:
+            g = _Graph(m, ef_construction, ef_search, dist, seed)
+            graphs[b] = g
+        g.add_all(
+            [r[0] for r in recs], np.asarray([r[1] for r in recs], dtype=np.float64)
+        )
+    return graphs
 
 
 def train_local_pq(mat: "np.ndarray", m: int, k: int, max_iter: int = 5):
@@ -2822,159 +2734,3 @@ def routed_residual_df(df, vec_col: str, id_col: str, centroids):
     return assigned.join(cents, "__shard").select(
         F.col(id_col), F.col("__shard"), res.alias("__res")
     )
-
-
-def _quantize_pq_like_sharded(
-    graphs, centroids, model, residual, pq_centers, local_mk
-) -> None:
-    """The exact PQ-quantization rule the distributed paths apply, shared
-    by both offline replays: global codebooks, per-shard routing-centroid
-    residual, frozen multi-center (vamana entry cells), or per-graph
-    LOCAL books (quantize_pq_local's train_local_pq, run verbatim on the
-    replayed graphs — the shard build is id-sorted both sides)."""
-    if local_mk is not None:
-        m_i, k_i, it_i = local_mk
-        for g in graphs.values():
-            if g.vecs is not None and len(g.ids):
-                books, bounds = train_local_pq(g.vecs, m_i, k_i, it_i)
-                g.quantize_pq(books, bounds)
-        return
-    books = [[[float(x) for x in row] for row in b] for b in model.centroids]
-    bounds = [[int(s), int(e)] for s, e in model.bounds]
-    for b, g in graphs.items():
-        g.quantize_pq(
-            books, bounds,
-            centers=(
-                pq_centers
-                if pq_centers is not None
-                else [[float(x) for x in centroids[b]]] if residual else None
-            ),
-        )
-
-
-def offline_routed_pq_probe(
-    centroids: list[list[float]],
-    graphs: dict[int, _Graph],
-    vectors_by_id: dict,
-    query: list[float],
-    k: int,
-    n_probe: int,
-    model=None,
-    dist: str = "l2",
-    rerank_mult: int = 4,
-    residual: bool = False,
-    pq_centers=None,
-    local_mk=None,
-    ef: int | None = None,
-) -> list[tuple]:
-    """Replay ``ShardedHNSW.quantize_pq(model).probe(..., rerank=src)`` —
-    the PQ twin of :func:`offline_routed_sq8_probe`: quantize the replayed
-    graphs with the same codebooks, walk each probed shard for
-    k·rerank_mult reconstruction-distance candidates, rerank the candidate
-    ids with the exact left-fold arithmetic Spark's functions.vector
-    expressions evaluate. ``residual`` mirrors
-    ``quantize_pq(model, residual=True)`` (per-shard routing-centroid
-    centers). ``pq_centers`` instead ships ONE frozen multi-center set
-    into every graph (the vamana entry-cell residual mode). ``local_mk``
-    = (m, k, max_iter) replays ``quantize_pq_local`` — per-graph books
-    trained on the replayed graph's own rows (``model`` unused). ``ef``
-    mirrors the _serve_ef override (pass params['rerank_harvest_ef'] for
-    stamped indexes). Returns [(id, exact_distance)]."""
-    _quantize_pq_like_sharded(graphs, centroids, model, residual, pq_centers, local_mk)
-    return _offline_quantized_probe(
-        centroids, graphs, vectors_by_id, query, k, n_probe, dist,
-        rerank_mult, ef,
-    )
-
-
-def offline_routed_pq_batch(
-    centroids: list[list[float]],
-    graphs: dict[int, _Graph],
-    vectors_by_id: dict,
-    queries: list[tuple],
-    k: int,
-    n_probe: int,
-    model=None,
-    rerank_mult: int = 4,
-    residual: bool = False,
-    pq_centers=None,
-    local_mk=None,
-    ef: int | None = None,
-) -> list[tuple]:
-    """Replay ``ShardedHNSW.quantize_pq(model).search_batch(..., rerank=src)``
-    for l2 routed builds — the PQ twin of :func:`offline_routed_sq8_batch`:
-    same routing fold arithmetic, reconstruction-distance walks for
-    k·rerank_mult candidates, exact left-fold l2 rerank, (d, id)-ordered
-    top-k. ``residual`` mirrors ``quantize_pq(model, residual=True)``;
-    ``pq_centers`` the vamana entry-cell multi-center mode; ``local_mk``
-    the per-graph local-books mode (quantize_pq_local); ``ef`` the
-    _serve_ef override (pass params['rerank_harvest_ef'] for stamped
-    indexes). Returns [(qid, id, d)]."""
-    _quantize_pq_like_sharded(graphs, centroids, model, residual, pq_centers, local_mk)
-    return _offline_quantized_batch(
-        centroids, graphs, vectors_by_id, queries, k, n_probe, rerank_mult,
-        ef,
-    )
-
-
-def offline_routed_insert(
-    centroids: list[list[float]],
-    graphs: dict[int, _Graph],
-    rows: list[tuple],
-    m: int = 8,
-    ef_construction: int = 48,
-    ef_search: int = 48,
-    dist: str = "l2",
-    seed: int = 42,
-) -> dict[int, _Graph]:
-    """Replay ``ShardedHNSW.insert`` without Spark: route each (id, vec) by
-    the same left-fold argmin the distributed expression evaluates, then
-    extend each touched shard's graph in id order (exactly what the worker's
-    sorted add_all does). Mutates and returns ``graphs``."""
-    members: dict[int, list[tuple]] = {}
-    for i, v in rows:
-        members.setdefault(fold.nearest(v, centroids), []).append((i, v))
-    for b, recs in sorted(members.items()):
-        recs.sort(key=lambda t: t[0])
-        g = graphs.get(b)
-        if g is None:
-            g = _Graph(m, ef_construction, ef_search, dist, seed)
-            graphs[b] = g
-        g.add_all(
-            [r[0] for r in recs], np.asarray([r[1] for r in recs], dtype=np.float64)
-        )
-    return graphs
-
-
-def offline_routed_batch(
-    centroids: list[list[float]],
-    graphs: dict[int, _Graph],
-    queries: list[tuple],
-    k: int,
-    n_probe: int,
-    dist: str = "l2",
-    allowed_ids: set | None = None,
-) -> list[tuple]:
-    """Replay ``ShardedHNSW.search_batch`` for l2 routed builds: per-query
-    (score, shard) routing with the same left-fold arithmetic as the
-    distributed expression, per-(qid, id) min, (d, id)-ordered top-k;
-    ``allowed_ids`` replays the filtered walks. Returns [(qid, id,
-    distance)]."""
-    if dist != "l2":
-        raise ValueError("offline_routed_batch replicates the l2 routing path only")
-    out = []
-    for qid, qv in queries:
-        ranked = sorted((fold.l2_sq(qv, c), b) for b, c in enumerate(centroids))
-        hits: dict = {}
-        for _, b in ranked[:n_probe]:
-            g = graphs.get(b)
-            if g is None:
-                continue
-            for hid, d in g.search(
-                np.asarray(qv, dtype=np.float64), k, allowed_ids=allowed_ids
-            ):
-                if hid not in hits or d < hits[hid]:
-                    hits[hid] = d
-        for hid, d in sorted(hits.items(), key=lambda t: (t[1], t[0]))[:k]:
-            out.append((qid, hid, d))
-    return out

@@ -403,8 +403,10 @@ def split_oversized_cells(
         bases2 = [0]
         for k in ks2:
             bases2.append(bases2[-1] + k)
-        base_arr = F.array(*[F.lit(int(b)) for b in bases2[:-1]])
-        ks_arr = F.array(*[F.lit(int(k)) for k in ks2])
+        # one F.expr each, not one F.lit per cell (a py4j round trip each);
+        # an integer literal past int32 parses as BIGINT, as F.lit's does
+        base_arr = F.expr("array(" + ", ".join(str(int(b)) for b in bases2[:-1]) + ")")
+        ks_arr = F.expr("array(" + ", ".join(str(int(k)) for k in ks2) + ")")
         sub = F.pmod(
             F.conv(
                 F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10

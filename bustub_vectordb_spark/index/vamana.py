@@ -1916,8 +1916,8 @@ def offline_vamana_partitioned(
     assignment (ball ∩ top-cap ∪ top-1 over fold-exact squared
     distances — route_overlap's exact rule, so replicated cuts replay
     bit-exactly too). Returns (cell_centroids, {cell: _Graph shell}) —
-    probes replay with ``offline_routed_probe`` / ``offline_routed_batch``,
-    matching the returned ShardedHNSW bit-exactly. Valid only on inputs
+    probes replay with ``hnsw.offline_routed_search``, matching the
+    returned ShardedHNSW bit-exactly. Valid only on inputs
     small enough for the full-table training path."""
     from .hnsw import _read_sorted
     from .ivfflat import IVFFlatIndex, _lloyds_numpy
@@ -2008,131 +2008,51 @@ def offline_vamana_partitioned(
     return centroids, graphs
 
 
-def offline_vamana_pq_probe(
+def offline_vamana_search(
     g: _Graph,
-    vectors_by_id: dict,
-    query: list[float],
-    k: int,
-    model,
-    rerank_mult: int = 48,
-    centers=None,
-) -> list[tuple]:
-    """Replay ``VamanaIndex.quantize_pq(model).probe(query, k)`` on an
-    offline_vamana graph: quantize with the same codebooks (same argmin as
-    the distributed PQModel.encode), harvest the k·rerank_mult ADC
-    shortlist from the visited set of a configured-ef walk (the same
-    _Graph.search(shortlist=...) call the Spark path makes), and rerank
-    the ids with the exact left-fold l2 Spark's codegen evaluates,
-    (d, id)-ordered. ``centers`` mirrors
-    ``quantize_pq(model, residual=True)`` (the frozen entry-cell centers;
-    per-vertex cells assign fold-exactly inside _Graph, matching the
-    distributed __ecell fold). Returns [(id, exact_distance)].
-    Mutates ``g`` (quantizes it) — pass a fresh replay."""
-    books = [[[float(x) for x in row] for row in b] for b in model.centroids]
-    bounds = [[int(s), int(e)] for s, e in model.bounds]
-    g.quantize_pq(books, bounds, centers=centers)
-    hits = g.search(
-        np.asarray(query, dtype=np.float64), k, shortlist=k * rerank_mult
-    )
-    scored = [
-        (hid, fold.exact("l2", [float(x) for x in vectors_by_id[hid]], query))
-        for hid, _d in hits
-    ]
-    scored.sort(key=lambda t: (t[1], t[0]))
-    return scored[:k]
-
-
-def offline_vamana_batch(g: _Graph, queries: list[tuple], k: int) -> list[tuple]:
-    """Replay ``VamanaIndex.search_batch`` (unquantized): one walk per
-    (qid, vec) query, exact walk distances. Returns [(qid, id, d)]."""
-    out = []
-    for qid, qv in queries:
-        for hid, d in g.search(np.asarray(qv, dtype=np.float64), k):
-            out.append((qid, hid, float(d)))
-    return out
-
-
-def offline_vamana_pq_batch(
-    g: _Graph,
-    vectors_by_id: dict,
     queries: list[tuple],
     k: int,
-    model,
-    rerank_mult: int = 32,  # mirrors search_batch (probe's twin stays 48)
-    centers=None,
+    dist: str = "l2",
+    allowed_ids: set | None = None,
+    rerank: tuple | None = None,
 ) -> list[tuple]:
-    """Replay ``VamanaIndex.quantize_pq(model).search_batch(...)``:
-    quantize once, per-query configured-ef walk harvesting a
-    k·rerank_mult visited-set ADC shortlist, exact left-fold l2 rerank,
-    (d, id)-ordered per-query top-k. ``centers`` mirrors
-    ``quantize_pq(model, residual=True)``. Returns
-    [(qid, id, d)]. Mutates ``g`` — pass a fresh replay."""
-    books = [[[float(x) for x in row] for row in b] for b in model.centroids]
-    bounds = [[int(s), int(e)] for s, e in model.bounds]
-    g.quantize_pq(books, bounds, centers=centers)
+    """Replay ``VamanaIndex.probe`` and ``search_batch`` on an
+    offline_vamana graph (a point probe is a batch of one): one walk per
+    (qid, vec) query.
+
+    - l2: the walk's exact distances, in walk order; ``allowed_ids``
+      replays the filtered walk.
+    - cosine / ip (the graph of ``offline_vamana(dist=...)``): the same
+      query prep as the build and serving (:func:`_prep_query`), an l2
+      walk, then EXACT similarities by the fold-exact dot over the stored
+      transformed rows (:func:`_sims_for_ids`), (similarity desc, id).
+    - ``rerank=(vectors_by_id, rerank_mult, ef)``: the PQ serving shape of
+      ``quantize_pq(model)`` on an l2 graph (quantize a fresh replay first,
+      ``hnsw.offline_quantize({0: g}, "pq", ...)``): the k·rerank_mult
+      shortlist is harvested from the visited set of a walk at ``ef``
+      (None = the configured ef — the same _Graph.search(shortlist=...)
+      call the Spark path makes) and reranks with the exact left-fold l2
+      Spark's codegen evaluates, (d, id)-ordered.
+
+    Returns [(qid, id, distance or similarity)]."""
     out = []
     for qid, qv in queries:
-        hits = g.search(
-            np.asarray(qv, dtype=np.float64), k, shortlist=k * rerank_mult
-        )
-        scored = [
-            (hid, fold.exact("l2", [float(x) for x in vectors_by_id[hid]], qv))
-            for hid, _d in hits
-        ]
-        scored.sort(key=lambda t: (t[1], t[0]))
-        for hid, d in scored[:k]:
-            out.append((qid, hid, d))
+        qn = list(qv) if dist == "l2" else _prep_query(dist, [float(x) for x in qv])
+        q = np.asarray(qn, dtype=np.float64)
+        if rerank is not None:
+            hits = g.search(
+                q, k, ef=rerank[2], allowed_ids=allowed_ids,
+                shortlist=k * rerank[1],
+            )
+            top = fold.exact_rerank("l2", rerank[0], [h for h, _ in hits], qv, k)
+        elif dist == "l2":
+            top = g.search(q, k, allowed_ids=allowed_ids)
+        else:
+            hits = g.search(q, k, allowed_ids=allowed_ids)
+            sims = _sims_for_ids(g, [h for h, _ in hits], qn)
+            top = sorted(
+                ((h, float(s)) for (h, _), s in zip(hits, sims)),
+                key=lambda t: (-t[1], t[0]),
+            )
+        out += [(qid, h, float(d)) for h, d in top]
     return out
-
-
-def offline_vamana_sim_probe(
-    g: _Graph, query: list[float], k: int, dist: str
-) -> list[tuple]:
-    """Replay ``VamanaIndex.probe`` on a similarity ops class (cosine /
-    ip): dist-specific query prep (:func:`_prep_query` — the same floats
-    the build/serving use), l2 walk for k hits, EXACT similarities via
-    the same fold-exact dot over the stored transformed rows
-    (_sims_for_ids), (sim desc, id asc). Returns [(id, similarity)]."""
-    qn = _prep_query(dist, [float(x) for x in query])
-    hits = g.search(np.asarray(qn, dtype=np.float64), k)
-    sims = _sims_for_ids(g, [h for h, _ in hits], qn)
-    return sorted(
-        ((h, float(s)) for (h, _), s in zip(hits, sims)),
-        key=lambda t: (-t[1], t[0]),
-    )[:k]
-
-
-def offline_vamana_sim_batch(
-    g: _Graph, queries: list[tuple], k: int, dist: str
-) -> list[tuple]:
-    """Replay ``VamanaIndex.search_batch`` (cosine / ip, unquantized): one
-    l2 walk per prepped query, exact fold-dot similarities. Returns
-    [(qid, id, similarity)]."""
-    out = []
-    for qid, qv in queries:
-        qn = _prep_query(dist, [float(x) for x in qv])
-        hits = g.search(np.asarray(qn, dtype=np.float64), k)
-        sims = _sims_for_ids(g, [h for h, _ in hits], qn)
-        for (h, _), s in zip(hits, sims):
-            out.append((qid, h, float(s)))
-    return out
-
-
-def offline_vamana_cosine_probe(g: _Graph, query: list[float], k: int) -> list[tuple]:
-    return offline_vamana_sim_probe(g, query, k, "cosine")
-
-
-def offline_vamana_cosine_batch(
-    g: _Graph, queries: list[tuple], k: int
-) -> list[tuple]:
-    return offline_vamana_sim_batch(g, queries, k, "cosine")
-
-
-def offline_vamana_ip_probe(g: _Graph, query: list[float], k: int) -> list[tuple]:
-    return offline_vamana_sim_probe(g, query, k, "ip")
-
-
-def offline_vamana_ip_batch(
-    g: _Graph, queries: list[tuple], k: int
-) -> list[tuple]:
-    return offline_vamana_sim_batch(g, queries, k, "ip")

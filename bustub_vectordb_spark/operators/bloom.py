@@ -78,6 +78,12 @@ def bloom_build(
     return [w - (1 << 64) if w >= (1 << 63) else w for w in words]
 
 
+def _words_lit(words: list[int]) -> Column:
+    """The signed words as one array<bigint> literal, built in one ``F.expr``
+    call rather than one ``F.lit`` (a py4j round trip) per word."""
+    return F.expr("array(" + ", ".join(f"{int(w)}L" for w in words) + ")")
+
+
 def bloom_contamination_flags(
     docs: DataFrame,
     words: list[int],
@@ -91,7 +97,7 @@ def bloom_contamination_flags(
     n-gram of the doc passes all k Bloom probes. Superset of the exact
     flags (no false negatives); docs shorter than n tokens never flag."""
     assert len(words) == m_bits // 64, (len(words), m_bits)
-    warr = F.array(*[F.lit(w).cast("long") for w in words])
+    warr = _words_lit(words)
     sg = docs.select(F.col(id_col), F.explode(shingles(text_col, n)).alias("__sg"))
     # project word/bit per probe as named columns, then test with an
     # expr-level arithmetic shift (PySpark's shiftright only takes a

@@ -1578,21 +1578,157 @@ def q_knn_subquery_alias(spark, sf_dir):
     )
 
 
-# --- ANN via IVFFlat (ref: vector.04-ivfflat.slt, vector.03-index-selection) ---
+# --- the ANN entries' shared scaffold: Spark-side index cache and output
+# tails, oracle-side replay memo, corpus and VALUES hits ---
 
 _INDEX_CACHE: dict = {}
 
 
-def _ivfflat_for(spark, sf_dir, lists=8):
-    key = (sf_dir, "ivfflat", lists)
+def _cached(sf_dir: str, name, build: Callable):
+    """One Spark index (or model) per (sf_dir, ``name``) across the entries."""
+    key = (sf_dir, name)
     if key not in _INDEX_CACHE:
-        from .index.ivfflat import IVFFlatIndex
-
-        emb = _t(spark, sf_dir, "embeddings")
-        _INDEX_CACHE[key] = IVFFlatIndex.build(
-            emb, "embedding", lists=lists, probe_lists=2, max_iter=5, init_order="vec_id"
-        )
+        _INDEX_CACHE[key] = build()
     return _INDEX_CACHE[key]
+
+
+# sf dir the lazy oracle generators replay against. Resolution order:
+# explicit override (set_oracle_sf / __spark_entry__.oracle_sql(sf_dir=...))
+# → $SPARK_GRAFT_ORACLE_SF_DIR → the driver gate's sf0.01. The override
+# exists so a caller checking another scale factor can thread the dir
+# through the API instead of an env side channel.
+_ORACLE_SF_OVERRIDE: str | None = None
+
+
+def set_oracle_sf(sf_dir: str | None) -> None:
+    global _ORACLE_SF_OVERRIDE
+    _ORACLE_SF_OVERRIDE = sf_dir
+
+
+def _oracle_sf() -> str:
+    import os
+
+    return _ORACLE_SF_OVERRIDE or os.environ.get(
+        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
+    )
+
+
+_ORACLE_MEMO: dict = {}
+
+
+def _memo(name, build: Callable, copy: bool = False):
+    """One offline replay per (oracle sf, ``name``) across ALL oracle
+    generators — the replays are pure functions, and the driver's
+    oracle_sql() collection otherwise rebuilds the identical graphs many
+    times. ``copy=True`` hands back a pickle deep copy for generators
+    that mutate it (the quantizing ones)."""
+    import pickle
+
+    key = (_oracle_sf(), name)
+    if key not in _ORACLE_MEMO:
+        _ORACLE_MEMO[key] = build()
+    value = _ORACLE_MEMO[key]
+    return pickle.loads(pickle.dumps(value)) if copy else value
+
+
+def _oracle_corpus():
+    """The embeddings table as the oracle generators replay it, read once
+    per sf: ``ids``/``vecs`` in file order, ``by_id``, the ``batch``
+    queries (qid % 97 == 0, file order), per-dim ``mins``/``maxs``, the
+    label-2 ids (``label2``, the filtered entries' allowed set) and the
+    parquet ``path``."""
+
+    def build():
+        from types import SimpleNamespace
+
+        import numpy as np
+        import pyarrow.parquet as pq
+
+        path = f"{_oracle_sf()}/embeddings.parquet"
+        t = pq.read_table(path, columns=["vec_id", "embedding", "label"])
+        ids, vecs = t["vec_id"].to_pylist(), t["embedding"].to_pylist()
+        mat = np.asarray(vecs, dtype=np.float64)
+        return SimpleNamespace(
+            path=path,
+            ids=ids,
+            vecs=vecs,
+            by_id=dict(zip(ids, vecs)),
+            batch=[(i, v) for i, v in zip(ids, vecs) if i % 97 == 0],
+            mins=mat.min(axis=0).tolist(),
+            maxs=mat.max(axis=0).tolist(),
+            label2={i for i, lb in zip(ids, t["label"].to_pylist()) if lb == 2},
+        )
+
+    return _memo("corpus", build)
+
+
+def _hits_values_sql(rows: list[tuple], cols: str) -> str:
+    vals = ", ".join("(" + ", ".join(repr(v) for v in r) + ")" for r in rows)
+    return f"(VALUES {vals}) AS t({cols})"
+
+
+def _hits_sql(
+    rows: list[tuple], desc: bool = False, out: str = "distance", digits: int = 8
+) -> str:
+    """The oracle of a replayed ANN answer, its rows inlined as VALUES:
+    (vec_id, d) probe hits ordered like the Spark probe (d ``desc`` for
+    similarities), or (qid, vec_id, d) batch hits."""
+    if len(rows[0]) == 3:
+        rows = [(int(q), int(i), float(d)) for q, i, d in rows]
+        cols, head, tail = "qid, vec_id, d", "qid, vec_id", ""
+    else:
+        rows = [(int(i), float(d)) for i, d in rows]
+        cols, head = "vec_id, d", "vec_id"
+        tail = f" ORDER BY d {'DESC' if desc else 'ASC'}, vec_id ASC"
+    return (
+        f"SELECT {head}, round(CAST(d AS DOUBLE), {digits}) AS {out} "
+        f"FROM {_hits_values_sql(rows, cols)}{tail}"
+    )
+
+
+def _point(hits: list[tuple]) -> list[tuple]:
+    """A point probe's (id, d) rows from a batch-of-one replay."""
+    return [(i, d) for _qid, i, d in hits]
+
+
+def _probe_out(df: DataFrame, src: str = "distance", desc: bool = False,
+               extra: tuple = (), out: str = "distance") -> DataFrame:
+    """A probe's gated columns: vec_id, ``extra``, and ``src`` rounded to
+    8 dp as ``out``, ordered like the oracle."""
+    order = F.col(src).desc() if desc else F.col(src).asc()
+    return df.orderBy(order, F.col("vec_id").asc()).select(
+        "vec_id", *extra, F.round(src, 8).alias(out)
+    )
+
+
+def _batch_out(df: DataFrame, src: str = "distance") -> DataFrame:
+    """A batch search's gated columns: qid, vec_id, ``src`` to 8 dp as distance."""
+    return df.select("qid", "vec_id", F.round(src, 8).alias("distance"))
+
+
+def _batch_queries(spark, sf_dir) -> DataFrame:
+    """(qid, embedding) of every embeddings row with vec_id % 97 == 0."""
+    return _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 97 == 0).select(
+        F.col("vec_id").alias("qid"), "embedding"
+    )
+
+
+def _label2(spark, sf_dir) -> DataFrame:
+    """The filtered entries' allowed ids (label = 2) as a one-column DataFrame."""
+    emb = _t(spark, sf_dir, "embeddings")
+    return emb.filter(F.col("label") == 2).select("vec_id")
+
+
+# --- ANN via IVFFlat (ref: vector.04-ivfflat.slt, vector.03-index-selection) ---
+
+
+def _ivfflat_for(spark, sf_dir, lists=8):
+    from .index.ivfflat import IVFFlatIndex
+
+    return _cached(sf_dir, ("ivfflat", lists), lambda: IVFFlatIndex.build(
+        _t(spark, sf_dir, "embeddings"), "embedding",
+        lists=lists, probe_lists=2, max_iter=5, init_order="vec_id",
+    ))
 
 
 @_register(
@@ -1609,11 +1745,7 @@ def q_ann_ivfflat_exact_probe(spark, sf_dir):
     # probe_lists == lists scans every bucket → exact results; proves the
     # bucket decomposition loses nothing (the hash-match gate for IVFFlat)
     idx = _ivfflat_for(spark, sf_dir)
-    probe = idx.probe(QUERY_VEC, 15, probe_lists=idx.lists, dist_col="dist")
-    return (
-        probe.orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("dist", 8).alias("distance"))
-    )
+    return _probe_out(idx.probe(QUERY_VEC, 15, probe_lists=idx.lists, dist_col="dist"), "dist")
 
 
 @_register(
@@ -1643,7 +1775,7 @@ def q_ann_ivfflat_batch_exact(spark, sf_dir):
     out = idx.probe_batch(
         queries, "embedding", "vec_id", k=5, probe_lists=idx.lists, dist_col="dist"
     )
-    return out.select("qid", "vec_id", F.round("dist", 8).alias("distance"))
+    return _batch_out(out, "dist")
 
 
 def _ivfflat_oracle_cents() -> tuple[str, list[list[float]]]:
@@ -1658,12 +1790,14 @@ def _ivfflat_oracle_cents() -> tuple[str, list[list[float]]]:
     depend on the sf dir the oracle runs against."""
     from .index.ivfflat import offline_centroids
 
-    sf = _oracle_sf()
-    cents = offline_centroids(f"{sf}/embeddings.parquet", "embedding", "vec_id", 8, 5)
-    values = ", ".join(
-        f"({b}, {_vec_sql_literal(c)})" for b, c in enumerate(cents)
-    )
-    return values, cents
+    def build():
+        cents = offline_centroids(_oracle_corpus().path, "embedding", "vec_id", 8, 5)
+        values = ", ".join(
+            f"({b}, {_vec_sql_literal(c)})" for b, c in enumerate(cents)
+        )
+        return values, cents
+
+    return _memo("ivf_cents", build)
 
 
 def _cluster_balanced_sample_oracle() -> str:
@@ -1914,8 +2048,7 @@ def q_ann_ivfflat_batch_probe(spark, sf_dir):
     # bucket top-k with the bit-identical offline centroids inlined.
     idx = _ivfflat_for(spark, sf_dir)
     queries = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 97 == 0)
-    out = idx.probe_batch(queries, "embedding", "vec_id", k=5, probe_lists=4)
-    return out.select("qid", "vec_id", F.round("distance", 8).alias("distance"))
+    return _batch_out(idx.probe_batch(queries, "embedding", "vec_id", k=5, probe_lists=4))
 
 
 @_register("ann_ivfflat_probe", _ivfflat_probe_oracle)
@@ -1923,11 +2056,7 @@ def q_ann_ivfflat_probe(spark, sf_dir):  # recall also asserted in tests/test_iv
     # single-query partial probe; oracle replays the deterministic candidate
     # set from offline-replicated centroids (see _ivfflat_oracle_cents)
     idx = _ivfflat_for(spark, sf_dir)
-    probe = idx.probe(QUERY_VEC, 10, probe_lists=4, dist_col="dist")
-    return (
-        probe.orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("dist", 8).alias("distance"))
-    )
+    return _probe_out(idx.probe(QUERY_VEC, 10, probe_lists=4, dist_col="dist"), "dist")
 
 
 def _ivfflat_filtered_probe_oracle() -> str:
@@ -1961,10 +2090,7 @@ def q_ann_ivfflat_filtered_probe(spark, sf_dir):
     probe = idx.probe(
         QUERY_VEC, 10, probe_lists=4, dist_col="dist", where=F.col("label") == 2
     )
-    return (
-        probe.orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-        .select("vec_id", "label", F.round("dist", 8).alias("distance"))
-    )
+    return _probe_out(probe, "dist", extra=("label",))
 
 
 @_register(
@@ -1992,10 +2118,7 @@ def q_ann_index_selection(spark, sf_dir):
     idx.probe_lists = idx.lists  # session override: exact probe
     plan = plan_knn(reg, "embeddings", emb, "embedding", QUERY_VEC, 5, dist="l2")
     assert plan.strategy == "vector_index_scan(ivfflat)", plan.strategy
-    return (
-        plan.df.orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
-    )
+    return _probe_out(plan.df)
 
 
 # --- ANN via LSH buckets (north-star extension: hash-routed scale path;
@@ -2389,13 +2512,11 @@ def q_ann_ivf_bq_rerank(spark, sf_dir):
     # (1 bit/dim).
     from .similarity.bq import BQModel, IVFBQIndex
 
-    key = (sf_dir, "ivf_bq")
-    if key not in _INDEX_CACHE:
-        e = _t(spark, sf_dir, "embeddings")
-        idx = _ivfflat_for(spark, sf_dir)
-        model = BQModel.train(e, "embedding")
-        _INDEX_CACHE[key] = IVFBQIndex.build(idx, "embedding", "vec_id", model=model)
-    return _INDEX_CACHE[key].probe(QUERY_VEC, k=10, rerank=40, probe_lists=4)
+    idx = _cached(sf_dir, "ivf_bq", lambda: IVFBQIndex.build(
+        _ivfflat_for(spark, sf_dir), "embedding", "vec_id",
+        model=BQModel.train(_t(spark, sf_dir, "embeddings"), "embedding"),
+    ))
+    return idx.probe(QUERY_VEC, k=10, rerank=40, probe_lists=4)
 
 
 def _ivf_bq_local_rerank_oracle() -> str:
@@ -2450,13 +2571,10 @@ def q_ann_ivf_bq_local_rerank(spark, sf_dir):
     # against each probed bucket's thresholds via a broadcast map.
     from .similarity.bq import IVFBQIndex
 
-    key = (sf_dir, "ivf_bq_local")
-    if key not in _INDEX_CACHE:
-        idx = _ivfflat_for(spark, sf_dir)
-        _INDEX_CACHE[key] = IVFBQIndex.build(
-            idx, "embedding", "vec_id", per_bucket=True
-        )
-    return _INDEX_CACHE[key].probe(QUERY_VEC, k=10, rerank=40, probe_lists=4)
+    idx = _cached(sf_dir, "ivf_bq_local", lambda: IVFBQIndex.build(
+        _ivfflat_for(spark, sf_dir), "embedding", "vec_id", per_bucket=True
+    ))
+    return idx.probe(QUERY_VEC, k=10, rerank=40, probe_lists=4)
 
 
 @_register("ann_ivf_sq8_rerank", _ivf_sq8_rerank_oracle)
@@ -2469,13 +2587,11 @@ def q_ann_ivf_sq8_rerank(spark, sf_dir):
     # specified semantics, not noise.
     from .similarity.quantize import IVFSQ8Index, SQ8Model
 
-    key = (sf_dir, "ivf_sq8")
-    if key not in _INDEX_CACHE:
-        e = _t(spark, sf_dir, "embeddings")
-        idx = _ivfflat_for(spark, sf_dir)
-        model = SQ8Model.train(e, "embedding")
-        _INDEX_CACHE[key] = IVFSQ8Index.build(idx, "embedding", "vec_id", model=model)
-    return _INDEX_CACHE[key].probe(QUERY_VEC, k=10, rerank=40, probe_lists=4)
+    idx = _cached(sf_dir, "ivf_sq8", lambda: IVFSQ8Index.build(
+        _ivfflat_for(spark, sf_dir), "embedding", "vec_id",
+        model=SQ8Model.train(_t(spark, sf_dir, "embeddings"), "embedding"),
+    ))
+    return idx.probe(QUERY_VEC, k=10, rerank=40, probe_lists=4)
 
 
 def _ivf_sq8_rerank_cosine_oracle() -> str:
@@ -2545,16 +2661,17 @@ def q_ann_ivf_sq8_rerank_cosine(spark, sf_dir):
     from .index.ivfflat import IVFFlatIndex
     from .similarity.quantize import IVFSQ8Index, SQ8Model
 
-    key = (sf_dir, "ivf_sq8_cos")
-    if key not in _INDEX_CACHE:
+    def build():
         e = _t(spark, sf_dir, "embeddings")
         idx = IVFFlatIndex.build(
             e, "embedding", lists=8, probe_lists=4, dist="cosine",
             max_iter=5, init_order="vec_id",
         )
         model = SQ8Model.train(e, "embedding")
-        _INDEX_CACHE[key] = IVFSQ8Index.build(idx, "embedding", "vec_id", model=model)
-    return _INDEX_CACHE[key].probe(QUERY_VEC, k=10, rerank=40, probe_lists=4)
+        return IVFSQ8Index.build(idx, "embedding", "vec_id", model=model)
+
+    idx = _cached(sf_dir, "ivf_sq8_cos", build)
+    return idx.probe(QUERY_VEC, k=10, rerank=40, probe_lists=4)
 
 
 # --- ANN via HNSW (ref: vector.05-hnsw.slt). The reference's .slt corpus
@@ -2567,128 +2684,116 @@ def q_ann_ivf_sq8_rerank_cosine(spark, sf_dir):
 
 
 def _hnsw_for(spark, sf_dir):
-    key = (sf_dir, "hnsw")
-    if key not in _INDEX_CACHE:
-        from .index.hnsw import HNSWIndex
+    from .index.hnsw import HNSWIndex
 
-        emb = _t(spark, sf_dir, "embeddings")
-        _INDEX_CACHE[key] = HNSWIndex.build(
-            emb, "embedding", "vec_id", m=8, ef_construction=64, ef_search=64
+    return _cached(sf_dir, "hnsw", lambda: HNSWIndex.build(
+        _t(spark, sf_dir, "embeddings"), "embedding", "vec_id",
+        m=8, ef_construction=64, ef_search=64,
+    ))
+
+
+def _routed_params():
+    return dict(shards=4, m=8, ef_construction=48, ef_search=48)
+
+
+def _routed_for(spark, sf_dir, form: str | None = None):
+    """The routed HNSW build over the embeddings table, or its serving copy
+    quantized to ``form``: sq8, bq, bqr (rotated BQ), pq, pqr (residual
+    PQ) or pql (per-shard local PQ books)."""
+    from .index.hnsw import HNSWIndex
+
+    emb = _t(spark, sf_dir, "embeddings")
+    base = _cached(sf_dir, "hnsw_routed", lambda: HNSWIndex.build_routed(
+        emb, "embedding", "vec_id", **_routed_params()
+    ))
+    if form is None:
+        return base
+
+    def quantize():
+        from .similarity.quantize import dim_stats
+
+        if form == "pq":
+            return base.quantize_pq(_pq_for(spark, sf_dir)[0])
+        if form == "pqr":
+            return base.quantize_pq(_pqr_for(spark, sf_dir), residual=True)
+        if form == "pql":
+            return base.quantize_pq_local(m=16, k=32)
+        stats = dim_stats(emb, "embedding").orderBy("dim").collect()
+        mins, maxs = [r["mn"] for r in stats], [r["mx"] for r in stats]
+        if form == "sq8":
+            return base.quantize(mins, maxs)
+        return base.quantize_bq(
+            mins, maxs, rotation_seed=BQ_ROT_SEED if form == "bqr" else None
         )
-    return _INDEX_CACHE[key]
+
+    return _cached(sf_dir, f"hnsw_routed_{form}", quantize)
 
 
-# sf dir the lazy oracle generators replay against. Resolution order:
-# explicit override (set_oracle_sf / __spark_entry__.oracle_sql(sf_dir=...))
-# → $SPARK_GRAFT_ORACLE_SF_DIR → the driver gate's sf0.01. The override
-# exists so a caller checking another scale factor can thread the dir
-# through the API instead of an env side channel.
-_ORACLE_SF_OVERRIDE: str | None = None
-
-
-def set_oracle_sf(sf_dir: str | None) -> None:
-    global _ORACLE_SF_OVERRIDE
-    _ORACLE_SF_OVERRIDE = sf_dir
-
-
-def _oracle_sf() -> str:
-    import os
-
-    return _ORACLE_SF_OVERRIDE or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-
-
-def _offline_hnsw_graph():
+def _hnsw_replay():
     from .index.hnsw import offline_graph
 
-    return offline_graph(
-        f"{_oracle_sf()}/embeddings.parquet", "embedding", "vec_id", 8, 64, 64
+    return _memo("hnsw", lambda: offline_graph(
+        _oracle_corpus().path, "embedding", "vec_id", 8, 64, 64
+    ))
+
+
+def _routed_replay(copy: bool = False):
+    """(centroids, graphs) of the routed build (_routed_params)."""
+    from .index.hnsw import offline_routed
+
+    return _memo("routed", lambda: offline_routed(
+        _oracle_corpus().path, "embedding", "vec_id", **_routed_params()
+    ), copy)
+
+
+def _routed_quantized_oracle(form: str, batch: bool = False, **quant) -> str:
+    """The oracle of a quantized routed entry: a copy of the routed replay
+    quantized like ``_routed_for(form)`` (offline_quantize with the
+    corpus' per-dim bounds and ``**quant``), then the rerank replay — the
+    QUERY_VEC probe or the batch queries."""
+    from .index.hnsw import offline_quantize, offline_routed_search
+
+    c = _oracle_corpus()
+    cents, graphs = _routed_replay(copy=True)
+    offline_quantize(graphs, form, c.mins, c.maxs, centroids=cents, **quant)
+    mult = 16 if form == "bq" else 4  # ShardedHNSW._rerank_mult defaults
+    hits = offline_routed_search(
+        cents, graphs, c.batch if batch else [(None, QUERY_VEC)], 5 if batch else 10,
+        2, rerank=(c.by_id, mult, None),
     )
-
-
-def _hits_values_sql(rows: list[tuple], cols: str) -> str:
-    vals = ", ".join("(" + ", ".join(repr(v) for v in r) + ")" for r in rows)
-    return f"(VALUES {vals}) AS t({cols})"
+    return _hits_sql(hits if batch else _point(hits))
 
 
 def _hnsw_probe_oracle() -> str:
     import numpy as np
 
-    hits = _offline_hnsw_graph().search(np.asarray(QUERY_VEC, dtype=np.float64), 10)
-    rows = sorted(((int(i), float(d)) for i, d in hits), key=lambda t: (t[1], t[0]))
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d ASC, vec_id ASC"
-    )
-
-
-_OFFLINE_ROUTED_MEMO: dict = {}
-
-
-def _offline_routed_cached(mutable: bool = False):
-    """One offline routed build per (sf_dir, params) across ALL oracle
-    generators — the replay is a pure function, and the driver's
-    oracle_sql() collection otherwise rebuilds the identical graphs six+
-    times. ``mutable=True`` hands back a pickle-deep-copied graphs dict for
-    oracles that mutate (insert / SQ8 quantization)."""
-    import pickle
-
-    from .index.hnsw import offline_routed
-
-    p = _routed_params()
-    key = (_oracle_sf(), tuple(sorted(p.items())))
-    if key not in _OFFLINE_ROUTED_MEMO:
-        _OFFLINE_ROUTED_MEMO[key] = offline_routed(
-            f"{_oracle_sf()}/embeddings.parquet", "embedding", "vec_id",
-            shards=p["shards"], m=p["m"],
-            ef_construction=p["ef_construction"], ef_search=p["ef_search"],
-        )
-    cents, graphs = _OFFLINE_ROUTED_MEMO[key]
-    if mutable:
-        graphs = pickle.loads(pickle.dumps(graphs))
-    return cents, graphs
+    hits = _hnsw_replay().search(np.asarray(QUERY_VEC, dtype=np.float64), 10)
+    return _hits_sql(sorted(hits, key=lambda t: (t[1], t[0])))
 
 
 def _hnsw_routed_probe_oracle() -> str:
-    from .index.hnsw import offline_routed_probe
+    from .index.hnsw import offline_routed_search
 
-    cents, graphs = _offline_routed_cached()
-    hits = offline_routed_probe(cents, graphs, QUERY_VEC, 10, n_probe=2)
-    rows = [(int(i), float(d)) for i, d in hits]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d ASC, vec_id ASC"
-    )
+    cents, graphs = _routed_replay()
+    return _hits_sql(_point(offline_routed_search(cents, graphs, [(None, QUERY_VEC)], 10, 2)))
 
 
-def _hnsw_batch_oracle() -> str:
+def _hnsw_batch_oracle(allowed_ids: set | None = None) -> str:
     import numpy as np
-    import pyarrow.parquet as pq
 
-    g = _offline_hnsw_graph()
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
+    c = _oracle_corpus()
+    g = _hnsw_replay()
     rows = []
-    for qid, qv in zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist()):
+    for qid, qv in zip(c.ids, c.vecs):
         if qid < 20:
-            for hid, d in g.search(np.asarray(qv, dtype=np.float64), 3):
-                rows.append((int(qid), int(hid), float(d)))
-    return (
-        "SELECT qid, vec_id, round(CAST(d AS DOUBLE), 8) AS distance FROM "
-        f"{_hits_values_sql(rows, 'qid, vec_id, d')}"
-    )
+            q = np.asarray(qv, dtype=np.float64)
+            rows += [(qid, hid, d) for hid, d in g.search(q, 3, allowed_ids=allowed_ids)]
+    return _hits_sql(rows)
 
 
 @_register("ann_hnsw_probe", _hnsw_probe_oracle)
 def q_ann_hnsw_probe(spark, sf_dir):
-    idx = _hnsw_for(spark, sf_dir)
-    return (
-        idx.probe(QUERY_VEC, 10)
-        .orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
-    )
+    return _probe_out(_hnsw_for(spark, sf_dir).probe(QUERY_VEC, 10))
 
 
 @_register("ann_hnsw_routed_probe", _hnsw_routed_probe_oracle)
@@ -2697,48 +2802,16 @@ def q_ann_hnsw_routed_probe(spark, sf_dir):
     # the n_probe nearest. Deterministic build (sorted sample + per-shard
     # insert order) → offline replay oracle; recall additionally asserted
     # in tests/test_hnsw.py::test_routed_build_and_probe
-    from .index.hnsw import HNSWIndex
-
-    key = (sf_dir, "hnsw_routed")
-    if key not in _INDEX_CACHE:
-        emb = _t(spark, sf_dir, "embeddings")
-        _INDEX_CACHE[key] = HNSWIndex.build_routed(
-            emb, "embedding", "vec_id", shards=4, m=8, ef_construction=48, ef_search=48
-        )
-    idx = _INDEX_CACHE[key]
-    return (
-        idx.probe(QUERY_VEC, 10, n_probe=2)
-        .orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
-    )
+    return _probe_out(_routed_for(spark, sf_dir).probe(QUERY_VEC, 10, n_probe=2))
 
 
-def _routed_params():
-    return dict(shards=4, m=8, ef_construction=48, ef_search=48)
+def _hnsw_routed_batch_oracle(allowed_ids: set | None = None) -> str:
+    from .index.hnsw import offline_routed_search
 
-
-def _hnsw_routed_batch_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .index.hnsw import offline_routed_batch
-
-    cents, graphs = _offline_routed_cached()
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    qs = [
-        (qid, qv)
-        for qid, qv in zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist())
-        if qid % 97 == 0
-    ]
-    rows = [
-        (int(qid), int(hid), float(d))
-        for qid, hid, d in offline_routed_batch(cents, graphs, qs, k=5, n_probe=2)
-    ]
-    return (
-        "SELECT qid, vec_id, round(CAST(d AS DOUBLE), 8) AS distance FROM "
-        f"{_hits_values_sql(rows, 'qid, vec_id, d')}"
-    )
+    cents, graphs = _routed_replay()
+    return _hits_sql(offline_routed_search(
+        cents, graphs, _oracle_corpus().batch, 5, 2, allowed_ids=allowed_ids
+    ))
 
 
 @_register("ann_hnsw_routed_batch", _hnsw_routed_batch_oracle)
@@ -2746,36 +2819,20 @@ def q_ann_hnsw_routed_batch(spark, sf_dir):
     # Distributed batch ANN over IVF-routed HNSW shards: per-query codegen
     # shard routing → per-shard grouped graph walks (one unpickle per
     # shard) → windowed global top-k. The at-scale serving shape; exact
-    # offline-replay oracle (hnsw.offline_routed_batch).
-    from .index.hnsw import HNSWIndex
-
-    key = (sf_dir, "hnsw_routed")
-    if key not in _INDEX_CACHE:
-        emb = _t(spark, sf_dir, "embeddings")
-        _INDEX_CACHE[key] = HNSWIndex.build_routed(
-            emb, "embedding", "vec_id", **_routed_params()
-        )
-    idx = _INDEX_CACHE[key]
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding"
+    # offline-replay oracle (hnsw.offline_routed_search).
+    out = _routed_for(spark, sf_dir).search_batch(
+        _batch_queries(spark, sf_dir), "embedding", "qid", k=5, n_probe=2
     )
-    out = idx.search_batch(queries, "embedding", "qid", k=5, n_probe=2)
-    return out.select("qid", "vec_id", F.round("distance", 8).alias("distance"))
+    return _batch_out(out)
 
 
 def _hnsw_filtered_probe_oracle() -> str:
     import numpy as np
 
-    allowed = _allowed_label2()
-    hits = _offline_hnsw_graph().search(
-        np.asarray(QUERY_VEC, dtype=np.float64), 10, allowed_ids=allowed
+    hits = _hnsw_replay().search(
+        np.asarray(QUERY_VEC, dtype=np.float64), 10, allowed_ids=_oracle_corpus().label2
     )
-    rows = sorted(((int(i), float(d)) for i, d in hits), key=lambda t: (t[1], t[0]))
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d ASC, vec_id ASC"
-    )
+    return _hits_sql(sorted(hits, key=lambda t: (t[1], t[0])))
 
 
 @_register("ann_hnsw_filtered_probe", _hnsw_filtered_probe_oracle)
@@ -2785,136 +2842,79 @@ def q_ann_hnsw_filtered_probe(spark, sf_dir):
     # DURING the graph walk (_search_layer(allowed=...)) — top-k among matching
     # rows with full recall, not a post-filter that can come up short.
     # Exact offline-replay oracle: same graph, same filtered walk, numpy-only.
-    idx = _hnsw_for(spark, sf_dir)
-    emb = _t(spark, sf_dir, "embeddings")
-    probe = idx.probe(QUERY_VEC, 10, allowed=emb.filter(F.col("label") == 2).select("vec_id"))
-    return (
-        probe.orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
-    )
+    probe = _hnsw_for(spark, sf_dir).probe(QUERY_VEC, 10, allowed=_label2(spark, sf_dir))
+    return _probe_out(probe)
 
 
 def _hnsw_routed_filtered_oracle() -> str:
-    from .index.hnsw import offline_routed_probe
+    from .index.hnsw import offline_routed_search
 
-    cents, graphs = _offline_routed_cached()
-    allowed = _allowed_label2()
-    hits = offline_routed_probe(cents, graphs, QUERY_VEC, 10, n_probe=2, allowed_ids=allowed)
-    rows = [(int(i), float(d)) for i, d in hits]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d ASC, vec_id ASC"
-    )
+    cents, graphs = _routed_replay()
+    return _hits_sql(_point(offline_routed_search(
+        cents, graphs, [(None, QUERY_VEC)], 10, 2, allowed_ids=_oracle_corpus().label2
+    )))
 
 
 @_register("ann_hnsw_routed_filtered_probe", _hnsw_routed_filtered_oracle)
 def q_ann_hnsw_routed_filtered_probe(spark, sf_dir):
     # filtered search composed WITH shard pruning: the allowed-id set is
     # broadcast and enforced inside each of the n_probe probed shards'
-    # graph walks. Exact offline replay (offline_routed_probe + allowed_ids).
-    from .index.hnsw import HNSWIndex
-
-    key = (sf_dir, "hnsw_routed")
-    if key not in _INDEX_CACHE:
-        emb = _t(spark, sf_dir, "embeddings")
-        _INDEX_CACHE[key] = HNSWIndex.build_routed(
-            emb, "embedding", "vec_id", **_routed_params()
-        )
-    idx = _INDEX_CACHE[key]
-    emb = _t(spark, sf_dir, "embeddings")
-    probe = idx.probe(
-        QUERY_VEC, 10, n_probe=2,
-        allowed=emb.filter(F.col("label") == 2).select("vec_id"),
+    # graph walks. Exact offline replay (offline_routed_search + allowed_ids).
+    probe = _routed_for(spark, sf_dir).probe(
+        QUERY_VEC, 10, n_probe=2, allowed=_label2(spark, sf_dir)
     )
-    return (
-        probe.orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
-    )
+    return _probe_out(probe)
 
 
-def _hnsw_routed_sq8_oracle() -> str:
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    from .index.hnsw import offline_routed_sq8_probe
-
-    path = f"{_oracle_sf()}/embeddings.parquet"
-    cents, graphs = _offline_routed_cached(mutable=True)
-    t = pq.read_table(path, columns=["vec_id", "embedding"])
-    ids = t["vec_id"].to_pylist()
-    vecs = t["embedding"].to_pylist()
-    mat = np.asarray(vecs, dtype=np.float64)
-    hits = offline_routed_sq8_probe(
-        cents, graphs, dict(zip(ids, vecs)), QUERY_VEC, 10, 2,
-        mat.min(axis=0).tolist(), mat.max(axis=0).tolist(),
-    )
-    rows = [(int(i), float(d)) for i, d in hits]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d ASC, vec_id ASC"
-    )
-
-
-_PQ_MEMO: dict = {}
-
-
-def _offline_pq_cached():
+def _pq_replay(centroids_of: str | None = None):
+    """(model, ids, codes) of the m=16, k=32 PQ train; ``centroids_of``
+    ("ivf" / "routed") replays the residual train against those cells."""
     from .similarity.pq import offline_pq
 
-    key = _oracle_sf()
-    if key not in _PQ_MEMO:
-        _PQ_MEMO[key] = offline_pq(
-            f"{key}/embeddings.parquet", "embedding", "vec_id", m=16, k=32
+    def build():
+        cents = None
+        if centroids_of == "ivf":
+            cents = _ivfflat_oracle_cents()[1]
+        elif centroids_of == "routed":
+            cents = _routed_replay()[0]
+        return offline_pq(
+            _oracle_corpus().path, "embedding", "vec_id", m=16, k=32, centroids=cents
         )
-    return _PQ_MEMO[key]
+
+    return _memo(("pq", centroids_of), build)
 
 
-def _pq_adc_oracle() -> str:
-    from .similarity.pq import offline_pq_adc
+def _pq_oracle(metric: str = "l2", rerank: int | None = None, **ivf) -> str:
+    """Flat or IVF PQ replay of the QUERY_VEC top-10: ADC (``metric``),
+    optionally an exact rerank of the ``rerank`` best ADC rows."""
+    from .similarity.pq import offline_pq_search
 
-    model, ids, codes = _offline_pq_cached()
-    rows = [(int(i), float(d)) for i, d in offline_pq_adc(model, ids, codes, QUERY_VEC, 10)]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d ASC, vec_id ASC"
+    model, ids, codes = _pq_replay("ivf" if ivf.get("residual") else None)
+    hits = offline_pq_search(
+        model, ids, codes, QUERY_VEC, 10, metric,
+        rerank=None if rerank is None else (_oracle_corpus().by_id, rerank), **ivf,
     )
-
-
-def _pq_rerank_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .similarity.pq import offline_pq_rerank
-
-    model, ids, codes = _offline_pq_cached()
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    vecs = dict(zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist()))
-    rows = [
-        (int(i), float(d))
-        for i, d in offline_pq_rerank(model, ids, codes, vecs, QUERY_VEC, 10)
-    ]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d ASC, vec_id ASC"
-    )
+    if metric == "ip":
+        return _hits_sql(hits, desc=True, out="score")
+    return _hits_sql(hits)
 
 
 def _pq_for(spark, sf_dir):
     """(model, codes_df) — trained + encoded once per sf_dir."""
-    key = (sf_dir, "pq")
-    if key not in _INDEX_CACHE:
+
+    def build():
         from .similarity.pq import PQModel
 
         emb = _t(spark, sf_dir, "embeddings")
         model = PQModel.train(emb, "embedding", "vec_id", m=16, k=32)
         codes = model.encode(emb, "embedding", "vec_id").cache()
         codes.count()
-        _INDEX_CACHE[key] = (model, codes)
-    return _INDEX_CACHE[key]
+        return model, codes
+
+    return _cached(sf_dir, "pq", build)
 
 
-@_register("ann_pq_adc", _pq_adc_oracle)
+@_register("ann_pq_adc", _pq_oracle)
 def q_ann_pq_adc(spark, sf_dir):
     # Product quantization ADC (Jégou et al. 2011; FAISS IndexPQ): vectors
     # compress to m=16 small codes (32× under float64), the per-query
@@ -2922,27 +2922,10 @@ def q_ann_pq_adc(spark, sf_dir):
     # distance is a pure codegen fold of table lookups — no UDF on the
     # scan. Deterministic train/encode → exact offline-replay oracle.
     model, codes = _pq_for(spark, sf_dir)
-    top = model.adc_topk(codes, "vec_id", QUERY_VEC, 10)
-    return top.select("vec_id", F.round("distance", 8).alias("distance")).orderBy(
-        F.col("distance").asc(), F.col("vec_id").asc()
-    )
+    return _probe_out(model.adc_topk(codes, "vec_id", QUERY_VEC, 10))
 
 
-def _pq_adc_ip_oracle() -> str:
-    from .similarity.pq import offline_pq_adc
-
-    model, ids, codes = _offline_pq_cached()
-    rows = [
-        (int(i), float(d))
-        for i, d in offline_pq_adc(model, ids, codes, QUERY_VEC, 10, metric="ip")
-    ]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS score "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d DESC, vec_id ASC"
-    )
-
-
-@_register("ann_pq_adc_ip", _pq_adc_ip_oracle)
+@_register("ann_pq_adc_ip", lambda: _pq_oracle("ip"))
 def q_ann_pq_adc_ip(spark, sf_dir):
     # inner-product PQ ADC: ⟨q, decoded(x)⟩ decomposes exactly over
     # subspaces, so the same literal-LUT codegen fold serves MIPS ordering
@@ -2950,12 +2933,10 @@ def q_ann_pq_adc_ip(spark, sf_dir):
     # recipe as SQ8's asymmetric cosine.
     model, codes = _pq_for(spark, sf_dir)
     top = model.adc_topk(codes, "vec_id", QUERY_VEC, 10, metric="ip", dist_col="score")
-    return top.select("vec_id", F.round("score", 8).alias("score")).orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
+    return _probe_out(top, "score", desc=True, out="score")
 
 
-@_register("ann_pq_rerank", _pq_rerank_oracle)
+@_register("ann_pq_rerank", lambda: _pq_oracle(rerank=40))
 def q_ann_pq_rerank(spark, sf_dir):
     # PQ serving shape: ADC shortlist (4×k) over the codes, exact l2
     # rerank against the full-precision table (broadcast candidate ids) —
@@ -2964,41 +2945,15 @@ def q_ann_pq_rerank(spark, sf_dir):
 
     model, codes = _pq_for(spark, sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
-    top = pq_rerank_topk(model, codes, emb, "embedding", "vec_id", QUERY_VEC, 10)
-    return top.select("vec_id", F.round("distance", 8).alias("distance")).orderBy(
-        F.col("distance").asc(), F.col("vec_id").asc()
-    )
+    return _probe_out(pq_rerank_topk(model, codes, emb, "embedding", "vec_id", QUERY_VEC, 10))
 
 
-def _ivfpq_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .index.ivfflat import offline_centroids
-    from .similarity.pq import offline_ivfpq_probe
-
-    # the PQ model trains on the id-sorted full corpus either way, so the
-    # flat-PQ replay cache supplies (model, ids, codes) verbatim
-    model, ids, codes = _offline_pq_cached()
-    cents = offline_centroids(
-        f"{_oracle_sf()}/embeddings.parquet", "embedding", "vec_id", 8, 5
-    )
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    vecs = dict(zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist()))
-    rows = [
-        (int(i), float(d))
-        for i, d in offline_ivfpq_probe(
-            cents, model, ids, codes, vecs, QUERY_VEC, 10, probe_lists=4, rerank=40
-        )
-    ]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d ASC, vec_id ASC"
-    )
-
-
-@_register("ann_ivfpq_rerank", _ivfpq_oracle)
+# the PQ model trains on the id-sorted full corpus either way, so the
+# flat-PQ replay supplies (model, ids, codes) to the IVFPQ oracle verbatim
+@_register(
+    "ann_ivfpq_rerank",
+    lambda: _pq_oracle(rerank=40, centroids=_ivfflat_oracle_cents()[1], probe_lists=4),
+)
 def q_ann_ivfpq_rerank(spark, sf_dir):
     # FAISS IVFPQ realized: coarse centroids prune to 4/8 buckets, the
     # probed buckets' MATERIALIZED PQ codes (m=16, 32× compression) are
@@ -3007,47 +2962,21 @@ def q_ann_ivfpq_rerank(spark, sf_dir):
     # ann_ivf_sq8_rerank; deterministic end to end → offline-replay oracle.
     from .similarity.pq import IVFPQIndex
 
-    key = (sf_dir, "ivfpq")
-    if key not in _INDEX_CACHE:
-        idx = _ivfflat_for(spark, sf_dir)
-        # residual=False EXPLICITLY: this entry pins the single-LUT
-        # global-codebook mode (ann_ivfpq_residual_rerank covers the
-        # residual default — IVFADC, the r9 default flip)
-        _INDEX_CACHE[key] = IVFPQIndex.build(
-            idx, "embedding", "vec_id", m=16, k=32, residual=False
-        )
-    top = _INDEX_CACHE[key].probe(QUERY_VEC, 10, rerank=40, probe_lists=4)
-    return top.select("vec_id", F.round("distance", 8).alias("distance")).orderBy(
-        F.col("distance").asc(), F.col("vec_id").asc()
-    )
+    # residual=False EXPLICITLY: this entry pins the single-LUT
+    # global-codebook mode (ann_ivfpq_residual_rerank covers the
+    # residual default — IVFADC, the r9 default flip)
+    idx = _cached(sf_dir, "ivfpq", lambda: IVFPQIndex.build(
+        _ivfflat_for(spark, sf_dir), "embedding", "vec_id", m=16, k=32, residual=False
+    ))
+    return _probe_out(idx.probe(QUERY_VEC, 10, rerank=40, probe_lists=4))
 
 
-def _ivfpq_residual_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .index.ivfflat import offline_centroids
-    from .similarity.pq import offline_ivfpq_residual_probe
-
-    cents = offline_centroids(
-        f"{_oracle_sf()}/embeddings.parquet", "embedding", "vec_id", 8, 5
-    )
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    vecs = dict(zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist()))
-    rows = [
-        (int(i), float(d))
-        for i, d in offline_ivfpq_residual_probe(
-            cents, vecs, QUERY_VEC, 10, probe_lists=4, rerank=40, m=16, k_codes=32
-        )
-    ]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d ASC, vec_id ASC"
-    )
-
-
-@_register("ann_ivfpq_residual_rerank", _ivfpq_residual_oracle)
+@_register(
+    "ann_ivfpq_residual_rerank",
+    lambda: _pq_oracle(
+        rerank=40, centroids=_ivfflat_oracle_cents()[1], probe_lists=4, residual=True
+    ),
+)
 def q_ann_ivfpq_residual_rerank(spark, sf_dir):
     # TRUE IVFADC (Jégou 2011 §III-D): PQ codes quantize the RESIDUAL
     # x − centroid[bucket], so the codebook budget resolves within-bucket
@@ -3059,303 +2988,159 @@ def q_ann_ivfpq_residual_rerank(spark, sf_dir):
     # join. Deterministic end to end → offline-replay oracle.
     from .similarity.pq import IVFPQIndex
 
-    key = (sf_dir, "ivfpq_residual")
-    if key not in _INDEX_CACHE:
-        idx = _ivfflat_for(spark, sf_dir)
-        _INDEX_CACHE[key] = IVFPQIndex.build(
-            idx, "embedding", "vec_id", m=16, k=32, residual=True
-        )
-    top = _INDEX_CACHE[key].probe(QUERY_VEC, 10, rerank=40, probe_lists=4)
-    return top.select("vec_id", F.round("distance", 8).alias("distance")).orderBy(
-        F.col("distance").asc(), F.col("vec_id").asc()
-    )
+    idx = _cached(sf_dir, "ivfpq_residual", lambda: IVFPQIndex.build(
+        _ivfflat_for(spark, sf_dir), "embedding", "vec_id", m=16, k=32, residual=True
+    ))
+    return _probe_out(idx.probe(QUERY_VEC, 10, rerank=40, probe_lists=4))
 
 
-def _hnsw_routed_sq8_batch_oracle() -> str:
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    from .index.hnsw import offline_routed_sq8_batch
-
-    path = f"{_oracle_sf()}/embeddings.parquet"
-    cents, graphs = _offline_routed_cached(mutable=True)
-    t = pq.read_table(path, columns=["vec_id", "embedding"])
-    ids = t["vec_id"].to_pylist()
-    vecs = t["embedding"].to_pylist()
-    mat = np.asarray(vecs, dtype=np.float64)
-    qs = [(qid, qv) for qid, qv in zip(ids, vecs) if qid % 97 == 0]
-    rows = [
-        (int(qid), int(hid), float(d))
-        for qid, hid, d in offline_routed_sq8_batch(
-            cents, graphs, dict(zip(ids, vecs)), qs, 5, 2,
-            mat.min(axis=0).tolist(), mat.max(axis=0).tolist(),
-        )
-    ]
-    return (
-        "SELECT qid, vec_id, round(CAST(d AS DOUBLE), 8) AS distance FROM "
-        f"{_hits_values_sql(rows, 'qid, vec_id, d')}"
-    )
-
-
-@_register("ann_hnsw_routed_sq8_batch", _hnsw_routed_sq8_batch_oracle)
+@_register(
+    "ann_hnsw_routed_sq8_batch",
+    lambda: _routed_quantized_oracle("sq8", batch=True),
+)
 def q_ann_hnsw_routed_sq8_batch(spark, sf_dir):
     # Batch serving over SQ8-compressed shards — THE at-scale shape: ADC
     # walks over codes (k·rerank_mult candidates), exact rerank joins the
     # (qid, id) shortlist to the source vectors + query vectors, windowed
-    # per-query top-k. Exact offline replay (offline_routed_sq8_batch).
-    from .index.hnsw import HNSWIndex
-    from .similarity.quantize import dim_stats
-
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "hnsw_routed_sq8")
-    if key not in _INDEX_CACHE:
-        rkey = (sf_dir, "hnsw_routed")
-        if rkey not in _INDEX_CACHE:
-            _INDEX_CACHE[rkey] = HNSWIndex.build_routed(
-                emb, "embedding", "vec_id", **_routed_params()
-            )
-        stats = dim_stats(emb, "embedding").orderBy("dim").collect()
-        _INDEX_CACHE[key] = _INDEX_CACHE[rkey].quantize(
-            [r["mn"] for r in stats], [r["mx"] for r in stats]
-        )
-    queries = emb.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding"
+    # per-query top-k. Exact offline replay (offline_quantize "sq8" +
+    # offline_routed_search(rerank=...)).
+    out = _routed_for(spark, sf_dir, "sq8").search_batch(
+        _batch_queries(spark, sf_dir), "embedding", "qid", k=5, n_probe=2,
+        rerank=_t(spark, sf_dir, "embeddings"),
     )
-    out = _INDEX_CACHE[key].search_batch(
-        queries, "embedding", "qid", k=5, n_probe=2, rerank=emb
-    )
-    return out.select("qid", "vec_id", F.round("distance", 8).alias("distance"))
+    return _batch_out(out)
 
 
-@_register("ann_hnsw_routed_sq8_rerank", _hnsw_routed_sq8_oracle)
+@_register("ann_hnsw_routed_sq8_rerank", lambda: _routed_quantized_oracle("sq8"))
 def q_ann_hnsw_routed_sq8_rerank(spark, sf_dir):
     # SQ8 codes INSIDE the routed shard graphs (ShardedHNSW.quantize): the
     # per-shard vector matrix drops from 8 bytes/dim to 1 (memory ÷8 for
     # serving density), walks run ADC over the codes, and the shortlist
     # reranks with exact distances against the source table (broadcast
     # candidate ids, corpus never shuffles). Exact offline-replay oracle
-    # (offline_routed_sq8_probe — same quantization, walk, and fold-order
-    # rerank arithmetic).
-    from .index.hnsw import HNSWIndex
-    from .similarity.quantize import dim_stats
-
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "hnsw_routed_sq8")
-    if key not in _INDEX_CACHE:
-        rkey = (sf_dir, "hnsw_routed")
-        if rkey not in _INDEX_CACHE:
-            _INDEX_CACHE[rkey] = HNSWIndex.build_routed(
-                emb, "embedding", "vec_id", **_routed_params()
-            )
-        stats = dim_stats(emb, "embedding").orderBy("dim").collect()
-        _INDEX_CACHE[key] = _INDEX_CACHE[rkey].quantize(
-            [r["mn"] for r in stats], [r["mx"] for r in stats]
-        )
-    probe = _INDEX_CACHE[key].probe(QUERY_VEC, 10, n_probe=2, rerank=emb)
-    return (
-        probe.orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
+    # (the same quantization, walk, and fold-order rerank arithmetic).
+    probe = _routed_for(spark, sf_dir, "sq8").probe(
+        QUERY_VEC, 10, n_probe=2, rerank=_t(spark, sf_dir, "embeddings")
     )
+    return _probe_out(probe)
 
 
-def _routed_bq_cached(spark, sf_dir):
-    from .index.hnsw import HNSWIndex
-    from .similarity.quantize import dim_stats
-
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "hnsw_routed_bq")
-    if key not in _INDEX_CACHE:
-        rkey = (sf_dir, "hnsw_routed")
-        if rkey not in _INDEX_CACHE:
-            _INDEX_CACHE[rkey] = HNSWIndex.build_routed(
-                emb, "embedding", "vec_id", **_routed_params()
-            )
-        stats = dim_stats(emb, "embedding").orderBy("dim").collect()
-        _INDEX_CACHE[key] = _INDEX_CACHE[rkey].quantize_bq(
-            [r["mn"] for r in stats], [r["mx"] for r in stats]
-        )
-    return emb, _INDEX_CACHE[key]
-
-
-def _hnsw_routed_bq_oracle() -> str:
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    from .index.hnsw import offline_routed_bq_probe
-
-    path = f"{_oracle_sf()}/embeddings.parquet"
-    cents, graphs = _offline_routed_cached(mutable=True)
-    t = pq.read_table(path, columns=["vec_id", "embedding"])
-    ids = t["vec_id"].to_pylist()
-    vecs = t["embedding"].to_pylist()
-    mat = np.asarray(vecs, dtype=np.float64)
-    hits = offline_routed_bq_probe(
-        cents, graphs, dict(zip(ids, vecs)), QUERY_VEC, 10, 2,
-        mat.min(axis=0).tolist(), mat.max(axis=0).tolist(),
-    )
-    rows = [(int(i), float(d)) for i, d in hits]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d ASC, vec_id ASC"
-    )
-
-
-@_register("ann_hnsw_routed_bq_rerank", _hnsw_routed_bq_oracle)
+@_register("ann_hnsw_routed_bq_rerank", lambda: _routed_quantized_oracle("bq"))
 def q_ann_hnsw_routed_bq_rerank(spark, sf_dir):
     # 1-BIT codes inside the routed shard graphs (ShardedHNSW.quantize_bq):
     # per-shard vector storage drops to dim/8 bytes (8x denser than SQ8,
     # 64x than float64 — the whole-corpus-in-L2-cache tier). Walks decode
     # each bit to its half-range center (same ADC float pipeline as
     # SQ8/PQ), shortlist reranks exactly against the source. Exact
-    # offline-replay oracle (offline_routed_bq_probe).
-    emb, idx = _routed_bq_cached(spark, sf_dir)
-    probe = idx.probe(QUERY_VEC, 10, n_probe=2, rerank=emb)
-    return (
-        probe.orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
+    # offline-replay oracle (offline_quantize "bq").
+    probe = _routed_for(spark, sf_dir, "bq").probe(
+        QUERY_VEC, 10, n_probe=2, rerank=_t(spark, sf_dir, "embeddings")
     )
+    return _probe_out(probe)
 
 
-def _hnsw_routed_bq_batch_oracle() -> str:
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    from .index.hnsw import offline_routed_bq_batch
-
-    path = f"{_oracle_sf()}/embeddings.parquet"
-    cents, graphs = _offline_routed_cached(mutable=True)
-    t = pq.read_table(path, columns=["vec_id", "embedding"])
-    ids = t["vec_id"].to_pylist()
-    vecs = t["embedding"].to_pylist()
-    mat = np.asarray(vecs, dtype=np.float64)
-    qs = [(qid, qv) for qid, qv in zip(ids, vecs) if qid % 97 == 0]
-    rows = [
-        (int(qid), int(hid), float(d))
-        for qid, hid, d in offline_routed_bq_batch(
-            cents, graphs, dict(zip(ids, vecs)), qs, 5, 2,
-            mat.min(axis=0).tolist(), mat.max(axis=0).tolist(),
-        )
-    ]
-    return (
-        "SELECT qid, vec_id, round(CAST(d AS DOUBLE), 8) AS distance FROM "
-        f"{_hits_values_sql(rows, 'qid, vec_id, d')}"
-    )
-
-
-@_register("ann_hnsw_routed_bq_batch", _hnsw_routed_bq_batch_oracle)
+@_register(
+    "ann_hnsw_routed_bq_batch",
+    lambda: _routed_quantized_oracle("bq", batch=True),
+)
 def q_ann_hnsw_routed_bq_batch(spark, sf_dir):
     # Batch serving over 1-bit shards: ADC walks over sign codes for the
     # candidate shortlist, exact rerank join, per-query top-k. Exact
-    # offline replay (offline_routed_bq_batch).
-    emb, idx = _routed_bq_cached(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding"
+    # offline replay (offline_quantize "bq" + offline_routed_search).
+    out = _routed_for(spark, sf_dir, "bq").search_batch(
+        _batch_queries(spark, sf_dir), "embedding", "qid", k=5, n_probe=2,
+        rerank=_t(spark, sf_dir, "embeddings"),
     )
-    out = idx.search_batch(queries, "embedding", "qid", k=5, n_probe=2, rerank=emb)
-    return out.select("qid", "vec_id", F.round("distance", 8).alias("distance"))
+    return _batch_out(out)
 
 
-def _routed_bqr_cached(spark, sf_dir):
-    """Routed shards with ROTATED 1-bit codes (quantize_bq(rotation_seed)):
-    the RaBitQ-style tier — same storage density as plain BQ, better code
-    quality on clustered/anisotropic data."""
-    from .index.hnsw import HNSWIndex
-    from .similarity.quantize import dim_stats
-
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "hnsw_routed_bqr")
-    if key not in _INDEX_CACHE:
-        rkey = (sf_dir, "hnsw_routed")
-        if rkey not in _INDEX_CACHE:
-            _INDEX_CACHE[rkey] = HNSWIndex.build_routed(
-                emb, "embedding", "vec_id", **_routed_params()
-            )
-        stats = dim_stats(emb, "embedding").orderBy("dim").collect()
-        _INDEX_CACHE[key] = _INDEX_CACHE[rkey].quantize_bq(
-            [r["mn"] for r in stats],
-            [r["mx"] for r in stats],
-            rotation_seed=BQ_ROT_SEED,
-        )
-    return emb, _INDEX_CACHE[key]
-
-
-def _hnsw_routed_bqr_oracle() -> str:
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    from .index.hnsw import offline_routed_bq_probe
-
-    path = f"{_oracle_sf()}/embeddings.parquet"
-    cents, graphs = _offline_routed_cached(mutable=True)
-    t = pq.read_table(path, columns=["vec_id", "embedding"])
-    ids = t["vec_id"].to_pylist()
-    vecs = t["embedding"].to_pylist()
-    mat = np.asarray(vecs, dtype=np.float64)
-    hits = offline_routed_bq_probe(
-        cents, graphs, dict(zip(ids, vecs)), QUERY_VEC, 10, 2,
-        mat.min(axis=0).tolist(), mat.max(axis=0).tolist(),
-        rotation_seed=BQ_ROT_SEED,
-    )
-    rows = [(int(i), float(d)) for i, d in hits]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d ASC, vec_id ASC"
-    )
-
-
-@_register("ann_hnsw_routed_bqr_rerank", _hnsw_routed_bqr_oracle)
+@_register(
+    "ann_hnsw_routed_bqr_rerank",
+    lambda: _routed_quantized_oracle("bq", rotation_seed=BQ_ROT_SEED),
+)
 def q_ann_hnsw_routed_bqr_rerank(spark, sf_dir):
     # ROTATED 1-bit codes inside the routed shard graphs: each shard
     # applies the same seeded orthonormal rotation before sign-taking
     # (ShardedHNSW.quantize_bq(rotation_seed=...)), spreading cluster
     # structure across every code bit — the RaBitQ-style lift of the
-    # 1-bit resolution bound without finer sharding. Same ADC walk +
-    # exact-rerank recipe as plain BQ; exact offline-replay oracle
-    # (offline_routed_bq_probe(rotation_seed=...), fold-exact rotation
-    # shared verbatim by both sides).
-    emb, idx = _routed_bqr_cached(spark, sf_dir)
-    probe = idx.probe(QUERY_VEC, 10, n_probe=2, rerank=emb)
-    return (
-        probe.orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
+    # 1-bit resolution bound without finer sharding — same storage
+    # density as plain BQ, better code quality on clustered/anisotropic
+    # data. Same ADC walk + exact-rerank recipe as plain BQ; exact
+    # offline-replay oracle (offline_quantize "bq" with rotation_seed,
+    # fold-exact rotation shared verbatim by both sides).
+    probe = _routed_for(spark, sf_dir, "bqr").probe(
+        QUERY_VEC, 10, n_probe=2, rerank=_t(spark, sf_dir, "embeddings")
     )
+    return _probe_out(probe)
 
 
-_OFFLINE_VAMANA_L2_MEMO: dict = {}
-
-
-def _offline_vamana_l2_cached(mutable: bool = False):
-    """One offline l2 merge replay (the most expensive oracle build:
-    k-means + per-cluster HNSW builds + global prune) per sf_dir across
-    the six generators that need it; ``mutable=True`` deep-copies for the
-    PQ oracles, which quantize (mutate) the shell."""
-    import pickle
-
+def _vamana_replay(dist: str = "l2", copy: bool = False):
+    """The offline merge replay (the most expensive oracle build:
+    k-means + per-cluster HNSW builds + global prune) of the ``dist``
+    build; ``copy=True`` for the PQ oracles, which quantize the shell."""
     from .index.vamana import offline_vamana
 
-    key = _oracle_sf()
-    if key not in _OFFLINE_VAMANA_L2_MEMO:
-        _OFFLINE_VAMANA_L2_MEMO[key] = offline_vamana(
-            f"{_oracle_sf()}/embeddings.parquet", "embedding", "vec_id",
-            shards=4, overlap_eps=0.2, r=16,
-        )
-    g = _OFFLINE_VAMANA_L2_MEMO[key]
-    return pickle.loads(pickle.dumps(g)) if mutable else g
+    return _memo(("vamana", dist), lambda: offline_vamana(
+        _oracle_corpus().path, "embedding", "vec_id",
+        shards=4, overlap_eps=0.2, r=16, dist=dist,
+    ), copy)
 
 
-def _vamana_merged_oracle() -> str:
-    import numpy as np
+def _vamana_part_replay(dist: str = "l2", replicate_eps: float = 0.0, copy: bool = False):
+    """(cell centroids, shells) of the 4-cell cut of the ``dist`` merged
+    replay (which it shares read-only); ``copy=True`` for quantizing
+    oracles."""
+    from .index.vamana import offline_vamana_partitioned
 
-    g = _offline_vamana_l2_cached()
-    hits = g.search(np.asarray(QUERY_VEC, dtype=np.float64), 10)
-    rows = [(int(i), float(d)) for i, d in hits]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d ASC, vec_id ASC"
+    return _memo(("vamana_part", dist, replicate_eps), lambda: offline_vamana_partitioned(
+        _oracle_corpus().path, "embedding", "vec_id",
+        cells=4, replicate_eps=replicate_eps, shards=4, overlap_eps=0.2, r=16,
+        dist=dist, graph=_vamana_replay(dist),
+    ), copy)
+
+
+def _vamana_for(spark, sf_dir, dist: str = "l2"):
+    """The merged vamana build over the embeddings table (``dist`` ops class)."""
+    from .index.vamana import VamanaIndex
+
+    name = {"l2": "vamana", "cosine": "vamana_cos", "ip": "vamana_ip"}[dist]
+    return _cached(sf_dir, name, lambda: VamanaIndex.build(
+        _t(spark, sf_dir, "embeddings"), "embedding", "vec_id",
+        shards=4, overlap_eps=0.2, r=16, dist=dist,
+    ))
+
+
+def _vamana_pq_for(spark, sf_dir):
+    """The merged l2 build with global PQ serving."""
+    return _cached(sf_dir, "vamana_pq", lambda: _vamana_for(spark, sf_dir).quantize_pq(
+        _pq_for(spark, sf_dir)[0]
+    ))
+
+
+def _vamana_oracle(dist: str = "l2", batch: bool = False, form: str | None = None,
+                   allowed_ids: set | None = None) -> str:
+    """The oracle of a merged-vamana entry: the ``dist`` replay, quantized
+    to ``form`` (pq: global codebooks, pqr: entry-cell residual), searched
+    for the QUERY_VEC top-10 or the batch queries' top-5."""
+    from .index.hnsw import offline_quantize
+    from .index.vamana import offline_vamana_search
+
+    c = _oracle_corpus()
+    g = _vamana_replay(dist, copy=form is not None)
+    rerank = None
+    if form is not None:
+        model, centers = _vamana_pqr_model() if form == "pqr" else (_pq_replay()[0], None)
+        offline_quantize({0: g}, "pq", model=model, pq_centers=centers)
+        # VamanaIndex's rerank_mult defaults: probe 48, search_batch 32
+        rerank = (c.by_id, 32 if batch else 48, None)
+    queries = c.batch if batch else [(None, QUERY_VEC)]
+    hits = offline_vamana_search(
+        g, queries, 5 if batch else 10, dist, allowed_ids=allowed_ids, rerank=rerank
     )
+    return _hits_sql(hits if batch else _point(hits), desc=dist != "l2")
 
 
-@_register("ann_vamana_merged", _vamana_merged_oracle)
+@_register("ann_vamana_merged", _vamana_oracle)
 def q_ann_vamana_merged(spark, sf_dir):
     # Distributed SINGLE-graph build (DiskANN merge, Subramanya et al.
     # 2019 §4): overlapping k-means clusters route each vector to every
@@ -3367,244 +3152,71 @@ def q_ann_vamana_merged(spark, sf_dir):
     # Probe = guarded driver materialization + greedy beam search. Exact
     # offline-replay oracle (offline_vamana — same centroids, routing
     # fold, sub-builds, the same _robust_prune kernel, and walk).
-    from .index.vamana import VamanaIndex
-
-    key = (sf_dir, "vamana")
-    if key not in _INDEX_CACHE:
-        emb = _t(spark, sf_dir, "embeddings")
-        _INDEX_CACHE[key] = VamanaIndex.build(
-            emb, "embedding", "vec_id", shards=4, overlap_eps=0.2, r=16
-        )
-    probe = _INDEX_CACHE[key].probe(QUERY_VEC, 10)
-    return (
-        probe.orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
-    )
+    return _probe_out(_vamana_for(spark, sf_dir).probe(QUERY_VEC, 10))
 
 
-def _vamana_filtered_oracle() -> str:
-    import numpy as np
-
-    g = _offline_vamana_l2_cached()
-    hits = g.search(
-        np.asarray(QUERY_VEC, dtype=np.float64), 10, allowed_ids=_allowed_label2()
-    )
-    rows = [(int(i), float(d)) for i, d in hits]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d ASC, vec_id ASC"
-    )
-
-
-@_register("ann_vamana_filtered", _vamana_filtered_oracle)
+@_register("ann_vamana_filtered", lambda: _vamana_oracle(allowed_ids=_oracle_corpus().label2))
 def q_ann_vamana_filtered(spark, sf_dir):
     # Filtered search on the merged graph: the metadata predicate
     # (label = 2) becomes an allowed-id set enforced DURING the beam walk
     # (_search_layer(allowed=...) — disallowed vertices still navigate) —
     # top-k among matching rows, not a post-filter. Exact offline replay.
-    from .index.vamana import VamanaIndex
-
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "vamana")
-    if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = VamanaIndex.build(
-            emb, "embedding", "vec_id", shards=4, overlap_eps=0.2, r=16
-        )
-    probe = _INDEX_CACHE[key].probe(
-        QUERY_VEC, 10, allowed=emb.filter(F.col("label") == 2).select("vec_id")
-    )
-    return (
-        probe.orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
-    )
+    probe = _vamana_for(spark, sf_dir).probe(QUERY_VEC, 10, allowed=_label2(spark, sf_dir))
+    return _probe_out(probe)
 
 
-def _vamana_pq_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .index.vamana import offline_vamana_pq_probe
-
-    g = _offline_vamana_l2_cached(mutable=True)
-    model, _ids, _codes = _offline_pq_cached()
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    vecs = dict(zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist()))
-    hits = offline_vamana_pq_probe(g, vecs, QUERY_VEC, 10, model)
-    rows = [(int(i), float(d)) for i, d in hits]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d ASC, vec_id ASC"
-    )
-
-
-@_register("ann_vamana_pq_rerank", _vamana_pq_oracle)
+@_register("ann_vamana_pq_rerank", lambda: _vamana_oracle(form="pq"))
 def q_ann_vamana_pq_rerank(spark, sf_dir):
     # PQ-compressed SERVING of the merged graph (the DiskANN RAM/disk
     # split): codes encode distributed and the search node collects only
     # (id, 16-byte codes) — a ~32x larger corpus per node — while probes
     # walk ADC reconstructions and rerank the shortlist EXACTLY via a
     # broadcast join against the parquet vertices. Exact offline replay
-    # (offline_vamana_pq_probe).
-    from .index.vamana import VamanaIndex
-
-    key = (sf_dir, "vamana_pq")
-    if key not in _INDEX_CACHE:
-        vkey = (sf_dir, "vamana")
-        if vkey not in _INDEX_CACHE:
-            emb = _t(spark, sf_dir, "embeddings")
-            _INDEX_CACHE[vkey] = VamanaIndex.build(
-                emb, "embedding", "vec_id", shards=4, overlap_eps=0.2, r=16
-            )
-        model, _codes = _pq_for(spark, sf_dir)
-        _INDEX_CACHE[key] = _INDEX_CACHE[vkey].quantize_pq(model)
-    probe = _INDEX_CACHE[key].probe(QUERY_VEC, 10)
-    return (
-        probe.orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
-    )
+    # (offline_vamana_search(rerank=...) over the quantized replay).
+    return _probe_out(_vamana_pq_for(spark, sf_dir).probe(QUERY_VEC, 10))
 
 
-def _vamana_batch_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .index.vamana import offline_vamana_batch
-
-    g = _offline_vamana_l2_cached()
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    ids = t["vec_id"].to_pylist()
-    vecs = t["embedding"].to_pylist()
-    qs = [(qid, qv) for qid, qv in zip(ids, vecs) if qid % 97 == 0]
-    rows = [
-        (int(qid), int(hid), float(d))
-        for qid, hid, d in offline_vamana_batch(g, qs, 5)
-    ]
-    return (
-        "SELECT qid, vec_id, round(CAST(d AS DOUBLE), 8) AS distance FROM "
-        f"{_hits_values_sql(rows, 'qid, vec_id, d')}"
-    )
-
-
-@_register("ann_vamana_batch", _vamana_batch_oracle)
+@_register("ann_vamana_batch", lambda: _vamana_oracle(batch=True))
 def q_ann_vamana_batch(spark, sf_dir):
     # Distributed batch serving over the merged graph: the guarded driver
     # graph broadcasts once, queries stream through mapInPandas (Arrow
     # batches), one beam walk per query with exact walk distances. Exact
-    # offline replay (offline_vamana_batch).
-    from .index.vamana import VamanaIndex
-
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "vamana")
-    if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = VamanaIndex.build(
-            emb, "embedding", "vec_id", shards=4, overlap_eps=0.2, r=16
-        )
-    queries = emb.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding"
+    # offline replay (offline_vamana_search).
+    out = _vamana_for(spark, sf_dir).search_batch(
+        _batch_queries(spark, sf_dir), "embedding", "qid", k=5
     )
-    out = _INDEX_CACHE[key].search_batch(queries, "embedding", "qid", k=5)
-    return out.select("qid", "vec_id", F.round("distance", 8).alias("distance"))
+    return _batch_out(out)
 
 
-def _vamana_pq_batch_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .index.vamana import offline_vamana_pq_batch
-
-    g = _offline_vamana_l2_cached(mutable=True)
-    model, _ids, _codes = _offline_pq_cached()
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    ids = t["vec_id"].to_pylist()
-    vecs = t["embedding"].to_pylist()
-    qs = [(qid, qv) for qid, qv in zip(ids, vecs) if qid % 97 == 0]
-    rows = [
-        (int(qid), int(hid), float(d))
-        for qid, hid, d in offline_vamana_pq_batch(
-            g, dict(zip(ids, vecs)), qs, 5, model
-        )
-    ]
-    return (
-        "SELECT qid, vec_id, round(CAST(d AS DOUBLE), 8) AS distance FROM "
-        f"{_hits_values_sql(rows, 'qid, vec_id, d')}"
-    )
-
-
-@_register("ann_vamana_pq_batch", _vamana_pq_batch_oracle)
+@_register("ann_vamana_pq_batch", lambda: _vamana_oracle(batch=True, form="pq"))
 def q_ann_vamana_pq_batch(spark, sf_dir):
     # Batch serving over the PQ-compressed merged graph: the broadcast is
     # 16 B/vec codes, walks emit a k·rerank_mult ADC shortlist, and the
     # exact rerank joins parquet vertices + query vectors with a per-query
-    # windowed top-k. Exact offline replay (offline_vamana_pq_batch).
-    from .index.vamana import VamanaIndex
-
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "vamana_pq")
-    if key not in _INDEX_CACHE:
-        vkey = (sf_dir, "vamana")
-        if vkey not in _INDEX_CACHE:
-            _INDEX_CACHE[vkey] = VamanaIndex.build(
-                emb, "embedding", "vec_id", shards=4, overlap_eps=0.2, r=16
-            )
-        model, _codes = _pq_for(spark, sf_dir)
-        _INDEX_CACHE[key] = _INDEX_CACHE[vkey].quantize_pq(model)
-    queries = emb.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding"
+    # windowed top-k. Exact offline replay (offline_vamana_search(rerank=...)).
+    out = _vamana_pq_for(spark, sf_dir).search_batch(
+        _batch_queries(spark, sf_dir), "embedding", "qid", k=5
     )
-    out = _INDEX_CACHE[key].search_batch(queries, "embedding", "qid", k=5)
-    return out.select("qid", "vec_id", F.round("distance", 8).alias("distance"))
+    return _batch_out(out)
 
 
-_OFFLINE_VAMANA_PART_MEMO: dict = {}
+def _vamana_part_oracle(replicate_eps: float = 0.0, **quant) -> str:
+    """The batch oracle of a 4-cell partitioned-vamana entry: the cut's
+    shells (quantized like ``**quant`` when given — offline_quantize "pq"
+    with the quantized vamana-partitioned rerank default 48), then the
+    routed replay of the batch queries."""
+    from .index.hnsw import offline_quantize, offline_routed_search
+
+    c = _oracle_corpus()
+    cents, graphs = _vamana_part_replay(replicate_eps=replicate_eps, copy=bool(quant))
+    rerank = None
+    if quant:
+        offline_quantize(graphs, "pq", **quant)
+        rerank = (c.by_id, 48, None)
+    return _hits_sql(offline_routed_search(cents, graphs, c.batch, 5, 2, rerank=rerank))
 
 
-def _offline_vamana_part_cached(mutable: bool = False):
-    """One offline partitioned-vamana replay per sf_dir across the oracle
-    generators (same memo discipline as _offline_routed_cached);
-    ``mutable=True`` deep-copies the shells for oracles that quantize."""
-    import pickle
-
-    from .index.vamana import offline_vamana_partitioned
-
-    key = _oracle_sf()
-    if key not in _OFFLINE_VAMANA_PART_MEMO:
-        _OFFLINE_VAMANA_PART_MEMO[key] = offline_vamana_partitioned(
-            f"{_oracle_sf()}/embeddings.parquet", "embedding", "vec_id",
-            cells=4, shards=4, overlap_eps=0.2, r=16,
-            graph=_offline_vamana_l2_cached(),
-        )
-    cents, graphs = _OFFLINE_VAMANA_PART_MEMO[key]
-    if mutable:
-        graphs = pickle.loads(pickle.dumps(graphs))
-    return cents, graphs
-
-
-def _vamana_partitioned_batch_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .index.hnsw import offline_routed_batch
-
-    cents, graphs = _offline_vamana_part_cached()
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    ids = t["vec_id"].to_pylist()
-    vecs = t["embedding"].to_pylist()
-    qs = [(qid, qv) for qid, qv in zip(ids, vecs) if qid % 97 == 0]
-    rows = [
-        (int(qid), int(hid), float(d))
-        for qid, hid, d in offline_routed_batch(cents, graphs, qs, 5, 2)
-    ]
-    return (
-        "SELECT qid, vec_id, round(CAST(d AS DOUBLE), 8) AS distance FROM "
-        f"{_hits_values_sql(rows, 'qid, vec_id, d')}"
-    )
-
-
-@_register("ann_vamana_partitioned_batch", _vamana_partitioned_batch_oracle)
+@_register("ann_vamana_partitioned_batch", _vamana_part_oracle)
 def q_ann_vamana_partitioned_batch(spark, sf_dir):
     # Cell-partitioned serving of the merged Vamana graph — the serving
     # tier PAST the one-node SERVE_MAX_ROWS ceiling: the artifact is cut
@@ -3613,59 +3225,17 @@ def q_ann_vamana_partitioned_batch(spark, sf_dir):
     # routed ShardedHNSW machinery (n_probe cell pruning, bounded chunked
     # rows, NO full-graph materialization anywhere — driver included).
     # Exact offline replay (offline_vamana_partitioned +
-    # offline_routed_batch).
-    from .index.vamana import VamanaIndex
-
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "vamana_part")
-    if key not in _INDEX_CACHE:
-        vkey = (sf_dir, "vamana")
-        if vkey not in _INDEX_CACHE:
-            _INDEX_CACHE[vkey] = VamanaIndex.build(
-                emb, "embedding", "vec_id", shards=4, overlap_eps=0.2, r=16
-            )
-        _INDEX_CACHE[key] = _INDEX_CACHE[vkey].to_partitioned(
-            cells=4, n_probe=2
-        )
-    queries = emb.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding"
-    )
-    out = _INDEX_CACHE[key].search_batch(queries, "embedding", "qid", k=5, n_probe=2)
-    return out.select("qid", "vec_id", F.round("distance", 8).alias("distance"))
-
-
-def _vamana_partitioned_replicated_batch_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .index.hnsw import offline_routed_batch
-    from .index.vamana import offline_vamana_partitioned
-
-    # replicated cut shares the memoized merged graph (read-only) — only
-    # the closure assignment differs from _offline_vamana_part_cached
-    cents, graphs = offline_vamana_partitioned(
-        f"{_oracle_sf()}/embeddings.parquet", "embedding", "vec_id",
-        cells=4, replicate_eps=0.25, shards=4, overlap_eps=0.2, r=16,
-        graph=_offline_vamana_l2_cached(),
-    )
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    ids = t["vec_id"].to_pylist()
-    vecs = t["embedding"].to_pylist()
-    qs = [(qid, qv) for qid, qv in zip(ids, vecs) if qid % 97 == 0]
-    rows = [
-        (int(qid), int(hid), float(d))
-        for qid, hid, d in offline_routed_batch(cents, graphs, qs, 5, 2)
-    ]
-    return (
-        "SELECT qid, vec_id, round(CAST(d AS DOUBLE), 8) AS distance FROM "
-        f"{_hits_values_sql(rows, 'qid, vec_id, d')}"
-    )
+    # offline_routed_search).
+    part = _cached(sf_dir, "vamana_part", lambda: _vamana_for(spark, sf_dir).to_partitioned(
+        cells=4, n_probe=2
+    ))
+    out = part.search_batch(_batch_queries(spark, sf_dir), "embedding", "qid", k=5, n_probe=2)
+    return _batch_out(out)
 
 
 @_register(
     "ann_vamana_partitioned_replicated_batch",
-    _vamana_partitioned_replicated_batch_oracle,
+    lambda: _vamana_part_oracle(replicate_eps=0.25),
 )
 def q_ann_vamana_partitioned_replicated_batch(spark, sf_dir):
     # SPANN boundary-replicated cell serving (r12): closure assignment
@@ -3674,159 +3244,69 @@ def q_ann_vamana_partitioned_replicated_batch(spark, sf_dir):
     # neighborhoods alive instead of paying a deeper per-query beam for
     # their loss; serving dedups ids across cells. Exact offline replay
     # (offline_vamana_partitioned(replicate_eps=...) mirrors the
-    # fold-exact route_overlap closure rule + offline_routed_batch).
-    from .index.vamana import VamanaIndex
-
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "vamana_part_rep")
-    if key not in _INDEX_CACHE:
-        vkey = (sf_dir, "vamana")
-        if vkey not in _INDEX_CACHE:
-            _INDEX_CACHE[vkey] = VamanaIndex.build(
-                emb, "embedding", "vec_id", shards=4, overlap_eps=0.2, r=16
-            )
-        _INDEX_CACHE[key] = _INDEX_CACHE[vkey].to_partitioned(
-            cells=4, n_probe=2, replicate_eps=0.25
-        )
-    queries = emb.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding"
-    )
-    out = _INDEX_CACHE[key].search_batch(queries, "embedding", "qid", k=5, n_probe=2)
-    return out.select("qid", "vec_id", F.round("distance", 8).alias("distance"))
+    # fold-exact route_overlap closure rule + offline_routed_search).
+    part = _cached(sf_dir, "vamana_part_rep", lambda: _vamana_for(
+        spark, sf_dir
+    ).to_partitioned(cells=4, n_probe=2, replicate_eps=0.25))
+    out = part.search_batch(_batch_queries(spark, sf_dir), "embedding", "qid", k=5, n_probe=2)
+    return _batch_out(out)
 
 
-def _vamana_partitioned_pq_batch_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .index.hnsw import offline_routed_pq_batch
-
-    cents, graphs = _offline_vamana_part_cached(mutable=True)
-    model, _ids, _codes = _offline_pq_cached()
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    ids = t["vec_id"].to_pylist()
-    vecs = t["embedding"].to_pylist()
-    qs = [(qid, qv) for qid, qv in zip(ids, vecs) if qid % 97 == 0]
-    rows = [
-        (int(qid), int(hid), float(d))
-        for qid, hid, d in offline_routed_pq_batch(
-            cents, graphs, dict(zip(ids, vecs)), qs, 5, 2, model,
-            rerank_mult=48,  # the quantized vamana-partitioned default
-        )
-    ]
-    return (
-        "SELECT qid, vec_id, round(CAST(d AS DOUBLE), 8) AS distance FROM "
-        f"{_hits_values_sql(rows, 'qid, vec_id, d')}"
-    )
-
-
-@_register("ann_vamana_partitioned_pq_batch", _vamana_partitioned_pq_batch_oracle)
+@_register(
+    "ann_vamana_partitioned_pq_batch",
+    lambda: _vamana_part_oracle(model=_pq_replay()[0]),
+)
 def q_ann_vamana_partitioned_pq_batch(spark, sf_dir):
     # The FULL scale path for the single-graph tier: PQ codes (16 B/vec)
     # inside cell-partitioned shells — per-cell blobs hold codes only,
     # walks are ADC, the exact rerank joins the (qid, id) shortlist to the
     # source + query vectors. Any corpus size, no node ever holds the
-    # graph. Exact offline replay (offline_routed_pq_batch over
-    # offline_vamana_partitioned shells).
-    from .index.vamana import VamanaIndex
-
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "vamana_part_pq")
-    if key not in _INDEX_CACHE:
-        vkey = (sf_dir, "vamana_pq")
-        if vkey not in _INDEX_CACHE:
-            bkey = (sf_dir, "vamana")
-            if bkey not in _INDEX_CACHE:
-                _INDEX_CACHE[bkey] = VamanaIndex.build(
-                    emb, "embedding", "vec_id", shards=4, overlap_eps=0.2, r=16
-                )
-            model, _codes = _pq_for(spark, sf_dir)
-            _INDEX_CACHE[vkey] = _INDEX_CACHE[bkey].quantize_pq(model)
-        _INDEX_CACHE[key] = _INDEX_CACHE[vkey].to_partitioned(
-            cells=4, n_probe=2
-        )
-    queries = emb.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding"
+    # graph. Exact offline replay (offline_quantize "pq" +
+    # offline_routed_search over offline_vamana_partitioned shells).
+    part = _cached(sf_dir, "vamana_part_pq", lambda: _vamana_pq_for(
+        spark, sf_dir
+    ).to_partitioned(cells=4, n_probe=2))
+    out = part.search_batch(
+        _batch_queries(spark, sf_dir), "embedding", "qid", k=5, n_probe=2,
+        rerank=_t(spark, sf_dir, "embeddings"),
     )
-    out = _INDEX_CACHE[key].search_batch(
-        queries, "embedding", "qid", k=5, n_probe=2, rerank=emb
-    )
-    return out.select("qid", "vec_id", F.round("distance", 8).alias("distance"))
+    return _batch_out(out)
 
 
-_VAMANA_PQR_MEMO: dict = {}
-
-
-def _offline_vamana_pqr_model_cached():
+def _vamana_pqr_model():
     """(model, centers) — oracle twin of the Spark residual-vamana PQ
     train: centers are the replayed graph's entry-cell medoid vectors (in
-    entry_points order == params['entry_ids'] order), assignment is the
-    sequential fold argmin, residuals are elementwise, and the model
-    trains on the ID-SORTED residual matrix (PQModel.train's full-table
-    path over VamanaIndex.residual_source)."""
-    import numpy as np
+    entry_points order == params['entry_ids'] order), and the model
+    trains on the id-sorted residuals against them (PQModel.train's
+    full-table path over VamanaIndex.residual_source; offline_pq's
+    residual replay)."""
+    from .similarity.pq import offline_pq
 
-    from .similarity.pq import PQModel
-
-    key = _oracle_sf()
-    if key not in _VAMANA_PQR_MEMO:
-        g = _offline_vamana_l2_cached()
+    def build():
+        g = _vamana_replay()
         centers = [[float(x) for x in g.vecs[i]] for i in (g.entry_points or [])]
-        cmat = np.asarray(centers, dtype=np.float64)
-        res_rows = []
-        for i in range(len(g.ids)):
-            v = [float(x) for x in g.vecs[i]]
-            b = fold.nearest(v, centers)
-            res_rows.append(np.asarray(v, dtype=np.float64) - cmat[b])
-        model = PQModel.train_rows(
-            np.asarray(res_rows, dtype=np.float64), m=16, k=32
-        )
-        _VAMANA_PQR_MEMO[key] = (model, centers)
-    return _VAMANA_PQR_MEMO[key]
+        model = offline_pq(
+            _oracle_corpus().path, "embedding", "vec_id", m=16, k=32, centroids=centers
+        )[0]
+        return model, centers
+
+    return _memo("vamana_pqr_model", build)
 
 
 def _vamana_pqr_for(spark, sf_dir):
     """Merged vamana with RESIDUAL PQ serving (entry-cell centers) —
     cached once per sf_dir."""
-    from .index.vamana import VamanaIndex
     from .similarity.pq import PQModel
 
-    key = (sf_dir, "vamana_pqr")
-    if key not in _INDEX_CACHE:
-        vkey = (sf_dir, "vamana")
-        if vkey not in _INDEX_CACHE:
-            emb = _t(spark, sf_dir, "embeddings")
-            _INDEX_CACHE[vkey] = VamanaIndex.build(
-                emb, "embedding", "vec_id", shards=4, overlap_eps=0.2, r=16
-            )
-        model = PQModel.train(
-            _INDEX_CACHE[vkey].residual_source(), "__res", "vec_id", m=16, k=32
-        )
-        _INDEX_CACHE[key] = _INDEX_CACHE[vkey].quantize_pq(model, residual=True)
-    return _INDEX_CACHE[key]
+    def build():
+        vamana = _vamana_for(spark, sf_dir)
+        model = PQModel.train(vamana.residual_source(), "__res", "vec_id", m=16, k=32)
+        return vamana.quantize_pq(model, residual=True)
+
+    return _cached(sf_dir, "vamana_pqr", build)
 
 
-def _vamana_pqr_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .index.vamana import offline_vamana_pq_probe
-
-    g = _offline_vamana_l2_cached(mutable=True)
-    model, centers = _offline_vamana_pqr_model_cached()
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    vecs = dict(zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist()))
-    hits = offline_vamana_pq_probe(g, vecs, QUERY_VEC, 10, model, centers=centers)
-    rows = [(int(i), float(d)) for i, d in hits]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d ASC, vec_id ASC"
-    )
-
-
-@_register("ann_vamana_pqr_rerank", _vamana_pqr_oracle)
+@_register("ann_vamana_pqr_rerank", lambda: _vamana_oracle(form="pqr"))
 def q_ann_vamana_pqr_rerank(spark, sf_dir):
     # RESIDUAL PQ serving of the merged graph (the r9 IVFADC threading):
     # codes quantize x − entry-cell center — the multi-entry seeds' cells
@@ -3835,90 +3315,38 @@ def q_ann_vamana_pqr_rerank(spark, sf_dir):
     # instead of re-separating modes (1.2M drill: global 0.128 vs
     # residual 0.906 recall@10 deep). Decode adds the frozen center back
     # (_Graph._mat_rows); exact rerank against the parquet vertices.
-    # Exact offline replay (offline_vamana_pq_probe(centers=...)).
-    probe = _vamana_pqr_for(spark, sf_dir).probe(QUERY_VEC, 10)
-    return (
-        probe.orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
-    )
+    # Exact offline replay (offline_quantize "pq" with pq_centers).
+    return _probe_out(_vamana_pqr_for(spark, sf_dir).probe(QUERY_VEC, 10))
 
 
-def _vamana_partitioned_pqr_batch_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .index.hnsw import offline_routed_pq_batch
-
-    cents, graphs = _offline_vamana_part_cached(mutable=True)
-    model, centers = _offline_vamana_pqr_model_cached()
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    ids = t["vec_id"].to_pylist()
-    vecs = t["embedding"].to_pylist()
-    qs = [(qid, qv) for qid, qv in zip(ids, vecs) if qid % 97 == 0]
-    rows = [
-        (int(qid), int(hid), float(d))
-        for qid, hid, d in offline_routed_pq_batch(
-            cents, graphs, dict(zip(ids, vecs)), qs, 5, 2, model,
-            pq_centers=centers, rerank_mult=48,
-        )
-    ]
-    return (
-        "SELECT qid, vec_id, round(CAST(d AS DOUBLE), 8) AS distance FROM "
-        f"{_hits_values_sql(rows, 'qid, vec_id, d')}"
-    )
-
-
-@_register("ann_vamana_partitioned_pqr_batch", _vamana_partitioned_pqr_batch_oracle)
+@_register(
+    "ann_vamana_partitioned_pqr_batch",
+    lambda: _vamana_part_oracle(
+        model=_vamana_pqr_model()[0], pq_centers=_vamana_pqr_model()[1]
+    ),
+)
 def q_ann_vamana_partitioned_pqr_batch(spark, sf_dir):
     # Residual PQ inside cell-partitioned vamana shells: the FULL frozen
     # entry-cell center set rides into every shell (per-member cells
     # assign fold-exactly inside _Graph, matching the distributed __ecell
     # fold), so partitioned serving keeps the same 16-byte codes AND the
     # same reconstruction quality as the merged residual tier. Exact
-    # offline replay (offline_routed_pq_batch(pq_centers=...) over
+    # offline replay (offline_quantize "pq" with pq_centers over
     # offline_vamana_partitioned shells).
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "vamana_part_pqr")
-    if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = _vamana_pqr_for(spark, sf_dir).to_partitioned(
-            cells=4, n_probe=2
-        )
-    queries = emb.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding"
+    part = _cached(sf_dir, "vamana_part_pqr", lambda: _vamana_pqr_for(
+        spark, sf_dir
+    ).to_partitioned(cells=4, n_probe=2))
+    out = part.search_batch(
+        _batch_queries(spark, sf_dir), "embedding", "qid", k=5, n_probe=2,
+        rerank=_t(spark, sf_dir, "embeddings"),
     )
-    out = _INDEX_CACHE[key].search_batch(
-        queries, "embedding", "qid", k=5, n_probe=2, rerank=emb
-    )
-    return out.select("qid", "vec_id", F.round("distance", 8).alias("distance"))
+    return _batch_out(out)
 
 
-def _vamana_partitioned_pql_batch_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .index.hnsw import offline_routed_pq_batch
-
-    cents, graphs = _offline_vamana_part_cached(mutable=True)
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    ids = t["vec_id"].to_pylist()
-    vecs = t["embedding"].to_pylist()
-    qs = [(qid, qv) for qid, qv in zip(ids, vecs) if qid % 97 == 0]
-    rows = [
-        (int(qid), int(hid), float(d))
-        for qid, hid, d in offline_routed_pq_batch(
-            cents, graphs, dict(zip(ids, vecs)), qs, 5, 2,
-            local_mk=(16, 32, 5), rerank_mult=48,
-        )
-    ]
-    return (
-        "SELECT qid, vec_id, round(CAST(d AS DOUBLE), 8) AS distance FROM "
-        f"{_hits_values_sql(rows, 'qid, vec_id, d')}"
-    )
-
-
-@_register("ann_vamana_partitioned_pql_batch", _vamana_partitioned_pql_batch_oracle)
+@_register(
+    "ann_vamana_partitioned_pql_batch",
+    lambda: _vamana_part_oracle(local_mk=(16, 32, 5)),
+)
 def q_ann_vamana_partitioned_pql_batch(spark, sf_dir):
     # Per-CELL local PQ codebooks inside cell-partitioned vamana shells
     # (r11): each shell trains books on ITS OWN member rows
@@ -3926,154 +3354,44 @@ def q_ann_vamana_partitioned_pql_batch(spark, sf_dir):
     # granularity, where a frozen global/residual codebook's centers sit
     # between a cell's modes exactly as shard centroids did in r9. No
     # corpus-wide training pass; books are O(m·k·dsub) per shell. Exact
-    # offline replay (offline_routed_pq_batch(local_mk=...) over
+    # offline replay (offline_quantize "pq" with local_mk over
     # offline_vamana_partitioned shells — train_local_pq runs verbatim on
     # the replayed id-sorted cells).
-    from .index.vamana import VamanaIndex
-
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "vamana_part_pql")
-    if key not in _INDEX_CACHE:
-        bkey = (sf_dir, "vamana")
-        if bkey not in _INDEX_CACHE:
-            _INDEX_CACHE[bkey] = VamanaIndex.build(
-                emb, "embedding", "vec_id", shards=4, overlap_eps=0.2, r=16
-            )
-        _INDEX_CACHE[key] = _INDEX_CACHE[bkey].to_partitioned(
-            cells=4, n_probe=2
-        ).quantize_pq_local(m=16, k=32)
-    queries = emb.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding"
+    part = _cached(sf_dir, "vamana_part_pql", lambda: _vamana_for(
+        spark, sf_dir
+    ).to_partitioned(cells=4, n_probe=2).quantize_pq_local(m=16, k=32))
+    out = part.search_batch(
+        _batch_queries(spark, sf_dir), "embedding", "qid", k=5, n_probe=2,
+        rerank=_t(spark, sf_dir, "embeddings"),
     )
-    out = _INDEX_CACHE[key].search_batch(
-        queries, "embedding", "qid", k=5, n_probe=2, rerank=emb
-    )
-    return out.select("qid", "vec_id", F.round("distance", 8).alias("distance"))
+    return _batch_out(out)
 
 
-_OFFLINE_VAMANA_COS_MEMO: dict = {}
-
-
-def _offline_vamana_cos_cached():
-    from .index.vamana import offline_vamana
-
-    key = _oracle_sf()
-    if key not in _OFFLINE_VAMANA_COS_MEMO:
-        _OFFLINE_VAMANA_COS_MEMO[key] = offline_vamana(
-            f"{_oracle_sf()}/embeddings.parquet", "embedding", "vec_id",
-            shards=4, overlap_eps=0.2, r=16, dist="cosine",
-        )
-    return _OFFLINE_VAMANA_COS_MEMO[key]
-
-
-def _vamana_cosine_oracle() -> str:
-    from .index.vamana import offline_vamana_cosine_probe
-
-    hits = offline_vamana_cosine_probe(_offline_vamana_cos_cached(), QUERY_VEC, 10)
-    rows = [(int(i), float(s)) for i, s in hits]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d DESC, vec_id ASC"
-    )
-
-
-@_register("ann_vamana_cosine", _vamana_cosine_oracle)
+@_register("ann_vamana_cosine", lambda: _vamana_oracle("cosine"))
 def q_ann_vamana_cosine(spark, sf_dir):
     # Cosine ops class for the merged-graph tier: the whole build runs on
     # fold-exactly unit-normalized copies (l2 order == cosine order on the
     # unit sphere — the FAISS/ScaNN recipe), walks stay l2, and serving
     # reports EXACT similarities from the stored unit vectors. Exact
     # offline replay (offline_vamana(dist=cosine) +
-    # offline_vamana_cosine_probe).
-    from .index.vamana import VamanaIndex
-
-    key = (sf_dir, "vamana_cos")
-    if key not in _INDEX_CACHE:
-        emb = _t(spark, sf_dir, "embeddings")
-        _INDEX_CACHE[key] = VamanaIndex.build(
-            emb, "embedding", "vec_id", shards=4, overlap_eps=0.2, r=16,
-            dist="cosine",
-        )
-    probe = _INDEX_CACHE[key].probe(QUERY_VEC, 10)
-    return (
-        probe.orderBy(F.col("distance").desc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
-    )
+    # offline_vamana_search(dist=cosine)).
+    probe = _vamana_for(spark, sf_dir, "cosine").probe(QUERY_VEC, 10)
+    return _probe_out(probe, desc=True)
 
 
-def _vamana_cosine_batch_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .index.vamana import offline_vamana_cosine_batch
-
-    g = _offline_vamana_cos_cached()
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    qs = [
-        (qid, qv)
-        for qid, qv in zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist())
-        if qid % 97 == 0
-    ]
-    rows = [
-        (int(qid), int(hid), float(s))
-        for qid, hid, s in offline_vamana_cosine_batch(g, qs, 5)
-    ]
-    return (
-        "SELECT qid, vec_id, round(CAST(d AS DOUBLE), 8) AS distance FROM "
-        f"{_hits_values_sql(rows, 'qid, vec_id, d')}"
-    )
-
-
-@_register("ann_vamana_cosine_batch", _vamana_cosine_batch_oracle)
+@_register("ann_vamana_cosine_batch", lambda: _vamana_oracle("cosine", batch=True))
 def q_ann_vamana_cosine_batch(spark, sf_dir):
     # Batch cosine serving over the merged graph: queries unit-normalize
     # with the same Spark fold the build used, each walk is l2 over the
     # broadcast unit-vector shell, similarities come from the same np.dot
     # the offline replay computes. Exact oracle.
-    from .index.vamana import VamanaIndex
-
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "vamana_cos")
-    if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = VamanaIndex.build(
-            emb, "embedding", "vec_id", shards=4, overlap_eps=0.2, r=16,
-            dist="cosine",
-        )
-    queries = emb.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding"
+    out = _vamana_for(spark, sf_dir, "cosine").search_batch(
+        _batch_queries(spark, sf_dir), "embedding", "qid", k=5
     )
-    out = _INDEX_CACHE[key].search_batch(queries, "embedding", "qid", k=5)
-    return out.select("qid", "vec_id", F.round("distance", 8).alias("distance"))
+    return _batch_out(out)
 
 
-_OFFLINE_VAMANA_IP_MEMO: dict = {}
-
-
-def _offline_vamana_ip_cached():
-    from .index.vamana import offline_vamana
-
-    key = _oracle_sf()
-    if key not in _OFFLINE_VAMANA_IP_MEMO:
-        _OFFLINE_VAMANA_IP_MEMO[key] = offline_vamana(
-            f"{_oracle_sf()}/embeddings.parquet", "embedding", "vec_id",
-            shards=4, overlap_eps=0.2, r=16, dist="ip",
-        )
-    return _OFFLINE_VAMANA_IP_MEMO[key]
-
-
-def _vamana_ip_oracle() -> str:
-    from .index.vamana import offline_vamana_ip_probe
-
-    hits = offline_vamana_ip_probe(_offline_vamana_ip_cached(), QUERY_VEC, 10)
-    rows = [(int(i), float(s)) for i, s in hits]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d DESC, vec_id ASC"
-    )
-
-
-@_register("ann_vamana_ip", _vamana_ip_oracle)
+@_register("ann_vamana_ip", lambda: _vamana_oracle("ip"))
 def q_ann_vamana_ip(spark, sf_dir):
     # MIPS ops class for the merged-graph tier via the published l2
     # reduction (Bachrach et al., RecSys 2014): rows augment with
@@ -4081,98 +3399,50 @@ def q_ann_vamana_ip(spark, sf_dir):
     # inner-product order, the query augments with a literal 0 (keeping
     # the fold dot EXACTLY x.q), and serving reports exact inner
     # products. All ops classes now serve on every index family. Exact
-    # offline replay (offline_vamana(dist=ip) + offline_vamana_ip_probe).
-    from .index.vamana import VamanaIndex
-
-    key = (sf_dir, "vamana_ip")
-    if key not in _INDEX_CACHE:
-        emb = _t(spark, sf_dir, "embeddings")
-        _INDEX_CACHE[key] = VamanaIndex.build(
-            emb, "embedding", "vec_id", shards=4, overlap_eps=0.2, r=16,
-            dist="ip",
-        )
-    probe = _INDEX_CACHE[key].probe(QUERY_VEC, 10)
-    return (
-        probe.orderBy(F.col("distance").desc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
-    )
+    # offline replay (offline_vamana(dist=ip) +
+    # offline_vamana_search(dist=ip)).
+    probe = _vamana_for(spark, sf_dir, "ip").probe(QUERY_VEC, 10)
+    return _probe_out(probe, desc=True)
 
 
-def _vamana_ip_batch_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .index.vamana import offline_vamana_ip_batch
-
-    g = _offline_vamana_ip_cached()
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    qs = [
-        (qid, qv)
-        for qid, qv in zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist())
-        if qid % 97 == 0
-    ]
-    rows = [
-        (int(qid), int(hid), float(s))
-        for qid, hid, s in offline_vamana_ip_batch(g, qs, 5)
-    ]
-    return (
-        "SELECT qid, vec_id, round(CAST(d AS DOUBLE), 8) AS distance FROM "
-        f"{_hits_values_sql(rows, 'qid, vec_id, d')}"
-    )
-
-
-@_register("ann_vamana_ip_batch", _vamana_ip_batch_oracle)
+@_register("ann_vamana_ip_batch", lambda: _vamana_oracle("ip", batch=True))
 def q_ann_vamana_ip_batch(spark, sf_dir):
     # Batch MIPS serving over the merged graph: queries augment with a
     # [q, 0] concat expression, walks are l2 over the broadcast augmented
     # shell, inner products come from the same fold-exact dot the offline
     # replay computes. Exact oracle.
-    from .index.vamana import VamanaIndex
-
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "vamana_ip")
-    if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = VamanaIndex.build(
-            emb, "embedding", "vec_id", shards=4, overlap_eps=0.2, r=16,
-            dist="ip",
-        )
-    queries = emb.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding"
+    out = _vamana_for(spark, sf_dir, "ip").search_batch(
+        _batch_queries(spark, sf_dir), "embedding", "qid", k=5
     )
-    out = _INDEX_CACHE[key].search_batch(queries, "embedding", "qid", k=5)
-    return out.select("qid", "vec_id", F.round("distance", 8).alias("distance"))
+    return _batch_out(out)
 
 
-def _vamana_cosine_partitioned_oracle() -> str:
-    from .index.vamana import offline_vamana_partitioned
-    from .index.hnsw import offline_routed_probe
+def _vamana_sim_partitioned_oracle(dist: str) -> str:
+    """QUERY_VEC probe of the 4-cell cut of the ``dist`` (cosine / ip)
+    merged replay, n_probe 3: the prepped query walks l2 and each angular
+    or augmented-l2 distance converts with the same float expression the
+    Spark facade computes."""
+    from .index.hnsw import offline_routed_search
+    from .index.vamana import _prep_query
 
-    key = (_oracle_sf(), "cos")
-    if key not in _OFFLINE_VAMANA_PART_MEMO:
-        _OFFLINE_VAMANA_PART_MEMO[key] = offline_vamana_partitioned(
-            f"{_oracle_sf()}/embeddings.parquet", "embedding", "vec_id",
-            cells=4, shards=4, overlap_eps=0.2, r=16, dist="cosine",
-            graph=_offline_vamana_cos_cached(),
-        )
-    cents, graphs = _OFFLINE_VAMANA_PART_MEMO[key]
-    hits = offline_routed_probe(cents, graphs, _normalize_q(), 10, 3)
-    # angular -> similarity on unit vectors: sim = 1 - d^2/2, the same
-    # float expression the Spark entry computes
-    rows = [(int(i), float(1.0 - d * d / 2.0)) for i, d in hits]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d DESC, vec_id ASC"
-    )
-
-
-def _normalize_q() -> list[float]:
-    from .index.vamana import _normalize_row
-
-    return _normalize_row([float(x) for x in QUERY_VEC])
+    cents, graphs = _vamana_part_replay(dist)
+    q = [float(x) for x in QUERY_VEC]
+    hits = _point(offline_routed_search(cents, graphs, [(None, _prep_query(dist, q))], 10, 3))
+    if dist == "cosine":
+        # angular -> similarity on unit vectors: sim = 1 - d^2/2
+        return _hits_sql([(i, 1.0 - d * d / 2.0) for i, d in hits], desc=True)
+    # augmented-l2 -> inner product: ip = (M^2 + |q|^2 - d^2) / 2. M^2 is
+    # RE-DERIVED from the parquet with the same folds the build evaluates
+    # (oracle independence: nothing is read back from the Spark index);
+    # |q|^2 is the same fold the serving facade inlines
+    m2 = 0.0
+    for v in _oracle_corpus().vecs:
+        m2 = max(m2, fold.norm_sq([float(x) for x in v]))
+    qsq = fold.norm_sq(q)
+    return _hits_sql([(i, (m2 + qsq - d * d) / 2.0) for i, d in hits], desc=True)
 
 
-@_register("ann_vamana_cosine_partitioned", _vamana_cosine_partitioned_oracle)
+@_register("ann_vamana_cosine_partitioned", lambda: _vamana_sim_partitioned_oracle("cosine"))
 def q_ann_vamana_cosine_partitioned(spark, sf_dir):
     # Cosine serving on the PARTITIONED tier: the cosine-built merged
     # graph (unit vectors) cuts into cells exactly like the l2 tier, the
@@ -4181,64 +3451,16 @@ def q_ann_vamana_cosine_partitioned(spark, sf_dir):
     # identity sim = 1 - d^2/2 (same float expression both sides). The
     # cosine matrix is complete: driver, batch, and any-scale partitioned
     # serving. Exact offline replay.
-    from .index.vamana import VamanaIndex
-
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "vamana_cos_part")
-    if key not in _INDEX_CACHE:
-        ckey = (sf_dir, "vamana_cos")
-        if ckey not in _INDEX_CACHE:
-            _INDEX_CACHE[ckey] = VamanaIndex.build(
-                emb, "embedding", "vec_id", shards=4, overlap_eps=0.2, r=16,
-                dist="cosine",
-            )
-        _INDEX_CACHE[key] = _INDEX_CACHE[ckey].to_partitioned(
-            cells=4, n_probe=3
-        )
+    part = _cached(sf_dir, "vamana_cos_part", lambda: _vamana_for(
+        spark, sf_dir, "cosine"
+    ).to_partitioned(cells=4, n_probe=3))
     # to_partitioned returns the ops-class facade for cosine: it preps
     # the RAW query and converts angular distances with the same
     # sim = 1 - d^2/2 expression the oracle replays
-    probe = _INDEX_CACHE[key].probe(QUERY_VEC, 10, n_probe=3)
-    return (
-        probe.orderBy(F.col("distance").desc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
-    )
+    return _probe_out(part.probe(QUERY_VEC, 10, n_probe=3), desc=True)
 
 
-def _vamana_ip_partitioned_oracle() -> str:
-    from .index.hnsw import offline_routed_probe
-    from .index.vamana import _prep_query, offline_vamana_partitioned
-
-    key = (_oracle_sf(), "ip")
-    if key not in _OFFLINE_VAMANA_PART_MEMO:
-        _OFFLINE_VAMANA_PART_MEMO[key] = offline_vamana_partitioned(
-            f"{_oracle_sf()}/embeddings.parquet", "embedding", "vec_id",
-            cells=4, shards=4, overlap_eps=0.2, r=16, dist="ip",
-            graph=_offline_vamana_ip_cached(),
-        )
-    cents, graphs = _OFFLINE_VAMANA_PART_MEMO[key]
-    # M^2 is RE-DERIVED from the parquet with the same folds the build
-    # evaluates (oracle independence: nothing is read back from the Spark
-    # index); |q|^2 is the same fold the serving facade inlines
-    qsq = fold.norm_sq([float(x) for x in QUERY_VEC])
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(f"{_oracle_sf()}/embeddings.parquet", columns=["embedding"])
-    m2 = 0.0
-    for v in t["embedding"].to_pylist():
-        m2 = max(m2, fold.norm_sq([float(x) for x in v]))
-    qn = _prep_query("ip", [float(x) for x in QUERY_VEC])
-    hits = offline_routed_probe(cents, graphs, qn, 10, 3)
-    # augmented-l2 -> inner product: ip = (M^2 + |q|^2 - d^2) / 2 — the
-    # same float expression the Spark entry computes
-    rows = [(int(i), float((m2 + qsq - d * d) / 2.0)) for i, d in hits]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d DESC, vec_id ASC"
-    )
-
-
-@_register("ann_vamana_ip_partitioned", _vamana_ip_partitioned_oracle)
+@_register("ann_vamana_ip_partitioned", lambda: _vamana_sim_partitioned_oracle("ip"))
 def q_ann_vamana_ip_partitioned(spark, sf_dir):
     # MIPS on the PARTITIONED tier — the last cell of the ops x tier
     # matrix: the augmented merged graph cuts into cells, the [q, 0]
@@ -4247,41 +3469,23 @@ def q_ann_vamana_ip_partitioned(spark, sf_dir):
     # identity ip = (M^2 + |q|^2 - d^2)/2 (same float expression both
     # sides; M^2 is frozen in the index params at build). Exact offline
     # replay.
-    from .index.vamana import VamanaIndex
-
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "vamana_ip_part")
-    if key not in _INDEX_CACHE:
-        ikey = (sf_dir, "vamana_ip")
-        if ikey not in _INDEX_CACHE:
-            _INDEX_CACHE[ikey] = VamanaIndex.build(
-                emb, "embedding", "vec_id", shards=4, overlap_eps=0.2, r=16,
-                dist="ip",
-            )
-        _INDEX_CACHE[key] = _INDEX_CACHE[ikey].to_partitioned(cells=4, n_probe=3)
+    part = _cached(sf_dir, "vamana_ip_part", lambda: _vamana_for(
+        spark, sf_dir, "ip"
+    ).to_partitioned(cells=4, n_probe=3))
     # to_partitioned returns the ops-class facade for ip: it preps the
     # raw query and converts with the exact identity
     # ip = (M^2 + |q|^2 - d^2)/2 (M^2 frozen at build) — the same float
     # expression the oracle replays
-    probe = _INDEX_CACHE[key].probe(QUERY_VEC, 10, n_probe=3)
-    return (
-        probe.orderBy(F.col("distance").desc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
-    )
+    return _probe_out(part.probe(QUERY_VEC, 10, n_probe=3), desc=True)
 
 
 def _vamana_partitioned_filtered_oracle() -> str:
-    from .index.hnsw import offline_routed_probe
+    from .index.hnsw import offline_routed_search
 
-    cents, graphs = _offline_vamana_part_cached()
-    hits = offline_routed_probe(
-        cents, graphs, QUERY_VEC, 10, 3, allowed_ids=_allowed_label2()
-    )
-    rows = [(int(i), float(d)) for i, d in hits]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d ASC, vec_id ASC"
-    )
+    cents, graphs = _vamana_part_replay()
+    return _hits_sql(_point(offline_routed_search(
+        cents, graphs, [(None, QUERY_VEC)], 10, 3, allowed_ids=_oracle_corpus().label2
+    )))
 
 
 @_register("ann_vamana_partitioned_filtered", _vamana_partitioned_filtered_oracle)
@@ -4290,62 +3494,38 @@ def q_ann_vamana_partitioned_filtered(spark, sf_dir):
     # predicate becomes a shard-locally semi-joined allowed set enforced
     # DURING each probed cell's walk (never driver-collected) — top-k
     # among matching rows composed with n_probe cell pruning. Exact
-    # offline replay (offline_routed_probe with allowed_ids).
-    from .index.vamana import VamanaIndex
-
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "vamana_part")
-    if key not in _INDEX_CACHE:
-        vkey = (sf_dir, "vamana")
-        if vkey not in _INDEX_CACHE:
-            _INDEX_CACHE[vkey] = VamanaIndex.build(
-                emb, "embedding", "vec_id", shards=4, overlap_eps=0.2, r=16
-            )
-        _INDEX_CACHE[key] = _INDEX_CACHE[vkey].to_partitioned(
-            cells=4, n_probe=2
-        )
-    probe = _INDEX_CACHE[key].probe(
-        QUERY_VEC, 10, n_probe=3,
-        allowed=emb.filter(F.col("label") == 2).select("vec_id"),
-    )
-    return (
-        probe.orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
-    )
+    # offline replay (offline_routed_search with allowed_ids).
+    part = _cached(sf_dir, "vamana_part", lambda: _vamana_for(spark, sf_dir).to_partitioned(
+        cells=4, n_probe=2
+    ))
+    probe = part.probe(QUERY_VEC, 10, n_probe=3, allowed=_label2(spark, sf_dir))
+    return _probe_out(probe)
 
 
-def _stream_ann_admission_oracle() -> str:
-    import pyarrow.parquet as pq
+def _routed_insert_oracle(keep, batches) -> str:
+    """QUERY_VEC probe (n_probe 2) of a routed replay built over the ids
+    ``keep`` admits, then extended by one offline insert per id predicate
+    in ``batches``, in order."""
+    from .index.hnsw import offline_routed, offline_routed_insert, offline_routed_search
 
-    from .index.hnsw import (
-        offline_routed,
-        offline_routed_insert,
-        offline_routed_probe,
-    )
-
-    path = f"{_oracle_sf()}/embeddings.parquet"
-    cents, graphs = offline_routed(
-        path, "embedding", "vec_id", shards=4, m=8,
-        ef_construction=48, ef_search=48, keep=lambda i: i % 3 == 0,
-    )
-    t = pq.read_table(path, columns=["vec_id", "embedding"])
-    ids = t["vec_id"].to_pylist()
-    vecs = t["embedding"].to_pylist()
-    for b in (1, 2):  # one offline insert per micro-batch, arrival order
+    c = _oracle_corpus()
+    p = _routed_params()
+    cents, graphs = offline_routed(c.path, "embedding", "vec_id", keep=keep, **p)
+    for admit in batches:
         offline_routed_insert(
-            cents, graphs,
-            [(i, v) for i, v in zip(ids, vecs) if i % 3 == b],
-            m=8, ef_construction=48, ef_search=48,
+            cents, graphs, [(i, v) for i, v in zip(c.ids, c.vecs) if admit(i)],
+            m=p["m"], ef_construction=p["ef_construction"], ef_search=p["ef_search"],
         )
-    hits = offline_routed_probe(cents, graphs, QUERY_VEC, 10, n_probe=2)
-    rows = [(int(i), float(d)) for i, d in hits]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d ASC, vec_id ASC"
-    )
+    return _hits_sql(_point(offline_routed_search(cents, graphs, [(None, QUERY_VEC)], 10, 2)))
 
 
-@_register("stream_ann_admission", _stream_ann_admission_oracle)
+@_register(
+    "stream_ann_admission",
+    # one offline insert per micro-batch, arrival order
+    lambda: _routed_insert_oracle(
+        lambda i: i % 3 == 0, [lambda i: i % 3 == 1, lambda i: i % 3 == 2]
+    ),
+)
 def q_stream_ann_admission(spark, sf_dir):
     # STREAMING ANN index maintenance end to end through Structured
     # Streaming: a routed index built on a third of the corpus, then two
@@ -4363,10 +3543,7 @@ def q_stream_ann_admission(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     seed = emb.filter(F.col("vec_id") % 3 == 0)
-    idx = HNSWIndex.build_routed(
-        seed, "embedding", "vec_id", shards=4, m=8,
-        ef_construction=48, ef_search=48,
-    )
+    idx = HNSWIndex.build_routed(seed, "embedding", "vec_id", **_routed_params())
     stage = tempfile.mkdtemp(prefix="annstream_stage_")
     _stage_stream_parts(
         stage,
@@ -4382,38 +3559,19 @@ def q_stream_ann_admission(spark, sf_dir):
         tempfile.mkdtemp(prefix="annstream_ckpt_"),
     )
     q.awaitTermination()
-    probe = ingest.index.probe(QUERY_VEC, 10, n_probe=2)
-    return (
-        probe.orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
-    )
+    return _probe_out(ingest.index.probe(QUERY_VEC, 10, n_probe=2))
 
 
 def _stream_ann_serving_oracle() -> str:
-    import pyarrow.parquet as pq
+    from .index.hnsw import offline_routed_search
 
-    from .index.hnsw import offline_routed_batch
-
-    cents, graphs = _offline_routed_cached()
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    qs = [
-        (qid, qv)
-        for qid, qv in zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist())
-        if qid % 53 == 1
-    ]
-    rows = [
-        (int(qid), int(hid), float(d))
-        for qid, hid, d in offline_routed_batch(cents, graphs, qs, 5, 2)
-    ]
+    cents, graphs = _routed_replay()
+    c = _oracle_corpus()
+    qs = [(qid, qv) for qid, qv in zip(c.ids, c.vecs) if qid % 53 == 1]
     # round-6, not the usual round-8: a query's SELF-distance is exact-zero
     # up to 1-ulp BLAS noise (~1e-8), and 8-dp rounding can't absorb the
     # 0-vs-1e-08 boundary between the streamed and offline walks
-    return (
-        "SELECT qid, vec_id, round(CAST(d AS DOUBLE), 6) AS distance FROM "
-        f"{_hits_values_sql(rows, 'qid, vec_id, d')}"
-    )
+    return _hits_sql(offline_routed_search(cents, graphs, qs, 5, 2), digits=6)
 
 
 @_register("stream_ann_serving", _stream_ann_serving_oracle)
@@ -4428,15 +3586,9 @@ def q_stream_ann_serving(spark, sf_dir):
     # ingestion (ann/dedup admission) AND serving now hold driver rows.
     import tempfile
 
-    from .index.hnsw import HNSWIndex
     from .streaming.ann_serve import serve_stream
 
     emb = _t(spark, sf_dir, "embeddings")
-    rkey = (sf_dir, "hnsw_routed")
-    if rkey not in _INDEX_CACHE:
-        _INDEX_CACHE[rkey] = HNSWIndex.build_routed(
-            emb, "embedding", "vec_id", **_routed_params()
-        )
     queries = emb.filter(F.col("vec_id") % 53 == 1).select(
         F.col("vec_id").alias("qid"), "embedding"
     )
@@ -4455,7 +3607,7 @@ def q_stream_ann_serving(spark, sf_dir):
     )
     out = tempfile.mkdtemp(prefix="annserve_hits_")
     q, _serve = serve_stream(
-        stream, _INDEX_CACHE[rkey], out,
+        stream, _routed_for(spark, sf_dir), out,
         tempfile.mkdtemp(prefix="annserve_ckpt_"),
         "embedding", "qid", k=5, n_probe=2,
     )
@@ -4465,78 +3617,27 @@ def q_stream_ann_serving(spark, sf_dir):
     )
 
 
-def _hnsw_routed_pq_batch_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .index.hnsw import offline_routed_pq_batch
-
-    cents, graphs = _offline_routed_cached(mutable=True)
-    model, _ids, _codes = _offline_pq_cached()
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    ids = t["vec_id"].to_pylist()
-    vecs = t["embedding"].to_pylist()
-    qs = [(qid, qv) for qid, qv in zip(ids, vecs) if qid % 97 == 0]
-    rows = [
-        (int(qid), int(hid), float(d))
-        for qid, hid, d in offline_routed_pq_batch(
-            cents, graphs, dict(zip(ids, vecs)), qs, 5, 2, model
-        )
-    ]
-    return (
-        "SELECT qid, vec_id, round(CAST(d AS DOUBLE), 8) AS distance FROM "
-        f"{_hits_values_sql(rows, 'qid, vec_id, d')}"
-    )
-
-
-@_register("ann_hnsw_routed_pq_batch", _hnsw_routed_pq_batch_oracle)
+@_register(
+    "ann_hnsw_routed_pq_batch",
+    lambda: _routed_quantized_oracle("pq", batch=True, model=_pq_replay()[0]),
+)
 def q_ann_hnsw_routed_pq_batch(spark, sf_dir):
     # Batch serving over PQ-compressed shards: reconstruction-distance
     # walks gather k·rerank_mult candidates per probed shard, exact rerank
     # joins the (qid, id) shortlist to the source + query vectors, windowed
-    # per-query top-k. Exact offline replay (offline_routed_pq_batch).
-    from .index.hnsw import HNSWIndex
-
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "hnsw_routed_pq")
-    if key not in _INDEX_CACHE:
-        rkey = (sf_dir, "hnsw_routed")
-        if rkey not in _INDEX_CACHE:
-            _INDEX_CACHE[rkey] = HNSWIndex.build_routed(
-                emb, "embedding", "vec_id", **_routed_params()
-            )
-        model, _codes = _pq_for(spark, sf_dir)
-        _INDEX_CACHE[key] = _INDEX_CACHE[rkey].quantize_pq(model)
-    queries = emb.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding"
+    # per-query top-k. Exact offline replay (offline_quantize "pq" +
+    # offline_routed_search(rerank=...)).
+    out = _routed_for(spark, sf_dir, "pq").search_batch(
+        _batch_queries(spark, sf_dir), "embedding", "qid", k=5, n_probe=2,
+        rerank=_t(spark, sf_dir, "embeddings"),
     )
-    out = _INDEX_CACHE[key].search_batch(
-        queries, "embedding", "qid", k=5, n_probe=2, rerank=emb
-    )
-    return out.select("qid", "vec_id", F.round("distance", 8).alias("distance"))
+    return _batch_out(out)
 
 
-def _hnsw_routed_pq_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .index.hnsw import offline_routed_pq_probe
-
-    cents, graphs = _offline_routed_cached(mutable=True)
-    model, _ids, _codes = _offline_pq_cached()
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    vecs = dict(zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist()))
-    hits = offline_routed_pq_probe(cents, graphs, vecs, QUERY_VEC, 10, 2, model)
-    rows = [(int(i), float(d)) for i, d in hits]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d ASC, vec_id ASC"
-    )
-
-
-@_register("ann_hnsw_routed_pq_rerank", _hnsw_routed_pq_oracle)
+@_register(
+    "ann_hnsw_routed_pq_rerank",
+    lambda: _routed_quantized_oracle("pq", model=_pq_replay()[0]),
+)
 def q_ann_hnsw_routed_pq_rerank(spark, sf_dir):
     # PQ codes INSIDE the routed shard graphs (ShardedHNSW.quantize_pq):
     # the per-shard vector matrix drops to m=16 bytes/vector (4× denser
@@ -4544,104 +3645,36 @@ def q_ann_hnsw_routed_pq_rerank(spark, sf_dir):
     # reconstructions (ADC), and the shortlist reranks with exact
     # distances against the source table — the FAISS IVF+PQ serving
     # density brought to the sharded-HNSW layout. Exact offline-replay
-    # oracle (offline_routed_pq_probe — same codebooks, walk, and
-    # fold-order rerank arithmetic).
-    from .index.hnsw import HNSWIndex
-
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "hnsw_routed_pq")
-    if key not in _INDEX_CACHE:
-        rkey = (sf_dir, "hnsw_routed")
-        if rkey not in _INDEX_CACHE:
-            _INDEX_CACHE[rkey] = HNSWIndex.build_routed(
-                emb, "embedding", "vec_id", **_routed_params()
-            )
-        model, _codes = _pq_for(spark, sf_dir)
-        _INDEX_CACHE[key] = _INDEX_CACHE[rkey].quantize_pq(model)
-    probe = _INDEX_CACHE[key].probe(QUERY_VEC, 10, n_probe=2, rerank=emb)
-    return (
-        probe.orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
+    # oracle (same codebooks, walk, and fold-order rerank arithmetic).
+    probe = _routed_for(spark, sf_dir, "pq").probe(
+        QUERY_VEC, 10, n_probe=2, rerank=_t(spark, sf_dir, "embeddings")
     )
-
-
-_PQR_MEMO: dict = {}
-
-
-def _offline_pqr_model_cached():
-    """Oracle twin of :func:`_pqr_for`: fold-argmin shard assignment
-    against the replayed routing centroids, elementwise residuals, PQ
-    trained on the ID-SORTED residual matrix (mirroring PQModel.train's
-    full-table path over routed_residual_df)."""
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    from .similarity.pq import PQModel
-
-    key = _oracle_sf()
-    if key not in _PQR_MEMO:
-        cents, _graphs = _offline_routed_cached()
-        t = pq.read_table(
-            f"{key}/embeddings.parquet", columns=["vec_id", "embedding"]
-        )
-        vecs = dict(zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist()))
-        cmat = np.asarray(cents, dtype=np.float64)
-        res_rows = []
-        for rid in sorted(vecs):
-            v = [float(x) for x in vecs[rid]]
-            b = fold.nearest(v, cents)
-            res_rows.append(np.asarray(v, dtype=np.float64) - cmat[b])
-        _PQR_MEMO[key] = PQModel.train_rows(
-            np.asarray(res_rows, dtype=np.float64), m=16, k=32
-        )
-    return _PQR_MEMO[key]
+    return _probe_out(probe)
 
 
 def _pqr_for(spark, sf_dir):
     """Residual PQModel (codebooks over x − routing-centroid[shard]) for
-    the routed build — cached once per sf_dir."""
-    key = (sf_dir, "pqr_model")
-    if key not in _INDEX_CACHE:
-        from .index.hnsw import HNSWIndex, routed_residual_df
-        from .similarity.pq import PQModel
+    the routed build — cached once per sf_dir. Oracle twin: the residual
+    replay ``_pq_replay("routed")`` (fold-argmin shard assignment against
+    the replayed routing centroids, elementwise residuals, PQ trained on
+    the ID-SORTED residual matrix — PQModel.train's full-table path over
+    routed_residual_df)."""
+    from .index.hnsw import routed_residual_df
+    from .similarity.pq import PQModel
 
-        emb = _t(spark, sf_dir, "embeddings")
-        rkey = (sf_dir, "hnsw_routed")
-        if rkey not in _INDEX_CACHE:
-            _INDEX_CACHE[rkey] = HNSWIndex.build_routed(
-                emb, "embedding", "vec_id", **_routed_params()
-            )
-        _INDEX_CACHE[key] = PQModel.train(
-            routed_residual_df(
-                emb, "embedding", "vec_id", _INDEX_CACHE[rkey].centroids
-            ),
-            "__res", "vec_id", m=16, k=32,
-        )
-    return _INDEX_CACHE[key]
+    return _cached(sf_dir, "pqr_model", lambda: PQModel.train(
+        routed_residual_df(
+            _t(spark, sf_dir, "embeddings"), "embedding", "vec_id",
+            _routed_for(spark, sf_dir).centroids,
+        ),
+        "__res", "vec_id", m=16, k=32,
+    ))
 
 
-def _hnsw_routed_pqr_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .index.hnsw import offline_routed_pq_probe
-
-    cents, graphs = _offline_routed_cached(mutable=True)
-    model = _offline_pqr_model_cached()
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    vecs = dict(zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist()))
-    hits = offline_routed_pq_probe(
-        cents, graphs, vecs, QUERY_VEC, 10, 2, model, residual=True
-    )
-    rows = [(int(i), float(d)) for i, d in hits]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d ASC, vec_id ASC"
-    )
-
-
-@_register("ann_hnsw_routed_pqr_rerank", _hnsw_routed_pqr_oracle)
+@_register(
+    "ann_hnsw_routed_pqr_rerank",
+    lambda: _routed_quantized_oracle("pq", model=_pq_replay("routed")[0], residual=True),
+)
 def q_ann_hnsw_routed_pqr_rerank(spark, sf_dir):
     # RESIDUAL PQ codes inside the routed shard graphs (the r9 IVFADC
     # threading the 1.2M drill demanded): each shard's codes quantize
@@ -4651,47 +3684,17 @@ def q_ann_hnsw_routed_pqr_rerank(spark, sf_dir):
     # density (drills/drill_1200k_ivf_tiers.json: 0.128 global vs 0.906
     # residual recall@10 deep). Codebooks train on routed_residual_df;
     # walks decode codeword + frozen centroid; exact rerank against the
-    # source. Exact offline replay (offline_routed_pq_probe(residual)).
-    from .index.hnsw import HNSWIndex
-
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "hnsw_routed_pqr")
-    if key not in _INDEX_CACHE:
-        rkey = (sf_dir, "hnsw_routed")
-        if rkey not in _INDEX_CACHE:
-            _INDEX_CACHE[rkey] = HNSWIndex.build_routed(
-                emb, "embedding", "vec_id", **_routed_params()
-            )
-        model = _pqr_for(spark, sf_dir)
-        _INDEX_CACHE[key] = _INDEX_CACHE[rkey].quantize_pq(model, residual=True)
-    probe = _INDEX_CACHE[key].probe(QUERY_VEC, 10, n_probe=2, rerank=emb)
-    return (
-        probe.orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
+    # source. Exact offline replay (offline_quantize "pq", residual).
+    probe = _routed_for(spark, sf_dir, "pqr").probe(
+        QUERY_VEC, 10, n_probe=2, rerank=_t(spark, sf_dir, "embeddings")
     )
+    return _probe_out(probe)
 
 
-def _hnsw_routed_pql_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .index.hnsw import offline_routed_pq_probe
-
-    cents, graphs = _offline_routed_cached(mutable=True)
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    vecs = dict(zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist()))
-    hits = offline_routed_pq_probe(
-        cents, graphs, vecs, QUERY_VEC, 10, 2, local_mk=(16, 32, 5)
-    )
-    rows = [(int(i), float(d)) for i, d in hits]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d ASC, vec_id ASC"
-    )
-
-
-@_register("ann_hnsw_routed_pql_rerank", _hnsw_routed_pql_oracle)
+@_register(
+    "ann_hnsw_routed_pql_rerank",
+    lambda: _routed_quantized_oracle("pq", local_mk=(16, 32, 5)),
+)
 def q_ann_hnsw_routed_pql_rerank(spark, sf_dir):
     # LOCAL per-shard PQ codebooks (quantize_pq_local) — the PQ twin of
     # BQ's per-shard thresholds, and the multi-modal-shard fix: at
@@ -4701,195 +3704,82 @@ def q_ann_hnsw_routed_pql_rerank(spark, sf_dir):
     # 48 shards over 256 clusters); books trained on just this shard's
     # rows cover its local modes by construction. No global model — each
     # pickled graph carries its own books. Exact offline replay
-    # (offline_routed_pq_probe(local_mk), fold-exact per-shard training
+    # (offline_quantize "pq" with local_mk, fold-exact per-shard training
     # both sides).
-    from .index.hnsw import HNSWIndex
-
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (sf_dir, "hnsw_routed_pql")
-    if key not in _INDEX_CACHE:
-        rkey = (sf_dir, "hnsw_routed")
-        if rkey not in _INDEX_CACHE:
-            _INDEX_CACHE[rkey] = HNSWIndex.build_routed(
-                emb, "embedding", "vec_id", **_routed_params()
-            )
-        _INDEX_CACHE[key] = _INDEX_CACHE[rkey].quantize_pq_local(m=16, k=32)
-    probe = _INDEX_CACHE[key].probe(QUERY_VEC, 10, n_probe=2, rerank=emb)
-    return (
-        probe.orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
+    probe = _routed_for(spark, sf_dir, "pql").probe(
+        QUERY_VEC, 10, n_probe=2, rerank=_t(spark, sf_dir, "embeddings")
     )
+    return _probe_out(probe)
 
 
-def _hnsw_routed_insert_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .index.hnsw import offline_routed, offline_routed_insert, offline_routed_probe
-
-    p = _routed_params()
+@_register(
+    "ann_hnsw_routed_insert",
     # build over vec_id % 7 != 0, then insert the held-out % 7 == 0 rows —
     # the at-scale InsertVectorEntry shape (vector.05-hnsw.slt's
     # insert-after-build, lifted to routed shards)
-    cents, graphs = offline_routed(
-        f"{_oracle_sf()}/embeddings.parquet", "embedding", "vec_id",
-        shards=p["shards"], m=p["m"],
-        ef_construction=p["ef_construction"], ef_search=p["ef_search"],
-        keep=lambda i: i % 7 != 0,
-    )
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    new = [
-        (i, v)
-        for i, v in zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist())
-        if i % 7 == 0
-    ]
-    offline_routed_insert(
-        cents, graphs, new, m=p["m"], ef_construction=p["ef_construction"],
-        ef_search=p["ef_search"],
-    )
-    hits = offline_routed_probe(cents, graphs, QUERY_VEC, 10, n_probe=2)
-    rows = [(int(i), float(d)) for i, d in hits]
-    return (
-        f"SELECT vec_id, round(CAST(d AS DOUBLE), 8) AS distance "
-        f"FROM {_hits_values_sql(rows, 'vec_id, d')} ORDER BY d ASC, vec_id ASC"
-    )
-
-
-@_register("ann_hnsw_routed_insert", _hnsw_routed_insert_oracle)
+    lambda: _routed_insert_oracle(lambda i: i % 7 != 0, [lambda i: i % 7 == 0]),
+)
 def q_ann_hnsw_routed_insert(spark, sf_dir):
     # ShardedHNSW.insert: new rows route to their nearest-centroid shard
     # (frozen centroids), only touched shards extend their graphs; then a
     # pruned probe over the extended index. Exact offline-replay oracle
-    # (offline_routed + offline_routed_insert + offline_routed_probe).
+    # (offline_routed + offline_routed_insert + offline_routed_search).
     from .index.hnsw import HNSWIndex
 
-    key = (sf_dir, "hnsw_routed_ins")
-    if key not in _INDEX_CACHE:
+    def build():
         emb = _t(spark, sf_dir, "embeddings")
         base = HNSWIndex.build_routed(
             emb.filter(F.col("vec_id") % 7 != 0), "embedding", "vec_id",
             **_routed_params(),
         )
-        _INDEX_CACHE[key] = base.insert(emb.filter(F.col("vec_id") % 7 == 0))
-    idx = _INDEX_CACHE[key]
-    return (
-        idx.probe(QUERY_VEC, 10, n_probe=2)
-        .orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-        .select("vec_id", F.round("distance", 8).alias("distance"))
-    )
+        return base.insert(emb.filter(F.col("vec_id") % 7 == 0))
+
+    idx = _cached(sf_dir, "hnsw_routed_ins", build)
+    return _probe_out(idx.probe(QUERY_VEC, 10, n_probe=2))
+
+
+def _hnsw_batch_queries(spark, sf_dir) -> DataFrame:
+    """(qid, qvec) of the embeddings rows with vec_id < 20."""
+    emb = _t(spark, sf_dir, "embeddings")
+    return emb.select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    ).filter(F.col("qid") < 20)
 
 
 @_register("ann_hnsw_batch_search", _hnsw_batch_oracle)
 def q_ann_hnsw_batch_search(spark, sf_dir):
     # distributed batch ANN: broadcast graph + mapInPandas over queries
-    idx = _hnsw_for(spark, sf_dir)
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    ).filter(F.col("qid") < 20)
-    out = idx.search_batch(queries, "qvec", k=3)
-    return out.select("qid", "vec_id", F.round("distance", 8).alias("distance"))
-
-
-def _allowed_label2() -> set:
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "label"])
-    return {
-        i for i, lb in zip(t["vec_id"].to_pylist(), t["label"].to_pylist()) if lb == 2
-    }
-
-
-def _hnsw_batch_filtered_oracle() -> str:
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    g = _offline_hnsw_graph()
-    allowed = _allowed_label2()
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
+    out = _hnsw_for(spark, sf_dir).search_batch(
+        _hnsw_batch_queries(spark, sf_dir), "qvec", k=3
     )
-    rows = []
-    for qid, qv in zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist()):
-        if qid < 20:
-            for hid, d in g.search(
-                np.asarray(qv, dtype=np.float64), 3, allowed_ids=allowed
-            ):
-                rows.append((int(qid), int(hid), float(d)))
-    return (
-        "SELECT qid, vec_id, round(CAST(d AS DOUBLE), 8) AS distance FROM "
-        f"{_hits_values_sql(rows, 'qid, vec_id, d')}"
-    )
+    return _batch_out(out)
 
 
-@_register("ann_hnsw_batch_filtered", _hnsw_batch_filtered_oracle)
+@_register("ann_hnsw_batch_filtered", lambda: _hnsw_batch_oracle(_oracle_corpus().label2))
 def q_ann_hnsw_batch_filtered(spark, sf_dir):
     # filtered BATCH vector search: the allowed-id set (label = 2) is
     # broadcast once beside the graph and enforced in every query's
     # traversal — the batch twin of ann_hnsw_filtered_probe, mirroring
     # IVF's filtered probe_batch. Exact offline replay.
-    idx = _hnsw_for(spark, sf_dir)
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    ).filter(F.col("qid") < 20)
-    out = idx.search_batch(
-        queries, "qvec", k=3, allowed=emb.filter(F.col("label") == 2).select("vec_id")
+    out = _hnsw_for(spark, sf_dir).search_batch(
+        _hnsw_batch_queries(spark, sf_dir), "qvec", k=3, allowed=_label2(spark, sf_dir)
     )
-    return out.select("qid", "vec_id", F.round("distance", 8).alias("distance"))
+    return _batch_out(out)
 
 
-def _hnsw_routed_batch_filtered_oracle() -> str:
-    import pyarrow.parquet as pq
-
-    from .index.hnsw import offline_routed_batch
-
-    cents, graphs = _offline_routed_cached()
-    allowed = _allowed_label2()
-    t = pq.read_table(
-        f"{_oracle_sf()}/embeddings.parquet", columns=["vec_id", "embedding"]
-    )
-    qs = [
-        (qid, qv)
-        for qid, qv in zip(t["vec_id"].to_pylist(), t["embedding"].to_pylist())
-        if qid % 97 == 0
-    ]
-    rows = [
-        (int(qid), int(hid), float(d))
-        for qid, hid, d in offline_routed_batch(
-            cents, graphs, qs, k=5, n_probe=2, allowed_ids=allowed
-        )
-    ]
-    return (
-        "SELECT qid, vec_id, round(CAST(d AS DOUBLE), 8) AS distance FROM "
-        f"{_hits_values_sql(rows, 'qid, vec_id, d')}"
-    )
-
-
-@_register("ann_hnsw_routed_batch_filtered", _hnsw_routed_batch_filtered_oracle)
+@_register(
+    "ann_hnsw_routed_batch_filtered",
+    lambda: _hnsw_routed_batch_oracle(_oracle_corpus().label2),
+)
 def q_ann_hnsw_routed_batch_filtered(spark, sf_dir):
     # filtered batch serving on the at-scale variant: shard routing stays
     # unfiltered (corpus geometry), each probed shard's walks enforce the
     # broadcast allowed-set. Exact offline replay.
-    from .index.hnsw import HNSWIndex
-
-    key = (sf_dir, "hnsw_routed")
-    if key not in _INDEX_CACHE:
-        emb = _t(spark, sf_dir, "embeddings")
-        _INDEX_CACHE[key] = HNSWIndex.build_routed(
-            emb, "embedding", "vec_id", **_routed_params()
-        )
-    idx = _INDEX_CACHE[key]
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding"
+    out = _routed_for(spark, sf_dir).search_batch(
+        _batch_queries(spark, sf_dir), "embedding", "qid", k=5, n_probe=2,
+        allowed=_label2(spark, sf_dir),
     )
-    out = idx.search_batch(
-        queries, "embedding", "qid", k=5, n_probe=2,
-        allowed=emb.filter(F.col("label") == 2).select("vec_id"),
-    )
-    return out.select("qid", "vec_id", F.round("distance", 8).alias("distance"))
+    return _batch_out(out)
 
 
 # =========================================================================

@@ -455,10 +455,20 @@ class IVFPQIndex:
 
 
 def offline_pq(
-    parquet_path: str, vec_col: str, id_col: str, m: int = 8, k: int = 16
+    parquet_path: str,
+    vec_col: str,
+    id_col: str,
+    m: int = 8,
+    k: int = 16,
+    centroids: list[list[float]] | None = None,
 ) -> tuple[PQModel, list, np.ndarray]:
     """Replay train + encode without Spark: (model, ids, codes), a pure
-    function of the parquet contents (id-sorted, same init, same argmin)."""
+    function of the parquet contents (id-sorted, same init, same argmin).
+    ``centroids`` replays a RESIDUAL train (``IVFPQIndex.build(residual=
+    True)``, the routed and vamana residual PQ): the rows are
+    x − centroids[nearest] — the fold argmin the codegen assignment
+    evaluates (first-min ties), an elementwise subtraction (no order to
+    vary)."""
     import pyarrow.parquet as pq_
 
     t = pq_.read_table(parquet_path, columns=[id_col, vec_col])
@@ -472,126 +482,62 @@ def offline_pq(
             "offline_pq only replicates the full-table training path "
             f"({mat.shape[0]}×{mat.shape[1]} cells exceeds the budget)"
         )
+    if centroids is not None:
+        cells = [fold.nearest(p[1], centroids) for p in pairs]
+        mat = mat - np.asarray(centroids, dtype=np.float64)[cells]
     model = PQModel.train_rows(mat, m=m, k=k)
     return model, ids, model.encode_rows(mat)
 
 
-def _adc_fold(lut, row) -> float:
-    return fold.seq_sum(lut[i][int(c)] for i, c in enumerate(row))
-
-
-def _exact_rerank(vectors_by_id: dict, short, query, k: int) -> list[tuple]:
-    """Exact left-fold l2 of each shortlisted id, (d, id)-ordered top-k."""
-    out = [
-        (rid, fold.exact("l2", [float(x) for x in vectors_by_id[rid]], query))
-        for rid in short
-    ]
-    out.sort(key=lambda t: (t[1], t[0]))
-    return out[:k]
-
-
-def offline_pq_adc(
+def offline_pq_search(
     model: PQModel,
     ids: list,
     codes: np.ndarray,
     query: list[float],
-    n: int,
+    k: int,
     metric: str = "l2",
+    rerank: tuple | None = None,
+    centroids: list[list[float]] | None = None,
+    probe_lists: int | None = None,
+    residual: bool = False,
 ) -> list[tuple]:
-    """Replay adc_topk with the same left-fold arithmetic as the codegen
-    expression (sequential adds over subspaces; sqrt for l2)."""
-    lut = model.lut(query, metric)
-    out = []
-    for rid, row in zip(ids, codes):
-        s = _adc_fold(lut, row)
-        out.append((rid, math.sqrt(s) if metric == "l2" else s))
-    asc = metric == "l2"
-    out.sort(key=lambda t: (t[1] if asc else -t[1], t[0]))
-    return out[:n]
+    """Replay PQ serving without Spark: ADC over the codes with the same
+    left-fold arithmetic as the codegen expression (sequential adds over
+    subspaces; sqrt for l2), (distance, id)-ordered (score desc for ip).
 
+    - alone: ``adc_topk`` — the k best ADC rows.
+    - ``rerank=(vectors_by_id, shortlist)``: ``pq_rerank_topk`` — the
+      ``shortlist`` best ADC ids rerank with the exact left-fold l2.
+    - ``centroids`` (with ``probe_lists`` and ``rerank``):
+      ``IVFPQIndex.probe`` — rows assign to cells by the fold argmin
+      (first-min ties), the probe_lists nearest cells rank driver-style
+      (fold.rank_centroids), only their rows are scored; ``residual``
+      scores each cell with the LUT of q − centroid[cell] (codes from
+      ``offline_pq(centroids=...)``).
 
-def offline_ivfpq_probe(
-    centroids: list[list[float]],
-    model: PQModel,
-    ids: list,
-    codes: np.ndarray,
-    vectors_by_id: dict,
-    query: list[float],
-    k: int,
-    probe_lists: int,
-    rerank: int,
-) -> list[tuple]:
-    """Replay ``IVFPQIndex.probe``: bucket assignment by the same left-fold
-    argmin the codegen expression evaluates (first-min ties), driver-style
-    bucket ranking (math.dist), ADC over probed buckets, exact left-fold
-    l2 re-rank of the shortlist."""
-    assign = {
-        rid: fold.nearest([float(x) for x in vectors_by_id[rid]], centroids)
-        for rid in ids
-    }
-    probed = set(fold.rank_centroids("l2", centroids, query)[:probe_lists])
-
-    lut = model.lut(query)
-    adc = []
-    for rid, row in zip(ids, codes):
-        if assign[rid] not in probed:
-            continue
-        adc.append((rid, math.sqrt(_adc_fold(lut, row))))
-    adc.sort(key=lambda t: (t[1], t[0]))
-    return _exact_rerank(vectors_by_id, [rid for rid, _ in adc[:rerank]], query, k)
-
-
-def offline_ivfpq_residual_probe(
-    centroids: list[list[float]],
-    vectors_by_id: dict,
-    query: list[float],
-    k: int,
-    probe_lists: int,
-    rerank: int,
-    m: int = 16,
-    k_codes: int = 32,
-) -> list[tuple]:
-    """Replay ``IVFPQIndex.build(residual=True).probe``: same fold-argmin
-    bucket assignment, residuals x − centroid[bucket] (elementwise —
-    order-free), PQ TRAINED ON THE ID-SORTED RESIDUALS (mirroring
-    PQModel.train's full-table path over _residual_df), per-bucket query
-    LUT from q − centroid[b], left-fold ADC, exact l2 re-rank."""
-    ids = sorted(vectors_by_id)
-    cents = np.asarray(centroids, dtype=np.float64)
-    assign = {}
-    res_rows = []
-    for rid in ids:
-        v = [float(x) for x in vectors_by_id[rid]]
-        b = fold.nearest(v, centroids)
-        assign[rid] = b
-        res_rows.append(np.asarray(v, dtype=np.float64) - cents[b])
-    res_mat = np.asarray(res_rows, dtype=np.float64)
-    model = PQModel.train_rows(res_mat, m=m, k=k_codes)
-    codes = model.encode_rows(res_mat)
-
-    probed = fold.rank_centroids("l2", centroids, query)[:probe_lists]
+    Returns [(id, distance or score)]."""
     q = np.asarray(query, dtype=np.float64)
-    luts = {b: model.lut([float(x) for x in (q - cents[b])]) for b in probed}
-    probed_set = set(probed)
-    adc = []
+    if centroids is None:
+        lut = model.lut(query, metric)
+    else:
+        probed = fold.rank_centroids("l2", centroids, query)[:probe_lists]
+        cmat = np.asarray(centroids, dtype=np.float64)
+        luts = {
+            b: model.lut([float(x) for x in (q - cmat[b])] if residual else query)
+            for b in probed
+        }
+    scored = []
     for rid, row in zip(ids, codes):
-        b = assign[rid]
-        if b not in probed_set:
-            continue
-        adc.append((rid, math.sqrt(_adc_fold(luts[b], row))))
-    adc.sort(key=lambda t: (t[1], t[0]))
-    return _exact_rerank(vectors_by_id, [rid for rid, _ in adc[:rerank]], query, k)
-
-
-def offline_pq_rerank(
-    model: PQModel,
-    ids: list,
-    codes: np.ndarray,
-    vectors_by_id: dict,
-    query: list[float],
-    k: int,
-    rerank_mult: int = 4,
-) -> list[tuple]:
-    """Replay pq_rerank_topk: ADC shortlist, exact left-fold l2 rerank."""
-    short = [rid for rid, _ in offline_pq_adc(model, ids, codes, query, k * rerank_mult)]
-    return _exact_rerank(vectors_by_id, short, query, k)
+        if centroids is not None:
+            cell = fold.nearest([float(x) for x in rerank[0][rid]], centroids)
+            if cell not in luts:
+                continue
+            lut = luts[cell]
+        s = fold.seq_sum(lut[i][int(c)] for i, c in enumerate(row))
+        scored.append((rid, math.sqrt(s) if metric == "l2" else s))
+    asc = metric == "l2"
+    scored.sort(key=lambda t: (t[1] if asc else -t[1], t[0]))
+    if rerank is None:
+        return scored[:k]
+    short = [rid for rid, _ in scored[: rerank[1]]]
+    return fold.exact_rerank("l2", rerank[0], short, query, k)

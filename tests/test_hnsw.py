@@ -1513,9 +1513,9 @@ def test_stamped_harvest_ef_offline_replay_parity(emb, sf_dir):
     import pyarrow.parquet as pq
 
     from bustub_vectordb_spark.index.hnsw import (
+        offline_quantize,
         offline_routed,
-        offline_routed_bq_batch,
-        offline_routed_bq_probe,
+        offline_routed_search,
     )
     from bustub_vectordb_spark.similarity.quantize import dim_stats
 
@@ -1542,11 +1542,11 @@ def test_stamped_harvest_ef_offline_replay_parity(emb, sf_dir):
         (r["vec_id"], r["distance"])
         for r in bq.probe(QUERY, 5, n_probe=2, rerank=emb).collect()
     ]
+    offline_quantize(graphs, "bq", mins, maxs)
     exp = [
         (int(i), float(d))
-        for i, d in offline_routed_bq_probe(
-            cents, graphs, by_id, QUERY, 5, 2, mins, maxs,
-            rerank_mult=6, ef=64,
+        for _qid, i, d in offline_routed_search(
+            cents, graphs, [(None, QUERY)], 5, 2, rerank=(by_id, 6, 64)
         )
     ]
     assert got == exp
@@ -1561,16 +1561,10 @@ def test_stamped_harvest_ef_offline_replay_parity(emb, sf_dir):
         ).collect()
     )
     qs = [(r["qid"], list(r["embedding"])) for r in queries.collect()]
-    # the replayed graphs were quantized in place by the probe leg —
-    # rebuild fresh floats for the batch replay
-    cents, graphs = offline_routed(
-        f"{sf_dir}/embeddings.parquet", "embedding", "vec_id", **build
-    )
     bexp = sorted(
         (int(qid), int(hid), float(d))
-        for qid, hid, d in offline_routed_bq_batch(
-            cents, graphs, by_id, qs, 5, 2, mins, maxs,
-            rerank_mult=6, ef=64,
+        for qid, hid, d in offline_routed_search(
+            cents, graphs, qs, 5, 2, rerank=(by_id, 6, 64)
         )
     )
     assert bgot == bexp

@@ -298,16 +298,20 @@ def _py4j_commands(spark, fn) -> int:
 
 
 def test_vector_expression_round_trips_scale_free(spark):
-    """Building (not running) an IVFFlat probe, batch probe and insert and a
-    routed-HNSW batch search takes the same number of driver→JVM round
-    trips whatever the vector dimension and the centroid count: every
-    vector literal (query, centroid table) goes to the JVM as one piece of
-    SQL text, and the distance folds are a fixed number of Column nodes.
-    Built one ``F.lit`` per element, a 64×256 centroid table alone was
-    tens of thousands of round trips."""
+    """Building (not running) an IVFFlat probe, batch probe and insert, a
+    routed-HNSW batch search and the Bloom-filter flags takes the same
+    number of driver→JVM round trips whatever the vector dimension and the
+    centroid (or Bloom word) count, and so does the hash split of
+    ``split_oversized_cells`` whatever the cell count: every literal
+    (query, centroid table, Bloom words, per-cell bases) goes to the JVM as
+    one piece of SQL text, and the distance folds are a fixed number of
+    Column nodes. Built one ``F.lit`` per element, a 64×256 centroid table
+    alone was tens of thousands of round trips."""
     import random
 
     from bustub_vectordb_spark.index import IVFFlatIndex, ShardedHNSW
+    from bustub_vectordb_spark.index.ivfflat import split_oversized_cells
+    from bustub_vectordb_spark.operators.bloom import bloom_contamination_flags
 
     def ops(dim, lists):
         rnd = random.Random(dim * 1000 + lists)
@@ -333,12 +337,26 @@ def test_vector_expression_round_trips_scale_free(spark):
             spark, centroids=cents, params={"replicated": False},
         )
         q = vec()
+        docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+        words = [rnd.getrandbits(64) - (1 << 63) for _ in range(lists)]
+        # 40 identical rows in cell 0 of ``lists`` cells: the spatial split
+        # cannot separate them, so the md5 hash split runs over every cell
+        cells = spark.createDataFrame(
+            [(i, [0.5, 0.5], 0) for i in range(40)],
+            "id long, v array<double>, __shard int",
+        )
         return {
             "probe": lambda: ivf.probe(q, 5),
             "probe_batch": lambda: ivf.probe_batch(queries, "qv", "qid", 5),
             "insert": lambda: ivf.insert(rows),
             "search_batch": lambda: routed.search_batch(
                 queries, "qv", "qid", 5, n_probe=2
+            ),
+            "bloom": lambda: bloom_contamination_flags(
+                docs, words, "text", "doc_id", m_bits=64 * lists
+            ),
+            "split": lambda: split_oversized_cells(
+                cells, "id", "v", [[float(c), 0.0] for c in range(lists)], 4
             ),
         }
 
@@ -351,3 +369,31 @@ def test_vector_expression_round_trips_scale_free(spark):
         for dim, lists in [(8, 4), (256, 4), (8, 64), (256, 64)]
     }
     assert all(c == counts[(8, 4)] for c in counts.values()), counts
+
+
+def test_one_call_integer_literals_keep_types_and_values(spark):
+    """The Bloom words (signed 64-bit, −2⁶³ included) and the hash-split
+    bases of ``split_oversized_cells`` are one-call literals with the types
+    and values their one-``F.lit``-per-element forms had."""
+    from bustub_vectordb_spark.index.ivfflat import split_oversized_cells
+    from bustub_vectordb_spark.operators.bloom import _words_lit
+
+    words = [0, 1, -1, -(1 << 63), (1 << 63) - 1, -5]
+    old = F.array(*[F.lit(w).cast("long") for w in words])
+    df = spark.range(1).select(_words_lit(words).alias("new"), old.alias("old"))
+    assert df.schema["new"].dataType == df.schema["old"].dataType
+    assert df.collect()[0]["new"] == words
+
+    # cell 0 holds 40 identical rows: 10 spatial sub-cells that cannot
+    # separate them, then a hash split of sub-cell 0 into ceil(40/8) = 5
+    cells = spark.createDataFrame(
+        [(i, [0.5, 0.5], 0) for i in range(40)],
+        "id long, v array<double>, __shard int",
+    )
+    out, flat = split_oversized_cells(
+        cells, "id", "v", [[0.0, 0.0], [9.0, 0.0], [0.0, 9.0]], 4
+    )
+    assert out.schema["__shard"].dataType == cells.schema["__shard"].dataType
+    got = sorted(r["__shard"] for r in out.collect())
+    assert len(got) == 40 and set(got) <= set(range(5)) and len(set(got)) > 1
+    assert len(flat) == 2 + 10 + 4

@@ -11,7 +11,7 @@ from bustub_vectordb_spark.similarity.brute import knn
 from bustub_vectordb_spark.similarity.pq import (
     PQModel,
     offline_pq,
-    offline_pq_adc,
+    offline_pq_search,
     pq_rerank_topk,
 )
 
@@ -94,7 +94,7 @@ def test_pq_offline_replay_matches_spark(emb, pq, sf_dir):
     for rid, row in zip(ids, ocodes):
         assert spark_codes[rid] == [int(c) for c in row]
     want = [
-        (i, round(d, 8)) for i, d in offline_pq_adc(omodel, ids, ocodes, QUERY, 10)
+        (i, round(d, 8)) for i, d in offline_pq_search(omodel, ids, ocodes, QUERY, 10)
     ]
     got = [
         (r["vec_id"], round(r["distance"], 8))

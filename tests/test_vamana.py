@@ -128,9 +128,10 @@ def test_pq_serving_exact_rerank_and_codes_only(emb, vamana, spark, sf_dir, tmp_
     codebooks."""
     import numpy as np
 
+    from bustub_vectordb_spark.index.hnsw import offline_quantize
     from bustub_vectordb_spark.index.vamana import (
         offline_vamana,
-        offline_vamana_pq_probe,
+        offline_vamana_search,
     )
     from bustub_vectordb_spark.similarity.pq import PQModel
 
@@ -155,9 +156,10 @@ def test_pq_serving_exact_rerank_and_codes_only(emb, vamana, spark, sf_dir, tmp_
         shards=4, overlap_eps=0.2, r=16,
     )
     by_id = {r["vec_id"]: list(r["embedding"]) for r in emb.collect()}
-    want = offline_vamana_pq_probe(og, by_id, QUERY, 10, model)
+    offline_quantize({0: og}, "pq", model=model)
+    want = offline_vamana_search(og, [(None, QUERY)], 10, rerank=(by_id, 48, None))
     assert [(r["vec_id"], r["distance"]) for r in got] == [
-        (i, float(d)) for i, d in want
+        (i, float(d)) for _qid, i, d in want
     ]
 
     # save/load keeps codebooks and probes identically
@@ -228,10 +230,7 @@ def test_partitioned_serving_matches_offline_replay(emb, vamana, sf_dir):
     """to_partitioned: cell-sharded serving of the merged graph replays
     bit-exactly (same centroid training, routing fold, in-cell edge
     restriction, entry selection, walks, merge ordering)."""
-    from bustub_vectordb_spark.index.hnsw import (
-        offline_routed_batch,
-        offline_routed_probe,
-    )
+    from bustub_vectordb_spark.index.hnsw import offline_routed_search
     from bustub_vectordb_spark.index.vamana import offline_vamana_partitioned
 
     part = vamana.to_partitioned(cells=4, n_probe=2)
@@ -241,7 +240,10 @@ def test_partitioned_serving_matches_offline_replay(emb, vamana, sf_dir):
     )
     q = [0.1 * ((i % 7) - 3) for i in range(64)]
     got = [(r["vec_id"], r["distance"]) for r in part.probe(q, 10, n_probe=2).collect()]
-    exp = [(int(i), float(d)) for i, d in offline_routed_probe(cents, graphs, q, 10, 2)]
+    exp = [
+        (int(i), float(d))
+        for _qid, i, d in offline_routed_search(cents, graphs, [(None, q)], 10, 2)
+    ]
     assert got == exp
 
     queries = emb.filter(F.col("vec_id") % 97 == 0).select(
@@ -254,7 +256,7 @@ def test_partitioned_serving_matches_offline_replay(emb, vamana, sf_dir):
     qs = [(r["qid"], list(r["embedding"])) for r in queries.collect()]
     ebt = sorted(
         (int(qid), int(hid), float(d))
-        for qid, hid, d in offline_routed_batch(cents, graphs, qs, 5, 2)
+        for qid, hid, d in offline_routed_search(cents, graphs, qs, 5, 2)
     )
     assert bt == ebt
 
@@ -266,10 +268,7 @@ def test_partitioned_replicated_matches_offline_and_dedups(emb, vamana, sf_dir):
     in-cell edge restriction keeps boundary neighborhoods alive. The cut
     must (a) actually replicate, (b) serve deduped ids, and (c) replay
     bit-exactly through the offline twin's mirrored closure rule."""
-    from bustub_vectordb_spark.index.hnsw import (
-        offline_routed_batch,
-        offline_routed_probe,
-    )
+    from bustub_vectordb_spark.index.hnsw import offline_routed_search
     from bustub_vectordb_spark.index.vamana import offline_vamana_partitioned
 
     with pytest.raises(ValueError, match="replicate_eps"):
@@ -290,7 +289,8 @@ def test_partitioned_replicated_matches_offline_and_dedups(emb, vamana, sf_dir):
         for r in part.probe(q, 10, n_probe=2).collect()
     ]
     exp = [
-        (int(i), float(d)) for i, d in offline_routed_probe(cents, graphs, q, 10, 2)
+        (int(i), float(d))
+        for _qid, i, d in offline_routed_search(cents, graphs, [(None, q)], 10, 2)
     ]
     assert got == exp
     assert len({i for i, _ in got}) == 10  # replicas deduped in the top-k
@@ -307,7 +307,7 @@ def test_partitioned_replicated_matches_offline_and_dedups(emb, vamana, sf_dir):
     qs = [(r["qid"], list(r["embedding"])) for r in queries.collect()]
     ebt = sorted(
         (int(qid), int(hid), float(d))
-        for qid, hid, d in offline_routed_batch(cents, graphs, qs, 5, 2)
+        for qid, hid, d in offline_routed_search(cents, graphs, qs, 5, 2)
     )
     assert bt == ebt
 
@@ -317,7 +317,7 @@ def test_partitioned_replicated_composes_with_local_books(emb, vamana):
     a REPLICATED cut trains each cell's books on its members INCLUDING
     replicas, serves deduped ids, and the offline twin composes the two
     features bit-exactly (replicated shells + local_mk replay)."""
-    from bustub_vectordb_spark.index.hnsw import offline_routed_pq_batch
+    from bustub_vectordb_spark.index.hnsw import offline_quantize, offline_routed_search
     from bustub_vectordb_spark.index.vamana import offline_vamana_partitioned
 
     pql = vamana.to_partitioned(
@@ -341,11 +341,11 @@ def test_partitioned_replicated_composes_with_local_books(emb, vamana):
     )
     by_id = {r["vec_id"]: list(r["embedding"]) for r in emb.collect()}
     qs = [(r["qid"], list(r["embedding"])) for r in queries.collect()]
+    offline_quantize(graphs, "pq", local_mk=(16, 32, 5))
     want = sorted(
         (int(qid), int(hid), float(d))
-        for qid, hid, d in offline_routed_pq_batch(
-            cents, graphs, by_id, qs, 5, 2, local_mk=(16, 32, 5),
-            rerank_mult=48,
+        for qid, hid, d in offline_routed_search(
+            cents, graphs, qs, 5, 2, rerank=(by_id, 48, None)
         )
     )
     assert got == want
@@ -356,7 +356,7 @@ def test_partitioned_replicated_pqr_parity(emb, vamana):
     members carry residual codes by their own frozen entry-cell
     assignment (independent of which serving cells hold them), and the
     offline twin composes closure assignment + pq_centers bit-exactly."""
-    from bustub_vectordb_spark.index.hnsw import offline_routed_pq_batch
+    from bustub_vectordb_spark.index.hnsw import offline_quantize, offline_routed_search
     from bustub_vectordb_spark.index.vamana import offline_vamana_partitioned
     from bustub_vectordb_spark.similarity.pq import PQModel
 
@@ -381,11 +381,11 @@ def test_partitioned_replicated_pqr_parity(emb, vamana):
     )
     by_id = {r["vec_id"]: list(r["embedding"]) for r in emb.collect()}
     qs = [(r["qid"], list(r["embedding"])) for r in queries.collect()]
+    offline_quantize(graphs, "pq", model=model, pq_centers=pqr.params["pq_centers"])
     want = sorted(
         (int(qid), int(hid), float(d))
-        for qid, hid, d in offline_routed_pq_batch(
-            cents, graphs, by_id, qs, 5, 2, model,
-            pq_centers=pqr.params["pq_centers"], rerank_mult=48,
+        for qid, hid, d in offline_routed_search(
+            cents, graphs, qs, 5, 2, rerank=(by_id, 48, None)
         )
     )
     assert got == want
@@ -444,7 +444,7 @@ def test_partitioned_pq_local_books(emb, vamana, spark, sf_dir, tmp_path):
     rows — offline replay parity (train_local_pq runs verbatim on the
     replayed id-sorted cells), exact rerank distances, and save/load
     parity through the partitioned loader."""
-    from bustub_vectordb_spark.index.hnsw import offline_routed_pq_batch
+    from bustub_vectordb_spark.index.hnsw import offline_quantize, offline_routed_search
     from bustub_vectordb_spark.index.vamana import (
         load_partitioned,
         offline_vamana_partitioned,
@@ -468,11 +468,12 @@ def test_partitioned_pq_local_books(emb, vamana, spark, sf_dir, tmp_path):
     )
     by_id = {r["vec_id"]: list(r["embedding"]) for r in emb.collect()}
     qs = [(r["qid"], list(r["embedding"])) for r in queries.collect()]
+    offline_quantize(graphs, "pq", local_mk=(16, 32, 5))
     want = sorted(
         (int(qid), int(hid), float(d))
-        for qid, hid, d in offline_routed_pq_batch(
-            cents, graphs, by_id, qs, 5, 2, local_mk=(16, 32, 5),
-            rerank_mult=48,  # the quantized vamana-partitioned default
+        for qid, hid, d in offline_routed_search(
+            cents, graphs, qs, 5, 2,
+            rerank=(by_id, 48, None),  # the quantized vamana-partitioned default
         )
     )
     assert got == want
@@ -544,87 +545,47 @@ def test_partitioned_serving_is_frozen(emb, vamana, spark):
         part.insert(new)
 
 
-def test_cosine_build_serves_exact_similarities(emb, spark, sf_dir):
+@pytest.mark.parametrize("dist", ["cosine", "ip"])
+def test_similarity_build_serves_exact_values(emb, spark, sf_dir, dist):
     """dist="cosine": the merged graph builds over fold-exactly normalized
-    copies (l2 == cosine order on the unit sphere), probe/search_batch
-    report EXACT cosine similarities (vs brute-force values), and the
-    offline replay matches bit-for-bit."""
+    copies (l2 == cosine order on the unit sphere); dist="ip": MIPS via
+    the augmentation reduction (Bachrach et al. 2014) — l2 walks over
+    [x, sqrt(M^2-|x|^2)] rows equal inner-product order, and the [q, 0]
+    fold adds zero. Either way probe/search_batch report the EXACT
+    similarity (vs brute-force values) and the offline replay matches
+    bit-for-bit."""
     import numpy as np
 
     from bustub_vectordb_spark.index.vamana import (
         offline_vamana,
-        offline_vamana_cosine_batch,
-        offline_vamana_cosine_probe,
+        offline_vamana_search,
     )
 
     v = VamanaIndex.build(
-        emb, "embedding", "vec_id", shards=4, overlap_eps=0.2, r=16,
-        dist="cosine",
+        emb, "embedding", "vec_id", shards=4, overlap_eps=0.2, r=16, dist=dist
     )
     q = [0.1 * ((i % 7) - 3) for i in range(64)]
     got = [(r["vec_id"], r["distance"]) for r in v.probe(q, 10).collect()]
     g = offline_vamana(
         f"{sf_dir}/embeddings.parquet", "embedding", "vec_id",
-        shards=4, overlap_eps=0.2, r=16, dist="cosine",
+        shards=4, overlap_eps=0.2, r=16, dist=dist,
     )
-    assert got == [(int(i), float(s)) for i, s in offline_vamana_cosine_probe(g, q, 10)]
+    assert got == [
+        (int(i), float(s))
+        for _qid, i, s in offline_vamana_search(g, [(None, q)], 10, dist)
+    ]
 
-    # similarities are the TRUE cosine values for the returned ids
+    # similarities are the TRUE cosine / inner-product values for the
+    # returned ids
     rows = {r["vec_id"]: np.asarray(r["embedding"]) for r in emb.collect()}
     qn = np.asarray(q)
     for hid, sim in got:
-        true = float(rows[hid] @ qn / (np.linalg.norm(rows[hid]) * np.linalg.norm(qn)))
+        true = float(rows[hid] @ qn)
+        if dist == "cosine":
+            true /= np.linalg.norm(rows[hid]) * np.linalg.norm(qn)
         assert sim == pytest.approx(true, abs=1e-9)
-    # recall vs exact cosine KNN
-    exact = {r["vec_id"] for r in knn(emb, "embedding", q, 10, dist="cosine").collect()}
-    assert len({i for i, _ in got} & exact) / 10 >= 0.9
-
-    queries = emb.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding"
-    )
-    bt = sorted(
-        (r["qid"], r["vec_id"], r["distance"])
-        for r in v.search_batch(queries, "embedding", "qid", k=5).collect()
-    )
-    qs = [(r["qid"], list(r["embedding"])) for r in queries.collect()]
-    ebt = sorted(
-        (int(qid), int(hid), float(s))
-        for qid, hid, s in offline_vamana_cosine_batch(g, qs, 5)
-    )
-    assert bt == ebt
-
-    with pytest.raises(ValueError, match="l2, cosine"):
-        VamanaIndex.build(emb, "embedding", "vec_id", dist="hamming")
-
-
-def test_ip_build_serves_exact_inner_products(emb, spark, sf_dir):
-    """dist="ip": MIPS via the augmentation reduction (Bachrach et al.
-    2014) — l2 walks over [x, sqrt(M^2-|x|^2)] rows equal inner-product
-    order, probe/search_batch report EXACT x.q (the [q, 0] fold adds
-    zero), offline replay matches bit-for-bit."""
-    import numpy as np
-
-    from bustub_vectordb_spark.index.vamana import (
-        offline_vamana,
-        offline_vamana_ip_batch,
-        offline_vamana_ip_probe,
-    )
-
-    v = VamanaIndex.build(
-        emb, "embedding", "vec_id", shards=4, overlap_eps=0.2, r=16, dist="ip"
-    )
-    q = [0.1 * ((i % 7) - 3) for i in range(64)]
-    got = [(r["vec_id"], r["distance"]) for r in v.probe(q, 10).collect()]
-    g = offline_vamana(
-        f"{sf_dir}/embeddings.parquet", "embedding", "vec_id",
-        shards=4, overlap_eps=0.2, r=16, dist="ip",
-    )
-    assert got == [(int(i), float(s)) for i, s in offline_vamana_ip_probe(g, q, 10)]
-
-    rows = {r["vec_id"]: np.asarray(r["embedding"]) for r in emb.collect()}
-    for hid, ip in got:
-        assert ip == pytest.approx(float(rows[hid] @ np.asarray(q)), abs=1e-9)
-    exact = {r["vec_id"] for r in knn(emb, "embedding", q, 10, dist="ip").collect()}
+    # recall vs exact KNN of the same metric
+    exact = {r["vec_id"] for r in knn(emb, "embedding", q, 10, dist=dist).collect()}
     assert len({i for i, _ in got} & exact) / 10 >= 0.9
 
     queries = emb.filter(F.col("vec_id") % 97 == 0).select(
@@ -637,8 +598,12 @@ def test_ip_build_serves_exact_inner_products(emb, spark, sf_dir):
     qs = [(r["qid"], list(r["embedding"])) for r in queries.collect()]
     assert bt == sorted(
         (int(qid), int(hid), float(s))
-        for qid, hid, s in offline_vamana_ip_batch(g, qs, 5)
+        for qid, hid, s in offline_vamana_search(g, qs, 5, dist)
     )
+
+    if dist == "cosine":
+        with pytest.raises(ValueError, match="l2, cosine"):
+            VamanaIndex.build(emb, "embedding", "vec_id", dist="hamming")
 
 
 def test_quantize_pq_refuses_dim_mismatched_model(emb, spark):

@@ -348,6 +348,49 @@ def test_fold_twins_match_spark_bitwise(spark, name):
                 assert [_bits(float(x)) for x in vals] == want, name
 
 
+@pytest.mark.parametrize("dist", ["l2", "ip", "cosine"])
+def test_rank_centroids_matches_spark_array_sort(spark, dist):
+    """``fold.rank_centroids`` (driver-side routing of a point probe) ranks
+    centroids exactly as the batch paths route in codegen: Spark's
+    ``array_sort`` over (``col_centroid_score``, index) structs. The
+    centroid sets are ulp-close copies of one vector, so any differently
+    rounded score (``math.dist`` against the l2² fold) reorders
+    near-ties."""
+    import numpy as np
+
+    from bustub_vectordb_spark import fold
+
+    rng = np.random.RandomState(23)
+    rows = []
+    for i in range(60):
+        q = rng.standard_normal(8)
+        base = rng.standard_normal(8)
+        cents = []
+        for _ in range(12):
+            c = base.copy()
+            for j in range(8):
+                for _ in range(rng.randint(0, 4)):
+                    c[j] = np.nextafter(c[j], np.inf if rng.rand() < 0.5 else -np.inf)
+            cents.append(c.tolist())
+        rows.append((i, q.tolist(), cents))
+    df = spark.createDataFrame(rows, "id int, q array<double>, c array<array<double>>")
+    ranked = F.transform(
+        F.array_sort(
+            F.transform(
+                F.col("c"),
+                lambda c, i: F.struct(
+                    fold.col_centroid_score(dist, F.col("q"), c).alias("d"),
+                    i.alias("b"),
+                ),
+            )
+        ),
+        lambda s: s["b"],
+    )
+    got = {r["id"]: list(r["r"]) for r in df.select("id", ranked.alias("r")).collect()}
+    for i, q, cents in rows:
+        assert fold.rank_centroids(dist, cents, q) == got[i], (dist, i)
+
+
 def test_sql_vec_lit_round_trips_bitwise(spark):
     """The one-call literal reads back as the same doubles (sign of zero,
     subnormals, ±max, NaN, ±inf) with the array<double> type the Column

@@ -7,12 +7,13 @@ significant digits before comparing to absorb fp noise).
 
 Every entry's line also carries two hashes of its Spark output: ``6g`` over
 that canonical form and ``repr`` over the same rows with full-precision
-``repr`` values, so two commits' outputs can be compared byte for byte:
+``repr`` values, plus ``oracle``, a hash of the entry's DuckDB SQL text, so
+two commits' outputs and oracles can be compared byte for byte:
 
     python tools/check_oracle.py SF > a.txt   # at commit A
     python tools/check_oracle.py SF > b.txt   # at commit B
-    diff <(grep -o '^[A-Za-z]* [^ :]*\|repr:[0-9a-f]*' a.txt) \
-         <(grep -o '^[A-Za-z]* [^ :]*\|repr:[0-9a-f]*' b.txt)
+    diff <(grep -o '^[A-Za-z]* [^ :]*\|repr:[0-9a-f]*\|oracle:[0-9a-f]*' a.txt) \
+         <(grep -o '^[A-Za-z]* [^ :]*\|repr:[0-9a-f]*\|oracle:[0-9a-f]*' b.txt)
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -62,8 +63,11 @@ def digest(cols, rows, norm=norm_val) -> str:
     return hashlib.sha256(repr((c, r)).encode()).hexdigest()[:16]
 
 
-def hashes(cols, rows) -> str:
-    return f"6g:{digest(cols, rows)} repr:{digest(cols, rows, repr)}"
+def hashes(cols, rows, sql: str | None = None) -> str:
+    out = f"6g:{digest(cols, rows)} repr:{digest(cols, rows, repr)}"
+    if sql is not None:
+        out += f" oracle:{hashlib.sha256(sql.encode()).hexdigest()[:16]}"
+    return out
 
 
 def main():
@@ -147,11 +151,11 @@ def main():
         if ok:
             print(
                 f"PASS {name} ({len(sr)} rows) [{time.time()-t0:.1f}s] "
-                f"{hashes(scols, srows)}"
+                f"{hashes(scols, srows, oracles[name])}"
             )
             n_pass += 1
         else:
-            print(f"     {name} spark output {hashes(scols, srows)}")
+            print(f"     {name} spark output {hashes(scols, srows, oracles[name])}")
             n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_weak} weak (rows-only)")
     spark.stop()
