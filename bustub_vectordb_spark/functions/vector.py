@@ -21,12 +21,13 @@ math is C++ double).
 
 from __future__ import annotations
 
+import json
 from collections.abc import Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..fold import col_dot, col_l2_sq, col_norm_sq, sql_vec_lit, sql_vecs_lit
+from ..fold import col_dot, col_l2_sq, col_norm_sq
 
 ColumnOrName = Column | str
 
@@ -40,24 +41,18 @@ def _as_double_array(c: ColumnOrName | Sequence[float]) -> Column:
 
 def vec_lit(values: Sequence[float]) -> Column:
     """ARRAY [..] literal → array<double> (ref ArrayExpression,
-    src/include/execution/expressions/array_expression.h:27-44), built in
-    one ``F.expr`` call (fold.py's SQL text), not one ``F.lit`` per element."""
-    return F.expr(sql_vec_lit(values))
-
-
-# one F.expr parse holds its whole parse tree at once: a 500×500 table in
-# one call ran a 1 GB driver heap out of memory, one call per row did not
-_ONE_CALL_MAX_CELLS = 65_536
+    src/include/execution/expressions/array_expression.h:27-44), one
+    foldable node: ``from_json`` over one JSON string of the floats."""
+    return F.from_json(F.lit(json.dumps([float(v) for v in values])), "array<double>")
 
 
 def vecs_lit(rows: Sequence[Sequence[float]]) -> Column:
     """array<array<double>> literal of :func:`vec_lit` rows (a centroid
-    table, a lookup table, a rotation matrix): one ``F.expr`` call up to
-    ``_ONE_CALL_MAX_CELLS`` cells, one per row past it (the same
-    expression either way)."""
-    if sum(len(r) for r in rows) <= _ONE_CALL_MAX_CELLS:
-        return F.expr(sql_vecs_lit(rows))
-    return F.array(*[vec_lit(r) for r in rows])
+    table, a lookup table, a rotation matrix), one foldable node at any
+    size."""
+    return F.from_json(
+        F.lit(json.dumps([[float(v) for v in r] for r in rows])), "array<array<double>>"
+    )
 
 
 def inner_product(a: ColumnOrName | Sequence[float], b: ColumnOrName | Sequence[float]) -> Column:

@@ -13,25 +13,30 @@ Reference semantics (src/storage/index/ivfflat_index.cpp):
 Spark-first re-expression (this is the reference capability that fits Spark
 best — batch index construction):
   * The centroid set is tiny (lists × dim doubles) and lives on the driver /
-    in literals; the *assignments* relation (id, bucket, vector) is the big
-    distributed state and never leaves executors.
-  * Assignment = argmin over a literal array of centroid vectors, evaluated
-    in whole-stage codegen (transform + array_min + array_position). No UDF,
-    no shuffle.
+    in one-node plan literals (``functions.vector.vecs_lit``); the
+    *assignments* relation (id, bucket, vector) is the big distributed state
+    and never leaves executors.
+  * Assignment = argmin over the literal centroid table: one left-to-right
+    pass over (l2², index) per row. No UDF, no shuffle.
   * Centroid recomputation = groupBy(bucket).agg(avg(vec[i]) per dimension) —
     map-side partial aggregation, one shuffle of lists×dim values per
     iteration regardless of data size.
+  * Build stores the assignments as an eager local checkpoint: a leaf the
+    index owns, which probe, batch probe and insert start from without
+    re-analyzing the build's plan; ``shipping.release_checkpoint`` frees it.
   * Probe = bucket filter (partition-pruned when the assignments table is
     written partitioned by bucket) + TakeOrderedAndProject top-k.
 
 At 100 TB: build cost is max_iter scans (each embarrassingly parallel);
-lists should be ~sqrt(N). Small centroid sets inline as plan literals
-(codegen argmin); past ``_LITERAL_ASSIGN_MAX_CELLS`` (65,536 cells, e.g.
-256 centroids × 256 dims) the assignment switches to ``_assign_via_broadcast`` —
-the centroid matrix broadcast once per executor, per-Arrow-batch numpy
-argmin, zero shuffle. Probe touches only probe_lists/lists of the data —
-with bucket-partitioned storage that is partition pruning, not a filter
-scan.
+lists should be ~sqrt(N). Every literal is one plan node whatever its size,
+so plan analysis does not grow with lists × dim; execution does: the
+literal argmin scores lists × dim cells per row in interpreted higher-order
+functions, so past ``_LITERAL_ASSIGN_MAX_CELLS`` (65,536 cells, e.g. 256
+centroids × 256 dims) the assignment switches to ``_assign_via_broadcast`` —
+the centroid matrix broadcast once per executor, one numpy matmul argmin per
+Arrow batch (20× faster at that size), zero shuffle. Probe touches only
+probe_lists/lists of the data — with bucket-partitioned storage that is
+partition pruning, not a filter scan.
 """
 
 from __future__ import annotations
@@ -80,7 +85,7 @@ def _nearest_centroid(vec: Column, centroids: list[list[float]]) -> Column:
     strict minimum: null distances are skipped (a null vector → null), and
     Spark orders NaN above every number, so an all-NaN row → 0 — the
     answers of ``array_position(d, array_min(d)) - 1``, which would put the
-    centroid table into the plan twice (twice the analysis)."""
+    centroid table into the plan twice."""
     scored = F.transform(
         vecs_lit(centroids),
         lambda c, i: F.struct(fold.col_l2_sq(vec, c).alias("d"), i.alias("b")),
@@ -96,10 +101,12 @@ def _nearest_centroid(vec: Column, centroids: list[list[float]]) -> Column:
     )
 
 
-# literal-centroid assignment embeds lists × dim doubles into the plan; past
-# this budget switch to the broadcast numpy variant. Analysis alone grows
-# with the cells (local[2], 1 GB driver heap: ~3 s at 256×256, ~16 s at
-# 500×500 for the table literal, out of memory at 1,000×1,000)
+# literal-centroid assignment scores every row against lists × dim cells
+# with interpreted higher-order functions; past this budget the broadcast
+# numpy argmin runs instead. The literal is one plan node at any size, so the
+# budget is execution time: over 2,000 rows (local[2]) the literal argmin
+# executed in 8.4 s at 256×256 cells and 41 s at 1,024×256, the broadcast
+# argmin in 0.4 s and 0.4-0.8 s (the two meet near 16×64: 0.30 against 0.35 s)
 _LITERAL_ASSIGN_MAX_CELLS = 65_536
 
 
@@ -107,8 +114,9 @@ def _assign_via_broadcast(
     df: DataFrame, vec_col: str, centroids: list[list[float]], out_col=None
 ) -> DataFrame:
     """Bucket assignment for LARGE centroid sets (lists ≈ √N at 100 TB can
-    be 10k × 768 dims ≈ 60 MB — too big to inline as a plan literal, and a
-    cross-join against a centroid table would multiply rows ×lists).
+    be 10k × 768 dims ≈ 60 MB — too slow to score per row in higher-order
+    functions, and a cross-join against a centroid table would multiply
+    rows ×lists).
 
     Broadcast the centroid matrix once per executor, argmin per Arrow batch
     with one matrix multiply (‖x−c‖² = ‖x‖² − 2x·c + ‖c‖², row term
@@ -153,9 +161,9 @@ def assign_nearest(
 ) -> DataFrame:
     """Nearest-centroid assignment with the scale switch every routing
     consumer shares (IVF assignment, routed-HNSW builds and inserts,
-    partitioned-vamana cells): literal codegen argmin below
-    ``_LITERAL_ASSIGN_MAX_CELLS`` plan-literal cells, broadcast numpy
-    argmin past it. ``vec_col`` must already be array<double>."""
+    partitioned-vamana cells): the literal argmin up to
+    ``_LITERAL_ASSIGN_MAX_CELLS`` centroid cells, broadcast numpy argmin
+    past it. ``vec_col`` must already be array<double>."""
     if len(centroids) * len(centroids[0]) <= _LITERAL_ASSIGN_MAX_CELLS:
         return df.withColumn(
             out_col, _nearest_centroid(F.col(vec_col), centroids)
@@ -528,8 +536,12 @@ class IVFFlatIndex:
         else:
             assignments = _assign_via_broadcast(src, vec_col, centroids)
         if cache:
-            assignments = assignments.cache()
-            assignments.count()  # materialize once; probes hit the cache
+            # materialize once into a leaf this index owns: probes, batch
+            # probes and inserts start from it without re-analyzing the
+            # build's plan, and a second build over the same input gets a
+            # leaf of its own (a cache() entry is shared by every equal
+            # plan). shipping.release_checkpoint frees it.
+            assignments = assignments.localCheckpoint(eager=True)
         return cls(vec_col, lists, probe_lists, dist, centroids, assignments)
 
     # -- probe ------------------------------------------------------------

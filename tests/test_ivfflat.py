@@ -61,6 +61,47 @@ def test_insert_after_build(emb, ivf, spark):
     assert ivf.assignments.count() + 1 == ivf2.assignments.count()
 
 
+def test_indexes_own_their_storage(spark, emb):
+    """Two IVFFlat indexes built over the same input plan each hold their
+    assignments in a checkpoint leaf of their own: releasing one leaves the
+    other fully stored (so it probes without recomputing its assignments)
+    and answering as before. A cache() entry is shared by every equal
+    plan, so unpersisting one index's would drop the other's."""
+    from bustub_vectordb_spark.shipping import release_checkpoint
+
+    src = emb.filter(F.col("vec_id") != -104729)  # a plan no other test caches
+
+    def build():
+        return IVFFlatIndex.build(
+            src, "embedding", lists=8, probe_lists=2, max_iter=5, init_order="vec_id"
+        )
+
+    def leaf_rdd(idx):
+        return idx.assignments._jdf.queryExecution().analyzed().rdd()
+
+    def stored():
+        return {
+            i.id(): i.numCachedPartitions()
+            for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        }
+
+    def answer(idx):
+        return [(r["vec_id"], r["distance"]) for r in idx.probe(QUERY, 10).collect()]
+
+    a, b = build(), build()
+    ra, rb = leaf_rdd(a), leaf_rdd(b)
+    assert ra.id() != rb.id()
+    want = answer(b)
+    assert answer(a) == want
+    release_checkpoint(a.assignments)
+    held = stored()
+    assert ra.id() not in held
+    assert held.get(rb.id()) == rb.getNumPartitions()
+    assert answer(b) == want
+    release_checkpoint(b.assignments)
+    assert rb.id() not in stored()
+
+
 def test_index_selection_rule(emb, ivf):
     reg = VectorIndexRegistry()
     reg.create("emb_ivf", "embeddings", "embedding", "ivfflat", ivf)
@@ -154,6 +195,7 @@ def test_nearest_centroid_edge_rows(spark):
     vector or an all-null row, 0 for an all-NaN row, and NaN distances
     rank last."""
     from bustub_vectordb_spark import fold
+    from bustub_vectordb_spark.functions.vector import vecs_lit
     from bustub_vectordb_spark.index.ivfflat import _nearest_centroid
 
     inf, nan = float("inf"), float("nan")
@@ -164,7 +206,7 @@ def test_nearest_centroid_edge_rows(spark):
     ]
     df = spark.createDataFrame(list(enumerate(vecs)), "id int, v array<double>")
     dists = F.transform(
-        F.expr(fold.sql_vecs_lit(cents)), lambda c: fold.col_l2_sq(F.col("v"), c)
+        vecs_lit(cents), lambda c: fold.col_l2_sq(F.col("v"), c)
     )
     ref = (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
     rows = df.select(

@@ -249,6 +249,7 @@ def test_index_build_job_counts(spark, tables):
     job must show up here. The input carries a filter no other test uses,
     so no earlier test's cached plan can satisfy a build's cache()."""
     from bustub_vectordb_spark.index import HNSWIndex, IVFFlatIndex, VamanaIndex
+    from bustub_vectordb_spark.shipping import release_checkpoint
 
     emb = tables["embeddings"].filter(F.col("vec_id") != -7919)
     built = {}
@@ -271,9 +272,9 @@ def test_index_build_job_counts(spark, tables):
             lambda: VamanaIndex.build(emb, "embedding", "vec_id", shards=4),
         ),
     }
-    built["ivf"].assignments.unpersist()
+    release_checkpoint(built["ivf"].assignments)
     built["routed"].blobs.unpersist()
-    assert got == {"ivfflat": 8, "hnsw_routed": 8, "vamana": 6}, got
+    assert got == {"ivfflat": 6, "hnsw_routed": 8, "vamana": 6}, got
 
 
 def _py4j_commands(spark, fn) -> int:
@@ -369,6 +370,106 @@ def test_vector_expression_round_trips_scale_free(spark):
         for dim, lists in [(8, 4), (256, 4), (8, 64), (256, 64)]
     }
     assert all(c == counts[(8, 4)] for c in counts.values()), counts
+
+
+def _analyzed_nodes(df) -> int:
+    """Plan and expression nodes of ``df``'s analyzed plan (a literal is
+    one node, whatever its value)."""
+    return df._jdf.queryExecution().analyzed().toJSON().count('"class":')
+
+
+def test_analyzed_plan_size_scale_free(spark, monkeypatch):
+    """The analyzed plans of an IVFFlat probe, batch probe and insert, of
+    the literal nearest-centroid assignment (at and below its cell cap) and
+    of a routed-HNSW batch search and insert's routing have the same node
+    count at 4 × 8 and at 256 × 256 (lists × dim): every vector and centroid
+    table is one literal node, not one node per element."""
+    import random
+
+    import bustub_vectordb_spark.index.ivfflat as ivfflat
+    from bustub_vectordb_spark.index import IVFFlatIndex, ShardedHNSW
+
+    class Routed(Exception):
+        pass
+
+    def routing_of_insert(routed, rows):
+        """The routing plan a routed insert builds, before it runs a job."""
+        seen = []
+
+        def record(*args, **kwargs):
+            seen.append(assign(*args, **kwargs))
+            raise Routed
+
+        assign = ivfflat.assign_nearest
+        with monkeypatch.context() as m:
+            m.setattr(ivfflat, "assign_nearest", record)
+            with pytest.raises(Routed):
+                routed.insert(rows)
+        return seen[0]
+
+    def sizes(lists, dim):
+        rnd = random.Random(lists * 1000 + dim)
+
+        def vec():
+            return [rnd.gauss(0.0, 1.0) for _ in range(dim)]
+
+        cents = [vec() for _ in range(lists)]
+        ivf = IVFFlatIndex(
+            "v", lists, 2, "l2", cents,
+            spark.createDataFrame(
+                [(i, vec(), i % lists) for i in range(4)],
+                "id long, v array<double>, __bucket int",
+            ),
+        )
+        queries = spark.createDataFrame(
+            [(i, vec()) for i in range(3)], "qid long, qv array<double>"
+        )
+        rows = spark.createDataFrame([(99, vec())], "id long, v array<double>")
+        routed = ShardedHNSW(
+            "v", "id", "l2",
+            spark.createDataFrame([(0, b"")], "shard long, blob binary"),
+            spark, centroids=cents, params={"replicated": False},
+        )
+        assert lists * dim <= ivfflat._LITERAL_ASSIGN_MAX_CELLS
+        plans = {
+            "probe": ivf.probe(vec(), 5),
+            "probe_batch": ivf.probe_batch(queries, "qv", "qid", 5),
+            "insert": ivf.insert(rows).assignments,
+            "assign_nearest": ivfflat.assign_nearest(rows, "v", cents, "b"),
+            "search_batch": routed.search_batch(queries, "qv", "qid", 5, n_probe=2),
+            "routed_insert": routing_of_insert(routed, rows),
+        }
+        return {name: _analyzed_nodes(df) for name, df in plans.items()}
+
+    small, large = sizes(4, 8), sizes(256, 256)
+    assert small == large, (small, large)
+
+
+def test_table_literal_analyzes_at_1000_by_1000(spark):
+    """A 1,000 × 1,000 table literal (one million doubles) builds, analyzes
+    and constant-folds inside the default 1 GB driver heap, as one node;
+    as one node per element this table ran the heap out of memory."""
+    import random
+
+    from bustub_vectordb_spark.functions.vector import vecs_lit
+
+    rnd = random.Random(7)
+    rows = [[rnd.gauss(0.0, 1.0) for _ in range(1000)] for _ in range(1000)]
+    m = vecs_lit(rows)
+    df = spark.range(1).select(
+        F.size(m).alias("n"),
+        F.element_at(F.element_at(m, 1000), 1000).alias("last"),
+        F.aggregate(F.flatten(m), F.lit(0.0), lambda s, v: s + v).alias("total"),
+    )
+    big = spark.range(1).select(F.size(m).alias("n"))
+    tiny = spark.range(1).select(F.size(vecs_lit([[0.5] * 8] * 4)).alias("n"))
+    assert _analyzed_nodes(big) == _analyzed_nodes(tiny)
+    r = df.collect()[0]
+    total = 0.0
+    for row in rows:
+        for v in row:
+            total = total + v
+    assert (r["n"], r["last"], r["total"]) == (1000, rows[-1][-1], total)
 
 
 def test_one_call_integer_literals_keep_types_and_values(spark):

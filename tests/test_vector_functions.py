@@ -199,6 +199,13 @@ def _bits(v):
     return "nan" if v != v else struct.pack(">d", v).hex()
 
 
+def _sql_lit(values) -> str:
+    """SQL text of ``vec_lit``'s one-node literal."""
+    import json
+
+    return f"from_json('{json.dumps(values)}', 'array<double>')"
+
+
 def _fold_rows():
     """24 random 64-d (a, b) row pairs; rows 1-9 carry -0.0, subnormals,
     ±max, NaN and ±inf, and row 9 an exactly-zero dot product (so the
@@ -296,8 +303,6 @@ def test_fold_twins_match_spark_bitwise(spark, name):
     must not)."""
     import numpy as np
 
-    from bustub_vectordb_spark import fold
-
     col_fold, sql_fold, py_twin, np_twins = _fold_cases()[name]
     a_mat, b_mat = _fold_rows()
     n = len(a_mat)
@@ -321,7 +326,7 @@ def test_fold_twins_match_spark_bitwise(spark, name):
             .select(
                 *[
                     F.expr(
-                        sql_fold(fold.sql_vec_lit(a_rows[i]), fold.sql_vec_lit(b_rows[i]))
+                        sql_fold(_sql_lit(a_rows[i]), _sql_lit(b_rows[i]))
                     ).alias(f"l{i}")
                     for i in range(n)
                 ]
@@ -392,43 +397,29 @@ def test_rank_centroids_matches_spark_array_sort(spark, dist):
 
 
 def test_sql_vec_lit_round_trips_bitwise(spark):
-    """The one-call literal reads back as the same doubles (sign of zero,
+    """The one-node literals read back as the same doubles (sign of zero,
     subnormals, ±max, NaN, ±inf) with the array<double> type the Column
-    literal had, containsNull included."""
+    literal had, containsNull included, for a vector and for a table."""
     from pyspark.sql.types import ArrayType, DoubleType
 
-    from bustub_vectordb_spark import fold
+    from bustub_vectordb_spark.functions.vector import vecs_lit
 
     a_mat, _ = _fold_rows()
     vals = [x for row in a_mat[:10].tolist() for x in row]
     vals += [-_MAX, float("-inf"), -5e-324, 1e16, 0.1, 3]
+    edge = [[1.5, -0.0, float("nan")], [5e-324, float("inf"), -_MAX]]
     df = spark.range(1).select(
         vec_lit(vals).alias("v"),
-        F.expr(fold.sql_vecs_lit([vals[:3], vals[3:8]])).alias("m"),
+        vecs_lit([vals[:3], vals[3:8]]).alias("m"),
+        vecs_lit(edge).alias("e"),
         F.array(*[F.lit(float(x)) for x in vals[:3]]).cast("array<double>").alias("c"),
     )
     assert df.schema["v"].dataType == ArrayType(DoubleType(), True)
     assert df.schema["v"].dataType == df.schema["c"].dataType
+    assert df.schema["e"].dataType == ArrayType(ArrayType(DoubleType(), True), True)
     r = df.collect()[0]
     assert [_bits(x) for x in r["v"]] == [_bits(float(x)) for x in vals]
-    assert [[_bits(x) for x in row] for row in r["m"]] == [
-        [_bits(float(x)) for x in row] for row in (vals[:3], vals[3:8])
-    ]
-
-
-def test_vecs_lit_row_by_row_past_one_call_cap(spark, monkeypatch):
-    """Past ``_ONE_CALL_MAX_CELLS`` a table literal is parsed one row per
-    ``F.expr`` call; it is the same expression, type and bits as the
-    one-call form."""
-    import bustub_vectordb_spark.functions.vector as fv
-
-    rows = [[1.5, -0.0, float("nan")], [5e-324, float("inf"), -_MAX]]
-    one = fv.vecs_lit(rows)
-    monkeypatch.setattr(fv, "_ONE_CALL_MAX_CELLS", 2)
-    per_row = fv.vecs_lit(rows)
-    df = spark.range(1).select(one.alias("a"), per_row.alias("b"))
-    assert df.schema["a"].dataType == df.schema["b"].dataType
-    r = df.collect()[0]
-    want = [[_bits(x) for x in row] for row in rows]
-    assert [[_bits(x) for x in row] for row in r["a"]] == want
-    assert [[_bits(x) for x in row] for row in r["b"]] == want
+    for col, rows in (("m", (vals[:3], vals[3:8])), ("e", edge)):
+        assert [[_bits(x) for x in row] for row in r[col]] == [
+            [_bits(float(x)) for x in row] for row in rows
+        ]

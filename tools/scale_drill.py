@@ -491,7 +491,6 @@ def main():
             emb, "embedding", lists=args.ivf_lists,
             probe_lists=args.n_probe * 2, init_order="vec_id",
         )
-        ivf.assignments.cache().count()
         times["ivf_build"] = round(time.time() - t0, 1)
         _log(f"ivf build done {times['ivf_build']}s")
 
