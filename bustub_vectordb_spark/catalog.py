@@ -133,12 +133,6 @@ class Catalog:
     def table(self, name: str) -> DataFrame:
         return self.tables[name].df
 
-    # -- testdata loading --------------------------------------------------
-    def load_sf_dir(self, sf_dir: str, tables: tuple[str, ...] = TESTDATA_TABLES) -> None:
-        """Register every parquet table of a driver testdata dir."""
-        for t in tables:
-            self.register(t, read_table(self.spark, sf_dir, t))
-
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
     """Enforce the engine's events.ts contract: BIGINT nanoseconds since epoch.

@@ -101,19 +101,3 @@ def ngram_jaccard_pairs(
     )
     return j.filter(F.col("jaccard") >= threshold).select("id1", "id2", "jaccard")
 
-
-def ngram_jaccard_dedup(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float = 0.6,
-    n: int = 2,
-) -> DataFrame:
-    """Drop near-duplicates: for each pair with J ≥ threshold keep the lower id
-    (single propagation step, same policy as minhash_dedup)."""
-    victims = (
-        ngram_jaccard_pairs(df, text_col, id_col, threshold, n)
-        .select(F.col("id2").alias(id_col))
-        .distinct()
-    )
-    return df.join(victims, id_col, "left_anti")

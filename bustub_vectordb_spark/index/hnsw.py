@@ -31,7 +31,7 @@ from __future__ import annotations
 import heapq
 import math
 import random
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 import numpy as np
 
@@ -1316,8 +1316,10 @@ class HNSWIndex:
         blobs = _pin_cpu_groups(routed, "__shard").groupBy("__shard").applyInPandas(
             build_one, "shard long, blob binary"
         )
+        # an eager checkpoint leaf this index owns: a cache() entry would be
+        # shared by every build over an equal plan, and released with it
         return ShardedHNSW(
-            vec_col, id_col, dist, blobs.cache(), df.sparkSession,
+            vec_col, id_col, dist, blobs.localCheckpoint(eager=True), df.sparkSession,
             centroids=centroids, id_type=_id_type(df, id_col),
             params=dict(m=m, ef_construction=ef_construction,
                         ef_search=ef_search, seed=seed,
@@ -1374,6 +1376,125 @@ class HNSWIndex:
 
 class DamagedIndexError(RuntimeError):
     """A saved index lacks a part its own metadata says it was saved with."""
+
+
+def tier_rerank_mult(params: dict | None) -> int:
+    """Default rerank shortlist depth of the storage form ``params``
+    records: 4x for SQ8/PQ (near-lossless codes), 16x for 1-bit BQ — the
+    2.2M drill measured recall 0.478 -> 0.718 at IDENTICAL serving
+    wall-clock (the rerank join is broadcast-sized either way); a coarse
+    1-bit ADC ranking needs the deeper exact pass."""
+    return 16 if "bq_mins" in (params or {}) else 4
+
+
+def _storage_form(
+    kind: str,
+    mins=None,
+    maxs=None,
+    local: bool = True,
+    rotation_seed: int | None = None,
+    model=None,
+    residual: bool = False,
+    pq_centers=None,
+    local_mk=None,
+) -> dict:
+    """The params record of one shard storage form — what the
+    ``ShardedHNSW.quantize*`` methods freeze into params and
+    :func:`_quantize_shard` applies to a graph:
+
+    - ``"sq8"``: the per-dim affine bounds ``mins``/``maxs``.
+    - ``"bq"``: ``mins``/``maxs`` are the frozen fallback thresholds;
+      ``local`` lets a graph with rows take its own per-dim min/max;
+      ``rotation_seed`` adds the seeded orthonormal rotation (the fallback
+      bounds become the rotated box's enclosure).
+    - ``"pq"``: ``model``'s global codebooks; ``residual`` codes each shard
+      against its routing centroid, ``pq_centers`` against one frozen
+      multi-center set (vamana's entry cells); ``local_mk`` = (m, k,
+      max_iter) instead trains codebooks on each graph's own rows."""
+    if kind == "sq8":
+        return dict(
+            sq8_mins=[float(x) for x in mins], sq8_maxs=[float(x) for x in maxs]
+        )
+    if kind == "bq":
+        mins = [float(x) for x in mins]
+        maxs = [float(x) for x in maxs]
+        form = dict(bq_local=bool(local))
+        if rotation_seed is not None:
+            from ..similarity.bq import rotation_matrix
+
+            rot = rotation_matrix(len(mins), int(rotation_seed))
+            # the record holds ROTATED-space fallback bounds: that is the
+            # space the frozen thresholds live in for empty-born shards
+            mins, maxs = _rotate_bounds(mins, maxs, np.asarray(rot))
+            # FREEZE the rotation floats (O(dim²) ≈ 32 KB at 64 dims, the
+            # same footprint class as pq_books): LAPACK QR output is not
+            # guaranteed bit-identical across BLAS builds, so a worker
+            # re-deriving the matrix from the seed could encode with
+            # ULP-different floats than the rest of the index and the
+            # offline replay. Every consumer reads these floats; the seed
+            # stays for provenance.
+            form.update(bq_rot_seed=int(rotation_seed), bq_rot=rot)
+        return dict(form, bq_mins=mins, bq_maxs=maxs)
+    if kind == "pq" and local_mk is not None:
+        m, k, it = (int(x) for x in local_mk)
+        return dict(pq_local=1, pq_local_m=m, pq_local_k=k, pq_local_iter=it)
+    if kind == "pq":
+        form = dict(
+            pq_books=[[[float(x) for x in row] for row in b] for b in model.centroids],
+            pq_bounds=[[int(s), int(e)] for s, e in model.bounds],
+        )
+        if residual:
+            form["pq_residual"] = 1
+        if pq_centers is not None:
+            form["pq_centers"] = pq_centers
+        return form
+    raise ValueError(f"unknown storage form {kind!r}")
+
+
+def _quantize_shard(g: _Graph, params: dict, centroid=None) -> bool:
+    """Store one shard graph, in place, in the form ``params`` records (a
+    record without one leaves the graph float) — the one storage-form rule
+    the re-encode pass, insert's empty-born shards, the offline replays and
+    vamana's cell shells share. A graph with rows takes its own thresholds
+    or codebooks where the form is local; an empty graph takes the frozen
+    fallback. ``centroid`` is the shard's routing centroid, the residual
+    center of a ``pq_residual`` record.
+
+    Returns True when the form waits for rows: local PQ leaves an empty
+    graph float, and its books train on its first batch (call again after
+    ``add_all``)."""
+    p = params
+    rows = g.vecs is not None and len(g.ids) > 0
+    if "pq_books" in p:
+        centers = p.get("pq_centers")
+        if centers is None and p.get("pq_residual"):
+            centers = [centroid]
+        g.quantize_pq(p["pq_books"], p["pq_bounds"], centers=centers)
+    elif p.get("pq_local"):
+        if not rows:
+            return True
+        g.quantize_pq(*train_local_pq(
+            g.vecs, p.get("pq_local_m", 16), p.get("pq_local_k", 32),
+            p.get("pq_local_iter", 5),
+        ))
+    elif "sq8_mins" in p:
+        g.quantize_sq8(p["sq8_mins"], p["sq8_maxs"])
+    elif "bq_mins" in p:
+        if p.get("bq_rot") is None and p.get("bq_rot_seed") is not None:
+            raise DamagedIndexError(
+                "params record a BQ rotation seed but not its frozen "
+                "rotation (bq_rot); re-quantize the index"
+            )
+        rot = p.get("bq_rot")
+        rot = np.asarray(rot, dtype=np.float64) if rot is not None else None
+        if p.get("bq_local") and rows:
+            if rot is not None:
+                g.quantize_bq(None, None, rot=rot)
+            else:
+                g.quantize_bq(g.vecs.min(axis=0).tolist(), g.vecs.max(axis=0).tolist())
+        else:
+            g.quantize_bq(p["bq_mins"], p["bq_maxs"], rot=rot)
+    return False
 
 
 @dataclass
@@ -1562,12 +1683,9 @@ class ShardedHNSW:
         return (self.params or {}).get("replicated", True)
 
     def _rerank_mult(self, rerank_mult: int | None) -> int:
-        """Default shortlist depth: 4x for SQ8/PQ (near-lossless codes),
-        16x for 1-bit BQ — the 2.2M drill measured recall 0.478 -> 0.718
-        at IDENTICAL serving wall-clock (the rerank join is broadcast-
-        sized either way); a coarse 1-bit ADC ranking needs the deeper
-        exact pass. params['rerank_mult_default'] overrides the tier
-        default (the DDL stamps it past the 1024-shard clamp, where
+        """Default shortlist depth: the tier default
+        (:func:`tier_rerank_mult`), which params['rerank_mult_default']
+        overrides (the DDL stamps it past the 1024-shard clamp, where
         shards grow beyond mode granularity and rerank depth is the
         remaining recall knob); an explicit argument always wins."""
         if rerank_mult is not None:
@@ -1588,7 +1706,7 @@ class ShardedHNSW:
                     "explicitly"
                 )
             return rm
-        return 16 if "bq_mins" in p else 4
+        return tier_rerank_mult(p)
 
     def quantize(self, mins, maxs) -> "ShardedHNSW":
         """SQ8-compress every shard graph: one distributed pass unpickles
@@ -1600,35 +1718,7 @@ class ShardedHNSW:
         empty-shard keep encoding consistently. Walk distances become ADC
         approximations — serve with probe(rerank=source_df) for exact
         final ordering."""
-        import pickle
-
-        import pandas as pd
-
-        from ..shipping import ensure_package_on_workers
-
-        ensure_package_on_workers(self._spark)
-        mins = [float(x) for x in mins]
-        maxs = [float(x) for x in maxs]
-
-        def run(batches):
-            for pdf in batches:
-                out_s, out_b = [], []
-                for shard, blob in zip(pdf["shard"], pdf["blob"]):
-                    g = pickle.loads(blob)
-                    g.quantize_sq8(mins, maxs)
-                    out_s.append(shard)
-                    out_b.append(pickle.dumps(g))
-                yield pd.DataFrame({"shard": out_s, "blob": out_b})
-
-        blobs = self.blobs.mapInPandas(run, "shard long, blob binary").localCheckpoint(
-            eager=True
-        )
-        params = dict(self.params or {}, sq8_mins=mins, sq8_maxs=maxs)
-        return ShardedHNSW(
-            self.vec_col, self.id_col, self.dist, blobs, self._spark,
-            centroids=self.centroids, id_type=self.id_type,
-            default_n_probe=self.default_n_probe, params=params,
-        )
+        return self._reencode(_storage_form("sq8", mins, maxs))
 
     def quantize_bq(
         self,
@@ -1668,70 +1758,10 @@ class ShardedHNSW:
         every code bit, so coarse shards regain within-mode resolution
         without finer sharding. Frozen fallback bounds for empty shards
         are the exact interval-arithmetic enclosure of the rotated raw
-        box; the seed rides in params so save/load and insert re-derive
-        the identical matrix."""
-        import pickle
-
-        import pandas as pd
-
-        from ..shipping import ensure_package_on_workers
-
-        ensure_package_on_workers(self._spark)
-        mins = [float(x) for x in mins]
-        maxs = [float(x) for x in maxs]
-        rot_list = None
-        if rotation_seed is not None:
-            from ..similarity.bq import rotation_matrix
-
-            rot_list = rotation_matrix(len(mins), int(rotation_seed))
-            # params record ROTATED-space fallback bounds: that is the
-            # space the frozen thresholds live in for empty-born shards
-            mins, maxs = _rotate_bounds(mins, maxs, np.asarray(rot_list))
-
-        def run(batches):
-            rot = (
-                np.asarray(rot_list, dtype=np.float64)
-                if rot_list is not None
-                else None
-            )
-            for pdf in batches:
-                out_s, out_b = [], []
-                for shard, blob in zip(pdf["shard"], pdf["blob"]):
-                    g = pickle.loads(blob)
-                    if local and g.vecs is not None and len(g.ids):
-                        if rot is not None:
-                            g.quantize_bq(None, None, rot=rot)
-                        else:
-                            g.quantize_bq(
-                                g.vecs.min(axis=0).tolist(),
-                                g.vecs.max(axis=0).tolist(),
-                            )
-                    else:
-                        g.quantize_bq(mins, maxs, rot=rot)
-                    out_s.append(shard)
-                    out_b.append(pickle.dumps(g))
-                yield pd.DataFrame({"shard": out_s, "blob": out_b})
-
-        blobs = self.blobs.mapInPandas(run, "shard long, blob binary").localCheckpoint(
-            eager=True
-        )
-        params = dict(
-            self.params or {}, bq_mins=mins, bq_maxs=maxs, bq_local=bool(local)
-        )
-        if rotation_seed is not None:
-            params["bq_rot_seed"] = int(rotation_seed)
-            # FREEZE the rotation floats (O(dim²) ≈ 32 KB at 64 dims, the
-            # same footprint class as pq_books): LAPACK QR output is not
-            # guaranteed bit-identical across BLAS builds, so a worker
-            # re-deriving the matrix from the seed (empty-born-shard
-            # insert) could encode with ULP-different floats than the rest
-            # of the index and the offline replay. Every downstream
-            # consumer reads these floats; the seed stays for provenance.
-            params["bq_rot"] = rot_list
-        return ShardedHNSW(
-            self.vec_col, self.id_col, self.dist, blobs, self._spark,
-            centroids=self.centroids, id_type=self.id_type,
-            default_n_probe=self.default_n_probe, params=params,
+        box; the seed and the frozen rotation floats ride in params so
+        save/load and insert use the identical matrix."""
+        return self._reencode(
+            _storage_form("bq", mins, maxs, local=local, rotation_seed=rotation_seed)
         )
 
     def quantize_pq(self, model, residual: bool = False) -> "ShardedHNSW":
@@ -1750,53 +1780,17 @@ class ShardedHNSW:
         ``residual=True``: per-shard residual codes against the routing
         centroid (train ``model`` with :func:`routed_residual_df`) — the
         clustered-corpus fix; see the inline note below."""
-        import pickle
-
-        import pandas as pd
-
-        from ..shipping import ensure_package_on_workers
-
-        ensure_package_on_workers(self._spark)
-        books = [[[float(x) for x in row] for row in b] for b in model.centroids]
-        bounds = [[int(s), int(e)] for s, e in model.bounds]
-        cent_rows = None
-        if residual:
-            # residual (IVFADC in-graph): each shard's codes quantize
-            # x − its ROUTING centroid — already-frozen floats, shipped
-            # through the closure (never re-derived on workers). A k-means
-            # shard is one cluster; global codebooks re-separate the
-            # clusters the routing already separated, so within-shard code
-            # resolution collapses at density (1.2M IVF drill: 0.128 vs
-            # 0.906 recall@10 deep — drills/drill_1200k_ivf_tiers.json).
-            # Train ``model`` on residuals (routed_residual_df).
-            if self.centroids is None:
-                raise ValueError("residual PQ needs a routed build (centroids)")
-            cent_rows = [[float(x) for x in c] for c in self.centroids]
-
-        def run(batches):
-            for pdf in batches:
-                out_s, out_b = [], []
-                for shard, blob in zip(pdf["shard"], pdf["blob"]):
-                    g = pickle.loads(blob)
-                    if cent_rows is not None:
-                        g.quantize_pq(books, bounds, centers=[cent_rows[int(shard)]])
-                    else:
-                        g.quantize_pq(books, bounds)
-                    out_s.append(shard)
-                    out_b.append(pickle.dumps(g))
-                yield pd.DataFrame({"shard": out_s, "blob": out_b})
-
-        blobs = self.blobs.mapInPandas(run, "shard long, blob binary").localCheckpoint(
-            eager=True
-        )
-        params = dict(self.params or {}, pq_books=books, pq_bounds=bounds)
-        if residual:
-            params["pq_residual"] = 1
-        return ShardedHNSW(
-            self.vec_col, self.id_col, self.dist, blobs, self._spark,
-            centroids=self.centroids, id_type=self.id_type,
-            default_n_probe=self.default_n_probe, params=params,
-        )
+        # residual (IVFADC in-graph): each shard's codes quantize x − its
+        # ROUTING centroid — already-frozen floats, never re-derived on
+        # workers. A k-means shard is one cluster; global codebooks
+        # re-separate the clusters the routing already separated, so
+        # within-shard code resolution collapses at density (1.2M IVF
+        # drill: 0.128 vs 0.906 recall@10 deep —
+        # drills/drill_1200k_ivf_tiers.json). Train ``model`` on residuals
+        # (routed_residual_df).
+        if residual and self.centroids is None:
+            raise ValueError("residual PQ needs a routed build (centroids)")
+        return self._reencode(_storage_form("pq", model=model, residual=residual))
 
     def quantize_pq_local(
         self, m: int = 16, k: int = 32, max_iter: int = 5
@@ -1811,17 +1805,33 @@ class ShardedHNSW:
         (id-sorted — deterministic, replayed identically offline). Serve
         with probe(rerank=source) exactly like the other compressed
         tiers."""
+        form = _storage_form("pq", local_mk=(m, k, max_iter))
+        p = self.params or {}
+        if p.get("frozen") == "vamana-partitioned":
+            # per-CELL books on vamana-partitioned shells join the other
+            # quantized vamana-partitioned tiers at the DEEP rerank
+            # default (see to_partitioned — harvest makes depth ~free;
+            # 1.2M: 0.918@16 -> 0.958@48). Routed-HNSW shards keep their
+            # own tier defaults (4/16 + the DDL past-clamp escalation).
+            form["rerank_mult_default"] = p.get("rerank_mult_default", 48)
+        return self._reencode(form)
+
+    def _reencode(self, form: dict) -> "ShardedHNSW":
+        """The one re-encode pass behind every ``quantize*`` method: a
+        distributed map unpickles each shard graph, stores it in ``form``
+        (:func:`_quantize_shard`, with the shard's routing centroid for
+        residual codes) and repickles it into a checkpoint leaf the new
+        index owns. ``form`` freezes into params, so save/load and
+        insert-into-empty-shard keep encoding consistently."""
         import pickle
 
         import pandas as pd
 
         from ..shipping import ensure_package_on_workers
 
-        # mirror the _Graph-level double-quantization guards: quantized
-        # graphs carry vecs=None, so the map below would silently no-op on
-        # every shard yet still stamp pq_local=1 next to the existing
-        # tier's params — a self-contradictory index whose insert-path
-        # quantizer selection becomes ambiguous
+        # quantized graphs carry vecs=None: a second form would no-op or
+        # wipe the codes on every shard yet still stamp its keys next to
+        # the existing tier's — a self-contradictory index
         prior = [
             key for key in ("pq_books", "sq8_mins", "bq_mins", "pq_local")
             if key in (self.params or {})
@@ -1829,43 +1839,35 @@ class ShardedHNSW:
         if prior:
             raise ValueError(
                 f"shards already carry a quantized tier ({prior[0]}); "
-                "quantize_pq_local must start from float shards"
+                "quantization must start from float shards"
             )
         ensure_package_on_workers(self._spark)
-        m_i, k_i, it_i = int(m), int(k), int(max_iter)
+        params = dict(self.params or {}, **form)
+        cents = self.centroids
 
         def run(batches):
             for pdf in batches:
-                out_s, out_b = [], []
+                out_b = []
                 for shard, blob in zip(pdf["shard"], pdf["blob"]):
                     g = pickle.loads(blob)
-                    if g.vecs is not None and len(g.ids):
-                        books, bounds = train_local_pq(g.vecs, m_i, k_i, it_i)
-                        g.quantize_pq(books, bounds)
-                    # empty graphs stay float — the insert path trains
-                    # their books on the first arriving batch
-                    out_s.append(shard)
+                    _quantize_shard(
+                        g, params, cents[int(shard)] if cents is not None else None
+                    )
                     out_b.append(pickle.dumps(g))
-                yield pd.DataFrame({"shard": out_s, "blob": out_b})
+                yield pd.DataFrame({"shard": pdf["shard"].to_numpy(), "blob": out_b})
 
         blobs = self.blobs.mapInPandas(run, "shard long, blob binary").localCheckpoint(
             eager=True
         )
-        params = dict(
-            self.params or {}, pq_local=1, pq_local_m=m_i, pq_local_k=k_i,
-            pq_local_iter=it_i,
-        )
-        if params.get("frozen") == "vamana-partitioned":
-            # per-CELL books on vamana-partitioned shells join the other
-            # quantized vamana-partitioned tiers at the DEEP rerank
-            # default (see to_partitioned — harvest makes depth ~free;
-            # 1.2M: 0.918@16 -> 0.958@48). Routed-HNSW shards keep their
-            # own tier defaults (4/16 + the DDL past-clamp escalation).
-            params.setdefault("rerank_mult_default", 48)
-        return ShardedHNSW(
-            self.vec_col, self.id_col, self.dist, blobs, self._spark,
-            centroids=self.centroids, id_type=self.id_type,
-            default_n_probe=self.default_n_probe, params=params,
+        return self._with_blobs(blobs, params)
+
+    def _with_blobs(self, blobs, params) -> "ShardedHNSW":
+        """This index over another blob set (a checkpoint leaf the new index
+        owns) with ``params``: routing, id typing and the serving defaults
+        carry over; the delta chain and the members cache start afresh."""
+        return replace(
+            self, blobs=blobs, params=params,
+            _members_df=None, _delta_depth=0, _leaves=(),
         )
 
     def rank_shards(self, query: list[float]) -> list[int]:
@@ -2164,13 +2166,9 @@ class ShardedHNSW:
         efs = p.get("ef_search", 64)
         seed = p.get("seed", 42)
         dist = self.dist
-        # residual-PQ index: empty-born shards need THEIR routing centroid
-        # as the frozen residual center (same frozen-floats rule as bq_rot)
-        res_cents = (
-            [[float(x) for x in c] for c in self.centroids]
-            if p.get("pq_residual") and self.centroids is not None
-            else None
-        )
+        # the touched shards' routing centroids: an empty-born shard of a
+        # residual-PQ index codes against its own (bounded by the batch)
+        cents = {t: self.centroids[t] for t in tids}
 
         def upsert(key, new_pdf, blob_pdf):
             shard = key[0]
@@ -2192,61 +2190,24 @@ class ShardedHNSW:
                     "params (loaded from a pre-upgrade save) — "
                     "rebuild the index or set .params explicitly"
                 )
+            waits = False
             if blob is not None:
                 g = pickle.loads(blob)
             else:
-                # shard was empty at build time: fresh graph,
-                # quantized with the frozen params if the index is
+                # shard was empty at build time: a fresh graph in the
+                # index's frozen storage form
                 g = _Graph(m, efc, efs, dist, seed)
-                if "pq_books" in p:
-                    g.quantize_pq(
-                        p["pq_books"], p["pq_bounds"],
-                        centers=(
-                            [res_cents[int(shard)]] if res_cents is not None else None
-                        ),
-                    )
-                elif "sq8_mins" in p:
-                    g.quantize_sq8(p["sq8_mins"], p["sq8_maxs"])
-                elif "bq_mins" in p:
-                    rot = None
-                    if p.get("bq_rot") is not None:
-                        # frozen floats from quantize_bq — NOT re-derived
-                        # via QR here: LAPACK output can differ by ULPs
-                        # across BLAS builds, and this closure runs on
-                        # workers while the index's codes were cut with
-                        # the driver's matrix
-                        rot = np.asarray(p["bq_rot"], dtype=np.float64)
-                    elif p.get("bq_rot_seed") is not None:
-                        # pre-freeze save: best-effort re-derivation
-                        from ..similarity.bq import rotation_matrix
-
-                        rot = np.asarray(
-                            rotation_matrix(len(p["bq_mins"]), p["bq_rot_seed"]),
-                            dtype=np.float64,
-                        )
-                    # bq_mins/bq_maxs are already rotated-space when a
-                    # rotation seed is recorded (quantize_bq froze the
-                    # interval-arithmetic enclosure of the rotated box)
-                    g.quantize_bq(p["bq_mins"], p["bq_maxs"], rot=rot)
+                waits = _quantize_shard(g, p, cents[int(shard)])
             new_pdf = new_pdf.sort_values("__nid")  # id-sorted: deterministic
             g.add_all(
                 new_pdf["__nid"].tolist(),
                 np.asarray(new_pdf["__nv"].tolist(), dtype=np.float64),
             )
-            if (
-                blob is None
-                and p.get("pq_local")
-                and g.vecs is not None
-                and len(g.ids)
-            ):
-                # local-PQ index, shard born empty: its books train on
-                # this first (id-sorted) batch — deterministic, and the
+            if waits:
+                # local PQ: this shard's books train on its first
+                # (id-sorted) batch — deterministic, and the
                 # frozen-quantizer contract holds for later inserts
-                books, bounds = train_local_pq(
-                    g.vecs, p.get("pq_local_m", 16), p.get("pq_local_k", 32),
-                    p.get("pq_local_iter", 5),
-                )
-                g.quantize_pq(books, bounds)
+                _quantize_shard(g, p, cents[int(shard)])
             return pd.DataFrame({"shard": [shard], "blob": [pickle.dumps(g)]})
 
         # DELTA upsert via COGROUP: each touched shard's new rows arrive as
@@ -2294,12 +2255,9 @@ class ShardedHNSW:
                 release_checkpoint(leaf)
             leaves = ()
             depth = 0
-        return ShardedHNSW(
-            self.vec_col, self.id_col, self.dist, blobs, self._spark,
-            centroids=self.centroids, id_type=self.id_type,
-            default_n_probe=self.default_n_probe, params=self.params,
-            _delta_depth=depth, _leaves=leaves,
-        )
+        out = self._with_blobs(blobs, self.params)
+        out._delta_depth, out._leaves = depth, leaves
+        return out
 
     def probe(
         self,
@@ -2523,10 +2481,11 @@ def offline_quantize(
     residual: bool = False,
     pq_centers=None,
     local_mk=None,
-) -> None:
+) -> dict:
     """Quantize replayed graphs in place by the rule the distributed path
-    applies, before :func:`offline_routed_search` /
-    ``vamana.offline_vamana_search`` walk them.
+    applies (:func:`_quantize_shard`), before :func:`offline_routed_search`
+    / ``vamana.offline_vamana_search`` walk them. Returns the storage-form
+    record (what the quantized index's params carry).
 
     - ``"sq8"``: ``ShardedHNSW.quantize(mins, maxs)``.
     - ``"bq"``: ``quantize_bq(mins, maxs)`` with its local=True default —
@@ -2547,48 +2506,13 @@ def offline_quantize(
       ``local_mk`` = (m, k, max_iter) replays ``quantize_pq_local``
       (train_local_pq run verbatim on each replayed graph's own rows —
       the shard build is id-sorted both sides; ``model`` unused)."""
-    if form == "sq8":
-        for g in graphs.values():
-            g.quantize_sq8(mins, maxs)
-    elif form == "bq":
-        rot = None
-        if rotation_seed is not None:
-            from ..similarity.bq import rotation_matrix
-
-            rot = np.asarray(
-                rotation_matrix(len(mins), int(rotation_seed)), dtype=np.float64
-            )
-            mins, maxs = _rotate_bounds(mins, maxs, rot)
-        for g in graphs.values():
-            if g.vecs is not None and len(g.ids):
-                if rot is not None:
-                    g.quantize_bq(None, None, rot=rot)
-                else:
-                    g.quantize_bq(
-                        g.vecs.min(axis=0).tolist(), g.vecs.max(axis=0).tolist()
-                    )
-            else:
-                g.quantize_bq(mins, maxs, rot=rot)
-    elif form == "pq" and local_mk is not None:
-        m_i, k_i, it_i = local_mk
-        for g in graphs.values():
-            if g.vecs is not None and len(g.ids):
-                books, bounds = train_local_pq(g.vecs, m_i, k_i, it_i)
-                g.quantize_pq(books, bounds)
-    elif form == "pq":
-        books = [[[float(x) for x in row] for row in b] for b in model.centroids]
-        bounds = [[int(s), int(e)] for s, e in model.bounds]
-        for b, g in graphs.items():
-            g.quantize_pq(
-                books, bounds,
-                centers=(
-                    pq_centers
-                    if pq_centers is not None
-                    else [[float(x) for x in centroids[b]]] if residual else None
-                ),
-            )
-    else:
-        raise ValueError(f"unknown storage form {form!r}")
+    record = _storage_form(
+        form, mins, maxs, rotation_seed=rotation_seed, model=model,
+        residual=residual, pq_centers=pq_centers, local_mk=local_mk,
+    )
+    for b, g in graphs.items():
+        _quantize_shard(g, record, centroids[b] if centroids is not None else None)
+    return record
 
 
 def offline_routed_search(

@@ -37,11 +37,6 @@ class KnnPlan:
     index_name: str | None
     df: DataFrame
 
-    def explain_str(self) -> str:
-        if self.index_name:
-            return f"{self.strategy} index={self.index_name}"
-        return self.strategy
-
 
 def plan_knn(
     registry: VectorIndexRegistry,

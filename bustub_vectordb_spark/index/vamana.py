@@ -73,7 +73,14 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .. import fold
-from .hnsw import _Graph, _id_type, _pin_cpu_groups, _spread_queries
+from .hnsw import (
+    _Graph,
+    _id_type,
+    _pin_cpu_groups,
+    _quantize_shard,
+    _spread_queries,
+    _storage_form,
+)
 
 
 def _centroid_mean(centroids: list[list[float]]) -> list[float]:
@@ -1096,9 +1103,7 @@ class VamanaIndex:
                 f"dim-{stored_dim} vertices ({self.dist} indexes transform "
                 "rows at build) — train the PQModel on index.vertices"
             )
-        books = [[[float(x) for x in row] for row in b] for b in model.centroids]
-        bounds = [[int(s), int(e)] for s, e in model.bounds]
-        params = dict(self.params or {}, pq_books=books, pq_bounds=bounds)
+        params = dict(self.params or {}, **_storage_form("pq", model=model))
         if residual:
             params["pq_centers"] = self._entry_centers()
         return VamanaIndex(
@@ -1313,8 +1318,14 @@ class VamanaIndex:
             else max(int(p.get("ef_search", 48)), self.PARTITIONED_EF_SERVE)
         )
         seed = p.get("seed", 42)
-        books, bounds = p.get("pq_books"), p.get("pq_bounds")
-        pq_centers = p.get("pq_centers")  # residual PQ: frozen entry-cell centers
+        # a PQ-quantized index's storage form rides into every shell: its
+        # frozen codebooks and, for residual PQ, the FULL frozen
+        # entry-cell center set (per-member cells assign fold-exactly
+        # inside _Graph, matching the distributed __ecell fold)
+        form = {
+            key: p[key] for key in ("pq_books", "pq_bounds", "pq_centers")
+            if p.get(key) is not None
+        }
 
         def build_shell(key, pdf):  # no hints: partial hints trip a pyspark eval-type warning
             pdf = pdf.sort_values(id_col)
@@ -1337,11 +1348,7 @@ class VamanaIndex:
             if eps:
                 g.entry_points = eps
             _attach_unreached(layer0, mat, g.entry, eps)
-            if books is not None:
-                # pq_centers (residual): the FULL frozen center set rides
-                # into every shell — per-member cells assign fold-exactly
-                # inside _Graph, matching the distributed __ecell fold
-                g.quantize_pq(books, bounds, centers=pq_centers)
+            _quantize_shard(g, form)
             g.pack()
             return pd.DataFrame(
                 {"shard": [int(key[0])], "blob": [pickle.dumps(g)]}
@@ -1353,16 +1360,13 @@ class VamanaIndex:
             build_shell, "shard long, blob binary"
         )
         params = dict(
-            m=r_deg, ef_construction=efc, ef_search=efs, seed=seed,
+            form, m=r_deg, ef_construction=efc, ef_search=efs, seed=seed,
             replicated=replicate_eps > 0, frozen="vamana-partitioned",
             ops_dist=self.dist, n_probe=n_probe,
         )
         if self.dist == "ip":
             params["ip_m2"] = p["ip_m2"]
-        if books is not None:
-            params.update(pq_books=books, pq_bounds=bounds)
-            if pq_centers is not None:
-                params["pq_centers"] = pq_centers
+        if form:
             # quantized vamana-partitioned shells default to the DEEP
             # rerank shortlist (r11): with the visited-set harvest the
             # depth no longer widens the walk beam, and the 1.2M drill
@@ -1370,8 +1374,9 @@ class VamanaIndex:
             # 5.2s, drills/drill_1200k_r11_harvest.json vamana-extra
             # legs). WITH (rerank_mult=N) / the serve-time arg still win.
             params.setdefault("rerank_mult_default", 48)
+        # an eager checkpoint leaf the artifact owns (see build_routed)
         inner = ShardedHNSW(
-            self.vec_col, id_col, "l2", blobs.cache(), spark,
+            self.vec_col, id_col, "l2", blobs.localCheckpoint(eager=True), spark,
             centroids=centroids, id_type=self.id_type,
             default_n_probe=n_probe, params=params,
         )
@@ -1976,9 +1981,11 @@ def offline_vamana_partitioned(
         )
     )
     seed = build_kw.get("seed", 42)
-    if model is not None:
-        books = [[[float(x) for x in row] for row in b] for b in model.centroids]
-        bnds = [[int(s), int(e)] for s, e in model.bounds]
+    # the same storage-form record to_partitioned's shells carry
+    form = (
+        _storage_form("pq", model=model, pq_centers=pq_centers)
+        if model is not None else {}
+    )
     graphs: dict[int, _Graph] = {}
     for b, mids in sorted(members.items()):
         mids = sorted(mids)
@@ -2000,10 +2007,7 @@ def offline_vamana_partitioned(
         if eps:
             sg.entry_points = eps
         _attach_unreached(layer0, mat, sg.entry, eps)
-        if model is not None:
-            # pq_centers mirrors the residual to_partitioned shells (the
-            # full frozen center set rides into every shell)
-            sg.quantize_pq(books, bnds, centers=pq_centers)
+        _quantize_shard(sg, form)
         graphs[b] = sg
     return centroids, graphs
 

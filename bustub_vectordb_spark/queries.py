@@ -2751,15 +2751,14 @@ def _routed_quantized_oracle(form: str, batch: bool = False, **quant) -> str:
     quantized like ``_routed_for(form)`` (offline_quantize with the
     corpus' per-dim bounds and ``**quant``), then the rerank replay — the
     QUERY_VEC probe or the batch queries."""
-    from .index.hnsw import offline_quantize, offline_routed_search
+    from .index.hnsw import offline_quantize, offline_routed_search, tier_rerank_mult
 
     c = _oracle_corpus()
     cents, graphs = _routed_replay(copy=True)
-    offline_quantize(graphs, form, c.mins, c.maxs, centroids=cents, **quant)
-    mult = 16 if form == "bq" else 4  # ShardedHNSW._rerank_mult defaults
+    record = offline_quantize(graphs, form, c.mins, c.maxs, centroids=cents, **quant)
     hits = offline_routed_search(
         cents, graphs, c.batch if batch else [(None, QUERY_VEC)], 5 if batch else 10,
-        2, rerank=(c.by_id, mult, None),
+        2, rerank=(c.by_id, tier_rerank_mult(record), None),
     )
     return _hits_sql(hits if batch else _point(hits))
 

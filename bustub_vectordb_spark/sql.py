@@ -758,7 +758,7 @@ class SqlEngine:
                             m=opts.get("pq_m", 16), k=opts.get("pq_k", 32)
                         )
             else:
-                from .index.hnsw import HNSWIndex
+                from .index.hnsw import HNSWIndex, tier_rerank_mult
 
                 names = self.catalog.tables[table].schema.names
                 id_col = next((c for c in names if c != col), names[0])
@@ -790,11 +790,9 @@ class SqlEngine:
                         from .similarity.quantize import dim_stats
 
                         stats = dim_stats(df, col).orderBy("dim").collect()
-                        n_probe = idx.default_n_probe
                         idx = idx.quantize(
                             [r["mn"] for r in stats], [r["mx"] for r in stats]
                         )
-                        idx.default_n_probe = n_probe
                     elif opts.get("pq"):
                         # WITH (pq=1[, pq_m=M, pq_k=K, pq_residual=0|1]) on
                         # a routed build: shard graphs store product-
@@ -812,7 +810,6 @@ class SqlEngine:
                         from .index.hnsw import routed_residual_df
                         from .similarity.pq import PQModel
 
-                        n_probe = idx.default_n_probe
                         if "pq_residual" in opts:
                             res = bool(opts.get("pq_residual"))
                             if res:
@@ -831,7 +828,6 @@ class SqlEngine:
                             idx = idx.quantize_pq_local(
                                 m=opts.get("pq_m", 16), k=opts.get("pq_k", 32)
                             )
-                        idx.default_n_probe = n_probe
                     elif opts.get("bq"):
                         # WITH (bq=1[, bq_rot_seed=S]) on a routed build:
                         # shard graphs store 1-bit sign codes (dim/8
@@ -843,13 +839,11 @@ class SqlEngine:
                         from .similarity.quantize import dim_stats
 
                         stats = dim_stats(df, col).orderBy("dim").collect()
-                        n_probe = idx.default_n_probe
                         idx = idx.quantize_bq(
                             [r["mn"] for r in stats],
                             [r["mx"] for r in stats],
                             rotation_seed=opts.get("bq_rot_seed"),
                         )
-                        idx.default_n_probe = n_probe
                     if "rerank_mult" in opts:
                         # EXPLICIT pin: honored on EVERY routed tier (sq8
                         # and unquantized included — probe(rerank=src)
@@ -892,9 +886,9 @@ class SqlEngine:
                             self.HNSW_SHARD_TARGET_ROWS_QUANTIZED
                         )
                         if ratio > 1.0:
-                            base = 16 if opts.get("bq") else 4
                             idx.params["rerank_mult_default"] = min(
-                                64, base * int(_math.ceil(ratio))
+                                64,
+                                tier_rerank_mult(idx.params) * int(_math.ceil(ratio)),
                             )
                             # past-clamp escalation must deepen the
                             # WALK too (r11): with the visited-set

@@ -141,6 +141,54 @@ def test_routed_build_and_probe(emb):
     assert sorted(routed.rank_shards(QUERY)) == [0, 1, 2, 3]
 
 
+def test_routed_indexes_own_their_storage(spark, emb):
+    """Two routed builds over the same input plan each hold their shard
+    blobs in a checkpoint leaf of their own: releasing one leaves the
+    other fully stored (so it serves without rebuilding its graphs) and
+    answering as before. A cache() entry is shared by every equal plan,
+    so unpersisting one index's would drop the other's."""
+    from bustub_vectordb_spark.shipping import release_checkpoint
+
+    src = emb.filter(F.col("vec_id") != -104723)  # a plan no other test caches
+    queries = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+
+    def build():
+        return HNSWIndex.build_routed(
+            src, "embedding", "vec_id", shards=4, m=8,
+            ef_construction=48, ef_search=48,
+        )
+
+    def leaf_rdd(idx):
+        plan = idx.blobs._jdf.queryExecution().analyzed()
+        assert plan.getClass().getName().endswith("LogicalRDD"), plan
+        return plan.rdd()
+
+    def stored():
+        return {
+            i.id(): i.numCachedPartitions()
+            for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        }
+
+    def answer(idx):
+        out = idx.search_batch(queries, "qvec", "qid", 5, n_probe=2)
+        return sorted((r["qid"], r["vec_id"], r["distance"]) for r in out.collect())
+
+    a, b = build(), build()
+    ra, rb = leaf_rdd(a), leaf_rdd(b)
+    assert ra.id() != rb.id()
+    want = answer(b)
+    assert answer(a) == want
+    release_checkpoint(a.blobs)
+    held = stored()
+    assert ra.id() not in held
+    assert held.get(rb.id()) == rb.getNumPartitions()
+    assert answer(b) == want
+    release_checkpoint(b.blobs)
+    assert rb.id() not in stored()
+
+
 def test_entry_promoted_on_new_top_layer():
     """When an insert draws a level above the current top layer, the new
     vertex must become the entry point and the sole member of each new
@@ -1385,6 +1433,22 @@ def test_bq_rotation_frozen_in_params(spark):
         [r["mn"] for r in stats], [r["mx"] for r in stats], rotation_seed=9
     )
     assert bq.params["bq_rot"] == rotation_matrix(8, 9)
+
+
+def test_bq_rotation_seed_without_frozen_rotation_refused():
+    """A params record with bq_rot_seed but no frozen bq_rot names the
+    damage instead of re-deriving the rotation by QR on a worker (LAPACK
+    output can differ by ULPs across BLAS builds)."""
+    from bustub_vectordb_spark.index.hnsw import (
+        DamagedIndexError,
+        _Graph,
+        _quantize_shard,
+    )
+
+    g = _Graph(m=4, ef_construction=16, ef_search=16, dist="l2", seed=7)
+    record = {"bq_mins": [0.0] * 8, "bq_maxs": [1.0] * 8, "bq_rot_seed": 3}
+    with pytest.raises(DamagedIndexError, match="bq_rot"):
+        _quantize_shard(g, record)
 
 
 def test_harvest_equals_coupled_when_shortlist_fits_beam():

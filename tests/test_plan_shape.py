@@ -242,12 +242,14 @@ def _job_count(spark, group: str, fn) -> int:
 
 
 def test_index_build_job_counts(spark, tables):
-    """Spark job counts of the IVFFlat, routed-HNSW (with the blob
-    materialization) and vamana builds at the test scale factor — the job
-    analogue of the exchange counts above: at bench scale these builds are
-    bound by driver round trips and scheduling, so a refactor that adds a
-    job must show up here. The input carries a filter no other test uses,
-    so no earlier test's cached plan can satisfy a build's cache()."""
+    """Spark job counts of the IVFFlat, routed-HNSW and vamana builds at
+    the test scale factor — the job analogue of the exchange counts above:
+    at bench scale these builds are bound by driver round trips and
+    scheduling, so a refactor that adds a job must show up here. The
+    IVFFlat and routed-HNSW builds materialize their output into a
+    checkpoint leaf they own, so each count includes that work and no
+    other index's storage can stand in for it; the input carries a filter
+    no other test uses, so no earlier test's cached plan can either."""
     from bustub_vectordb_spark.index import HNSWIndex, IVFFlatIndex, VamanaIndex
     from bustub_vectordb_spark.shipping import release_checkpoint
 
@@ -265,7 +267,7 @@ def test_index_build_job_counts(spark, tables):
             lambda: built.setdefault(
                 "routed",
                 HNSWIndex.build_routed(emb, "embedding", "vec_id", shards=4),
-            ).blobs.count(),
+            ),
         ),
         "vamana": _job_count(
             spark, "jobs-vamana",
@@ -273,8 +275,8 @@ def test_index_build_job_counts(spark, tables):
         ),
     }
     release_checkpoint(built["ivf"].assignments)
-    built["routed"].blobs.unpersist()
-    assert got == {"ivfflat": 6, "hnsw_routed": 8, "vamana": 6}, got
+    release_checkpoint(built["routed"].blobs)
+    assert got == {"ivfflat": 6, "hnsw_routed": 6, "vamana": 6}, got
 
 
 def _py4j_commands(spark, fn) -> int:
