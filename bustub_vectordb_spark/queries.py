@@ -2402,132 +2402,41 @@ def q_ann_bq_rerank(spark, sf_dir):
     return model.rerank_topk(e, "embedding", "vec_id", QUERY_VEC, 10, shortlist=50)
 
 
-def _ivf_sq8_rerank_oracle() -> str:
-    """DuckDB replica of the full IVF+SQ8+rerank pipeline: inlined IVF
-    centroids (deterministic training, same as the partial-probe oracles),
-    SQ8 stats computed in SQL, ADC evaluated per row as an in-order list
-    fold (rounded to 9 like the Spark side), exact re-rank of the top-40."""
+# SQ8 decode of dim i (1-based lists), in SQ8Model.encode / adc order
+_SQ8_DEC = (
+    "(mnl[i] + (CASE WHEN mxl[i] - mnl[i] = 0 THEN 0 "
+    "ELSE greatest(0, least(255, CAST(floor(255.0 * (v[i] - mnl[i]) / (mxl[i] - mnl[i]) + 0.5) AS INTEGER))) END)"
+    " * (mxl[i] - mnl[i]) / 255.0)"
+)
+
+
+def _dim_sum(term: str) -> str:
+    """In-order list fold of ``term`` over the dims i of row ``v``."""
+    return f"list_sum(list_transform(range(1, len(v) + 1), i -> {term}))"
+
+
+# per-row Hamming as a bit-mismatch fold: INTEGER, no rounding
+_BQ_HAMMING = _dim_sum(
+    "CASE WHEN (v[i] > thrl[i]) <> (ql[i] > thrl[i]) THEN 1 ELSE 0 END"
+) + "::BIGINT"
+
+
+def _ivf_codes_oracle(score: str, metric: str = "l2", per_bucket: bool = False) -> str:
+    """DuckDB replica of IVFCodesIndex.probe (similarity/ivfcodes.py) over
+    the 8-list IVF index: inlined IVF centroids (deterministic training),
+    l2 bucket ASSIGNMENT (the reference's FindCentroid is l2 whatever the
+    ops class), the 4 nearest buckets ranked by ``metric``, the form's
+    per-row shortlist ``score``, the top 40 by (score, id), and the exact
+    re-rank rounded to 8. ``score`` reads the row ``v``, the query ``ql``
+    and per-dim stats computed in SQL from exact min/max (order-independent):
+    ``mnl``/``mxl`` and the midranges ``thrl`` — each bucket's own when
+    ``per_bucket``. Both orders follow the metric (descending for cosine)."""
     values, cents = _ivfflat_oracle_cents()
-    buckets = fold.rank_centroids("l2", cents, QUERY_VEC)[:4]
-    blist = ", ".join(str(b) for b in buckets)
+    blist = ", ".join(str(b) for b in fold.rank_centroids(metric, cents, QUERY_VEC)[:4])
     q = _vec_sql_literal(QUERY_VEC)
-    # decoded value for dim i (1-based lists), matching SQ8Model.encode/
-    # adc_dist_sq operation order
-    dec = (
-        "(mnl[i] + (CASE WHEN mxl[i] - mnl[i] = 0 THEN 0 "
-        "ELSE greatest(0, least(255, CAST(floor(255.0 * (v[i] - mnl[i]) / (mxl[i] - mnl[i]) + 0.5) AS INTEGER))) END)"
-        " * (mxl[i] - mnl[i]) / 255.0)"
-    )
-    return f"""
-    WITH cents(b, c) AS (VALUES {values}),
-    dims AS (
-      SELECT i AS dim, min(x) AS mn, max(x) AS mx
-      FROM (SELECT unnest(embedding::DOUBLE[]) AS x,
-                   generate_subscripts(embedding, 1) AS i
-            FROM embeddings)
-      GROUP BY i
-    ),
-    stats AS (
-      SELECT list(mn ORDER BY dim) AS mnl, list(mx ORDER BY dim) AS mxl,
-             {q} AS ql
-      FROM dims
-    ),
-    a AS (
-      SELECT e.vec_id, e.embedding::DOUBLE[] AS v, c.b,
-             row_number() OVER (
-               PARTITION BY e.vec_id
-               ORDER BY list_distance(e.embedding::DOUBLE[], c.c), c.b) AS arn
-      FROM embeddings e CROSS JOIN cents c
-    ),
-    adc AS (
-      SELECT vec_id, v,
-             round(list_sum(list_transform(range(1, len(v) + 1), i ->
-                 ({dec} - ql[i]) * ({dec} - ql[i]))), 9) AS adc_d
-      FROM a CROSS JOIN stats
-      WHERE arn = 1 AND b IN ({blist})
-    ),
-    shortlist AS (
-      SELECT vec_id, v FROM adc ORDER BY adc_d ASC, vec_id ASC LIMIT 40
-    )
-    SELECT vec_id, round(list_distance(v, {q}), 8) AS distance
-    FROM shortlist
-    ORDER BY list_distance(v, {q}) ASC, vec_id ASC
-    LIMIT 10
-    """
-
-
-def _ivf_bq_rerank_oracle() -> str:
-    """DuckDB replica of the IVF+BQ+rerank pipeline: inlined IVF centroids,
-    midrange thresholds computed in SQL (exact min/max — order-independent),
-    per-row Hamming as a bit-mismatch fold (INTEGER — no rounding), exact
-    re-rank of the top-40 rounded to 8 like the Spark side."""
-    values, cents = _ivfflat_oracle_cents()
-    buckets = fold.rank_centroids("l2", cents, QUERY_VEC)[:4]
-    blist = ", ".join(str(b) for b in buckets)
-    q = _vec_sql_literal(QUERY_VEC)
-    return f"""
-    WITH cents(b, c) AS (VALUES {values}),
-    dims AS (
-      SELECT i AS dim, (min(x) + max(x)) / 2.0 AS thr
-      FROM (SELECT unnest(embedding::DOUBLE[]) AS x,
-                   generate_subscripts(embedding, 1) AS i
-            FROM embeddings)
-      GROUP BY i
-    ),
-    stats AS (
-      SELECT list(thr ORDER BY dim) AS thrl, {q} AS ql FROM dims
-    ),
-    a AS (
-      SELECT e.vec_id, e.embedding::DOUBLE[] AS v, c.b,
-             row_number() OVER (
-               PARTITION BY e.vec_id
-               ORDER BY list_distance(e.embedding::DOUBLE[], c.c), c.b) AS arn
-      FROM embeddings e CROSS JOIN cents c
-    ),
-    ham AS (
-      SELECT vec_id, v,
-             list_sum(list_transform(range(1, len(v) + 1), i ->
-                 CASE WHEN (v[i] > thrl[i]) <> (ql[i] > thrl[i])
-                      THEN 1 ELSE 0 END))::BIGINT AS h
-      FROM a CROSS JOIN stats
-      WHERE arn = 1 AND b IN ({blist})
-    ),
-    shortlist AS (
-      SELECT vec_id, v FROM ham ORDER BY h ASC, vec_id ASC LIMIT 40
-    )
-    SELECT vec_id, round(list_distance(v, {q}), 8) AS distance
-    FROM shortlist
-    ORDER BY list_distance(v, {q}) ASC, vec_id ASC
-    LIMIT 10
-    """
-
-
-@_register("ann_ivf_bq_rerank", _ivf_bq_rerank_oracle)
-def q_ann_ivf_bq_rerank(spark, sf_dir):
-    # IVF routing over MATERIALIZED 1-bit codes (similarity/bq.IVFBQIndex):
-    # probe 4/8 buckets, integer Hamming over dim/8-byte words (the
-    # densest codes relation in the engine — 64x smaller than the raw
-    # float scan), exact re-rank of the top-40. Completes the IVF
-    # compression family: IVFSQ (1 B/dim), IVFPQ (16 B/vec), IVFBQ
-    # (1 bit/dim).
-    from .similarity.bq import BQModel, IVFBQIndex
-
-    idx = _cached(sf_dir, "ivf_bq", lambda: IVFBQIndex.build(
-        _ivfflat_for(spark, sf_dir), "embedding", "vec_id",
-        model=BQModel.train(_t(spark, sf_dir, "embeddings"), "embedding"),
-    ))
-    return idx.probe(QUERY_VEC, k=10, rerank=40, probe_lists=4)
-
-
-def _ivf_bq_local_rerank_oracle() -> str:
-    """Per-BUCKET thresholds replica: each IVF bucket derives its own
-    midranges from its own members (exact min/max per (bucket, dim)), and
-    the query's bits are recomputed against each probed bucket's
-    thresholds."""
-    values, cents = _ivfflat_oracle_cents()
-    buckets = fold.rank_centroids("l2", cents, QUERY_VEC)[:4]
-    blist = ", ".join(str(b) for b in buckets)
-    q = _vec_sql_literal(QUERY_VEC)
+    exact = {"l2": "list_distance", "cosine": "list_cosine_similarity"}[metric]
+    order = "ASC" if metric == "l2" else "DESC"
+    key = "b, " if per_bucket else ""
     return f"""
     WITH cents(b, c) AS (VALUES {values}),
     a AS (
@@ -2538,128 +2447,110 @@ def _ivf_bq_local_rerank_oracle() -> str:
       FROM embeddings e CROSS JOIN cents c
     ),
     asg AS (SELECT vec_id, v, b FROM a WHERE arn = 1),
-    bdims AS (
-      SELECT b, i AS dim, (min(x) + max(x)) / 2.0 AS thr
+    dims AS (
+      SELECT {key}i AS dim, min(x) AS mn, max(x) AS mx, (min(x) + max(x)) / 2.0 AS thr
       FROM (SELECT b, unnest(v) AS x, generate_subscripts(v, 1) AS i FROM asg)
-      GROUP BY b, i
+      GROUP BY {key}i
     ),
-    bthr AS (SELECT b, list(thr ORDER BY dim) AS thrl FROM bdims GROUP BY b),
-    ham AS (
-      SELECT vec_id, v,
-             list_sum(list_transform(range(1, len(v) + 1), i ->
-                 CASE WHEN (v[i] > thrl[i]) <> (ql[i] > thrl[i])
-                      THEN 1 ELSE 0 END))::BIGINT AS h
-      FROM (SELECT asg.vec_id, asg.v, bthr.thrl
-            FROM asg JOIN bthr USING (b) WHERE asg.b IN ({blist}))
-      CROSS JOIN (SELECT {q} AS ql)
+    stats AS (
+      SELECT {key}list(mn ORDER BY dim) AS mnl, list(mx ORDER BY dim) AS mxl,
+             list(thr ORDER BY dim) AS thrl, {q} AS ql
+      FROM dims {"GROUP BY b" if per_bucket else ""}
     ),
-    shortlist AS (SELECT vec_id, v FROM ham ORDER BY h ASC, vec_id ASC LIMIT 40)
-    SELECT vec_id, round(list_distance(v, {q}), 8) AS distance
+    scored AS (
+      SELECT vec_id, v, {score} AS s
+      FROM asg {"JOIN stats USING (b)" if per_bucket else "CROSS JOIN stats"}
+      WHERE b IN ({blist})
+    ),
+    shortlist AS (SELECT vec_id, v FROM scored ORDER BY s {order}, vec_id ASC LIMIT 40)
+    SELECT vec_id, round({exact}(v, {q}), 8) AS distance
     FROM shortlist
-    ORDER BY list_distance(v, {q}) ASC, vec_id ASC
+    ORDER BY {exact}(v, {q}) {order}, vec_id ASC
     LIMIT 10
     """
 
 
-@_register("ann_ivf_bq_local_rerank", _ivf_bq_local_rerank_oracle)
+@_register("ann_ivf_bq_rerank", lambda: _ivf_codes_oracle(_BQ_HAMMING))
+def q_ann_ivf_bq_rerank(spark, sf_dir):
+    # IVF routing over MATERIALIZED 1-bit codes (similarity/ivfcodes.BQCodes):
+    # probe 4/8 buckets, integer Hamming over dim/8-byte words (the
+    # densest codes relation in the engine — 64x smaller than the raw
+    # float scan), exact re-rank of the top-40. Completes the IVF
+    # compression family: IVFSQ (1 B/dim), IVFPQ (16 B/vec), IVFBQ
+    # (1 bit/dim).
+    from .similarity.bq import BQModel
+    from .similarity.ivfcodes import BQCodes, IVFCodesIndex
+
+    idx = _cached(sf_dir, "ivf_bq", lambda: IVFCodesIndex.build(
+        _ivfflat_for(spark, sf_dir), "embedding", "vec_id",
+        BQCodes(BQModel.train(_t(spark, sf_dir, "embeddings"), "embedding")),
+    ))
+    return idx.probe(QUERY_VEC, k=10, rerank=40, probe_lists=4)
+
+
+@_register(
+    "ann_ivf_bq_local_rerank", lambda: _ivf_codes_oracle(_BQ_HAMMING, per_bucket=True)
+)
 def q_ann_ivf_bq_local_rerank(spark, sf_dir):
-    # per-BUCKET thresholds (build(per_bucket=True)) — the 1-bit analog of
+    # per-BUCKET thresholds (BQCodes(per_bucket=True)) — the 1-bit analog of
     # IVF residual encoding, and the fix the 2.2M scale drill demanded:
     # global midranges collapse a cluster-shaped bucket's codes to one
     # word (routed tier measured recall 0.856 -> 0.10). Bucket-local
     # thresholds split the LOCAL distribution; the query re-encodes
-    # against each probed bucket's thresholds via a broadcast map.
-    from .similarity.bq import IVFBQIndex
+    # against each probed bucket's thresholds (one literal table).
+    from .similarity.ivfcodes import BQCodes, IVFCodesIndex
 
-    idx = _cached(sf_dir, "ivf_bq_local", lambda: IVFBQIndex.build(
-        _ivfflat_for(spark, sf_dir), "embedding", "vec_id", per_bucket=True
+    idx = _cached(sf_dir, "ivf_bq_local", lambda: IVFCodesIndex.build(
+        _ivfflat_for(spark, sf_dir), "embedding", "vec_id", BQCodes(per_bucket=True)
     ))
     return idx.probe(QUERY_VEC, k=10, rerank=40, probe_lists=4)
 
 
-@_register("ann_ivf_sq8_rerank", _ivf_sq8_rerank_oracle)
+@_register(
+    "ann_ivf_sq8_rerank",
+    lambda: _ivf_codes_oracle(
+        f"round({_dim_sum(f'({_SQ8_DEC} - ql[i]) * ({_SQ8_DEC} - ql[i])')}, 9)"
+    ),
+)
 def q_ann_ivf_sq8_rerank(spark, sf_dir):
     # FAISS-style IVFSQ: probe 4/8 buckets, ADC-score their MATERIALIZED
-    # codes (encoded once at build, persisted without the raw vectors —
-    # the 4× scan reduction is real, similarity/quantize.IVFSQ8Index),
+    # codes (encoded once at build, stored without the raw vectors —
+    # the 4× scan reduction is real, similarity/ivfcodes.SQ8Codes),
     # exact re-rank of the top-40. Hash-match gated end to end — the
     # approximation (bucket pruning + rerank depth) is part of the
     # specified semantics, not noise.
-    from .similarity.quantize import IVFSQ8Index, SQ8Model
+    from .similarity.ivfcodes import IVFCodesIndex, SQ8Codes
+    from .similarity.quantize import SQ8Model
 
-    idx = _cached(sf_dir, "ivf_sq8", lambda: IVFSQ8Index.build(
+    idx = _cached(sf_dir, "ivf_sq8", lambda: IVFCodesIndex.build(
         _ivfflat_for(spark, sf_dir), "embedding", "vec_id",
-        model=SQ8Model.train(_t(spark, sf_dir, "embeddings"), "embedding"),
+        SQ8Codes(SQ8Model.train(_t(spark, sf_dir, "embeddings"), "embedding")),
     ))
     return idx.probe(QUERY_VEC, k=10, rerank=40, probe_lists=4)
 
 
-def _ivf_sq8_rerank_cosine_oracle() -> str:
-    """Cosine twin of _ivf_sq8_rerank_oracle: same l2 bucket ASSIGNMENT
-    (the reference's FindCentroid is l2 regardless of ops class — assignment
-    geometry is fixed at build), cosine bucket RANKING (rank_buckets'
-    arithmetic replicated below), asymmetric-cosine ADC shortlist (DESC),
-    exact cosine re-rank."""
+def _ivf_sq8_cosine_score() -> str:
+    """Asymmetric cosine ADC (SQ8Model.adc_cosine): ‖q‖ is inlined as the
+    same driver-computed literal."""
     import math
 
-    values, cents = _ivfflat_oracle_cents()
-
-    buckets = fold.rank_centroids("cosine", cents, QUERY_VEC)[:4]
-    blist = ", ".join(str(b) for b in buckets)
-    q = _vec_sql_literal(QUERY_VEC)
     qn = repr(math.sqrt(sum(float(x) * float(x) for x in QUERY_VEC)) or 1e-300)
-    dec = (
-        "(mnl[i] + (CASE WHEN mxl[i] - mnl[i] = 0 THEN 0 "
-        "ELSE greatest(0, least(255, CAST(floor(255.0 * (v[i] - mnl[i]) / (mxl[i] - mnl[i]) + 0.5) AS INTEGER))) END)"
-        " * (mxl[i] - mnl[i]) / 255.0)"
-    )
-    return f"""
-    WITH cents(b, c) AS (VALUES {values}),
-    dims AS (
-      SELECT i AS dim, min(x) AS mn, max(x) AS mx
-      FROM (SELECT unnest(embedding::DOUBLE[]) AS x,
-                   generate_subscripts(embedding, 1) AS i
-            FROM embeddings)
-      GROUP BY i
-    ),
-    stats AS (
-      SELECT list(mn ORDER BY dim) AS mnl, list(mx ORDER BY dim) AS mxl,
-             {q} AS ql
-      FROM dims
-    ),
-    a AS (
-      SELECT e.vec_id, e.embedding::DOUBLE[] AS v, c.b,
-             row_number() OVER (
-               PARTITION BY e.vec_id
-               ORDER BY list_distance(e.embedding::DOUBLE[], c.c), c.b) AS arn
-      FROM embeddings e CROSS JOIN cents c
-    ),
-    adc AS (
-      SELECT vec_id, v,
-             round(list_sum(list_transform(range(1, len(v) + 1), i ->
-                 {dec} * ql[i]))
-               / (sqrt(list_sum(list_transform(range(1, len(v) + 1), i ->
-                 {dec} * {dec}))) * {qn}), 9) AS adc_s
-      FROM a CROSS JOIN stats
-      WHERE arn = 1 AND b IN ({blist})
-    ),
-    shortlist AS (
-      SELECT vec_id, v FROM adc ORDER BY adc_s DESC, vec_id ASC LIMIT 40
-    )
-    SELECT vec_id, round(list_cosine_similarity(v, {q}), 8) AS distance
-    FROM shortlist
-    ORDER BY list_cosine_similarity(v, {q}) DESC, vec_id ASC
-    LIMIT 10
-    """
+    dot = _dim_sum(f"{_SQ8_DEC} * ql[i]")
+    norm = _dim_sum(f"{_SQ8_DEC} * {_SQ8_DEC}")
+    return f"round({dot} / (sqrt({norm}) * {qn}), 9)"
 
 
-@_register("ann_ivf_sq8_rerank_cosine", _ivf_sq8_rerank_cosine_oracle)
+@_register(
+    "ann_ivf_sq8_rerank_cosine",
+    lambda: _ivf_codes_oracle(_ivf_sq8_cosine_score(), metric="cosine"),
+)
 def q_ann_ivf_sq8_rerank_cosine(spark, sf_dir):
     # compressed serving end-to-end for vector_cosine_ops: cosine bucket
     # routing + asymmetric-cosine ADC over materialized codes + exact
     # cosine re-rank — the full three-ops-class IVFSQ story, hash-gated.
     from .index.ivfflat import IVFFlatIndex
-    from .similarity.quantize import IVFSQ8Index, SQ8Model
+    from .similarity.ivfcodes import IVFCodesIndex, SQ8Codes
+    from .similarity.quantize import SQ8Model
 
     def build():
         e = _t(spark, sf_dir, "embeddings")
@@ -2667,8 +2558,9 @@ def q_ann_ivf_sq8_rerank_cosine(spark, sf_dir):
             e, "embedding", lists=8, probe_lists=4, dist="cosine",
             max_iter=5, init_order="vec_id",
         )
-        model = SQ8Model.train(e, "embedding")
-        return IVFSQ8Index.build(idx, "embedding", "vec_id", model=model)
+        return IVFCodesIndex.build(
+            idx, "embedding", "vec_id", SQ8Codes(SQ8Model.train(e, "embedding"))
+        )
 
     idx = _cached(sf_dir, "ivf_sq8_cos", build)
     return idx.probe(QUERY_VEC, k=10, rerank=40, probe_lists=4)
@@ -2959,13 +2851,14 @@ def q_ann_ivfpq_rerank(spark, sf_dir):
     # ADC-scanned via the literal-LUT codegen fold, raw vectors touched
     # only for the exact re-rank of the top-40. One tier deeper than
     # ann_ivf_sq8_rerank; deterministic end to end → offline-replay oracle.
-    from .similarity.pq import IVFPQIndex
+    from .similarity.ivfcodes import IVFCodesIndex, PQCodes
 
     # residual=False EXPLICITLY: this entry pins the single-LUT
     # global-codebook mode (ann_ivfpq_residual_rerank covers the
     # residual default — IVFADC, the r9 default flip)
-    idx = _cached(sf_dir, "ivfpq", lambda: IVFPQIndex.build(
-        _ivfflat_for(spark, sf_dir), "embedding", "vec_id", m=16, k=32, residual=False
+    idx = _cached(sf_dir, "ivfpq", lambda: IVFCodesIndex.build(
+        _ivfflat_for(spark, sf_dir), "embedding", "vec_id",
+        PQCodes(m=16, k=32, residual=False),
     ))
     return _probe_out(idx.probe(QUERY_VEC, 10, rerank=40, probe_lists=4))
 
@@ -2983,12 +2876,13 @@ def q_ann_ivfpq_residual_rerank(spark, sf_dir):
     # already separated (global-codebook PQ measured 0.44 recall@10 at
     # rerank 4x on the clustered drill corpus — the PQ twin of the BQ
     # global-threshold collapse). The query's LUT differs per probed
-    # bucket (q − centroid[b]) and rides a probe_lists-sized broadcast
-    # join. Deterministic end to end → offline-replay oracle.
-    from .similarity.pq import IVFPQIndex
+    # bucket (q − centroid[b]) and is picked from one literal table by
+    # the row's bucket. Deterministic end to end → offline-replay oracle.
+    from .similarity.ivfcodes import IVFCodesIndex, PQCodes
 
-    idx = _cached(sf_dir, "ivfpq_residual", lambda: IVFPQIndex.build(
-        _ivfflat_for(spark, sf_dir), "embedding", "vec_id", m=16, k=32, residual=True
+    idx = _cached(sf_dir, "ivfpq_residual", lambda: IVFCodesIndex.build(
+        _ivfflat_for(spark, sf_dir), "embedding", "vec_id",
+        PQCodes(m=16, k=32, residual=True),
     ))
     return _probe_out(idx.probe(QUERY_VEC, 10, rerank=40, probe_lists=4))
 

@@ -39,7 +39,7 @@ the global midrange in most dims, so their codes are (near-)identical and
 Hamming carries no within-cluster signal (routed-tier recall measured
 0.856 → 0.10). The fix is LOCAL thresholds per routing unit:
 ShardedHNSW.quantize_bq(local=True) derives them per shard,
-IVFBQIndex.build(per_bucket=True) per IVF bucket — the 1-bit analog of
+ivfcodes.BQCodes(per_bucket=True) per IVF bucket — the 1-bit analog of
 IVF residual encoding. The flat corpus-wide tier keeps global thresholds
 (across clusters Hamming still separates; within-cluster resolution is
 what the routed/bucketed variants exist for).
@@ -154,6 +154,15 @@ def rotate_vec(vec, rotation: list[list[float]]) -> list[float]:
     return out
 
 
+def hamming_words(words: Column, qwords: Column) -> Column:
+    """XOR + popcount over two packed word arrays — exact integer distance."""
+    return F.aggregate(
+        F.zip_with(words, qwords, lambda a, b: F.bit_count(a.bitwiseXOR(b))),
+        F.lit(0).cast("long"),
+        lambda s, v: s + v,
+    )
+
+
 @dataclass
 class BQModel:
     """Per-dimension midrange thresholds (driver-resident, O(dims)).
@@ -193,43 +202,41 @@ class BQModel:
     def n_words(self) -> int:
         return (self.dims + WORD_BITS - 1) // WORD_BITS
 
-    def _bits(self, vec: Column | str) -> Column:
-        """array<bigint> of 0/1 sign bits (strict >, matching the oracle).
+    def _bits(self, vec: Column | str, thr: Column | None = None) -> Column:
+        """array<bigint> of 0/1 sign bits (strict >, matching the oracle);
+        ``thr`` is a per-row thresholds column in place of the model's
+        (per-bucket thresholds, similarity/ivfcodes.BQCodes).
 
         Row dimensionality is ENFORCED (assert_true): zip_with would pad a
         short/long row with NULLs, which when().otherwise(0) would silently
         turn into plausible-looking zero bits — a wrong Hamming distance
         with no error anywhere. encode_query raises the same way."""
+        thr = vec_lit(self.thresholds) if thr is None else thr
+
+        def bit(x, t):
+            return F.when(x > t, F.lit(1)).otherwise(F.lit(0)).cast("long")
+
         if self.rotation is not None:
             # rotate_col enforces dimensionality itself (same assert_true
             # pattern), and its output is exactly self.dims wide
-            v = rotate_col(vec, self.rotation)
-            thr = vec_lit(self.thresholds)
-            return F.zip_with(
-                v,
-                thr,
-                lambda x, t: F.when(x > t, F.lit(1)).otherwise(F.lit(0)).cast("long"),
-            )
+            return F.zip_with(rotate_col(vec, self.rotation), thr, bit)
         v = (F.col(vec) if isinstance(vec, str) else vec).cast("array<double>")
         ok = F.assert_true(
             F.size(v) == F.lit(self.dims),
             F.lit(f"BQ encode: vector must have {self.dims} dims"),
         )
-        thr = vec_lit(self.thresholds)
-        bits = F.zip_with(
-            v, thr, lambda x, t: F.when(x > t, F.lit(1)).otherwise(F.lit(0)).cast("long")
-        )
-        return F.when(ok.isNull(), bits)  # assert_true is NULL on success
+        return F.when(ok.isNull(), F.zip_with(v, thr, bit))  # assert_true is NULL on success
 
-    def encode_words(self, vec: Column | str) -> Column:
-        """Pack sign bits MSB-first into ``array<bigint>`` words.
+    def encode_words(self, vec: Column | str, thr: Column | None = None) -> Column:
+        """Pack sign bits MSB-first into ``array<bigint>`` words (``thr``:
+        see :meth:`_bits`).
 
         word[w] = fold over bits[w*32 .. w*32+31] (WORD_BITS=32 per word —
         NOT 64: the MSB-first acc*2+b fold would overflow signed int64 at
         the 64th bit under ANSI mode) of acc*2 + bit. The HOF
         chain keeps the generated expression O(n_words) regardless of
         dimensionality."""
-        bits = self._bits(vec)
+        bits = self._bits(vec, thr)
         return F.transform(
             F.sequence(F.lit(0), F.lit(self.n_words - 1)),
             lambda w: F.aggregate(
@@ -264,11 +271,7 @@ class BQModel:
             + ", ".join(f"CAST({int(w)} AS BIGINT)" for w in self.encode_query(query))
             + ")"
         )
-        return F.aggregate(
-            F.zip_with(words, qwords, lambda a, b: F.bit_count(a.bitwiseXOR(b))),
-            F.lit(0).cast("long"),
-            lambda s, v: s + v,
-        )
+        return hamming_words(words, qwords)
 
     def hamming_topk(
         self,
@@ -328,15 +331,8 @@ class BQModel:
         if items.rdd.getNumPartitions() < want:
             items = items.repartition(want)
         iw = items.select(F.col(i_id), self.encode_words(i_vec).alias("_iw"))
-        ham = F.aggregate(
-            F.zip_with(
-                F.col("_iw"), F.col("_qw"), lambda a, b: F.bit_count(a.bitwiseXOR(b))
-            ),
-            F.lit(0).cast("long"),
-            lambda s, v: s + v,
-        )
         scored = iw.crossJoin(qw).select(
-            "qid", F.col(i_id), ham.alias(dist_col)
+            "qid", F.col(i_id), hamming_words(F.col("_iw"), F.col("_qw")).alias(dist_col)
         )
         w = Window.partitionBy("qid").orderBy(
             F.col(dist_col).asc(), F.col(i_id).asc()
@@ -370,201 +366,6 @@ class BQModel:
             df.join(broadcast(short.select(id_col)), id_col, "inner")
             .select(F.col(id_col), exact.alias(dist_col))
             .orderBy(F.col(dist_col).asc(), F.col(id_col).asc())
-            .limit(k)
-        )
-
-
-WORDS_COL = "__bq_words"
-
-
-def _encode_words_against(vec: Column | str, thr: Column, n_words: int | None = None):
-    """encode_words generalized to a per-row thresholds COLUMN (the
-    per-bucket mode's joined threshold array). Same MSB-first 32-bit
-    packing as BQModel.encode_words; ``n_words`` is required — the
-    generated expression's shape is static. Row dimensionality is
-    ENFORCED against the thresholds array (same silent-zero-fill hazard
-    BQModel._bits guards)."""
-    if not n_words:
-        raise ValueError("n_words is required")
-    v = (F.col(vec) if isinstance(vec, str) else vec).cast("array<double>")
-    ok = F.assert_true(
-        F.size(v) == F.size(thr),
-        F.lit("BQ encode: vector dims must match the bucket thresholds"),
-    )
-    bits = F.when(
-        ok.isNull(),  # assert_true is NULL on success
-        F.zip_with(
-            v, thr, lambda x, t: F.when(x > t, F.lit(1)).otherwise(F.lit(0)).cast("long")
-        ),
-    )
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_words - 1)),
-        lambda w: F.aggregate(
-            F.slice(bits, w * WORD_BITS + 1, WORD_BITS),
-            F.lit(0).cast("long"),
-            lambda acc, b: acc * 2 + b,
-        ),
-    )
-
-
-@dataclass
-class IVFBQIndex:
-    """IVF routing over materialized 1-bit codes — the BQ member of the
-    IVF compression family next to IVFSQ8Index (64 B/vec codes) and
-    IVFPQIndex (16 B/vec): here the codes relation is (id, bucket, words)
-    at dim/8 bytes per row, so the probed buckets' shortlist scan is pure
-    integer XOR+popcount over the densest codes the engine stores. The
-    probe is route -> Hamming shortlist (integer-exact: NO rounding
-    anywhere before the rerank) -> exact re-rank on raw vectors; the
-    approximation (bucket pruning + shortlist depth) is part of the
-    specified, hash-gated semantics."""
-
-    ivf: object  # IVFFlatIndex
-    model: BQModel  # global thresholds (per_bucket=False) or unused for codes
-    codes: DataFrame  # (id_col, BUCKET_COL, WORDS_COL) — no raw vectors
-    vec_col: str
-    id_col: str
-    # per_bucket=True: bucket -> that bucket's own midrange thresholds
-    # (driver-resident, O(buckets x dims) — centroid-sized). The same
-    # clustered-corpus lesson as ShardedHNSW.quantize_bq(local=True): a
-    # bucket is one cluster, and GLOBAL midranges put the whole cluster on
-    # one side of every dim, collapsing all its codes to the same word
-    # (2.2M drill: recall 0.856 -> 0.10). Bucket-local thresholds split
-    # the local distribution — the 1-bit analog of IVF residual encoding.
-    bucket_thresholds: "dict[int, list[float]] | None" = None
-
-    @classmethod
-    def build(
-        cls,
-        ivf_index,
-        vec_col: str,
-        id_col: str,
-        model: "BQModel | None" = None,
-        per_bucket: bool = False,
-    ) -> "IVFBQIndex":
-        from ..index.ivfflat import BUCKET_COL
-
-        thr_by_bucket = None
-        if not per_bucket:
-            model = model or BQModel.train(ivf_index.assignments, vec_col)
-        if per_bucket:
-            rows = (
-                ivf_index.assignments.select(
-                    F.col(BUCKET_COL).alias("b"),
-                    F.posexplode(F.col(vec_col).cast("array<double>")).alias(
-                        "dim", "x"
-                    ),
-                )
-                .groupBy("b", "dim")
-                .agg(((F.min("x") + F.max("x")) / 2.0).alias("thr"))
-                .orderBy("b", "dim")
-                .collect()
-            )
-            thr_by_bucket = {}
-            for r in rows:
-                thr_by_bucket.setdefault(r["b"], []).append(r["thr"])
-            # encode each row against ITS bucket's thresholds: the per-
-            # bucket arrays ride a broadcast map join (centroid-sized)
-            tdf = F.broadcast(
-                ivf_index.assignments.sparkSession.createDataFrame(
-                    [(b, t) for b, t in sorted(thr_by_bucket.items())],
-                    f"{BUCKET_COL} long, __thr array<double>",
-                )
-            )
-            # the global model is unused for codes in this mode — derive
-            # n_words (and a representative model for probe-side query
-            # encoding) from the bucket thresholds, skipping a second
-            # corpus-wide dim_stats aggregation
-            model = model or BQModel(next(iter(thr_by_bucket.values())))
-            enc = _encode_words_against(vec_col, F.col("__thr"), n_words=model.n_words)
-            codes = (
-                ivf_index.assignments.join(tdf, BUCKET_COL)
-                .select(F.col(id_col), F.col(BUCKET_COL), enc.alias(WORDS_COL))
-                .persist()
-            )
-        else:
-            codes = ivf_index.assignments.select(
-                F.col(id_col),
-                F.col(BUCKET_COL),
-                model.encode_words(vec_col).alias(WORDS_COL),
-            ).persist()
-        return cls(ivf_index, model, codes, vec_col, id_col, thr_by_bucket)
-
-    @property
-    def assignments(self) -> DataFrame:
-        return self.ivf.assignments
-
-    def probe(
-        self,
-        query: list[float],
-        k: int,
-        rerank: int | None = None,
-        probe_lists: int | None = None,
-        dist_col: str = "distance",
-        where=None,
-    ) -> DataFrame:
-        from ..functions.vector import cosine_similarity, inner_product, l2_dist
-        from ..index.ivfflat import BUCKET_COL
-        from pyspark.sql.functions import broadcast
-
-        metric = self.ivf.dist
-        asc = metric == "l2"
-        if rerank is None:
-            rerank = 4 * k
-        buckets = self.ivf.rank_buckets(query)[: (probe_lists or self.ivf.probe_lists)]
-        cand = self.codes.filter(F.col(BUCKET_COL).isin(buckets))
-        if where is not None:
-            allowed = self.ivf.assignments.filter(where).select(self.id_col)
-            cand = cand.join(allowed, self.id_col, "left_semi")
-        if self.bucket_thresholds is not None:
-            # per-bucket mode: the QUERY must encode against each probed
-            # bucket's own thresholds; the (bucket, qwords) map is
-            # bucket-count-sized and broadcasts
-            spark = self.codes.sparkSession
-            qrows = []
-            for b in buckets:
-                thr = self.bucket_thresholds.get(b)
-                if thr is None:
-                    continue
-                m = BQModel(thr)
-                qrows.append((b, m.encode_query(list(query))))
-            qdf = F.broadcast(
-                spark.createDataFrame(qrows, f"{BUCKET_COL} long, __qw array<bigint>")
-            )
-            ham_expr = F.aggregate(
-                F.zip_with(
-                    F.col(WORDS_COL),
-                    F.col("__qw"),
-                    lambda a, bb: F.bit_count(a.bitwiseXOR(bb)),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-            ham = cand.join(qdf, BUCKET_COL).select(
-                F.col(self.id_col), ham_expr.alias("__h")
-            )
-        else:
-            ham = cand.select(
-                F.col(self.id_col),
-                self.model.hamming(F.col(WORDS_COL), query).alias("__h"),
-            )
-        shortlist = ham.orderBy(F.col("__h").asc(), F.col(self.id_col).asc()).limit(
-            rerank
-        )
-        raw = self.ivf.assignments.filter(F.col(BUCKET_COL).isin(buckets)).select(
-            F.col(self.id_col), F.col(self.vec_col)
-        )
-        rer = raw.join(broadcast(shortlist.select(self.id_col)), self.id_col)
-        exact_fn = {"l2": l2_dist, "cosine": cosine_similarity, "ip": inner_product}[
-            metric
-        ]
-        order = F.col(dist_col).asc() if asc else F.col(dist_col).desc()
-        return (
-            rer.select(
-                F.col(self.id_col),
-                F.round(exact_fn(self.vec_col, query), 8).alias(dist_col),
-            )
-            .orderBy(order, F.col(self.id_col).asc())
             .limit(k)
         )
 

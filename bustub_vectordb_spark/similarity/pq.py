@@ -190,12 +190,7 @@ class PQModel:
         whole-stage-codegen — table lookups on the scan, no UDF. l2 orders
         ascending; ip is a similarity, order it descending."""
         codes = F.col(codes_col) if isinstance(codes_col, str) else codes_col
-        lut_lit = vecs_lit(self.lut(query, metric))
-        partial = F.zip_with(
-            lut_lit, codes, lambda row, c: F.element_at(row, c + 1)
-        )
-        total = fold.col_seq_sum(partial)
-        return F.sqrt(total) if metric == "l2" else total
+        return adc_fold(codes, vecs_lit(self.lut(query, metric)), metric)
 
     def adc_topk(
         self,
@@ -216,6 +211,14 @@ class PQModel:
             .orderBy(order, F.col(id_col).asc())
             .limit(n)
         )
+
+
+def adc_fold(codes: Column, lut: Column, metric: str = "l2") -> Column:
+    """Σ_i lut[i][code_i] (sqrt'd for l2) over an array<array<double>>
+    lookup-table column: a left fold of table lookups, whole-stage codegen."""
+    partial = F.zip_with(lut, codes, lambda row, c: F.element_at(row, c + 1))
+    total = fold.col_seq_sum(partial)
+    return F.sqrt(total) if metric == "l2" else total
 
 
 def pq_rerank_topk(
@@ -244,213 +247,6 @@ def pq_rerank_topk(
     )
 
 
-def _residual_df(ivf_index, vec_col: str, id_col: str) -> DataFrame:
-    """(id, bucket, __res = x − centroid[bucket]) — the centroid table is
-    bucket-count-sized and broadcasts; the subtraction is elementwise
-    (no reduction order to vary → bit-identical to the numpy replay)."""
-    from ..index.ivfflat import BUCKET_COL
-
-    spark = ivf_index.assignments.sparkSession
-    cents = F.broadcast(
-        spark.createDataFrame(
-            [(b, [float(x) for x in c]) for b, c in enumerate(ivf_index.centroids)],
-            f"{BUCKET_COL} int, __cent array<double>",
-        )
-    )
-    res = F.zip_with(
-        F.col(vec_col).cast("array<double>"), F.col("__cent"), lambda x, c: x - c
-    )
-    return ivf_index.assignments.join(cents, BUCKET_COL).select(
-        F.col(id_col), F.col(BUCKET_COL), res.alias("__res")
-    )
-
-
-@dataclass
-class IVFPQIndex:
-    """IVF routing over PQ codes — the FAISS IVFPQ layout (Jégou 2011 §V):
-    coarse centroids prune to ``probe_lists`` buckets, the probed buckets'
-    MATERIALIZED codes are ADC-scanned (m bytes/vector — at 100 TB the
-    codes sweep is RAM-resident where a float scan spills), and the raw
-    vectors are touched only for the exact re-rank of the shortlist.
-    Mirrors similarity/quantize.IVFSQ8Index one compression tier deeper
-    (l2 ops class; deterministic end to end → offline-replay oracle,
-    queries.py `ann_ivfpq_rerank`)."""
-
-    ivf: object  # IVFFlatIndex (l2)
-    model: PQModel
-    codes: DataFrame  # (id_col, BUCKET_COL, codes) — no raw vectors
-    vec_col: str
-    id_col: str
-    # residual=True (IVFADC, Jégou 2011 §III-D — the DEFAULT, and the
-    # published standard): codes quantize the RESIDUAL
-    # x − centroid[bucket(x)], not x itself. On clustered corpora global
-    # codebooks spend their k centroids separating CLUSTERS, so all of a
-    # bucket's codes collapse toward the same few codewords and the
-    # shallow shortlist loses within-bucket resolution (the same failure
-    # mode the per-bucket BQ thresholds fix one tier down; measured at
-    # 1.2M clustered rows: global-PQ recall@10 0.128 vs residual 0.906,
-    # drills/drill_1200k_ivf_tiers.json — global collapses at density).
-    # Residuals re-center every bucket at the origin, so the full codebook
-    # budget resolves LOCAL structure. The query's LUT then differs per
-    # probed bucket (q − centroid[b]) and rides a broadcast (bucket, lut)
-    # join. residual=False keeps the single-LUT global-codebook mode
-    # (uniform corpora measure the two equal — sf0.01 recall report:
-    # 0.785 residual vs 0.795 global — and pre-upgrade saves load as it).
-    residual: bool = True
-
-    @classmethod
-    def build(
-        cls,
-        ivf_index,
-        vec_col: str,
-        id_col: str,
-        m: int = 16,
-        k: int = 32,
-        residual: bool = True,
-    ) -> "IVFPQIndex":
-        from ..index.ivfflat import BUCKET_COL
-
-        if ivf_index.dist != "l2":
-            raise ValueError("IVFPQIndex supports l2 indexes (ADC LUT is l2)")
-        if residual:
-            src = _residual_df(ivf_index, vec_col, id_col)
-            model = PQModel.train(src, "__res", id_col, m=m, k=k)
-            codes = model.encode(src, "__res", id_col, keep=(BUCKET_COL,)).persist()
-        else:
-            model = PQModel.train(ivf_index.assignments, vec_col, id_col, m=m, k=k)
-            codes = model.encode(
-                ivf_index.assignments, vec_col, id_col, keep=(BUCKET_COL,)
-            ).persist()
-        return cls(ivf_index, model, codes, vec_col, id_col, residual)
-
-    @property
-    def assignments(self) -> DataFrame:
-        """Underlying IVF assignments — routes the planner's filtered-search
-        dispatch (index/selection.py) to the ``where`` path here."""
-        return self.ivf.assignments
-
-    def probe(
-        self,
-        query: list[float],
-        k: int,
-        rerank: int | None = None,
-        probe_lists: int | None = None,
-        dist_col: str = "distance",
-        where=None,
-    ) -> DataFrame:
-        """route → ADC fold over probed buckets' codes → exact re-rank.
-        ``where`` semi-joins matching ids into the codes scan BEFORE the
-        shortlist, so top-k is among matching rows (filtered search)."""
-        from ..functions.vector import l2_dist
-        from ..index.ivfflat import BUCKET_COL
-
-        rerank = rerank or 4 * k
-        buckets = self.ivf.rank_buckets(query)[
-            : (probe_lists or self.ivf.probe_lists)
-        ]
-        cand = self.codes.filter(F.col(BUCKET_COL).isin(buckets))
-        if where is not None:
-            allowed = self.ivf.assignments.filter(where).select(self.id_col)
-            cand = cand.join(allowed, self.id_col, "left_semi")
-        if self.residual:
-            # per-bucket LUT: codes are residuals against THEIR bucket's
-            # centroid, so the query's table is built from (q − centroid[b])
-            # for each probed b — a probe_lists-sized broadcast join, the
-            # same shape as IVFBQIndex's per-bucket query words
-            spark = self.codes.sparkSession
-            q = np.asarray(query, dtype=np.float64)
-            lut_rows = []
-            for b in buckets:
-                qr = [float(x) for x in (q - np.asarray(self.ivf.centroids[b]))]
-                lut_rows.append((int(b), self.model.lut(qr)))
-            lut_df = F.broadcast(
-                spark.createDataFrame(
-                    lut_rows, f"{BUCKET_COL} int, __lut array<array<double>>"
-                )
-            )
-            adc = F.sqrt(
-                fold.col_seq_sum(
-                    F.zip_with(
-                        F.col("__lut"),
-                        F.col("codes"),
-                        lambda row, c: F.element_at(row, c + 1),
-                    )
-                )
-            )
-            shortlist = (
-                cand.join(lut_df, BUCKET_COL)
-                .select(F.col(self.id_col), adc.alias("__adc"))
-                .orderBy(F.col("__adc").asc(), F.col(self.id_col).asc())
-                .limit(rerank)
-            )
-        else:
-            shortlist = (
-                cand.select(
-                    F.col(self.id_col),
-                    self.model.adc_dist("codes", query).alias("__adc"),
-                )
-                .orderBy(F.col("__adc").asc(), F.col(self.id_col).asc())
-                .limit(rerank)
-            )
-        raw = self.ivf.assignments.filter(F.col(BUCKET_COL).isin(buckets)).select(
-            F.col(self.id_col), F.col(self.vec_col)
-        )
-        return (
-            raw.join(F.broadcast(shortlist.select(self.id_col)), self.id_col)
-            .select(
-                F.col(self.id_col), l2_dist(self.vec_col, query).alias(dist_col)
-            )
-            .orderBy(F.col(dist_col).asc(), F.col(self.id_col).asc())
-            .limit(k)
-        )
-
-    # -- persistence -------------------------------------------------------
-    def save(self, path: str) -> None:
-        """Codes partitioned by bucket (probe = partition pruning on disk),
-        the per-subspace codebooks as one small parquet, and the IVF
-        index's own layout beside them."""
-        from ..index.ivfflat import BUCKET_COL
-
-        self.codes.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(
-            f"{path}/codes"
-        )
-        spark = self.codes.sparkSession
-        rows = [
-            (i, j, [float(x) for x in self.model.centroids[i][j]])
-            for i in range(self.model.m)
-            for j in range(self.model.k)
-        ]
-        spark.createDataFrame(
-            rows, "subspace int, code int, centroid array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
-        spark.createDataFrame(
-            [(self.vec_col, self.id_col, int(self.ivf.probe_lists), int(self.residual))],
-            "vec_col string, id_col string, probe_lists int, residual int",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-        self.ivf.save(f"{path}/ivf")
-
-    @classmethod
-    def load(cls, spark, path: str) -> "IVFPQIndex":
-        from ..index.ivfflat import IVFFlatIndex
-
-        meta = spark.read.parquet(f"{path}/meta").collect()[0]
-        cb = spark.read.parquet(f"{path}/codebooks").collect()
-        m = max(r["subspace"] for r in cb) + 1
-        cents = []
-        for i in range(m):
-            sub = sorted((r for r in cb if r["subspace"] == i), key=lambda r: r["code"])
-            cents.append(np.asarray([list(r["centroid"]) for r in sub], dtype=np.float64))
-        dim = sum(c.shape[1] for c in cents)
-        model = PQModel(cents, _split(dim, m))
-        ivf = IVFFlatIndex.load(
-            spark, f"{path}/ivf", meta["vec_col"], meta["probe_lists"]
-        )
-        codes = spark.read.parquet(f"{path}/codes").persist()
-        # pre-upgrade saves carry no residual column -> global-codebook mode
-        residual = bool(meta.asDict().get("residual", 0))
-        return cls(ivf, model, codes, meta["vec_col"], meta["id_col"], residual)
-
-
 # -- offline replay (oracle) ----------------------------------------------
 
 
@@ -464,7 +260,7 @@ def offline_pq(
 ) -> tuple[PQModel, list, np.ndarray]:
     """Replay train + encode without Spark: (model, ids, codes), a pure
     function of the parquet contents (id-sorted, same init, same argmin).
-    ``centroids`` replays a RESIDUAL train (``IVFPQIndex.build(residual=
+    ``centroids`` replays a RESIDUAL train (``ivfcodes.PQCodes(residual=
     True)``, the routed and vamana residual PQ): the rows are
     x − centroids[nearest] — the fold argmin the codegen assignment
     evaluates (first-min ties), an elementwise subtraction (no order to
@@ -509,7 +305,7 @@ def offline_pq_search(
     - ``rerank=(vectors_by_id, shortlist)``: ``pq_rerank_topk`` — the
       ``shortlist`` best ADC ids rerank with the exact left-fold l2.
     - ``centroids`` (with ``probe_lists`` and ``rerank``):
-      ``IVFPQIndex.probe`` — rows assign to cells by the fold argmin
+      ``IVFCodesIndex.probe`` over ``PQCodes`` — rows assign to cells by the fold argmin
       (first-min ties), the probe_lists nearest cells rank driver-style
       (fold.rank_centroids), only their rows are scored; ``residual``
       scores each cell with the LUT of q − centroid[cell] (codes from

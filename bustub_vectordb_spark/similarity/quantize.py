@@ -210,179 +210,3 @@ def sq8_adc_oracle_sql(
     SELECT {id_col}, {dist_col} FROM dists
     ORDER BY {dist_col} {direction}, {id_col} ASC LIMIT {k}
     """
-
-
-CODES_COL = "__codes"
-
-
-@dataclass
-class IVFSQ8Index:
-    """IVF + materialized SQ8 codes — the FAISS IVFSQ layout, realized.
-
-    ``build`` encodes the corpus ONCE and persists a codes relation of
-    (id, bucket, codes) with NO raw-vector column: the ADC probe scans 1
-    byte/dim instead of 4-8, which at 100 TB is the difference between a
-    RAM-resident codes sweep and a spilling float scan. Raw vectors are
-    touched only (a) per-shortlist-row in the exact re-rank join and (b) at
-    save() time. The probe plan provably reads codes, not vectors —
-    asserted in tests/test_quantize.py::test_probe_plan_reads_codes_only.
-    """
-
-    ivf: object  # IVFFlatIndex
-    model: SQ8Model
-    codes: DataFrame  # (id_col, BUCKET_COL, CODES_COL) — no raw vectors
-    vec_col: str
-    id_col: str
-    # probes without an explicit rerank depth use this; None → 4×k
-    default_rerank: int | None = None
-
-    @classmethod
-    def build(cls, ivf_index, vec_col: str, id_col: str, model: SQ8Model | None = None) -> "IVFSQ8Index":
-        from ..index.ivfflat import BUCKET_COL
-
-        if ivf_index.dist not in SQ8Model._METRICS:
-            raise ValueError(
-                f"IVFSQ8Index supports {sorted(SQ8Model._METRICS)} indexes, "
-                f"got {ivf_index.dist!r}"
-            )
-        model = model or SQ8Model.train(ivf_index.assignments, vec_col)
-        codes = ivf_index.assignments.select(
-            F.col(id_col), F.col(BUCKET_COL), model.encode(vec_col).alias(CODES_COL)
-        ).persist()
-        return cls(ivf_index, model, codes, vec_col, id_col)
-
-    @property
-    def assignments(self) -> DataFrame:
-        """The underlying IVF assignment relation — lets the planner's
-        filtered-search dispatch (index/selection.py) route a ``where``
-        predicate here instead of the HNSW allowed-set path."""
-        return self.ivf.assignments
-
-    def probe(
-        self,
-        query: list[float],
-        k: int,
-        rerank: int | None = None,
-        probe_lists: int | None = None,
-        dist_col: str = "distance",
-        where=None,
-    ) -> DataFrame:
-        """route → ADC over codes → exact re-rank of the shortlist.
-
-        ``where`` (Column predicate over the base table) plans FILTERED
-        search: matching ids semi-join into the codes scan BEFORE the ADC
-        shortlist, so the top-k is taken among matching rows.
-
-        1. nearest ``probe_lists`` IVF buckets (driver-side, O(lists));
-        2. ADC distance over the probed buckets' CODES (columnar-pruned
-           scan of the persisted codes relation — raw vectors unread);
-        3. exact distance on raw vectors for the ADC top-``rerank`` ids
-           only (shortlist broadcast into the fetch join), emit top-``k``.
-
-        Deterministic (ADC ties broken by id) → hash-match gated end to end
-        (queries.py `ann_ivf_sq8_rerank`); approximation comes only from
-        bucket pruning and the rerank depth. Scoring follows the IVF
-        index's ops class (l2 / cosine / ip): ADC shortlist and exact
-        re-rank both order ascending for l2, descending for similarities.
-        """
-        from ..functions.vector import cosine_similarity, inner_product, l2_dist
-        from ..index.ivfflat import BUCKET_COL
-
-        metric = self.ivf.dist
-        asc = SQ8Model._METRICS[metric]
-        if rerank is None:
-            rerank = self.default_rerank or 4 * k  # shortlist 4× the ask
-        buckets = self.ivf.rank_buckets(query)[: (probe_lists or self.ivf.probe_lists)]
-        cand = self.codes.filter(F.col(BUCKET_COL).isin(buckets))
-        if where is not None:
-            allowed = self.ivf.assignments.filter(where).select(self.id_col)
-            cand = cand.join(allowed, self.id_col, "left_semi")
-        # ADC rounded to 9 decimals before ordering: Spark folds the dim sum
-        # left-to-right, DuckDB's list_sum may differ in the last bits — the
-        # rounding makes the shortlist boundary engine-independent
-        adc = cand.select(
-            F.col(self.id_col),
-            F.round(self.model.adc_score(CODES_COL, query, metric), 9).alias("__adc"),
-        )
-        adc_order = F.col("__adc").asc() if asc else F.col("__adc").desc()
-        shortlist = adc.orderBy(adc_order, F.col(self.id_col).asc()).limit(rerank)
-        # raw-vector fetch: only the probed buckets are scanned (partition
-        # pruning on bucket-partitioned storage) and only shortlist ids
-        # survive the broadcast semi-join
-        raw = self.ivf.assignments.filter(F.col(BUCKET_COL).isin(buckets)).select(
-            F.col(self.id_col), F.col(self.vec_col)
-        )
-        rer = raw.join(F.broadcast(shortlist.select(self.id_col)), self.id_col)
-        exact_fn = {"l2": l2_dist, "cosine": cosine_similarity, "ip": inner_product}[
-            metric
-        ]
-        order = F.col(dist_col).asc() if asc else F.col(dist_col).desc()
-        return (
-            rer.select(
-                F.col(self.id_col),
-                F.round(exact_fn(self.vec_col, query), 8).alias(dist_col),
-            )
-            .orderBy(order, F.col(self.id_col).asc())
-            .limit(k)
-        )
-
-    def save(self, path: str) -> None:
-        """Codes partitioned by bucket (probe = partition pruning) next to
-        the IVF index's own layout, plus the quantizer stats + meta so
-        ``load`` restores a probe-identical index."""
-        from ..index.ivfflat import BUCKET_COL
-
-        self.codes.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(
-            f"{path}/codes"
-        )
-        spark = self.codes.sparkSession
-        spark.createDataFrame(
-            [(i, float(mn), float(mx)) for i, (mn, mx) in enumerate(zip(self.model.mins, self.model.maxs))],
-            "dim int, mn double, mx double",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
-        spark.createDataFrame(
-            [
-                (
-                    self.vec_col,
-                    self.id_col,
-                    int(self.ivf.probe_lists),
-                    self.ivf.dist,
-                    self.default_rerank,
-                )
-            ],
-            "vec_col string, id_col string, probe_lists int, dist string, default_rerank int",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-        self.ivf.save(f"{path}/ivf")
-
-    @classmethod
-    def load(cls, spark, path: str) -> "IVFSQ8Index":
-        from ..index.ivfflat import IVFFlatIndex
-
-        meta = spark.read.parquet(f"{path}/meta").collect()[0]
-        stats = spark.read.parquet(f"{path}/stats").orderBy("dim").collect()
-        model = SQ8Model([r["mn"] for r in stats], [r["mx"] for r in stats])
-        ivf = IVFFlatIndex.load(
-            spark, f"{path}/ivf", meta["vec_col"], meta["probe_lists"], meta["dist"]
-        )
-        codes = spark.read.parquet(f"{path}/codes").persist()
-        out = cls(ivf, model, codes, meta["vec_col"], meta["id_col"])
-        out.default_rerank = meta["default_rerank"]
-        return out
-
-
-def ivf_sq8_rerank_topk(
-    index,
-    model: SQ8Model,
-    vec_col: str,
-    id_col: str,
-    query: list[float],
-    k: int,
-    rerank: int,
-    probe_lists: int | None = None,
-    dist_col: str = "distance",
-) -> DataFrame:
-    """One-shot convenience wrapper over :class:`IVFSQ8Index` (build codes +
-    probe). For repeated probes build the index once — the codes relation
-    is persisted and each probe then scans codes only."""
-    sq = IVFSQ8Index.build(index, vec_col, id_col, model=model)
-    return sq.probe(query, k, rerank, probe_lists=probe_lists, dist_col=dist_col)

@@ -538,40 +538,40 @@ class SqlEngine:
             if method == "ivfflat":
                 from .index.ivfflat import IVFFlatIndex
 
+                if "bq" in opts:
+                    # IVF-BQ codes are an API form (similarity/ivfcodes.
+                    # BQCodes) with no DDL spelling: an option nothing reads
+                    # would build an UNQUANTIZED index without a word
+                    raise ValueError(
+                        "ivfflat has no bq option (WITH takes sq8=1 or pq=1)"
+                    )
+                if opts.get("rerank", 1) < 1:
+                    raise ValueError(f"rerank must be >= 1 (got {opts['rerank']})")
                 idx = IVFFlatIndex.build(
                     df, col,
                     lists=opts.get("lists", 8),
                     probe_lists=opts.get("probe_lists", 1),
                     dist=OPS_TO_DIST.get(ops, "l2"),
                 )
-                if opts.get("sq8"):
-                    # WITH (sq8=1[, rerank=R]): store SQ8 codes instead of
-                    # raw floats on the probe path (4× scan cut); probes
-                    # ADC-score codes and exact-rerank the shortlist
-                    from .similarity.quantize import IVFSQ8Index
+                if opts.get("sq8") or opts.get("pq"):
+                    # WITH (sq8=1 | pq=1[, pq_m=M, pq_k=K, pq_residual=0]
+                    # [, rerank=R]): store codes instead of raw floats on the
+                    # probe path; probes score codes and exact-rerank the
+                    # top-R shortlist (4×k when R is unset). SQ8: one byte
+                    # per dim, every ops class. PQ: m small ints per vector,
+                    # l2 only; residual (IVFADC) by default — global
+                    # codebooks collapse on clustered corpora (0.128 vs 0.906
+                    # recall@10 at 1.2M, drills/drill_1200k_ivf_tiers.json).
+                    from .similarity.ivfcodes import IVFCodesIndex, PQCodes, SQ8Codes
 
                     names = self.catalog.tables[table].schema.names
                     id_col = next((c for c in names if c != col), names[0])
-                    sq = IVFSQ8Index.build(idx, col, id_col)
-                    sq.default_rerank = opts.get("rerank")
-                    idx = sq
-                elif opts.get("pq"):
-                    # WITH (pq=1[, pq_m=M, pq_k=K, pq_residual=0]): product-
-                    # quantized codes per bucket (m small ints per vector —
-                    # the deepest compression tier); l2 ops class only.
-                    # Residual (IVFADC) by default — global codebooks
-                    # collapse on clustered corpora (0.128 vs 0.906
-                    # recall@10 at 1.2M, drills/drill_1200k_ivf_tiers.json);
-                    # pq_residual=0 opts back into the single-LUT mode.
-                    from .similarity.pq import IVFPQIndex
-
-                    names = self.catalog.tables[table].schema.names
-                    id_col = next((c for c in names if c != col), names[0])
-                    idx = IVFPQIndex.build(
-                        idx, col, id_col,
+                    form = SQ8Codes() if opts.get("sq8") else PQCodes(
                         m=opts.get("pq_m", 16), k=opts.get("pq_k", 32),
                         residual=bool(opts.get("pq_residual", 1)),
                     )
+                    idx = IVFCodesIndex.build(idx, col, id_col, form)
+                    idx.default_rerank = opts.get("rerank")
             elif method == "vamana":
                 # engine extension (no reference analogue): distributed
                 # SINGLE-graph build — DiskANN merge over overlapping

@@ -123,20 +123,20 @@ def test_hamming_join_no_preshuffle(emb, model):
 
 
 def test_ivf_bq_probe_recall_and_codes_only(spark, emb, sf_dir):
-    """IVFBQIndex: probed recall vs exact KNN holds, and the shortlist
+    """BQ codes: probed recall vs exact KNN holds, and the shortlist
     stage scans the codes relation (no raw-vector column below the
     shortlist's TakeOrdered)."""
     from bustub_vectordb_spark.index.ivfflat import IVFFlatIndex
-    from bustub_vectordb_spark.similarity.bq import WORDS_COL, IVFBQIndex
+    from bustub_vectordb_spark.similarity.ivfcodes import BQCodes, IVFCodesIndex
 
     ivf = IVFFlatIndex.build(
         emb, "embedding", lists=8, probe_lists=4, max_iter=5, init_order="vec_id"
     )
-    idx = IVFBQIndex.build(ivf, "embedding", "vec_id")
+    idx = IVFCodesIndex.build(ivf, "embedding", "vec_id", BQCodes())
     got = idx.probe(QUERY_VEC, k=10, rerank=40, probe_lists=8).collect()
     exact = {r["vec_id"] for r in knn(emb, "embedding", QUERY_VEC, 10).collect()}
     assert len({r["vec_id"] for r in got} & exact) / 10 >= 0.5
-    assert WORDS_COL in idx.codes.columns and "embedding" not in idx.codes.columns
+    assert idx.codes.columns == ["vec_id", "__bucket", idx.form.codes_col]
 
 
 def test_encode_rejects_wrong_dims(spark, model):
@@ -156,7 +156,7 @@ def test_ivf_bq_per_bucket_beats_global_on_clustered(spark):
     import numpy as np
 
     from bustub_vectordb_spark.index.ivfflat import IVFFlatIndex
-    from bustub_vectordb_spark.similarity.bq import IVFBQIndex
+    from bustub_vectordb_spark.similarity.ivfcodes import BQCodes, IVFCodesIndex
 
     rng = np.random.RandomState(7)
     centers = rng.uniform(-100, 100, size=(4, 16))
@@ -178,7 +178,7 @@ def test_ivf_bq_per_bucket_beats_global_on_clustered(spark):
         got = {r["vec_id"] for r in idx.probe(q, k=10, rerank=20, probe_lists=1).collect()}
         return len(got & exact) / 10
 
-    g = recall(IVFBQIndex.build(ivf, "embedding", "vec_id"))
-    l = recall(IVFBQIndex.build(ivf, "embedding", "vec_id", per_bucket=True))
+    g = recall(IVFCodesIndex.build(ivf, "embedding", "vec_id", BQCodes()))
+    l = recall(IVFCodesIndex.build(ivf, "embedding", "vec_id", BQCodes(per_bucket=True)))
     assert l >= g, (l, g)
     assert l >= 0.6, l

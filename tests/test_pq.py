@@ -111,12 +111,12 @@ def test_ivfpq_probe_recall_and_plan(emb, spark, sf_dir):
     from contextlib import redirect_stdout
 
     from bustub_vectordb_spark.index.ivfflat import IVFFlatIndex
-    from bustub_vectordb_spark.similarity.pq import IVFPQIndex
+    from bustub_vectordb_spark.similarity.ivfcodes import IVFCodesIndex, PQCodes
 
     ivf = IVFFlatIndex.build(
         emb, "embedding", lists=8, probe_lists=2, max_iter=5, init_order="vec_id"
     )
-    idx = IVFPQIndex.build(ivf, "embedding", "vec_id", m=16, k=32)
+    idx = IVFCodesIndex.build(ivf, "embedding", "vec_id", PQCodes(m=16, k=32))
     got = idx.probe(QUERY, 10, rerank=40, probe_lists=4).collect()
     assert len(got) == 10
     exact_rows = knn(emb, "embedding", QUERY, 10).collect()
@@ -137,56 +137,35 @@ def test_ivfpq_probe_recall_and_plan(emb, spark, sf_dir):
 
 
 def test_ivfpq_filtered_plan_knn(emb):
-    """plan_knn(where=...) over a PQ-wrapped IVF index must route the
-    predicate into the codes scan (assignments passthrough) and return
-    only matching rows — filtered search, not a post-filter."""
+    """plan_knn(where=...) over an IVF codes index must route the predicate
+    into the codes scan (assignments passthrough) and return only matching
+    rows — filtered search, not a post-filter — in every storage form."""
     from bustub_vectordb_spark.index.ivfflat import IVFFlatIndex
     from bustub_vectordb_spark.index.registry import VectorIndexRegistry
     from bustub_vectordb_spark.index.selection import plan_knn
-    from bustub_vectordb_spark.similarity.pq import IVFPQIndex
+    from bustub_vectordb_spark.similarity.ivfcodes import (
+        BQCodes,
+        IVFCodesIndex,
+        PQCodes,
+        SQ8Codes,
+    )
 
     ivf = IVFFlatIndex.build(
         emb, "embedding", lists=8, probe_lists=8, max_iter=5, init_order="vec_id"
     )
-    idx = IVFPQIndex.build(ivf, "embedding", "vec_id", m=16, k=32)
-    reg = VectorIndexRegistry()
-    reg.create("emb_pq", "embeddings", "embedding", "ivfflat", idx)
     allowed = {r["vec_id"] for r in emb.filter(F.col("label") == 2).collect()}
+    for form in (PQCodes(m=16, k=32), SQ8Codes(), BQCodes(per_bucket=True)):
+        idx = IVFCodesIndex.build(ivf, "embedding", "vec_id", form)
+        reg = VectorIndexRegistry()
+        reg.create("emb_codes", "embeddings", "embedding", "ivfflat", idx)
 
-    plan = plan_knn(
-        reg, "embeddings", emb, "embedding", QUERY, 10, where=F.col("label") == 2
-    )
-    assert plan.strategy == "vector_index_scan(ivfflat)"
-    got = plan.df.collect()
-    assert len(got) == 10
-    assert {r["vec_id"] for r in got} <= allowed
-
-
-def test_ivfpq_save_load_roundtrip(emb, spark, tmp_path):
-    """IVFPQ persists (bucket-partitioned codes + codebooks + IVF layout)
-    and the reloaded index probes identically."""
-    from bustub_vectordb_spark.index.ivfflat import IVFFlatIndex
-    from bustub_vectordb_spark.similarity.pq import IVFPQIndex
-
-    ivf = IVFFlatIndex.build(
-        emb, "embedding", lists=8, probe_lists=4, max_iter=5, init_order="vec_id"
-    )
-    idx = IVFPQIndex.build(ivf, "embedding", "vec_id", m=16, k=32)
-    before = [
-        (r["vec_id"], round(r["distance"], 9))
-        for r in idx.probe(QUERY, 10, rerank=40).collect()
-    ]
-    idx.save(str(tmp_path / "ivfpq"))
-    loaded = IVFPQIndex.load(spark, str(tmp_path / "ivfpq"))
-    assert loaded.model.m == 16 and loaded.model.k == 32
-    assert loaded.ivf.probe_lists == 4
-    for a, b in zip(loaded.model.centroids, idx.model.centroids):
-        assert np.array_equal(a, b)
-    after = [
-        (r["vec_id"], round(r["distance"], 9))
-        for r in loaded.probe(QUERY, 10, rerank=40).collect()
-    ]
-    assert after == before
+        plan = plan_knn(
+            reg, "embeddings", emb, "embedding", QUERY, 10, where=F.col("label") == 2
+        )
+        assert plan.strategy == "vector_index_scan(ivfflat)", form
+        got = plan.df.collect()
+        assert len(got) == 10, form
+        assert {r["vec_id"] for r in got} <= allowed, form
 
 
 def test_ivfpq_residual_beats_global_on_clustered(spark):
@@ -197,7 +176,7 @@ def test_ivfpq_residual_beats_global_on_clustered(spark):
     so the codebook budget resolves local structure. Offline numpy sweep
     (6 queries): global 0.70 avg recall@10 vs residual 0.98."""
     from bustub_vectordb_spark.index.ivfflat import IVFFlatIndex
-    from bustub_vectordb_spark.similarity.pq import IVFPQIndex
+    from bustub_vectordb_spark.similarity.ivfcodes import IVFCodesIndex, PQCodes
 
     rng = np.random.RandomState(7)
     CL, dim, n = 8, 16, 3000
@@ -219,8 +198,8 @@ def test_ivfpq_residual_beats_global_on_clustered(spark):
     ]
 
     def avg_recall(residual):
-        idx = IVFPQIndex.build(
-            ivf, "embedding", "vec_id", m=8, k=32, residual=residual
+        idx = IVFCodesIndex.build(
+            ivf, "embedding", "vec_id", PQCodes(m=8, k=32, residual=residual)
         )
         total = 0.0
         for q, exact in zip(queries, exacts):
@@ -234,33 +213,6 @@ def test_ivfpq_residual_beats_global_on_clustered(spark):
     glob, res = avg_recall(False), avg_recall(True)
     assert res >= 0.8, (glob, res)
     assert res >= glob, (glob, res)
-
-
-def test_ivfpq_residual_save_load_roundtrip(spark, tmp_path):
-    """The residual flag survives save/load: a reloaded residual index
-    probes with per-bucket LUTs (wrong — global — LUTs would produce
-    garbage distances against residual codes)."""
-    from bustub_vectordb_spark.index.ivfflat import IVFFlatIndex
-    from bustub_vectordb_spark.similarity.pq import IVFPQIndex
-
-    rng = np.random.RandomState(3)
-    X = rng.uniform(-5, 5, size=(400, 16))
-    df = spark.createDataFrame(
-        [(i, X[i].tolist()) for i in range(400)],
-        "vec_id bigint, embedding array<double>",
-    )
-    ivf = IVFFlatIndex.build(
-        df, "embedding", lists=4, probe_lists=2, max_iter=5, init_order="vec_id"
-    )
-    idx = IVFPQIndex.build(ivf, "embedding", "vec_id", m=8, k=16, residual=True)
-    q = X[7].tolist()
-    want = [(r["vec_id"], r["distance"]) for r in idx.probe(q, 5).collect()]
-    path = str(tmp_path / "ivfpq_res")
-    idx.save(path)
-    back = IVFPQIndex.load(spark, path)
-    assert back.residual is True
-    got = [(r["vec_id"], r["distance"]) for r in back.probe(q, 5).collect()]
-    assert got == want
 
 
 @pytest.mark.slow

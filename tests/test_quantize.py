@@ -109,18 +109,18 @@ def test_adc_recall_cosine_and_ip(emb, model):
 
 
 def test_ivf_sq8_cosine_index_probe(emb):
-    """IVFSQ8Index on a cosine IVF index: ADC shortlist + exact re-rank both
+    """SQ8 codes on a cosine IVF index: ADC shortlist + exact re-rank both
     order descending; results match the exact cosine top-k within the
     probed buckets (all buckets probed → fully exact)."""
     from bustub_vectordb_spark.functions.vector import cosine_similarity
     from bustub_vectordb_spark.index.ivfflat import IVFFlatIndex
-    from bustub_vectordb_spark.similarity.quantize import IVFSQ8Index
+    from bustub_vectordb_spark.similarity.ivfcodes import IVFCodesIndex, SQ8Codes
 
     idx = IVFFlatIndex.build(
         emb, "embedding", lists=8, probe_lists=8, dist="cosine",
         max_iter=5, init_order="vec_id",
     )
-    sq = IVFSQ8Index.build(idx, "embedding", "vec_id")
+    sq = IVFCodesIndex.build(idx, "embedding", "vec_id", SQ8Codes())
     got = [r["vec_id"] for r in sq.probe(QUERY_VEC, k=10, rerank=40).collect()]
     exact = [
         r["vec_id"]
@@ -134,18 +134,18 @@ def test_ivf_sq8_cosine_index_probe(emb):
 
 def test_ivf_sq8_rerank_recall(spark, emb, sf_dir):
     from bustub_vectordb_spark.index.ivfflat import IVFFlatIndex
-    from bustub_vectordb_spark.similarity.quantize import ivf_sq8_rerank_topk
+    from bustub_vectordb_spark.similarity.ivfcodes import IVFCodesIndex, SQ8Codes
 
     idx = IVFFlatIndex.build(
         emb, "embedding", lists=8, probe_lists=4, max_iter=5, init_order="vec_id"
     )
-    model = SQ8Model.train(emb, "embedding")
+    sq = IVFCodesIndex.build(
+        idx, "embedding", "vec_id", SQ8Codes(SQ8Model.train(emb, "embedding"))
+    )
     exact = [r["vec_id"] for r in knn(emb, "embedding", QUERY_VEC, 10).collect()]
     got = [
         r["vec_id"]
-        for r in ivf_sq8_rerank_topk(
-            idx, model, "embedding", "vec_id", QUERY_VEC, k=10, rerank=40, probe_lists=4
-        ).collect()
+        for r in sq.probe(QUERY_VEC, k=10, rerank=40, probe_lists=4).collect()
     ]
     recall = len(set(exact) & set(got)) / 10
     # 4/8 buckets probed: misses can only come from bucket pruning
@@ -156,42 +156,43 @@ def test_ivf_sq8_rerank_recall(spark, emb, sf_dir):
 
 def test_probe_plan_reads_codes_only(spark, emb):
     """The materialized-codes contract (VERDICT r2 item 5): the ADC stage of
-    an IVFSQ8Index probe must scan the persisted codes relation — the raw
+    an SQ8 codes probe must scan the stored codes relation — the raw
     embedding column appears nowhere in its plan. Only the rerank stage
     (bounded to `rerank` rows) touches vectors."""
     import io
     from contextlib import redirect_stdout
 
     from bustub_vectordb_spark.index.ivfflat import IVFFlatIndex
-    from bustub_vectordb_spark.similarity.quantize import CODES_COL, IVFSQ8Index
+    from bustub_vectordb_spark.shipping import release_checkpoint
+    from bustub_vectordb_spark.similarity.ivfcodes import IVFCodesIndex, SQ8Codes
 
     idx = IVFFlatIndex.build(
         emb, "embedding", lists=8, probe_lists=4, max_iter=5, init_order="vec_id"
     )
-    sq = IVFSQ8Index.build(idx, "embedding", "vec_id")
+    sq = IVFCodesIndex.build(idx, "embedding", "vec_id", SQ8Codes())
+    codes_col = sq.form.codes_col
     try:
         buckets = idx.rank_buckets(QUERY_VEC)[:4]
         adc = sq.codes.filter(F.col("__bucket").isin(buckets)).select(
-            "vec_id", sq.model.adc_dist_sq(CODES_COL, QUERY_VEC).alias("__adc")
+            "vec_id", sq.form.model.adc_dist_sq(codes_col, QUERY_VEC).alias("__adc")
         )
         buf = io.StringIO()
         with redirect_stdout(buf):
             adc.explain("formatted")
         plan = buf.getvalue()
-        # codes come from the persisted (columnar, vector-free) relation:
-        # the probe's own scan — "(1) InMemoryTableScan" — outputs exactly
-        # (bucket, codes, id). The raw embedding column appears only in the
-        # cache's BUILD lineage further down the explain output.
-        assert "InMemoryTableScan" in plan
-        scan_out = plan.split("(1) InMemoryTableScan")[1].splitlines()[1]
+        # codes come from the stored (vector-free) checkpoint leaf: the
+        # probe's own scan — "(1) Scan ExistingRDD" — outputs exactly
+        # (id, bucket, codes). The leaf carries no build lineage at all.
+        assert "Scan ExistingRDD" in plan
+        scan_out = plan.split("(1) Scan ExistingRDD")[1].splitlines()[1]
         assert "Output" in scan_out
-        assert CODES_COL in scan_out
+        assert codes_col in scan_out
         assert "embedding" not in scan_out, "ADC stage must not read raw vectors"
-        # end-to-end probe still agrees with the one-shot path
+        # the end-to-end probe serves from the same codes
         got = sq.probe(QUERY_VEC, k=10, rerank=40, probe_lists=4).collect()
         assert len(got) == 10
     finally:
-        sq.codes.unpersist()
+        release_checkpoint(sq.codes)
 
 
 def test_sql_create_index_sq8(spark, emb):
@@ -199,7 +200,7 @@ def test_sql_create_index_sq8(spark, emb):
     stores materialized codes, the planner routes KNN through it, and the
     rerank recovers exact ordering within the probed buckets."""
     from bustub_vectordb_spark.index.selection import plan_knn
-    from bustub_vectordb_spark.similarity.quantize import IVFSQ8Index
+    from bustub_vectordb_spark.similarity.ivfcodes import IVFCodesIndex, SQ8Codes
     from bustub_vectordb_spark.sql import SqlEngine
 
     engine = SqlEngine(spark)
@@ -209,7 +210,8 @@ def test_sql_create_index_sq8(spark, emb):
         " WITH (lists = 8, probe_lists = 8, sq8 = 1, rerank = 40);"
     )
     (info,) = engine.indexes.lookup("emb_sq8", "embedding")
-    assert isinstance(info.index, IVFSQ8Index)
+    assert isinstance(info.index, IVFCodesIndex)
+    assert isinstance(info.index.form, SQ8Codes)
     assert info.index.default_rerank == 40
 
     plan = plan_knn(engine.indexes, "emb_sq8", emb, "embedding", QUERY_VEC, 10)
@@ -218,30 +220,6 @@ def test_sql_create_index_sq8(spark, emb):
     # probe_lists = lists → all buckets probed; rerank ≥ k → exact top-k
     exact = [r["vec_id"] for r in knn(emb, "embedding", QUERY_VEC, 10).collect()]
     assert got == exact
-
-
-def test_ivf_sq8_save_load_roundtrip(tables, spark, tmp_path):
-    """IVFSQ8 persists (bucket-partitioned codes + quantizer stats + IVF
-    layout) and the reloaded index probes identically."""
-    from bustub_vectordb_spark.index.ivfflat import IVFFlatIndex
-    from bustub_vectordb_spark.similarity.quantize import IVFSQ8Index, SQ8Model
-
-    emb = tables["embeddings"]
-    ivf = IVFFlatIndex.build(
-        emb, "embedding", lists=8, probe_lists=4, max_iter=5, init_order="vec_id"
-    )
-    idx = IVFSQ8Index.build(ivf, "embedding", "vec_id", model=SQ8Model.train(emb, "embedding"))
-    q = [0.1 * ((i % 7) - 3) for i in range(64)]
-    before = [
-        (r["vec_id"], r["distance"]) for r in idx.probe(q, 10, rerank=40).collect()
-    ]
-    idx.save(str(tmp_path / "ivfsq8"))
-    loaded = IVFSQ8Index.load(spark, str(tmp_path / "ivfsq8"))
-    assert loaded.model.mins == idx.model.mins and loaded.model.maxs == idx.model.maxs
-    after = [
-        (r["vec_id"], r["distance"]) for r in loaded.probe(q, 10, rerank=40).collect()
-    ]
-    assert after == before
 
 
 def test_sq8_refuses_pq_quantized_graph():

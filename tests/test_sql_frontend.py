@@ -228,8 +228,9 @@ def test_create_index_hnsw_routed_sq8(spark):
 
 
 def test_create_index_ivfpq(spark):
-    """CREATE INDEX ... USING ivfflat WITH (pq=1): registers an IVFPQIndex
-    whose probe serves exact reranked results from PQ-coded buckets."""
+    """CREATE INDEX ... USING ivfflat WITH (pq=1): registers an IVF codes
+    index in the PQ form whose probe serves exact reranked results from
+    PQ-coded buckets."""
     from bustub_vectordb_spark.sql import SqlEngine
 
     e = SqlEngine(spark)
@@ -243,11 +244,58 @@ def test_create_index_ivfpq(spark):
         " WITH (lists = 2, probe_lists = 2, pq = 1, pq_m = 2, pq_k = 4)"
     )
     idx = next(i for i in e.indexes.lookup("mt4", "v1") if i.name == "mp1").index
-    from bustub_vectordb_spark.similarity.pq import IVFPQIndex
+    from bustub_vectordb_spark.similarity.ivfcodes import PQCodes
 
-    assert isinstance(idx, IVFPQIndex) and idx.model.m == 2 and idx.model.k == 4
+    assert isinstance(idx.form, PQCodes)
+    assert idx.form.model.m == 2 and idx.form.model.k == 4
     hits = idx.probe([1.0, 1.0, 1.0, 1.0], 3).collect()
     assert len(hits) == 3
+
+
+def test_create_index_ivfpq_rerank_reaches_probe(spark):
+    """WITH (pq=1, rerank=R) sets the shortlist depth the probe uses, as
+    it does for sq8=1: a one-row shortlist returns one row for k=3. A
+    rerank below 1 is refused at DDL and at probe time."""
+    from bustub_vectordb_spark.sql import SqlEngine
+
+    e = SqlEngine(spark)
+    e.execute("CREATE TABLE mt6(v1 VECTOR(4), v2 integer)")
+    rows = ", ".join(
+        f"(ARRAY [{i}.0, {i % 3}.0, {i % 5}.0, {i % 7}.0], {i})" for i in range(40)
+    )
+    e.execute(f"INSERT INTO mt6 VALUES {rows}")
+    e.execute(
+        "CREATE INDEX mr1 ON mt6 USING ivfflat (v1 vector_l2_ops)"
+        " WITH (lists = 2, probe_lists = 2, pq = 1, pq_m = 2, pq_k = 4, rerank = 1)"
+    )
+    idx = next(i for i in e.indexes.lookup("mt6", "v1") if i.name == "mr1").index
+    assert idx.default_rerank == 1
+    assert len(idx.probe([1.0, 1.0, 1.0, 1.0], 3).collect()) == 1
+    assert len(idx.probe([1.0, 1.0, 1.0, 1.0], 3, rerank=12).collect()) == 3
+    with pytest.raises(ValueError, match="rerank must be >= 1"):
+        idx.probe([1.0, 1.0, 1.0, 1.0], 3, rerank=0)
+    for form in ("pq = 1", "sq8 = 1"):
+        with pytest.raises(ValueError, match="rerank must be >= 1"):
+            e.execute(
+                "CREATE INDEX mr2 ON mt6 USING ivfflat (v1 vector_l2_ops)"
+                f" WITH (lists = 2, {form}, rerank = 0)"
+            )
+
+
+def test_create_index_ivfflat_refuses_bq(spark):
+    """WITH (bq=1) on ivfflat names the option instead of building an
+    unquantized index that ignores it (BQ codes have no DDL form)."""
+    from bustub_vectordb_spark.sql import SqlEngine
+
+    e = SqlEngine(spark)
+    e.execute("CREATE TABLE mt7(v1 VECTOR(4), v2 integer)")
+    e.execute("INSERT INTO mt7 VALUES (ARRAY [1.0, 2.0, 3.0, 4.0], 1)")
+    with pytest.raises(ValueError, match="bq"):
+        e.execute(
+            "CREATE INDEX mb1 ON mt7 USING ivfflat (v1 vector_l2_ops)"
+            " WITH (lists = 1, bq = 1)"
+        )
+    assert not e.indexes.lookup("mt7", "v1")
 
 
 def test_create_index_hnsw_routed_pq(spark):
@@ -612,7 +660,7 @@ def test_ddl_pq_residual_defaults(spark):
     (IVFADC for ivfflat, routing-centroid centers for routed hnsw,
     entry-cell centers for vamana); pq_residual=0 opts back into the
     global-codebook mode."""
-    from bustub_vectordb_spark.similarity.pq import IVFPQIndex
+    from bustub_vectordb_spark.similarity.ivfcodes import PQCodes
     from bustub_vectordb_spark.sql import SqlEngine
 
     e = SqlEngine(spark)
@@ -628,7 +676,7 @@ def test_ddl_pq_residual_defaults(spark):
         " WITH (lists = 2, probe_lists = 2, pq = 1, pq_m = 2, pq_k = 4)"
     )
     idx = next(i for i in e.indexes.lookup("pr", "v1") if i.name == "pr1").index
-    assert isinstance(idx, IVFPQIndex) and idx.residual is True
+    assert isinstance(idx.form, PQCodes) and idx.form.residual is True
     assert len(idx.probe([1.0, 1.0, 1.0, 1.0], 3).collect()) == 3
     e.execute(
         "CREATE INDEX pr2 ON pr USING ivfflat (v1 vector_l2_ops)"
@@ -636,7 +684,7 @@ def test_ddl_pq_residual_defaults(spark):
         " pq_residual = 0)"
     )
     idx2 = next(i for i in e.indexes.lookup("pr", "v1") if i.name == "pr2").index
-    assert idx2.residual is False
+    assert idx2.form.residual is False
 
     # routed hnsw: per-shard LOCAL books by default (r9 drill ordering);
     # pq_residual=1 still selects the global-model residual mode

@@ -31,8 +31,9 @@ def main():
     from bustub_vectordb_spark.catalog import read_table
     from bustub_vectordb_spark.index.hnsw import HNSWIndex
     from bustub_vectordb_spark.index.ivfflat import IVFFlatIndex
-    from bustub_vectordb_spark.similarity.pq import IVFPQIndex, PQModel, pq_rerank_topk
-    from bustub_vectordb_spark.similarity.quantize import IVFSQ8Index, SQ8Model, dim_stats
+    from bustub_vectordb_spark.similarity.ivfcodes import IVFCodesIndex, PQCodes, SQ8Codes
+    from bustub_vectordb_spark.similarity.pq import PQModel, pq_rerank_topk
+    from bustub_vectordb_spark.similarity.quantize import SQ8Model, dim_stats
 
     emb = read_table(spark, SF_DIR, "embeddings").cache()
     n = emb.count()
@@ -50,14 +51,14 @@ def main():
 
     ivf = IVFFlatIndex.build(emb, "embedding", lists=8, probe_lists=4,
                              max_iter=5, init_order="vec_id")
-    sq8 = IVFSQ8Index.build(ivf, "embedding", "vec_id",
-                            model=SQ8Model.train(emb, "embedding"))
+    sq8 = IVFCodesIndex.build(ivf, "embedding", "vec_id",
+                              SQ8Codes(SQ8Model.train(emb, "embedding")))
     # residual=False explicit: this row is the global-codebook contrast
     # (residual became the build default in r9)
-    ivfpq = IVFPQIndex.build(ivf, "embedding", "vec_id", m=16, k=32,
-                             residual=False)
-    ivfpq_res = IVFPQIndex.build(ivf, "embedding", "vec_id", m=16, k=32,
-                                 residual=True)
+    ivfpq = IVFCodesIndex.build(ivf, "embedding", "vec_id",
+                                PQCodes(m=16, k=32, residual=False))
+    ivfpq_res = IVFCodesIndex.build(ivf, "embedding", "vec_id",
+                                    PQCodes(m=16, k=32, residual=True))
     pqm = PQModel.train(emb, "embedding", "vec_id", m=16, k=32)
     pq_codes = pqm.encode(emb, "embedding", "vec_id").cache()
     hnsw = HNSWIndex.build(emb, "embedding", "vec_id", m=8,

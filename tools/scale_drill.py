@@ -482,8 +482,9 @@ def main():
         # recall role, test/sql/vector.04/.05.slt, at 10x+ its scale):
         # route -> ADC over materialized codes -> exact rerank ----
         from bustub_vectordb_spark.index.ivfflat import IVFFlatIndex
-        from bustub_vectordb_spark.similarity.pq import IVFPQIndex
-        from bustub_vectordb_spark.similarity.quantize import IVFSQ8Index
+        from bustub_vectordb_spark.similarity.ivfcodes import (
+            IVFCodesIndex, PQCodes, SQ8Codes,
+        )
 
         report["ivf_lists"] = args.ivf_lists
         t0 = time.time()
@@ -495,22 +496,24 @@ def main():
         _log(f"ivf build done {times['ivf_build']}s")
 
         t0 = time.time()
-        sq8 = IVFSQ8Index.build(ivf, "embedding", "vec_id")
-        sq8.codes.cache().count()
+        # each build stores its codes eagerly, so the timer covers encoding
+        sq8 = IVFCodesIndex.build(ivf, "embedding", "vec_id", SQ8Codes())
         times["ivf_sq8_encode"] = round(time.time() - t0, 1)
         _log(f"sq8 encode done {times['ivf_sq8_encode']}s")
 
         t0 = time.time()
         # residual=False EXPLICIT: this is the global-codebook contrast row
         # (residual became the build default in r9)
-        pq = IVFPQIndex.build(ivf, "embedding", "vec_id", m=16, k=32, residual=False)
-        pq.codes.cache().count()
+        pq = IVFCodesIndex.build(
+            ivf, "embedding", "vec_id", PQCodes(m=16, k=32, residual=False)
+        )
         times["ivf_pq_encode"] = round(time.time() - t0, 1)
         _log(f"pq encode done {times['ivf_pq_encode']}s")
 
         t0 = time.time()
-        pqr = IVFPQIndex.build(ivf, "embedding", "vec_id", m=16, k=32, residual=True)
-        pqr.codes.cache().count()
+        pqr = IVFCodesIndex.build(
+            ivf, "embedding", "vec_id", PQCodes(m=16, k=32, residual=True)
+        )
         times["ivf_pq_residual_encode"] = round(time.time() - t0, 1)
         _log(f"pq residual encode done {times['ivf_pq_residual_encode']}s")
 
