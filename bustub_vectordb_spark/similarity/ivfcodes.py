@@ -41,7 +41,7 @@ from dataclasses import dataclass, field
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..index.ivfflat import BUCKET_COL
+from ..index.ivfflat import BUCKET_COL, IVFFlatIndex
 from .bq import BQModel, hamming_words
 from .brute import ASCENDING, DIST_FNS
 from .pq import PQModel, _split, adc_fold
@@ -299,8 +299,8 @@ class IVFCodesIndex:
 
     @classmethod
     def build(cls, ivf, vec_col: str, id_col: str, form) -> "IVFCodesIndex":
-        """Train ``form`` on ``ivf``'s assignments (a given model is kept)
-        and encode every row once. The codes are a checkpoint leaf this
+        """Train ``form`` on ``ivf``'s assignments (keeping a model the form
+        was given) and encode every row once. The codes are a checkpoint leaf this
         index owns: a second build over the same input gets a leaf of its
         own, where a cache() entry is shared by every equal plan."""
         form = form.train(ivf, vec_col, id_col)
@@ -402,8 +402,6 @@ class IVFCodesIndex:
 
     @classmethod
     def load(cls, spark, path: str) -> "IVFCodesIndex":
-        from ..index.ivfflat import IVFFlatIndex
-
         meta = spark.read.parquet(f"{path}/meta").collect()[0].asDict()
         form_cls = SQ8Codes if _exists(spark, f"{path}/stats") else PQCodes
         form = form_cls.load(spark, path, meta)
