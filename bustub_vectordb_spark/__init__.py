@@ -40,4 +40,11 @@ import os as _os
 for _v in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
     _os.environ.setdefault(_v, "1")
 
+# Inside a PySpark worker, stop each task from re-reading every unchanged
+# zip archive on the path (shipping.reuse_unchanged_zip_directories); a
+# no-op on the driver.
+from .shipping import reuse_unchanged_zip_directories as _reuse_zip_dirs
+
+_reuse_zip_dirs()
+
 __version__ = "0.1.0"

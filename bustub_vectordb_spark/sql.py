@@ -184,6 +184,25 @@ _CREATE_INDEX_RE = re.compile(
     r"\(\s*(\w+)\s*[, ]?\s*(\w+)?\s*\)\s*(?:WITH\s*\((.*?)\))?;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
+# the WITH keys each vector method's build reads (_create_index); any other
+# key is refused, so a misspelt option cannot build an index that ignores it
+_INDEX_OPTIONS = {
+    "ivfflat": frozenset({
+        "lists", "probe_lists", "sq8", "pq", "pq_m", "pq_k", "pq_residual",
+        "rerank",
+    }),
+    "hnsw": frozenset({
+        "m", "ef_construction", "ef_search", "shards", "n_probe", "sq8", "pq",
+        "pq_m", "pq_k", "pq_residual", "bq", "bq_rot_seed", "rerank_mult",
+        "rerank_harvest_ef",
+    }),
+    "vamana": frozenset({
+        "shards", "m", "ef_construction", "ef_search", "overlap_eps", "r",
+        "min_lists", "alpha", "entry_points", "pq", "pq_m", "pq_k",
+        "pq_residual", "pq_cell_books", "cells", "n_probe", "ef_serve",
+        "replicate_eps", "replicate_cap",
+    }),
+}
 _INSERT_ANY_RE = re.compile(
     r"^\s*INSERT\s+INTO\s+(\w+)\s+(.*?)\s*$", re.IGNORECASE | re.DOTALL
 )
@@ -521,30 +540,34 @@ class SqlEngine:
         metadata-only — Spark needs no access-path index for their
         semantics (sort/filter/equi-join subsume them)."""
         method = (method or "bplustree").lower()
-        if method in ("ivfflat", "hnsw", "vamana"):
+        if method in _INDEX_OPTIONS:
             from .index.registry import VectorIndexRegistry
 
             if not hasattr(self, "indexes"):
                 self.indexes = VectorIndexRegistry()
             opts = {}
+            accepted = _INDEX_OPTIONS[method]
             for kv in (with_opts or "").split(","):
-                if "=" in kv:
-                    k, v = kv.split("=", 1)
-                    try:
-                        opts[k.strip()] = int(v.strip())
-                    except ValueError:  # e.g. overlap_eps = 0.2
-                        opts[k.strip()] = float(v.strip())
+                if not kv.strip():
+                    continue
+                k, eq, v = (part.strip() for part in kv.partition("="))
+                if k not in accepted:
+                    # e.g. bq on ivfflat: IVF-BQ codes are an API form
+                    # (similarity/ivfcodes.BQCodes) with no DDL spelling
+                    raise ValueError(
+                        f"{method} has no {k} option (WITH takes "
+                        f"{', '.join(sorted(accepted))})"
+                    )
+                if not eq:
+                    raise ValueError(f"{method} option {k} needs a value ({k} = N)")
+                try:
+                    opts[k] = int(v)
+                except ValueError:  # e.g. overlap_eps = 0.2
+                    opts[k] = float(v)
             df = self.catalog.tables[table].df
             if method == "ivfflat":
                 from .index.ivfflat import IVFFlatIndex
 
-                if "bq" in opts:
-                    # IVF-BQ codes are an API form (similarity/ivfcodes.
-                    # BQCodes) with no DDL spelling: an option nothing reads
-                    # would build an UNQUANTIZED index without a word
-                    raise ValueError(
-                        "ivfflat has no bq option (WITH takes sq8=1 or pq=1)"
-                    )
                 if opts.get("rerank", 1) < 1:
                     raise ValueError(f"rerank must be >= 1 (got {opts['rerank']})")
                 idx = IVFFlatIndex.build(

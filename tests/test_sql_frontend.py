@@ -298,6 +298,34 @@ def test_create_index_ivfflat_refuses_bq(spark):
     assert not e.indexes.lookup("mt7", "v1")
 
 
+def test_create_index_refuses_unknown_with_keys(spark):
+    """A WITH key the method's build does not read, or a key without a
+    value, is refused by name on every vector method: WITH (lists = 1,
+    probe_list = 4) used to build an ivfflat index with probe_lists = 1
+    without a word."""
+    from bustub_vectordb_spark.sql import SqlEngine
+
+    e = SqlEngine(spark)
+    e.execute("CREATE TABLE mt8(v1 VECTOR(4), v2 integer)")
+    e.execute("INSERT INTO mt8 VALUES (ARRAY [1.0, 2.0, 3.0, 4.0], 1)")
+    for method, opts, bad in (
+        ("ivfflat", "lists = 1, probe_list = 4", "probe_list"),
+        ("hnsw", "m = 4, ef_serch = 8", "ef_serch"),
+        ("vamana", "shards = 2, cell = 2", "cell"),
+    ):
+        with pytest.raises(ValueError, match=f"{method} has no {bad} option.*WITH takes"):
+            e.execute(
+                f"CREATE INDEX mu1 ON mt8 USING {method} (v1 vector_l2_ops)"
+                f" WITH ({opts})"
+            )
+    with pytest.raises(ValueError, match="ivfflat option sq8 needs a value"):
+        e.execute(
+            "CREATE INDEX mu1 ON mt8 USING ivfflat (v1 vector_l2_ops)"
+            " WITH (lists = 1, sq8)"
+        )
+    assert not e.indexes.lookup("mt8", "v1")
+
+
 def test_create_index_hnsw_routed_pq(spark):
     """CREATE INDEX ... USING hnsw WITH (shards=2, pq=1): the routed build
     PQ-quantizes its shard blobs (frozen codebooks in params), keeps

@@ -235,7 +235,6 @@ def main():
             # grinding one core for ~90 min
             max_shard_rows=60_000,
         )
-        routed.blobs.cache().count()
         times["hnsw_routed_build"] = round(time.time() - t0, 1)
         _log(f"hnsw routed build done {times['hnsw_routed_build']}s")
         t0 = time.time()
@@ -393,7 +392,6 @@ def main():
 
         t0 = time.time()
         part = vam.to_partitioned(cells=args.cells, n_probe=args.n_probe)
-        part.blobs.cache().count()
         times["vamana_to_partitioned"] = round(time.time() - t0, 1)
         _log(f"to_partitioned done {times['vamana_to_partitioned']}s")
         t0 = time.time()
@@ -432,7 +430,6 @@ def main():
                      f"{report['recall_vamana_pqr_merged']}")
             t0 = time.time()
             vpart = vpq.to_partitioned(cells=args.cells, n_probe=args.n_probe)
-            vpart.blobs.cache().count()
             times["vamana_pqr_to_partitioned"] = round(time.time() - t0, 1)
             t0 = time.time()
             hits = vpart.search_batch(
