@@ -101,7 +101,7 @@ def semantic_dedup(
         )
         ranked = (
             asg.join(F.broadcast(cents), CLUSTER_COL)
-            .withColumn("__d6", F.round(l2_dist(F.col("__v"), F.col("__c")), 6))
+            .withColumn("__d6", F.round(l2_dist("__v", "__c"), 6))
             .select(id_col, "__v", CLUSTER_COL, "__d6")
         )
         order = [
@@ -139,7 +139,7 @@ def semantic_dedup(
     )
     dropped = (
         pairs.withColumn(
-            "__cos", F.round(cosine_similarity(F.col("__p.__ev"), F.col("__p.__lv")), 6)
+            "__cos", F.round(cosine_similarity("__p.__ev", "__p.__lv"), 6)
         )
         .filter(F.col("__cos") >= threshold)
         .select(F.col("__p.__lid").alias(id_col))

@@ -2,7 +2,7 @@
 
 Every oracle-compared distance in the engine accumulates per dimension,
 sequentially, from 0.0: the op order of Spark's
-``aggregate(zip_with(a, b, f), 0.0, (s, v) -> s + v)``. The Spark Column
+``aggregate(zip_with(a, b, f), 0.0, (s, v) -> s + v)``. The Spark SQL-text
 folds below and their Python / numpy twins evaluate the identical IEEE op
 sequence, so a value computed on a Spark worker, on the driver or in an
 offline oracle replay is the same double (NOTES, "np.dot / BLAS matmul
@@ -11,18 +11,16 @@ depends on buffer alignment, an elementwise accumulation has none to
 vary). The numpy forms vectorize ACROSS rows (or rows × centroids) and
 loop over dimensions, never reducing along a row.
 
-Vector LITERALS (query vectors, centroid tables, lookup tables) are built by
-``functions.vector.vec_lit``/``vecs_lit`` as one ``from_json`` node over one
-JSON string of the floats (shortest round-trip ``repr``; NaN and ±inf as
-``NaN``/``Infinity``/``-Infinity``), which the optimizer constant-folds to
-the same bits. One node is one py4j round trip and one node to analyze at any
-dimension and centroid count; a ``CAST(array(...))`` tree of one node per
-element was analyzed node by node (building the nearest-centroid expression,
-``local[2]``: 222 against 111 ms at 16×64 cells, 5.5 against 0.17 s at
-256×256; a 1,000×1,000 table ran a 1 GB driver heap out of memory).
-The Column folds are a fixed number of nodes at any dimension, so they stay
-the form the engine builds distances with; the SQL-text folds (``sql_*``)
-are what the SQL frontend's distance macros expand to.
+Spark gets each fold in ONE form, SQL text (what the SQL frontend's
+``<->``, ``<=>`` and ``<#>`` expand to), built into a Column with one
+``F.expr``: a few py4j round trips at any size, where the Column DSL paid
+one per node and lambda variable (NOTES, "Build folds from text").
+Operands are SQL text: :func:`sql_operand` writes a column name (dotted
+parts backtick-quoted, so struct fields work) or a literal vector — one
+``from_json`` node over a JSON string of the floats (shortest round-trip
+``repr``; ``NaN``/``Infinity``/``-Infinity``), constant-folded to the same
+bits. A computed operand (an SQ8 decode, a BQ rotation row, a PQ lookup
+gather) is written as text by its caller.
 
 Reference anchor: one ``ComputeDistance`` per metric
 (src/include/execution/expressions/vector_expression.h:17-58).
@@ -30,64 +28,70 @@ Reference anchor: one ``ComputeDistance`` per metric
 
 from __future__ import annotations
 
+import json
 import math
+from collections.abc import Sequence
 
 import numpy as np
-from pyspark.sql import Column, functions as F
 
-# -- Spark Column folds (array<double> operands) ---------------------------
-
-
-def col_seq_sum(a: Column) -> Column:
-    """Left fold of an array<double> from 0.0 (twin of :func:`seq_sum`)."""
-    return F.aggregate(a, F.lit(0.0), lambda s, v: s + v)
+# -- SQL-text operands ------------------------------------------------------
 
 
-def col_l2_sq(a: Column, b: Column) -> Column:
-    """Σ (a_d − b_d)², left fold."""
-    return col_seq_sum(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)))
+def sql_col(name: str) -> str:
+    """A column reference, each dotted part backtick-quoted."""
+    return ".".join("`" + part.replace("`", "``") + "`" for part in name.split("."))
 
 
-def col_dot(a: Column, b: Column) -> Column:
-    """Σ a_d · b_d, left fold."""
-    return col_seq_sum(F.zip_with(a, b, lambda x, y: x * y))
+def sql_double(x: float) -> str:
+    """A double literal with the exact bits of ``x`` (NaN and ±inf too)."""
+    x = float(x)
+    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
 
 
-def col_norm_sq(a: Column) -> Column:
-    """Σ a_d², left fold."""
-    return col_seq_sum(F.transform(a, lambda x: x * x))
+def sql_lit(values, schema: str = "array<double>") -> str:
+    """A literal of nested float (or int) lists as one ``from_json`` node."""
+    return f"from_json('{json.dumps(values)}', '{schema}')"
 
 
-def col_centroid_score(dist: str, q: Column, c: Column) -> Column:
-    """Query→centroid score, smaller is nearer: l2², −dot, −cosine."""
-    if dist == "l2":
-        return col_l2_sq(q, c)
-    if dist == "ip":
-        return -col_dot(q, c)
-    return -(col_dot(q, c) / (F.sqrt(col_norm_sq(q)) * F.sqrt(col_norm_sq(c))))
+def sql_vec_lit(values: Sequence[float]) -> str:
+    return sql_lit([float(v) for v in values])
 
 
-# -- SQL text (operands are SQL text) -------------------------------------
-# Each fold builds the same expression tree as its Column twin above and is
-# one self-contained operand (a function call or a parenthesized division),
-# so it can be spliced next to any operator. Lambda variables carry ``__``
-# names so they never shadow a column referenced inside the body.
+def sql_vecs_lit(rows: Sequence[Sequence[float]]) -> str:
+    return sql_lit([[float(v) for v in r] for r in rows], "array<array<double>>")
+
+
+def sql_operand(x: str | Sequence[float]) -> str:
+    """A column name cast to array<double>, or a literal vector."""
+    if isinstance(x, str):
+        return f"CAST({sql_col(x)} AS ARRAY<DOUBLE>)"
+    return sql_vec_lit(x)
+
+
+# -- SQL-text folds (operands are SQL text) ---------------------------------
+# Each result is one self-contained operand (a function call or a
+# parenthesized expression), so it can be spliced next to any operator.
+# Lambda variables carry ``__`` names so they never shadow a column
+# referenced inside the body.
 
 
 def sql_seq_sum(a: str) -> str:
-    """Left fold from 0.0 (twin of :func:`col_seq_sum`)."""
+    """Left fold from 0.0 (twin of :func:`seq_sum`)."""
     return f"aggregate({a}, 0D, (__acc, __el) -> __acc + __el)"
 
 
 def sql_l2_sq(a: str, b: str) -> str:
+    """Σ (a_d − b_d)², left fold."""
     return sql_seq_sum(f"zip_with({a}, {b}, (__x, __y) -> (__x - __y) * (__x - __y))")
 
 
 def sql_dot(a: str, b: str) -> str:
+    """Σ a_d · b_d, left fold."""
     return sql_seq_sum(f"zip_with({a}, {b}, (__x, __y) -> __x * __y)")
 
 
 def sql_norm_sq(a: str) -> str:
+    """Σ a_d², left fold."""
     return sql_seq_sum(f"transform({a}, __x -> __x * __x)")
 
 
@@ -99,6 +103,47 @@ def sql_distance(dist: str, a: str, b: str) -> str:
     if dist == "ip":
         return sql_dot(a, b)
     return f"({sql_dot(a, b)} / (sqrt({sql_norm_sq(a)}) * sqrt({sql_norm_sq(b)})))"
+
+
+def sql_centroid_score(dist: str, q: str, c: str) -> str:
+    """Query→centroid score, smaller is nearer: l2², −dot, −cosine."""
+    if dist == "l2":
+        return sql_l2_sq(q, c)
+    return f"(-{sql_distance(dist, q, c)})"
+
+
+def _scored(score, cents: str) -> str:
+    """(score, index) structs over a centroid table; ``score`` builds the
+    score text of one centroid operand."""
+    return (
+        f"transform({cents}, (__cent, __ci) -> "
+        f"named_struct('d', {score('__cent')}, 'b', __ci))"
+    )
+
+
+def sql_nearest_centroids(dist: str, q: str, cents: str, n: int) -> str:
+    """array<int> of the ``n`` nearest centroid indexes, nearest first,
+    ties to the lowest index: ``array_sort`` over (score, index) structs —
+    the order :func:`rank_centroids` gives on the driver."""
+    ranked = f"array_sort({_scored(lambda c: sql_centroid_score(dist, q, c), cents)})"
+    return f"transform(slice({ranked}, 1, {int(n)}), __s -> __s.b)"
+
+
+def sql_nearest_l2(vec: str, cents: str) -> str:
+    """0-based index of the l2²-nearest centroid (twin of :func:`nearest`).
+
+    One left-to-right pass over (l2², index) structs that keeps the first
+    strict minimum: null distances are skipped (a null vector → null), and
+    Spark orders NaN above every number, so an all-NaN row → 0 — the
+    answers of ``array_position(d, array_min(d)) - 1``, which would put the
+    centroid table into the plan twice."""
+    return (
+        f"aggregate({_scored(lambda c: sql_l2_sq(vec, c), cents)}, "
+        "named_struct('d', CAST(NULL AS DOUBLE), 'b', CAST(NULL AS INT)), "
+        "(__best, __s) -> CASE WHEN __s.d IS NOT NULL AND "
+        "(__best.d IS NULL OR __s.d < __best.d) THEN __s ELSE __best END, "
+        "__best -> __best.b)"
+    )
 
 
 # -- Python scalar twins ----------------------------------------------------
@@ -156,8 +201,8 @@ def exact_rerank(dist: str, vectors_by_id, ids, q, k: int) -> list[tuple]:
 
 
 def nearest(v, centroids) -> int:
-    """Index of the l2²-nearest centroid, first-min ties (the codegen
-    ``array_position(d, array_min(d))`` rule)."""
+    """Index of the l2²-nearest centroid, first-min ties (the
+    ``array_position(d, array_min(d))`` rule of :func:`sql_nearest_l2`)."""
     dists = [l2_sq(v, c) for c in centroids]
     return dists.index(min(dists))
 
@@ -196,9 +241,8 @@ def l2_sq_pairwise(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
 
 def rank_centroids(dist: str, centroids, q) -> list[int]:
     """Centroid indexes nearest-first, ties to the lowest index: the order
-    Spark's ``array_sort`` gives over (:func:`col_centroid_score`, index)
-    structs, so a driver-side probe and a codegen-routed batch pick the
-    same cells. l2 ranks by :func:`l2_sq`; ip / cosine by the negated
+    :func:`sql_nearest_centroids` gives in Spark, so a driver-side probe
+    and a Spark-routed batch pick the same cells. l2 ranks by :func:`l2_sq`; ip / cosine by the negated
     :func:`dot` / cosine (a zero norm counts as 1e-300)."""
 
     def score(c) -> float:

@@ -1942,12 +1942,12 @@ class ShardedHNSW:
         per-query top-k — see probe(rerank=...).
 
         Shape (the one that scales): each query row is ROUTED to its
-        ``n_probe`` nearest shards with a codegen'd centroid-scoring
-        expression (array_sort over (score, shard) structs — ties break to
-        the lowest shard, matching rank_shards), queries are then grouped
-        per shard (collect_list — one row per shard, so the pickled graph
-        blob is never duplicated per query row), each shard's graph
-        unpickles ONCE and searches its queries inside applyInPandas, and a
+        ``n_probe`` nearest shards with one centroid-scoring expression
+        (``ivfflat.nearest_buckets``: array_sort over (score, shard)
+        structs — ties break to the lowest shard, matching rank_shards),
+        queries are then grouped per shard (collect_list — one row per
+        shard, so the pickled graph blob is never duplicated per query
+        row), each shard's graph unpickles ONCE and searches its queries inside applyInPandas, and a
         per-qid window takes the global top-k (dedup first: replicated
         builds surface the same id from several shards).
 
@@ -1982,24 +1982,12 @@ class ShardedHNSW:
             # the batch path while keeping it on probe()
             n_probe = self.default_n_probe
         if n_probe is not None and self.centroids is not None:
-            from ..functions.vector import vecs_lit
+            from .ivfflat import nearest_buckets
 
-            scored = F.array_sort(
-                F.transform(
-                    vecs_lit(self.centroids),
-                    lambda c, i: F.struct(
-                        fold.col_centroid_score(self.dist, qv, c).alias("d"),
-                        i.alias("b"),
-                    ),
-                )
-            )
+            near = nearest_buckets(self.dist, query_vec, self.centroids, n_probe)
             routed = queries.select(
                 F.col(qid_col), qv.alias("__qv"),
-                F.explode(
-                    F.slice(
-                        F.transform(scored, lambda s: s["b"].cast("long")), 1, n_probe
-                    )
-                ).alias("__shard"),
+                F.explode(near.cast("array<bigint>")).alias("__shard"),
             )
         else:
             routed = queries.select(
@@ -2062,18 +2050,14 @@ class ShardedHNSW:
         if rerank is not None:
             # exact rerank: shortlist (qid, id) pairs join the full-precision
             # vectors AND the query vectors; ADC distances are discarded
-            from ..functions.vector import cosine_similarity, inner_product, l2_dist
+            from ..similarity.brute import DIST_FNS
 
             cand = best.select(qid_col, id_col)
             src = rerank.select(
                 F.col(self.id_col), F.col(self.vec_col).cast("array<double>").alias("__rv")
             )
             qsrc = queries.select(F.col(qid_col), qv.alias("__qx"))
-            exact = {
-                "l2": lambda: l2_dist("__rv", "__qx"),
-                "ip": lambda: inner_product("__rv", "__qx"),
-                "cosine": lambda: cosine_similarity("__rv", "__qx"),
-            }[self.dist]()
+            exact = DIST_FNS[self.dist]("__rv", "__qx")
             best = (
                 F.broadcast(cand)
                 .join(src, id_col)
@@ -2092,7 +2076,7 @@ class ShardedHNSW:
         """Insert-after-build on the at-scale routed variant (the reference's
         InsertVectorEntry, src/storage/index/hnsw_index.cpp:204-279, lifted
         to shard scale): each new row routes to its nearest-centroid shard
-        with the same codegen argmin as build_routed, rows group per shard,
+        with the same literal argmin as build_routed, rows group per shard,
         and only shards that RECEIVED rows unpickle → add_all (id-sorted, so
         the extended graph is deterministic) → repickle; untouched shards
         pass their blob bytes through unchanged. Centroids stay frozen —
@@ -2358,16 +2342,12 @@ class ShardedHNSW:
             return out.orderBy(order).limit(k)
         # exact rerank: the ADC shortlist's ids (broadcast-sized) join back
         # to the full-precision source; distances recompute exactly there
-        from ..functions.vector import cosine_similarity, inner_product, l2_dist
+        from ..similarity.brute import DIST_FNS
 
         cand = per_shard.select(id_col)
         if self._maybe_replicated:
             cand = cand.dropDuplicates([id_col])
-        exact = {
-            "l2": lambda: l2_dist(self.vec_col, q),
-            "ip": lambda: inner_product(self.vec_col, q),
-            "cosine": lambda: cosine_similarity(self.vec_col, q),
-        }[self.dist]()
+        exact = DIST_FNS[self.dist](self.vec_col, q)
         scored = (
             rerank.select(F.col(id_col), F.col(self.vec_col))
             .join(F.broadcast(cand), id_col)
@@ -2527,7 +2507,7 @@ def offline_routed_search(
 ) -> list[tuple]:
     """Replay ``ShardedHNSW.probe`` and ``search_batch`` without Spark (a
     point probe is a batch of one). Per (qid, vec) query: rank the shards
-    (fold.rank_centroids — the order of the codegen array_sort routing),
+    (fold.rank_centroids — the order of the array_sort routing),
     walk the ``n_probe`` nearest graphs, keep each id's best signed
     distance, and return the top-k in (distance, id) order (similarity
     desc for ip / cosine). ``allowed_ids`` replays the filtered walks.
@@ -2633,7 +2613,7 @@ def routed_residual_df(df, vec_col: str, id_col: str, centroids):
     the PQModel on ``__res`` so the codebook budget resolves WITHIN-shard
     structure (similarity/pq._residual_df's shape, against routing
     centroids instead of IVF buckets). Assignment is the deterministic
-    codegen fold (ivfflat.assign_nearest); the subtraction is elementwise
+    argmin fold (ivfflat.assign_nearest); the subtraction is elementwise
     (no reduction order to vary)."""
     from pyspark.sql import functions as F
 

@@ -13,7 +13,7 @@ Reference semantics (src/storage/index/ivfflat_index.cpp):
 Spark-first re-expression (this is the reference capability that fits Spark
 best — batch index construction):
   * The centroid set is tiny (lists × dim doubles) and lives on the driver /
-    in one-node plan literals (``functions.vector.vecs_lit``); the
+    in one-node plan literals (``fold.sql_vecs_lit``); the
     *assignments* relation (id, bucket, vector) is the big distributed state
     and never leaves executors.
   * Assignment = argmin over the literal centroid table: one left-to-right
@@ -46,7 +46,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .. import fold
-from ..functions.vector import vecs_lit
 
 BUCKET_COL = "__bucket"
 
@@ -77,27 +76,21 @@ def _lloyds_numpy(
     return cents.tolist()
 
 
-def _nearest_centroid(vec: Column, centroids: list[list[float]]) -> Column:
-    """0-based index of the nearest centroid (ties → lowest index, matching
-    the reference's sequential argmin FindCentroid, ivfflat_index.cpp:46-57).
+def _nearest_centroid(vec: str, centroids: list[list[float]]) -> Column:
+    """0-based index of the nearest centroid of the array<double> operand
+    ``vec`` (SQL text; ties → lowest index, matching the reference's
+    sequential argmin FindCentroid, ivfflat_index.cpp:46-57): one
+    ``F.expr`` of :func:`fold.sql_nearest_l2` over the literal table."""
+    return F.expr(fold.sql_nearest_l2(vec, fold.sql_vecs_lit(centroids)))
 
-    One left-to-right pass over (l2², index) structs that keeps the first
-    strict minimum: null distances are skipped (a null vector → null), and
-    Spark orders NaN above every number, so an all-NaN row → 0 — the
-    answers of ``array_position(d, array_min(d)) - 1``, which would put the
-    centroid table into the plan twice."""
-    scored = F.transform(
-        vecs_lit(centroids),
-        lambda c, i: F.struct(fold.col_l2_sq(vec, c).alias("d"), i.alias("b")),
-    )
-    none = F.struct(F.lit(None).cast("double").alias("d"), F.lit(None).cast("int").alias("b"))
-    return F.aggregate(
-        scored,
-        none,
-        lambda acc, s: F.when(
-            s["d"].isNotNull() & (acc["d"].isNull() | (s["d"] < acc["d"])), s
-        ).otherwise(acc),
-        lambda acc: acc["b"],
+
+def nearest_buckets(dist: str, query_vec: str, centroids: list[list[float]], n: int) -> Column:
+    """array<int> of the ``n`` nearest centroids of a ``query_vec`` column
+    (``rank_buckets`` order): probe_batch and search_batch routing."""
+    return F.expr(
+        fold.sql_nearest_centroids(
+            dist, fold.sql_operand(query_vec), fold.sql_vecs_lit(centroids), n
+        )
     )
 
 
@@ -165,9 +158,7 @@ def assign_nearest(
     ``_LITERAL_ASSIGN_MAX_CELLS`` centroid cells, broadcast numpy argmin
     past it. ``vec_col`` must already be array<double>."""
     if len(centroids) * len(centroids[0]) <= _LITERAL_ASSIGN_MAX_CELLS:
-        return df.withColumn(
-            out_col, _nearest_centroid(F.col(vec_col), centroids)
-        )
+        return df.withColumn(out_col, _nearest_centroid(fold.sql_col(vec_col), centroids))
     return _assign_via_broadcast(df, vec_col, centroids, out_col=out_col)
 
 
@@ -208,7 +199,8 @@ def route_overlap(
     each point to its ℓ closest centers for exactly this reason; the
     union keeps the ball's richer adaptive overlap on diffuse data while
     guaranteeing ℓ-way stitching everywhere else. Unlike
-    :func:`assign_nearest` (literal codegen argmin up to 65,536 plan cells),
+    :func:`assign_nearest` (the literal argmin up to 65,536 centroid
+    cells, higher-order functions Spark 4.1.2 runs interpreted),
     this always runs the broadcast numpy kernel: per-row k× HOF scoring of
     a literal expression measured ~1.5-2× slower at BOTH sf0.01 and sf0.1
     (interleaved in-session probe, round 7 — 0.22 vs 0.42 s and 0.39 vs
@@ -531,7 +523,7 @@ class IVFFlatIndex:
             src = src.repartition(want)
         if lists * dim <= _LITERAL_ASSIGN_MAX_CELLS:
             assignments = src.withColumn(
-                BUCKET_COL, _nearest_centroid(vec, centroids)
+                BUCKET_COL, _nearest_centroid(fold.sql_operand(vec_col), centroids)
             )
         else:
             assignments = _assign_via_broadcast(src, vec_col, centroids)
@@ -580,7 +572,7 @@ class IVFFlatIndex:
         cand = self.assignments.filter(F.col(BUCKET_COL).isin(buckets))
         if where is not None:
             cand = cand.filter(where)
-        out = cand.withColumn(dist_col, fn(F.col(self.vec_col), query))
+        out = cand.withColumn(dist_col, fn(self.vec_col, query))
         order = F.col(dist_col).asc() if ASCENDING[self.dist] else F.col(dist_col).desc()
         return out.orderBy(order).limit(k).drop(BUCKET_COL)
 
@@ -620,21 +612,10 @@ class IVFFlatIndex:
         from ..similarity.brute import ASCENDING, DIST_FNS
 
         p = probe_lists if probe_lists is not None else self.probe_lists
-        qvec = F.col(query_vec).cast("array<double>")
-        # (score, idx) structs; array_sort orders by score then idx — same
-        # tie order as the driver-side rank_buckets (lowest index first)
-        scored = F.transform(
-            vecs_lit(self.centroids),
-            lambda c, i: F.struct(
-                fold.col_centroid_score(self.dist, qvec, c).alias("d"),
-                i.alias("b"),
-            ),
-        )
-        buckets = F.slice(F.array_sort(scored), 1, p)
         q = queries.select(
             F.col(query_id).alias("qid"),
-            qvec.alias("__qv"),
-            F.explode(F.transform(buckets, lambda s: s["b"])).alias(BUCKET_COL),
+            F.col(query_vec).cast("array<double>").alias("__qv"),
+            F.explode(nearest_buckets(self.dist, query_vec, self.centroids, p)).alias(BUCKET_COL),
         )
         # distance scoring below is CPU-bound; an under-partitioned query
         # side (one file split) would pin it to one core (cf. dedup.minhash
@@ -653,10 +634,7 @@ class IVFFlatIndex:
             q = q.repartition(want, "qid")
         items = self.assignments if where is None else self.assignments.filter(where)
         cand = q.join(items, BUCKET_COL)
-        out = cand.withColumn(
-            dist_col,
-            DIST_FNS[self.dist](F.col(self.vec_col).cast("array<double>"), F.col("__qv")),
-        )
+        out = cand.withColumn(dist_col, DIST_FNS[self.dist](self.vec_col, "__qv"))
         order = [
             F.col(dist_col).asc() if ASCENDING[self.dist] else F.col(dist_col).desc()
         ]
@@ -671,8 +649,9 @@ class IVFFlatIndex:
 
     # -- insert (frozen centroids, ref :92-95) ----------------------------
     def insert(self, rows: DataFrame) -> "IVFFlatIndex":
-        vec = F.col(self.vec_col).cast("array<double>")
-        new = rows.withColumn(BUCKET_COL, _nearest_centroid(vec, self.centroids))
+        new = rows.withColumn(
+            BUCKET_COL, _nearest_centroid(fold.sql_operand(self.vec_col), self.centroids)
+        )
         return IVFFlatIndex(
             self.vec_col,
             self.lists,

@@ -227,7 +227,7 @@ def _cell_entry_points(
         max_iter,
     )
     d = fold.l2_sq_pairwise(mat, ecents)
-    assign = np.argmin(d, axis=1)  # first-min ties, like the codegen argmin
+    assign = np.argmin(d, axis=1)  # first-min ties, like the Spark argmin
     out: list[int] = []
     for c in range(len(ecents)):
         members = np.nonzero(assign == c)[0]
@@ -314,15 +314,16 @@ def _attach_unreached(
         layer0[u] = list(layer0[u]) + [v]
 
 
-def _normalize_expr(vec):
+def _normalize_expr(vec_col: str):
     """Unit-normalize an array<double> column with REPLAYABLE arithmetic:
     sequential square fold → sqrt → 1e-300-guarded divide, mirrored
     element-for-element by :func:`_normalize_row` (zero vectors pass
     through unchanged instead of dividing by zero)."""
     from pyspark.sql import functions as F
 
-    nrm = F.greatest(F.sqrt(fold.col_norm_sq(vec)), F.lit(1e-300))
-    return F.transform(vec, lambda x: x / nrm)
+    v = fold.sql_operand(vec_col)
+    nrm = f"greatest(sqrt({fold.sql_norm_sq(v)}), {fold.sql_double(1e-300)})"
+    return F.expr(f"transform({v}, __u -> __u / {nrm})")
 
 
 def _sims_for_ids(g: "_Graph", hit_ids: list, q: list[float]) -> list:
@@ -490,7 +491,7 @@ class PartitionedVamanaServing:
 
         qcast = F.col(query_vec).cast("array<double>")
         prep = (
-            _normalize_expr(qcast)
+            _normalize_expr(query_vec)
             if self.dist == "cosine"
             else F.concat(qcast, F.array(F.lit(0.0)))
         )
@@ -506,7 +507,7 @@ class PartitionedVamanaServing:
             )
         qsq = queries.select(
             F.col(qid_col),
-            fold.col_norm_sq(qcast).alias("__qsq"),
+            F.expr(fold.sql_norm_sq(fold.sql_operand(query_vec))).alias("__qsq"),
         )
         return (
             out.join(qsq, qid_col)
@@ -717,7 +718,7 @@ class VamanaIndex:
         import pandas as pd
         from pyspark.sql import Window, functions as F
 
-        from ..functions.vector import l2_dist, vec_lit
+        from ..functions.vector import l2_dist
         from ..shipping import ensure_package_on_workers
         from .ivfflat import IVFFlatIndex, _lloyds_numpy
 
@@ -731,7 +732,7 @@ class VamanaIndex:
             # reports exact similarities from the stored unit vectors.
             # Normalization arithmetic (sequential square fold → sqrt →
             # guarded divide) is replayed bit-exactly by offline_vamana.
-            vec = _normalize_expr(vec)
+            vec = _normalize_expr(vec_col)
         elif dist == "ip":
             # MIPS via the l2 reduction (Bachrach et al., RecSys 2014):
             # append sqrt(M² − ‖x‖²) so ‖x'−q'‖² = M² + ‖q‖² − 2·x·q —
@@ -741,12 +742,12 @@ class VamanaIndex:
             # exact inner products. M² = max row-norm fold, collected
             # once and inlined as a literal (exact double round-trip);
             # replayed bit-exactly by offline_vamana.
-            sq = fold.col_norm_sq(vec)
-            m2 = float(df.select(F.max(sq).alias("m")).collect()[0]["m"])
+            v = fold.sql_operand(vec_col)
+            sq = fold.sql_norm_sq(v)
+            m2 = float(df.select(F.max(F.expr(sq)).alias("m")).collect()[0]["m"])
             extra_params["ip_m2"] = m2
-            vec = F.concat(
-                vec,
-                F.array(F.sqrt(F.greatest(F.lit(m2) - sq, F.lit(0.0)))),
+            vec = F.expr(
+                f"concat({v}, array(sqrt(greatest({fold.sql_double(m2)} - {sq}, 0D))))"
             )
         n = df.count()
         if n < shards:
@@ -934,7 +935,7 @@ class VamanaIndex:
         # entry point: corpus pseudo-medoid — nearest row to the centroid
         # mean, (dist, id) ties. On the full-table training path srows IS
         # the id-sorted corpus, so the medoid computes driver-side with the
-        # same sequential per-dim fold the codegen l2 expression (and
+        # same sequential per-dim fold the Spark l2 expression (and
         # offline_vamana's fold.exact) evaluates — identical doubles, identical
         # tie order, one less Spark job (~0.5 s of TopN scheduling at bench
         # scale). The sampled big-table path keeps the distributed TopN.
@@ -948,7 +949,7 @@ class VamanaIndex:
             )[1]
         else:
             entry_id = (
-                base.select(id_col, l2_dist(F.col("__v"), vec_lit(pm)).alias("__d"))
+                base.select(id_col, l2_dist("__v", pm).alias("__d"))
                 .orderBy(F.col("__d").asc(), F.col(id_col).asc())
                 .limit(1)
                 .collect()[0][id_col]
@@ -1028,7 +1029,7 @@ class VamanaIndex:
                     .select(
                         F.col(id_col),
                         F.col("__ecell"),
-                        l2_dist(F.col("__v"), F.col("__ec")).alias("__ed"),
+                        l2_dist("__v", "__ec").alias("__ed"),
                     )
                     .withColumn("__rn", F.row_number().over(w))
                     .filter(F.col("__rn") == 1)
@@ -1066,7 +1067,7 @@ class VamanaIndex:
         similarity/pq.PQModel.encode); the driver never sees a float
         matrix. probe() walks ADC reconstructions and reranks the
         shortlist EXACTLY via a distributed join against the parquet
-        vertices (codegen l2 fold) — output distances are exact.
+        vertices (Spark l2 fold) — output distances are exact.
         ``model`` is a similarity/pq.PQModel; its codebooks freeze into
         params so save/load round-trips.
 
@@ -1133,7 +1134,7 @@ class VamanaIndex:
     def residual_source(self):
         """(id, __ecell, __res = vec − entry_center[nearest]) — the
         training source for ``quantize_pq(model, residual=True)`` (train
-        the PQModel on ``__res``). Assignment is the deterministic codegen
+        the PQModel on ``__res``). Assignment is the deterministic Spark
         fold (assign_nearest); subtraction is elementwise."""
         from pyspark.sql import functions as F
 
@@ -1174,7 +1175,7 @@ class VamanaIndex:
         into ``cells`` spatial cells: k-means centroids train with the
         exact build_routed recipe (id-ordered seeds, bounded id-sorted
         sample), every vertex routes to its SINGLE nearest centroid
-        (codegen argmin — cells are disjoint), and each cell becomes one
+        (literal argmin — cells are disjoint), and each cell becomes one
         single-layer _Graph shell over its members with the merged
         adjacency RESTRICTED to in-cell edges (cross-cell edges cannot be
         followed inside a cell walk, so they are dropped rather than left
@@ -1545,7 +1546,7 @@ class VamanaIndex:
                 f"{self.id_col} {self.id_type}, {dist_col} double",
             )
         # ADC shortlist -> EXACT rerank: tiny id list joins the parquet
-        # vertices; l2 indexes rank by the codegen'd l2 fold asc,
+        # vertices; l2 indexes rank by the l2 fold asc,
         # cosine/ip indexes by the inner-product fold against the
         # unit/augmented query desc (unit vertices: dot == cosine;
         # augmented vertices vs [q, 0]: dot == exact x.q)
@@ -1557,10 +1558,10 @@ class VamanaIndex:
             [(h,) for h, _ in hits], f"{self.id_col} {self.id_type}"
         )
         if by_sim:
-            exact = inner_product(F.col("vec"), q).alias(dist_col)
+            exact = inner_product("vec", q).alias(dist_col)
             order = [F.col(dist_col).desc(), F.col(self.id_col).asc()]
         else:
-            exact = l2_dist(F.col("vec"), q).alias(dist_col)
+            exact = l2_dist("vec", q).alias(dist_col)
             order = [F.col(dist_col).asc(), F.col(self.id_col).asc()]
         return (
             self.vertices.join(F.broadcast(short), self.id_col)
@@ -1617,7 +1618,7 @@ class VamanaIndex:
         schema = f"{qid_col} {qschema[qid_col]}, {id_col} {idt}, __wd double"
         qcast = F.col(query_vec).cast("array<double>")
         if self.dist == "cosine":
-            qprep = _normalize_expr(qcast)
+            qprep = _normalize_expr(query_vec)
         elif self.dist == "ip":
             qprep = F.concat(qcast, F.array(F.lit(0.0)))  # [q, 0]
         else:
@@ -1668,9 +1669,9 @@ class VamanaIndex:
         from ..functions.vector import inner_product
 
         exact = (
-            inner_product(F.col("vec"), F.col("__qv"))
+            inner_product("vec", "__qv")
             if by_sim
-            else l2_dist(F.col("vec"), F.col("__qv"))
+            else l2_dist("vec", "__qv")
         ).alias(dist_col)
         w = Window.partitionBy(qid_col).orderBy(
             F.col(dist_col).desc() if by_sim else F.col(dist_col).asc(),
@@ -1914,7 +1915,7 @@ def offline_vamana_partitioned(
     """Replay ``VamanaIndex.build(...).to_partitioned(cells=...)`` without
     Spark: same merged adjacency (offline_vamana), same cell-centroid
     training recipe (id-ordered seeds + full-table id-sorted training),
-    same first-min fold routing as the codegen argmin, same in-cell edge
+    same first-min fold routing as the Spark argmin, same in-cell edge
     restriction in prune-rank order, same numpy entry selection
     ((distance, id) ties), optional same frozen-codebook PQ quantization.
     ``replicate_eps``/``replicate_cap`` mirror the SPANN closure
@@ -2036,7 +2037,7 @@ def offline_vamana_search(
       shortlist is harvested from the visited set of a walk at ``ef``
       (None = the configured ef — the same _Graph.search(shortlist=...)
       call the Spark path makes) and reranks with the exact left-fold l2
-      Spark's codegen evaluates, (d, id)-ordered.
+      Spark evaluates, (d, id)-ordered.
 
     Returns [(qid, id, distance or similarity)]."""
     out = []

@@ -2530,7 +2530,7 @@ def q_ann_ivf_sq8_rerank(spark, sf_dir):
 
 
 def _ivf_sq8_cosine_score() -> str:
-    """Asymmetric cosine ADC (SQ8Model.adc_cosine): ‖q‖ is inlined as the
+    """Asymmetric cosine ADC (SQ8Model.adc_score): ‖q‖ is inlined as the
     same driver-computed literal."""
     import math
 

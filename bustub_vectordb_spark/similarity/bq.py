@@ -76,8 +76,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..fold import col_dot
-from ..functions.vector import l2_dist, vec_lit, vecs_lit
+from .. import fold
+from ..functions.vector import l2_dist, vec_lit
 from .quantize import dim_stats
 
 # 32 bits per word, stored in (signed) longs: the MSB-first fold acc*2+b
@@ -119,25 +119,22 @@ def rotation_matrix(dim: int, seed: int) -> list[list[float]]:
     return [[float(x) for x in row] for row in q]
 
 
-def rotate_col(vec: Column | str, rotation: list[list[float]]) -> Column:
+def rotate_col(vec_col: str, rotation: list[list[float]]) -> Column:
     """array<double> of rotated coordinates, one sequential fold per output
-    dim. The matrix rides as ONE nested-array literal, built in one
-    ``F.expr`` call and constant-folded into a single Literal node (not a
-    CreateArray re-evaluated per lambda iteration), and row dimensionality
-    is enforced: zip_with would silently NULL-pad a short row into
-    wrong-but-plausible rotated values."""
+    dim (a dot product against a rotation row), as one ``F.expr``. The
+    matrix rides as ONE nested-array literal, constant-folded into a single
+    Literal node, and row dimensionality is enforced: zip_with would
+    silently NULL-pad a short row into wrong-but-plausible rotated
+    values."""
     dim = len(rotation)
-    v = (F.col(vec) if isinstance(vec, str) else vec).cast("array<double>")
-    rot = vecs_lit(rotation)
-    ok = F.assert_true(
-        F.size(v) == F.lit(dim),
-        F.lit(f"rotate: vector must have {dim} dims"),
+    v = fold.sql_operand(vec_col)
+    row = f"element_at({fold.sql_vecs_lit(rotation)}, __d)"
+    ok = f"assert_true(size({v}) = {dim}, 'rotate: vector must have {dim} dims')"
+    # assert_true is NULL on success
+    return F.expr(
+        f"CASE WHEN {ok} IS NULL THEN "
+        f"transform(sequence(1, {dim}), __d -> {fold.sql_dot(v, row)}) END"
     )
-    out = F.transform(
-        F.sequence(F.lit(1), F.lit(dim)),
-        lambda d: col_dot(v, F.element_at(rot, d)),
-    )
-    return F.when(ok.isNull(), out)  # assert_true is NULL on success
 
 
 def rotate_vec(vec, rotation: list[list[float]]) -> list[float]:

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_similarity, inner_product, l2_dist
@@ -38,7 +38,7 @@ ASCENDING = {"l2": True, "cosine": False, "ip": False}
 
 def knn(
     df: DataFrame,
-    vec_col: str | Column,
+    vec_col: str,
     query: Sequence[float],
     k: int,
     dist: str = "l2",
@@ -72,7 +72,7 @@ def knn_join(
     """
     q = F.broadcast(queries.select(F.struct("*").alias("__q")))
     joined = items.crossJoin(q)
-    d = DIST_FNS[dist](F.col(item_vec), F.col(f"__q.{query_vec}"))
+    d = DIST_FNS[dist](item_vec, f"__q.{query_vec}")
     joined = joined.withColumn(dist_col, d)
     order = F.col(dist_col).asc() if ASCENDING[dist] else F.col(dist_col).desc()
     w = Window.partitionBy(F.col("__q")).orderBy(order)

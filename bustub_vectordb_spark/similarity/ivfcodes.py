@@ -35,12 +35,12 @@ bucket pruning and shortlist depth — is part of the hash-gated semantics
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass, field
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .. import fold
 from ..index.ivfflat import BUCKET_COL, IVFFlatIndex
 from .bq import BQModel, hamming_words
 from .brute import ASCENDING, DIST_FNS
@@ -48,16 +48,16 @@ from .pq import PQModel, _split, adc_fold
 from .quantize import SQ8Model
 
 
-def by_bucket(buckets, values: list, schema: str) -> Column:
-    """``values[i]`` for a row of bucket ``buckets[i]``: one literal table
-    (one plan node at any size, like ``functions.vector.vecs_lit``) indexed
+def by_bucket(buckets, values: list, schema: str) -> str:
+    """SQL text of ``values[i]`` for a row of bucket ``buckets[i]``: one
+    literal table (one plan node at any size, ``fold.sql_lit``) indexed
     by the row's bucket. A one-entry table needs no index: a global form,
     or a probe of one bucket."""
-    table = F.from_json(F.lit(json.dumps(values)), f"array<{schema}>")
+    table = fold.sql_lit(values, f"array<{schema}>")
     if len(values) == 1:
-        return F.element_at(table, 1)
-    keys = F.from_json(F.lit(json.dumps([int(b) for b in buckets])), "array<int>")
-    return F.element_at(table, F.array_position(keys, F.col(BUCKET_COL)).cast("int"))
+        return f"element_at({table}, 1)"
+    keys = fold.sql_lit([int(b) for b in buckets], "array<int>")
+    return f"element_at({table}, CAST(array_position({keys}, {fold.sql_col(BUCKET_COL)}) AS INT))"
 
 
 class CodesForm:
@@ -117,8 +117,8 @@ class SQ8Codes(CodesForm):
     def code(self, ivf, vec_col: str) -> Column:
         return self.model.encode(vec_col)
 
-    def score(self, codes: Column, query: list[float], buckets: list[int], ivf) -> Column:
-        return self.model.adc_score(codes, query, self.metric)
+    def score(self, codes: str, query: list[float], buckets: list[int], ivf) -> Column:
+        return self.model.adc_score(fold.sql_col(codes), query, self.metric)
 
     def save(self, spark, path: str) -> dict:
         spark.createDataFrame(
@@ -184,16 +184,17 @@ class BQCodes(CodesForm):
             return self.model.encode_words(vec_col)
         thr = self.bucket_thresholds
         return self.model.encode_words(
-            vec_col, by_bucket(list(thr), list(thr.values()), "array<double>")
+            vec_col, F.expr(by_bucket(list(thr), list(thr.values()), "array<double>"))
         )
 
-    def score(self, codes: Column, query: list[float], buckets: list[int], ivf) -> Column:
+    def score(self, codes: str, query: list[float], buckets: list[int], ivf) -> Column:
         if self.bucket_thresholds is None:
-            return hamming_words(codes, by_bucket([], [self.model.encode_query(query)], "array<bigint>"))
-        thr = self.bucket_thresholds
-        probed = [b for b in buckets if b in thr]  # a bucket without rows has none
-        words = [BQModel(thr[b]).encode_query(query) for b in probed]
-        return hamming_words(codes, by_bucket(probed, words, "array<bigint>"))
+            probed, words = [], [self.model.encode_query(query)]
+        else:
+            thr = self.bucket_thresholds
+            probed = [b for b in buckets if b in thr]  # a bucket without rows has none
+            words = [BQModel(thr[b]).encode_query(query) for b in probed]
+        return hamming_words(F.col(codes), F.expr(by_bucket(probed, words, "array<bigint>")))
 
 
 @dataclass
@@ -224,11 +225,11 @@ class PQCodes(CodesForm):
         """The IVF assignments with ``__src``, the vectors the codebooks
         quantize: raw, or residuals (an elementwise subtraction, no order
         to vary)."""
-        v = F.col(vec_col).cast("array<double>")
+        v = fold.sql_operand(vec_col)
         if self.residual:
             cents = by_bucket(range(len(ivf.centroids)), ivf.centroids, "array<double>")
-            v = F.zip_with(v, cents, lambda x, c: x - c)
-        return ivf.assignments.withColumn("__src", v)
+            v = f"zip_with({v}, {cents}, (__x, __c) -> __x - __c)"
+        return ivf.assignments.withColumn("__src", F.expr(v))
 
     def train(self, ivf, vec_col: str, id_col: str) -> "PQCodes":
         if ivf.dist != "l2":
@@ -242,15 +243,16 @@ class PQCodes(CodesForm):
             self._source(ivf, vec_col), "__src", id_col, self.codes_col, keep=(BUCKET_COL,)
         )
 
-    def score(self, codes: Column, query: list[float], buckets: list[int], ivf) -> Column:
+    def score(self, codes: str, query: list[float], buckets: list[int], ivf) -> Column:
         if not self.residual:
-            return adc_fold(codes, by_bucket([], [self.model.lut(query)], "array<array<double>>"))
-        q = np.asarray(query, dtype=np.float64)
-        luts = [
-            self.model.lut([float(x) for x in q - np.asarray(ivf.centroids[b])])
-            for b in buckets
-        ]
-        return adc_fold(codes, by_bucket(buckets, luts, "array<array<double>>"))
+            luts = [self.model.lut(query)]
+        else:
+            q = np.asarray(query, dtype=np.float64)
+            luts = [
+                self.model.lut([float(x) for x in q - np.asarray(ivf.centroids[b])])
+                for b in buckets
+            ]
+        return adc_fold(fold.sql_col(codes), by_bucket(buckets, luts, "array<array<double>>"))
 
     def save(self, spark, path: str) -> dict:
         rows = [
@@ -349,7 +351,7 @@ class IVFCodesIndex:
         if where is not None:
             allowed = self.ivf.assignments.filter(where).select(self.id_col)
             cand = cand.join(allowed, self.id_col, "left_semi")
-        score = form.score(F.col(form.codes_col), query, buckets, self.ivf)
+        score = form.score(form.codes_col, query, buckets, self.ivf)
         if form.score_dp is not None:
             score = F.round(score, form.score_dp)
         shortlist = (

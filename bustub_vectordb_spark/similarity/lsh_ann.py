@@ -8,7 +8,7 @@ collide in nearby codes.
 
 Why this matters at 100 TB: unlike IVF, there is NO training pass — the
 planes are data-independent, so the signature is a pure per-row expression
-(codegen'd inner_product HOFs, no shuffle, no driver round-trip) that can be
+(inner-product folds, no shuffle, no driver round-trip) that can be
 computed at ingest and persisted/bucketed. Probing is then:
 
   probe        enumerate every code within Hamming ≤ h of the query's code
@@ -43,7 +43,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_similarity, inner_product
+from ..fold import sql_distance, sql_operand, sql_vec_lit
+from ..functions.vector import cosine_similarity
 
 
 def make_planes(n_planes: int, dim: int, seed: int = 42) -> np.ndarray:
@@ -51,18 +52,19 @@ def make_planes(n_planes: int, dim: int, seed: int = 42) -> np.ndarray:
     return np.random.RandomState(seed).normal(size=(n_planes, dim))
 
 
-def packed_code(vec_col, planes: np.ndarray):
+def packed_code(vec_col: str, planes: np.ndarray):
     """One bigint bucket code: sign bits of the projections, MSB-first.
 
-    A single per-row expression (n inner_product HOFs + integer fold) —
-    whole-stage-codegen'd, no UDF, no shuffle.
+    A single per-row expression (n inner-product folds + integer sum), one
+    ``F.expr`` node — no UDF, no shuffle.
     """
     n = len(planes)
-    code = F.lit(0).cast("bigint")
+    v = sql_operand(vec_col)
+    code = "CAST(0 AS BIGINT)"
     for j, p in enumerate(planes):
-        bit = (inner_product(vec_col, [float(x) for x in p]) > 0).cast("bigint")
-        code = code + bit * F.lit(2 ** (n - 1 - j))
-    return code
+        bit = f"CAST({sql_distance('ip', v, sql_vec_lit(p))} > 0 AS BIGINT)"
+        code = f"{code} + {bit} * {2 ** (n - 1 - j)}"
+    return F.expr(code)
 
 
 def query_code(query: list[float], planes: np.ndarray) -> int:
@@ -110,10 +112,9 @@ def lsh_knn(
     """
     planes = make_planes(n_planes, len(query), seed)
     codes = probe_codes(query_code(query, planes), n_planes, max_hamming)
-    vec = F.col(vec_col)
-    cand = df.filter(packed_code(vec, planes).isin(codes))
+    cand = df.filter(packed_code(vec_col, planes).isin(codes))
     return (
-        cand.select(F.col(id_col), cosine_similarity(vec, query).alias("__sim"))
+        cand.select(F.col(id_col), cosine_similarity(vec_col, query).alias("__sim"))
         .orderBy(F.col("__sim").desc(), F.col(id_col).asc())
         .limit(k)
         .select(id_col, F.round("__sim", 8).alias(sim_col))
@@ -145,7 +146,7 @@ def lsh_knn_batch(
     corpus = df.select(
         F.col(id_col),
         F.col(vec_col).alias("__v"),
-        packed_code(F.col(vec_col), planes).alias("__code"),
+        packed_code(vec_col, planes).alias("__code"),
     )
     # per-query probe-code enumeration stays an EXPRESSION: the query's own
     # code XOR a precomputed literal flip-mask array (same for all rows)
@@ -159,7 +160,7 @@ def lsh_knn_batch(
     q = queries.select(
         F.col(query_id),
         F.col(query_vec).alias("__qv"),
-        packed_code(F.col(query_vec), planes).alias("__qcode"),
+        packed_code(query_vec, planes).alias("__qcode"),
     ).select(
         query_id,
         "__qv",
@@ -173,7 +174,7 @@ def lsh_knn_batch(
     cands = q.join(corpus, "__code").select(
         query_id,
         id_col,
-        cosine_similarity(F.col("__qv"), F.col("__v")).alias("__sim"),
+        cosine_similarity("__qv", "__v").alias("__sim"),
     )
     w = Window.partitionBy(query_id).orderBy(F.col("__sim").desc(), F.col(id_col).asc())
     return (

@@ -4,7 +4,7 @@ Two strategies, same contract (pairs id1<id2 with cosine ≥ threshold):
 
   cosine_similarity_join  — exact blocked self-join: every pair scored with
       the native zip_with/aggregate dot product. O(n²) comparisons but fully
-      distributed and whole-stage-codegen'd; right for ≤ ~10⁵ rows per block
+      distributed and JVM-side; right for ≤ ~10⁵ rows per block
       (use as the verify stage or on dimension-scale tables).
 
   random_hyperplane_pairs — the scale path: sign-of-projection LSH.
@@ -22,7 +22,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_similarity, vec_lit
+from ..fold import sql_distance, sql_operand, sql_vec_lit
+from ..functions.vector import cosine_similarity
 
 
 def cosine_similarity_join(
@@ -36,21 +37,18 @@ def cosine_similarity_join(
     b = df.select(F.col(id_col).alias("id2"), F.col(vec_col).alias("__v2"))
     pairs = a.join(b, F.col("id1") < F.col("id2"))
     scored = pairs.withColumn(
-        "cosine", F.round(cosine_similarity(F.col("__v1"), F.col("__v2")), 6)
+        "cosine", F.round(cosine_similarity("__v1", "__v2"), 6)
     )
     return scored.filter(F.col("cosine") >= threshold).select("id1", "id2", "cosine")
 
 
-def _signature_bits(vec_col, planes: np.ndarray):
+def _signature_bits(vec_col: str, planes: np.ndarray):
     """Array of 0/1 ints: sign of projection onto each hyperplane."""
-    from ..functions.vector import inner_product
-
-    return F.array(
-        *[
-            (inner_product(vec_col, list(p)) > 0).cast("int")
-            for p in planes
-        ]
+    v = sql_operand(vec_col)
+    bits = ", ".join(
+        f"CAST({sql_distance('ip', v, sql_vec_lit(p))} > 0 AS INT)" for p in planes
     )
+    return F.expr(f"array({bits})")
 
 
 def random_hyperplane_pairs(
@@ -74,7 +72,7 @@ def random_hyperplane_pairs(
     sig = df.select(
         F.col(id_col),
         F.col(vec_col).alias("__v"),
-        _signature_bits(F.col(vec_col), planes).alias("__bits"),
+        _signature_bits(vec_col, planes).alias("__bits"),
     )
     # band value = the band's bits packed positionally (rows ≤ ~20 bits, no
     # hashing needed) — engine-neutral, so the DuckDB oracle can reproduce
@@ -109,6 +107,6 @@ def random_hyperplane_pairs(
         .dropDuplicates(["id1", "id2"])
     )
     scored = cands.withColumn(
-        "cosine", F.round(cosine_similarity(F.col("__v1"), F.col("__v2")), 6)
+        "cosine", F.round(cosine_similarity("__v1", "__v2"), 6)
     )
     return scored.filter(F.col("cosine") >= threshold).select("id1", "id2", "cosine")

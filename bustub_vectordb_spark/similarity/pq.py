@@ -19,7 +19,7 @@ Pipeline (mirrors the SQ8 module's contracts):
   probe    asymmetric distance (ADC): per query, an m×k lookup table of
            partial squared distances ||q_sub − centroid||² is inlined as
            a LITERAL array-of-arrays column, and the distance is a pure
-           whole-stage-codegen fold over the code array — table lookups,
+           JVM-side fold over the code array — table lookups,
            zero Python on the scan, zero UDF in the hot path. An exact
            rerank of the shortlist (broadcast candidate ids back to the
            raw vectors) recovers full-precision ordering.
@@ -42,7 +42,6 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .. import fold
-from ..functions.vector import vecs_lit
 from ..index.ivfflat import _lloyds_numpy
 
 
@@ -182,15 +181,14 @@ class PQModel:
                 raise ValueError(f"unsupported PQ ADC metric {metric!r}")
         return out
 
-    def adc_dist(
-        self, codes_col: Column | str, query: list[float], metric: str = "l2"
-    ) -> Column:
+    def adc_dist(self, codes_col: str, query: list[float], metric: str = "l2") -> Column:
         """Σ_i lut[i][code_i] (sqrt'd for l2) as a PURE native expression:
-        the lookup table is a literal array<array<double>>, the fold is
-        whole-stage-codegen — table lookups on the scan, no UDF. l2 orders
-        ascending; ip is a similarity, order it descending."""
-        codes = F.col(codes_col) if isinstance(codes_col, str) else codes_col
-        return adc_fold(codes, vecs_lit(self.lut(query, metric)), metric)
+        the lookup table is a literal array<array<double>>, the fold runs
+        JVM-side — table lookups on the scan, no UDF. l2 orders ascending;
+        ip is a similarity, order it descending."""
+        return adc_fold(
+            fold.sql_col(codes_col), fold.sql_vecs_lit(self.lut(query, metric)), metric
+        )
 
     def adc_topk(
         self,
@@ -213,12 +211,13 @@ class PQModel:
         )
 
 
-def adc_fold(codes: Column, lut: Column, metric: str = "l2") -> Column:
+def adc_fold(codes: str, lut: str, metric: str = "l2") -> Column:
     """Σ_i lut[i][code_i] (sqrt'd for l2) over an array<array<double>>
-    lookup-table column: a left fold of table lookups, whole-stage codegen."""
-    partial = F.zip_with(lut, codes, lambda row, c: F.element_at(row, c + 1))
-    total = fold.col_seq_sum(partial)
-    return F.sqrt(total) if metric == "l2" else total
+    lookup-table operand (SQL text, as ``codes``): a left fold of the
+    table lookups, one ``F.expr`` node."""
+    gather = f"zip_with({lut}, {codes}, (__row, __code) -> element_at(__row, __code + 1))"
+    total = fold.sql_seq_sum(gather)
+    return F.expr(f"sqrt({total})" if metric == "l2" else total)
 
 
 def pq_rerank_topk(
@@ -262,7 +261,7 @@ def offline_pq(
     function of the parquet contents (id-sorted, same init, same argmin).
     ``centroids`` replays a RESIDUAL train (``ivfcodes.PQCodes(residual=
     True)``, the routed and vamana residual PQ): the rows are
-    x − centroids[nearest] — the fold argmin the codegen assignment
+    x − centroids[nearest] — the fold argmin the Spark assignment
     evaluates (first-min ties), an elementwise subtraction (no order to
     vary)."""
     import pyarrow.parquet as pq_
@@ -298,7 +297,7 @@ def offline_pq_search(
     residual: bool = False,
 ) -> list[tuple]:
     """Replay PQ serving without Spark: ADC over the codes with the same
-    left-fold arithmetic as the codegen expression (sequential adds over
+    left-fold arithmetic as the Spark expression (sequential adds over
     subspaces; sqrt for l2), (distance, id)-ordered (score desc for ip).
 
     - alone: ``adc_topk`` — the k best ADC rows.

@@ -1,7 +1,7 @@
 """Embedding projections — L2 normalization and Johnson-Lindenstrauss
 random projection.
 
-Both are narrow per-row expressions (HOF arithmetic, whole-stage codegen,
+Both are narrow per-row expressions (HOF arithmetic, one ``F.expr`` each,
 zero shuffle, no UDF):
 
   normalize          v / ||v||  — cosine workloads become plain dot
@@ -23,16 +23,15 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..fold import col_norm_sq
-from ..functions.vector import inner_product
+from ..fold import sql_distance, sql_norm_sq, sql_operand, sql_vec_lit
 from .lsh_ann import make_planes
 
 
-def normalize(vec: Column | str) -> Column:
+def normalize(vec_col: str) -> Column:
     """v / ||v|| (safe at the zero vector: returns zeros)."""
-    v = (F.col(vec) if isinstance(vec, str) else vec).cast("array<double>")
-    norm = F.sqrt(col_norm_sq(v))
-    return F.transform(v, lambda x: F.when(norm == 0, F.lit(0.0)).otherwise(x / norm))
+    v = sql_operand(vec_col)
+    norm = f"sqrt({sql_norm_sq(v)})"
+    return F.expr(f"transform({v}, __u -> CASE WHEN {norm} = 0 THEN 0D ELSE __u / {norm} END)")
 
 
 def normalize_sql(col: str = "embedding") -> str:
@@ -43,14 +42,13 @@ def normalize_sql(col: str = "embedding") -> str:
     )
 
 
-def project(vec: Column | str, planes: np.ndarray, decimals: int = 6) -> Column:
+def project(vec_col: str, planes: np.ndarray, decimals: int = 6) -> Column:
     """array<double> of per-plane inner products, rounded for oracle parity."""
-    return F.array(
-        *[
-            F.round(inner_product(vec, [float(x) for x in p]), decimals)
-            for p in planes
-        ]
+    v = sql_operand(vec_col)
+    terms = ", ".join(
+        f"round({sql_distance('ip', v, sql_vec_lit(p))}, {int(decimals)})" for p in planes
     )
+    return F.expr(f"array({terms})")
 
 
 def project_sql(col: str, planes: np.ndarray, decimals: int = 6) -> str:

@@ -33,12 +33,12 @@ doubles, src/storage/index/*.cpp); north-star scale extension.
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..fold import col_dot, col_l2_sq, col_norm_sq
-from ..functions.vector import vec_lit
+from .. import fold
 
 
 def dim_stats(df: DataFrame, vec_col: str) -> DataFrame:
@@ -63,70 +63,57 @@ class SQ8Model:
         rows = dim_stats(df, vec_col).orderBy("dim").collect()
         return cls([r["mn"] for r in rows], [r["mx"] for r in rows])
 
-    def _lits(self) -> tuple[Column, Column]:
-        return vec_lit(self.mins), vec_lit(self.maxs)
+    def _lits(self) -> tuple[str, str]:
+        return fold.sql_vec_lit(self.mins), fold.sql_vec_lit(self.maxs)
 
-    def encode(self, vec: Column | str) -> Column:
-        """array<int> codes in 0..255; constant dimensions encode to 0."""
-        v = (F.col(vec) if isinstance(vec, str) else vec).cast("array<double>")
+    def encode_sql(self, v: str) -> str:
+        """SQL text of the array<int> codes (0..255) of the array<double>
+        operand ``v``; constant dimensions encode to 0."""
         mn, mx = self._lits()
-        with_mn = F.zip_with(v, mn, lambda x, lo: x - lo)
-        # pair with the per-dim range, then quantize
-        return F.zip_with(
-            with_mn,
-            F.zip_with(mx, mn, lambda hi, lo: hi - lo),
-            lambda cen, rng: F.when(rng == 0, F.lit(0)).otherwise(
-                F.greatest(
-                    F.lit(0),
-                    F.least(
-                        F.lit(255), F.floor(F.lit(255.0) * cen / rng + 0.5).cast("int")
-                    ),
-                )
-            ),
+        # pair the offset from the per-dim minimum with the per-dim range
+        return (
+            f"zip_with(zip_with({v}, {mn}, (__x, __lo) -> __x - __lo), "
+            f"zip_with({mx}, {mn}, (__hi, __lo) -> __hi - __lo), "
+            "(__cen, __rng) -> CASE WHEN __rng = 0 THEN 0 ELSE greatest(0, "
+            "least(255, CAST(floor(255.0D * __cen / __rng + 0.5D) AS INT))) END)"
         )
 
-    def _decoded(self, codes: Column | str) -> Column:
-        """On-the-fly decode: mn + code·(mx−mn)/255 (matches the oracle)."""
-        c = F.col(codes) if isinstance(codes, str) else codes
+    def encode(self, vec_col: str) -> Column:
+        """array<int> codes of a vector column (:meth:`encode_sql`)."""
+        return F.expr(self.encode_sql(fold.sql_operand(vec_col)))
+
+    def _decoded(self, codes: str) -> str:
+        """On-the-fly decode of a codes operand: mn + code·(mx−mn)/255
+        (matches the oracle)."""
         mn, mx = self._lits()
-        return F.transform(
-            c, lambda code, i: F.get(mn, i) + code * (F.get(mx, i) - F.get(mn, i)) / 255.0
+        return (
+            f"transform({codes}, (__code, __i) -> "
+            f"get({mn}, __i) + __code * (get({mx}, __i) - get({mn}, __i)) / 255.0D)"
         )
 
-    def adc_dist_sq(self, codes: Column | str, query: list[float]) -> Column:
-        """Squared L2 between the full-precision query and the decoded codes
-        (asymmetric: the query is never quantized)."""
-        return col_l2_sq(self._decoded(codes), vec_lit(query))
-
-    def adc_ip(self, codes: Column | str, query: list[float]) -> Column:
-        """Asymmetric inner product ⟨decoded, q⟩ — larger is nearer
-        (vector_ip_ops; ops classes per reference catalog.h:322-331)."""
-        return col_dot(self._decoded(codes), vec_lit(query))
-
-    def adc_cosine(self, codes: Column | str, query: list[float]) -> Column:
-        """Asymmetric cosine similarity: ⟨decoded,q⟩ / (‖decoded‖·‖q‖).
-        ‖q‖ is a driver-computed literal (query-derived, same literal is
-        inlined into the oracle SQL); ‖decoded‖ is per-row."""
-        import math
-
-        decoded = self._decoded(codes)
-        dot = col_dot(decoded, vec_lit(query))
-        dn = F.sqrt(col_norm_sq(decoded))
-        qn = math.sqrt(sum(float(x) * float(x) for x in query)) or 1e-300
-        return dot / (dn * F.lit(qn))
-
-    # metric → (score builder attr, ascending?) — 'l2' orders ascending
-    # (distance), 'ip'/'cosine' descending (similarity), mirroring
-    # similarity.brute.ASCENDING
+    # metric → ascending? — 'l2' orders ascending (distance), 'ip'/'cosine'
+    # descending (similarity), mirroring similarity.brute.ASCENDING
     _METRICS = {"l2": True, "ip": False, "cosine": False}
 
-    def adc_score(self, codes: Column | str, query: list[float], metric: str) -> Column:
+    def adc_score(self, codes: str, query: list[float], metric: str) -> Column:
+        """Asymmetric score of the decoded codes (``codes``: SQL text of an
+        array<int> operand) against the full-precision query, which is
+        never quantized: squared L2 (vector_l2_ops), inner product ⟨decoded,
+        q⟩ or cosine ⟨decoded,q⟩ / (‖decoded‖·‖q‖) — larger is nearer for
+        the last two (ops classes per reference catalog.h:322-331). ‖q‖ is
+        a driver-computed literal (query-derived, same literal is inlined
+        into the oracle SQL); ‖decoded‖ is per-row."""
+        dec, q = self._decoded(codes), fold.sql_vec_lit(query)
         if metric == "l2":
-            return self.adc_dist_sq(codes, query)
+            return F.expr(fold.sql_l2_sq(dec, q))
         if metric == "ip":
-            return self.adc_ip(codes, query)
+            return F.expr(fold.sql_dot(dec, q))
         if metric == "cosine":
-            return self.adc_cosine(codes, query)
+            qn = math.sqrt(sum(float(x) * float(x) for x in query)) or 1e-300
+            return F.expr(
+                f"({fold.sql_dot(dec, q)} / "
+                f"(sqrt({fold.sql_norm_sq(dec)}) * {fold.sql_double(qn)}))"
+            )
         raise ValueError(f"unknown SQ8 metric: {metric}")
 
     def adc_topk(
@@ -143,7 +130,7 @@ class SQ8Model:
         global top-k (TakeOrderedAndProject). Ties broken by id. ``metric``
         covers all three reference ops classes (l2 ascending, ip/cosine
         descending)."""
-        codes = self.encode(vec_col)
+        codes = self.encode_sql(fold.sql_operand(vec_col))
         score = F.round(self.adc_score(codes, query, metric), 6)
         order = (
             F.col(dist_col).asc() if self._METRICS[metric] else F.col(dist_col).desc()
@@ -164,8 +151,6 @@ def sq8_adc_oracle_sql(
     every arithmetic step mirrors SQ8Model's operation order. ``metric``
     mirrors adc_topk's: l2 (squared distance, ASC), ip / cosine
     (similarity, DESC)."""
-    import math
-
     qvals = ", ".join(repr(float(x)) for x in query)
     dec = "(mn + code * (mx - mn) / 255.0)"
     if metric == "l2":

@@ -13,11 +13,12 @@ relational subset; what it cannot parse is the vector-extension surface:
 reference grammar are column refs, array literals, or function calls —
 handled with balanced-paren scanning, no SQL parser needed) and then
 macro-expands ``l2_dist`` / ``cosine_similarity`` / ``inner_product`` calls
-into their native higher-order-function SQL bodies. Expansion (rather than
-Spark 4 SQL UDFs, which are rejected inside ORDER BY) means the distance
-works in any clause and SQL queries get the exact same
-whole-stage-codegen'd Catalyst plans as the DataFrame API — zero Python on
-the data path (asserted in tests/test_sql_frontend.py). DDL (CREATE TABLE
+into ``fold.sql_distance`` text, the text the DataFrame API's distances
+are built from. Expansion (rather than Spark 4 SQL UDFs, which are rejected
+inside ORDER BY) means the distance works in any clause and SQL queries get
+the exact same Catalyst expressions as the DataFrame API — JVM-side, zero
+Python on the data path (asserted in tests/test_sql_frontend.py), though the
+higher-order functions are ``CodegenFallback`` (interpreted) in Spark 4.1.2. DDL (CREATE TABLE
 with VECTOR(n), INSERT VALUES), EXPLAIN, and SET/SHOW route through
 :class:`SqlEngine` to the engine catalog, mirroring ExecuteSql's statement
 dispatch (bustub_instance.cpp:295-331).
@@ -202,6 +203,13 @@ _INDEX_OPTIONS = {
         "pq_residual", "pq_cell_books", "cells", "n_probe", "ef_serve",
         "replicate_eps", "replicate_cap",
     }),
+}
+# WITH keys that only configure another key's tier: key -> the keys one of
+# which must be set non-zero beside it (without one the build ignores it)
+_PQ_KEYS = {"pq_m": ("pq",), "pq_k": ("pq",), "pq_residual": ("pq",)}
+_INDEX_OPTION_NEEDS = {
+    "ivfflat": {**_PQ_KEYS, "rerank": ("sq8", "pq")},
+    "hnsw": {**_PQ_KEYS, "bq_rot_seed": ("bq",)},
 }
 _INSERT_ANY_RE = re.compile(
     r"^\s*INSERT\s+INTO\s+(\w+)\s+(.*?)\s*$", re.IGNORECASE | re.DOTALL
@@ -564,6 +572,12 @@ class SqlEngine:
                     opts[k] = int(v)
                 except ValueError:  # e.g. overlap_eps = 0.2
                     opts[k] = float(v)
+            for k, needs in _INDEX_OPTION_NEEDS.get(method, {}).items():
+                if k in opts and not any(opts.get(n) for n in needs):
+                    raise ValueError(
+                        f"{method} option {k} needs "
+                        f"{' or '.join(f'{n} = 1' for n in needs)} beside it"
+                    )
             df = self.catalog.tables[table].df
             if method == "ivfflat":
                 from .index.ivfflat import IVFFlatIndex

@@ -176,7 +176,7 @@ def test_broadcast_assignment_matches_literal(emb):
         for r in emb.select(
             "vec_id",
             _nearest_centroid(
-                F.col("embedding").cast("array<double>"), idx.centroids
+                "CAST(embedding AS ARRAY<DOUBLE>)", idx.centroids
             ).alias(BUCKET_COL),
         ).collect()
     }
@@ -195,7 +195,6 @@ def test_nearest_centroid_edge_rows(spark):
     vector or an all-null row, 0 for an all-NaN row, and NaN distances
     rank last."""
     from bustub_vectordb_spark import fold
-    from bustub_vectordb_spark.functions.vector import vecs_lit
     from bustub_vectordb_spark.index.ivfflat import _nearest_centroid
 
     inf, nan = float("inf"), float("nan")
@@ -205,12 +204,10 @@ def test_nearest_centroid_edge_rows(spark):
         [inf, 0.0], [-inf, 1.0], [None, 0.0], [4.0, 4.0], [1.0],
     ]
     df = spark.createDataFrame(list(enumerate(vecs)), "id int, v array<double>")
-    dists = F.transform(
-        vecs_lit(cents), lambda c: fold.col_l2_sq(F.col("v"), c)
-    )
-    ref = (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+    dists = f"transform({fold.sql_vecs_lit(cents)}, __c -> {fold.sql_l2_sq('v', '__c')})"
+    ref = F.expr(f"CAST(array_position({dists}, array_min({dists})) - 1 AS INT)")
     rows = df.select(
-        "id", _nearest_centroid(F.col("v"), cents).alias("got"), ref.alias("want")
+        "id", _nearest_centroid("v", cents).alias("got"), ref.alias("want")
     ).orderBy("id").collect()
     assert [r["got"] for r in rows] == [r["want"] for r in rows]
     assert [r["got"] for r in rows][:6] == [1, 4, 1, None, None, 0]

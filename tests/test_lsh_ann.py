@@ -35,7 +35,7 @@ def test_row_code_matches_driver_code(emb):
     Hamming ball around its own bucket."""
     planes = make_planes(16, 64, seed=42)
     rows = (
-        emb.select("vec_id", "embedding", packed_code(F.col("embedding"), planes).alias("code"))
+        emb.select("vec_id", "embedding", packed_code("embedding", planes).alias("code"))
         .limit(20)
         .collect()
     )

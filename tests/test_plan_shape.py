@@ -66,7 +66,7 @@ def test_knn_is_take_ordered(tables):
 
     emb = tables["embeddings"]
     q = (
-        emb.withColumn("distance", l2_dist(F.col("embedding"), QUERY_VEC))
+        emb.withColumn("distance", l2_dist("embedding", QUERY_VEC))
         .orderBy("distance")
         .limit(10)
     )
@@ -307,9 +307,9 @@ def test_vector_expression_round_trips_scale_free(spark):
     centroid (or Bloom word) count, and so does the hash split of
     ``split_oversized_cells`` whatever the cell count: every literal
     (query, centroid table, Bloom words, per-cell bases) goes to the JVM as
-    one piece of SQL text, and the distance folds are a fixed number of
-    Column nodes. Built one ``F.lit`` per element, a 64×256 centroid table
-    alone was tens of thousands of round trips."""
+    one piece of SQL text, and every distance fold is one ``F.expr``.
+    Built one ``F.lit`` per element, a 64×256 centroid table alone was
+    tens of thousands of round trips."""
     import random
 
     from bustub_vectordb_spark.index import IVFFlatIndex, ShardedHNSW
@@ -372,6 +372,44 @@ def test_vector_expression_round_trips_scale_free(spark):
         for dim, lists in [(8, 4), (256, 4), (8, 64), (256, 64)]
     }
     assert all(c == counts[(8, 4)] for c in counts.values()), counts
+
+
+def test_fold_expressions_build_in_constant_round_trips(spark):
+    """Building a fold-derived expression is a few py4j commands whatever
+    the dimension and centroid count: the public distances against a 64-d
+    literal, the nearest-centroid argmin and the probe_batch /
+    search_batch routing at 4 × 8 and at 256 × 256 (lists × dim). Each is
+    one ``F.expr`` of the fold's SQL text; built through the Column DSL
+    (one command per node and per lambda variable) ``l2_dist`` took 131
+    commands and the argmin 379-392."""
+    import random
+
+    from bustub_vectordb_spark.functions.vector import cosine_similarity, l2_dist
+    from bustub_vectordb_spark.index.ivfflat import _nearest_centroid, nearest_buckets
+
+    rnd = random.Random(11)
+
+    def vec(dim):
+        return [rnd.gauss(0.0, 1.0) for _ in range(dim)]
+
+    def builds(lists, dim):
+        cents, q = [vec(dim) for _ in range(lists)], vec(64)
+        return {
+            "l2_dist": lambda: l2_dist("v", q),
+            "cosine_similarity": lambda: cosine_similarity("v", q),
+            "argmin": lambda: _nearest_centroid("`v`", cents),
+            "probe_batch_routing": lambda: nearest_buckets("l2", "qv", cents, 2),
+            "search_batch_routing": lambda: nearest_buckets("cosine", "qv", cents, 2),
+        }
+
+    for fn in builds(4, 8).values():  # first calls resolve the JVM classes
+        fn()
+    small, large = (
+        {name: _py4j_commands(spark, fn) for name, fn in builds(*size).items()}
+        for size in ((4, 8), (256, 256))
+    )
+    assert small == large, (small, large)
+    assert max(small.values()) <= 4, small
 
 
 def _analyzed_nodes(df) -> int:

@@ -174,7 +174,7 @@ def test_probe_plan_reads_codes_only(spark, emb):
     try:
         buckets = idx.rank_buckets(QUERY_VEC)[:4]
         adc = sq.codes.filter(F.col("__bucket").isin(buckets)).select(
-            "vec_id", sq.form.model.adc_dist_sq(codes_col, QUERY_VEC).alias("__adc")
+            "vec_id", sq.form.score(codes_col, QUERY_VEC, buckets, idx).alias("__adc")
         )
         buf = io.StringIO()
         with redirect_stdout(buf):

@@ -326,6 +326,34 @@ def test_create_index_refuses_unknown_with_keys(spark):
     assert not e.indexes.lookup("mt8", "v1")
 
 
+@pytest.mark.parametrize(
+    "method, opts, key, needs",
+    [
+        ("ivfflat", "lists = 1, pq_m = 2", "pq_m", "pq = 1"),
+        ("ivfflat", "lists = 1, pq_k = 4", "pq_k", "pq = 1"),
+        ("ivfflat", "lists = 1, pq = 0, pq_residual = 0", "pq_residual", "pq = 1"),
+        ("ivfflat", "lists = 1, rerank = 3", "rerank", "sq8 = 1 or pq = 1"),
+        ("hnsw", "m = 4, bq_rot_seed = 7", "bq_rot_seed", "bq = 1"),
+        ("hnsw", "shards = 2, sq8 = 1, pq_m = 2", "pq_m", "pq = 1"),
+    ],
+)
+def test_create_index_refuses_keys_without_their_tier(spark, method, opts, key, needs):
+    """A WITH key that only configures another key's tier names the missing
+    key instead of building an index that ignores it: WITH (lists = 2,
+    pq_m = 2, rerank = 3) used to build a plain ivfflat index with no
+    rerank depth."""
+    from bustub_vectordb_spark.sql import SqlEngine
+
+    e = SqlEngine(spark)
+    e.execute("CREATE TABLE mt9(v1 VECTOR(4), v2 integer)")
+    e.execute("INSERT INTO mt9 VALUES (ARRAY [1.0, 2.0, 3.0, 4.0], 1)")
+    with pytest.raises(ValueError, match=f"{method} option {key} needs {needs}"):
+        e.execute(
+            f"CREATE INDEX mn1 ON mt9 USING {method} (v1 vector_l2_ops) WITH ({opts})"
+        )
+    assert not e.indexes.lookup("mt9", "v1")
+
+
 def test_create_index_hnsw_routed_pq(spark):
     """CREATE INDEX ... USING hnsw WITH (shards=2, pq=1): the routed build
     PQ-quantizes its shard blobs (frozen codebooks in params), keeps

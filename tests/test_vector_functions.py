@@ -115,7 +115,7 @@ def test_normalize_expr_matches_python_twin_elementwise(spark):
     df = spark.createDataFrame(rows, "i long, v array<double>")
     got = {
         r["i"]: list(r["n"])
-        for r in df.select("i", _normalize_expr(F.col("v")).alias("n")).collect()
+        for r in df.select("i", _normalize_expr("v").alias("n")).collect()
     }
     for i, v in rows:
         assert got[i] == _normalize_row(v), i
@@ -184,7 +184,7 @@ def test_weighted_sample_no_id_bias_at_large_weights(spark):
 
 
 # -------------------------------------------------------------------------
-# fold.py: every Column fold and SQL-text fold vs the Python / numpy twins,
+# fold.py: every SQL-text fold vs the Python / numpy twins,
 # bit-for-bit
 # -------------------------------------------------------------------------
 _FOLD_DIM = 64
@@ -253,57 +253,60 @@ def _fold_cases():
         return -(fold.dot(v, c) / (math.sqrt(fold.norm_sq(v)) * math.sqrt(fold.norm_sq(c))))
 
     def score(dist):
-        return lambda a, b: fold.col_centroid_score(dist, a, b), None
+        return lambda a, b: fold.sql_centroid_score(dist, a, b)
 
-    def exact(dist, fn):
+    def exact(dist):
         return (
-            lambda a, b: fn(a, b),
             lambda a, b: fold.sql_distance(dist, a, b),
             lambda v, c: fold.exact(dist, v, c),
             None,
         )
 
-    # name -> (Column fold, SQL-text fold or None, Python scalar twin, numpy
-    # twins or None); the numpy twins get (rows of a, row 0 of b repeated)
-    # and return one value per row of a. The exact distances' Column folds
-    # are the public functions.vector forms.
+    # name -> (SQL-text fold over two operand texts, Python scalar twin,
+    # numpy twins or None); the numpy twins get (rows of a, row 0 of b
+    # repeated) and return one value per row of a
     return {
-        "l2_sq": (fold.col_l2_sq, fold.sql_l2_sq, fold.l2_sq, rows_l2),
-        "dot": (fold.col_dot, fold.sql_dot, fold.dot, rows_dot),
+        "l2_sq": (fold.sql_l2_sq, fold.l2_sq, rows_l2),
+        "dot": (fold.sql_dot, fold.dot, rows_dot),
         "norm_sq": (
-            lambda a, b: fold.col_norm_sq(a),
             lambda a, b: fold.sql_norm_sq(a),
             lambda v, c: fold.norm_sq(v),
             None,
         ),
         "seq_sum": (
-            lambda a, b: fold.col_seq_sum(a),
             lambda a, b: fold.sql_seq_sum(a),
             lambda v, c: fold.seq_sum(v),
             None,
         ),
-        "score_l2": (*score("l2"), fold.l2_sq, None),
-        "score_ip": (*score("ip"), lambda v, c: -fold.dot(v, c), None),
-        "score_cosine": (*score("cosine"), cos_score, None),
-        "exact_l2": exact("l2", l2_dist),
-        "exact_ip": exact("ip", inner_product),
-        "exact_cosine": exact("cosine", cosine_similarity),
+        "score_l2": (score("l2"), fold.l2_sq, None),
+        "score_ip": (score("ip"), lambda v, c: -fold.dot(v, c), None),
+        "score_cosine": (score("cosine"), cos_score, None),
+        "exact_l2": exact("l2"),
+        "exact_ip": exact("ip"),
+        "exact_cosine": exact("cosine"),
     }
+
+
+# the public functions.vector distances of the exact folds
+_PUBLIC = {"exact_l2": l2_dist, "exact_ip": inner_product, "exact_cosine": cosine_similarity}
 
 
 @pytest.mark.parametrize("name", sorted(_fold_cases()))
 def test_fold_twins_match_spark_bitwise(spark, name):
     """The Python and numpy twins of each fold.py fold return the SAME
-    doubles Spark computes from the Column fold and, where the fold has
-    one, from the SQL-text fold (over columns, and over literals
-    constant-folded on the driver), on 64-d rows that include -0.0,
-    subnormals, ±max, NaN and ±inf. The numpy forms are checked on a fresh
-    array and on a buffer offset by one float (the NOTES alignment hazard:
-    BLAS reductions drift by an ulp there, the dimension-sequential folds
-    must not)."""
+    doubles Spark computes from the SQL-text fold (over columns, and over
+    literals constant-folded on the driver) and, for the exact distances,
+    from the public ``functions.vector`` form over column names and over
+    literal vectors, on 64-d rows that include -0.0, subnormals, ±max, NaN
+    and ±inf. The numpy forms are checked on a fresh array and on a buffer
+    offset by one float (the NOTES alignment hazard: BLAS reductions drift
+    by an ulp there, the dimension-sequential folds must not)."""
     import numpy as np
 
-    col_fold, sql_fold, py_twin, np_twins = _fold_cases()[name]
+    from bustub_vectordb_spark import fold
+
+    sql_fold, py_twin, np_twins = _fold_cases()[name]
+    public = _PUBLIC.get(name)
     a_mat, b_mat = _fold_rows()
     n = len(a_mat)
     a_rows, b_rows = a_mat.tolist(), b_mat.tolist()
@@ -313,31 +316,24 @@ def test_fold_twins_match_spark_bitwise(spark, name):
     )
     cols = [
         "id",
-        col_fold(F.col("a"), F.col("b")).alias("v"),
-        col_fold(F.col("a"), F.col("b0")).alias("v0"),
+        F.expr(sql_fold(fold.sql_col("a"), fold.sql_col("b"))).alias("v"),
+        F.expr(sql_fold(fold.sql_col("a"), fold.sql_col("b0"))).alias("v0"),
     ]
-    if sql_fold is not None:
-        cols.append(F.expr(sql_fold("a", "b")).alias("s"))
+    if public is not None:
+        cols.append(public("a", "b").alias("p"))
     rows = df.select(*cols).orderBy("id").collect()
-    lits = None
-    if sql_fold is not None:
-        lits = (
-            spark.range(1)
-            .select(
-                *[
-                    F.expr(
-                        sql_fold(_sql_lit(a_rows[i]), _sql_lit(b_rows[i]))
-                    ).alias(f"l{i}")
-                    for i in range(n)
-                ]
-            )
-            .collect()[0]
-        )
+    lit_cols = [
+        F.expr(sql_fold(_sql_lit(a_rows[i]), _sql_lit(b_rows[i]))).alias(f"l{i}")
+        for i in range(n)
+    ]
+    if public is not None:
+        lit_cols += [public(a_rows[i], b_rows[i]).alias(f"pl{i}") for i in range(n)]
+    lits = spark.range(1).select(*lit_cols).collect()[0]
     for i, r in enumerate(rows):
         want = _bits(py_twin(a_rows[i], b_rows[i]))
-        got = [r["v"]]
-        if lits is not None:
-            got += [r["s"], lits[f"l{i}"]]
+        got = [r["v"], lits[f"l{i}"]]
+        if public is not None:
+            got += [r["p"], lits[f"pl{i}"]]
         assert [_bits(g) for g in got] == [want] * len(got), (name, i)
     if np_twins is None:
         return
@@ -353,11 +349,37 @@ def test_fold_twins_match_spark_bitwise(spark, name):
                 assert [_bits(float(x)) for x in vals] == want, name
 
 
+def test_fold_operands_quote_names_and_struct_fields(spark):
+    """An operand column whose name needs backticks (a space, a backtick)
+    and a struct-field operand (``s.inner``) reach the same doubles as
+    :func:`fold.l2_sq`, through the text fold and the public distance."""
+    from bustub_vectordb_spark import fold
+
+    a_mat, b_mat = _fold_rows()
+    a_rows, b_rows = a_mat.tolist(), b_mat.tolist()
+    df = spark.createDataFrame(
+        [(i, a_rows[i], (b_rows[i],)) for i in range(len(a_rows))],
+        "id int, `query vec` array<double>, s struct<inner: array<double>>",
+    ).withColumnRenamed("query vec", "q`vec x")
+    rows = df.select(
+        "id",
+        F.expr(
+            fold.sql_l2_sq(fold.sql_operand("q`vec x"), fold.sql_operand("s.inner"))
+        ).alias("sq"),
+        l2_dist("q`vec x", "s.inner").alias("d"),
+    ).orderBy("id").collect()
+    for i, r in enumerate(rows):
+        want = fold.l2_sq(a_rows[i], b_rows[i])
+        assert _bits(r["sq"]) == _bits(want), i
+        assert _bits(r["d"]) == _bits(math.sqrt(want)), i
+
+
 @pytest.mark.parametrize("dist", ["l2", "ip", "cosine"])
 def test_rank_centroids_matches_spark_array_sort(spark, dist):
     """``fold.rank_centroids`` (driver-side routing of a point probe) ranks
-    centroids exactly as the batch paths route in codegen: Spark's
-    ``array_sort`` over (``col_centroid_score``, index) structs. The
+    centroids exactly as the batch paths route in Spark:
+    ``fold.sql_nearest_centroids``, an ``array_sort`` over
+    (``sql_centroid_score``, index) structs. The
     centroid sets are ulp-close copies of one vector, so any differently
     rounded score (``math.dist`` against the l2² fold) reorders
     near-ties."""
@@ -379,17 +401,8 @@ def test_rank_centroids_matches_spark_array_sort(spark, dist):
             cents.append(c.tolist())
         rows.append((i, q.tolist(), cents))
     df = spark.createDataFrame(rows, "id int, q array<double>, c array<array<double>>")
-    ranked = F.transform(
-        F.array_sort(
-            F.transform(
-                F.col("c"),
-                lambda c, i: F.struct(
-                    fold.col_centroid_score(dist, F.col("q"), c).alias("d"),
-                    i.alias("b"),
-                ),
-            )
-        ),
-        lambda s: s["b"],
+    ranked = F.expr(
+        fold.sql_nearest_centroids(dist, fold.sql_col("q"), fold.sql_col("c"), 12)
     )
     got = {r["id"]: list(r["r"]) for r in df.select("id", ranked.alias("r")).collect()}
     for i, q, cents in rows:

@@ -12,10 +12,14 @@ two commits' outputs and oracles can be compared byte for byte:
 
     python tools/check_oracle.py SF > a.txt   # at commit A
     python tools/check_oracle.py SF > b.txt   # at commit B
-    diff <(grep -o '^[A-Za-z]* [^ :]*\|repr:[0-9a-f]*\|oracle:[0-9a-f]*' a.txt) \
-         <(grep -o '^[A-Za-z]* [^ :]*\|repr:[0-9a-f]*\|oracle:[0-9a-f]*' b.txt)
+    python tools/check_oracle.py --diff a.txt b.txt
+
+``--diff`` lists every entry whose ``repr`` or ``oracle`` hash differs
+between the two runs, or that only one run has, and exits non-zero if
+there is any.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+       python tools/check_oracle.py --diff A.txt B.txt
 """
 
 from __future__ import annotations
@@ -23,6 +27,7 @@ from __future__ import annotations
 import hashlib
 import math
 import os
+import re
 import sys
 import time
 
@@ -68,6 +73,40 @@ def hashes(cols, rows, sql: str | None = None) -> str:
     if sql is not None:
         out += f" oracle:{hashlib.sha256(sql.encode()).hexdigest()[:16]}"
     return out
+
+
+def run_hashes(path: str) -> dict[str, dict[str, str]]:
+    """entry name -> its ``repr`` / ``oracle`` hashes in one run's output
+    (an entry that failed before hashing maps to an empty dict)."""
+    out: dict[str, dict[str, str]] = {}
+    with open(path) as f:
+        for line in f:
+            m = re.match(r"(?:PASS|weak|FAIL) ([^\s:]+)|\s+(\S+) spark output ", line)
+            if m:
+                name = m.group(1) or m.group(2)
+                out.setdefault(name, {}).update(re.findall(r"\b(repr|oracle):([0-9a-f]+)", line))
+    return out
+
+
+def diff(a_path: str, b_path: str) -> int:
+    """Print the entries whose hashes differ between two runs; 1 if any."""
+    a, b = run_hashes(a_path), run_hashes(b_path)
+    n_diff = 0
+    for name in sorted(a.keys() | b.keys()):
+        if name not in a or name not in b:
+            print(f"{name}: only in {a_path if name in a else b_path}")
+            n_diff += 1
+            continue
+        changed = [
+            f"{k} {a[name].get(k)} -> {b[name].get(k)}"
+            for k in ("repr", "oracle")
+            if a[name].get(k) != b[name].get(k)
+        ]
+        if changed:
+            print(f"{name}: {', '.join(changed)}")
+            n_diff += 1
+    print(f"{len(a.keys() & b.keys())} entries in both, {n_diff} differ")
+    return 1 if n_diff else 0
 
 
 def main():
@@ -163,4 +202,8 @@ def main():
 
 
 if __name__ == "__main__":
+    if sys.argv[1:2] == ["--diff"]:
+        if len(sys.argv) != 4:
+            sys.exit("usage: check_oracle.py --diff A.txt B.txt")
+        sys.exit(diff(sys.argv[2], sys.argv[3]))
     sys.exit(main())
