@@ -61,6 +61,16 @@ def sql_vecs_lit(rows: Sequence[Sequence[float]]) -> str:
     return sql_lit([[float(v) for v in r] for r in rows], "array<array<double>>")
 
 
+def sql_int_in(name: str, values: Sequence[int]) -> str:
+    """``name IN (values)`` as ``array_contains`` over one literal array.
+    Spark writes an IN list's integers into the generated code, so every
+    new set (a probe's buckets) compiles a new class; the folded array
+    literal is passed by reference, so one compiled class serves every
+    set. A partition column keeps its pruning, but the optimizer cannot
+    reason about the set (no contradiction with a ``NOT col IN`` filter)."""
+    return f"array_contains({sql_lit([int(v) for v in values], 'array<int>')}, {sql_col(name)})"
+
+
 def sql_operand(x: str | Sequence[float]) -> str:
     """A column name cast to array<double>, or a literal vector."""
     if isinstance(x, str):

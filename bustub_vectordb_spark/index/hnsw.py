@@ -2087,7 +2087,7 @@ class ShardedHNSW:
         import pickle
 
         import pandas as pd
-        from pyspark.sql import functions as F
+        from pyspark.sql import Observation, functions as F
 
         from ..shipping import ensure_package_on_workers
         from .ivfflat import assign_nearest
@@ -2117,21 +2117,27 @@ class ShardedHNSW:
             rows.select(F.col(self.id_col).alias("__nid"), vec.alias("__nv")),
             "__nv", self.centroids, "__shard",
         ).withColumn("__shard", F.col("__shard").cast("long"))
-        # PIN the routing before anything reads it twice: the assignment is
-        # collected below (tids) AND re-evaluated when the delta upsert
-        # runs; with a non-deterministic rows plan (sample/rand, or shuffle
-        # recomputation after executor loss) the two evaluations could
+        # PIN the routing before anything reads it twice: the touched shard
+        # ids (tids) come from it AND the delta upsert re-reads it; with a
+        # non-deterministic rows plan (sample/rand, or shuffle
+        # recomputation after executor loss) two evaluations could
         # disagree — a row routing to a shard not in tids would create a
         # duplicate shard row next to the untouched view's old blob. The
         # eager checkpoint materializes the assignment ONCE (O(batch), the
         # rows were about to shuffle anyway); both reads see the same rows.
-        routed = routed.localCheckpoint(eager=True)
+        # tids are observed on the checkpoint's own job, so learning them
+        # costs no job of its own; the observation also completes when no
+        # row routes, and on a zero-partition input, which runs no job.
+        seen = Observation()
+        routed = routed.observe(
+            seen, F.collect_set("__shard").alias("tids")
+        ).localCheckpoint(eager=True)
         # only TOUCHED shards enter the upsert pass: the shard-id list is
         # bounded driver state (like the centroid table), untouched blob
         # bytes are never deserialized, shuffled, or re-checkpointed
         from ..shipping import release_checkpoint
 
-        tids = [r["__shard"] for r in routed.select("__shard").distinct().collect()]
+        tids = seen.get["tids"]
         if not tids:  # empty insert: nothing routes anywhere
             release_checkpoint(routed)
             return self
@@ -2319,9 +2325,12 @@ class ShardedHNSW:
 
         src = self.blobs
         if n_probe is not None and self.centroids is not None:
-            src = src.filter(
-                F.col("shard").isin(self.rank_shards(q)[:n_probe])
-            )
+            # an IN list, not fold.sql_int_in: the optimizer sees that a
+            # probe of a just-touched shard contradicts the older branches'
+            # `NOT shard IN (tids)` and drops them (n_probe=1 right after a
+            # one-row insert scans that insert's delta alone); an
+            # array_contains hides the set and scans every leaf of the chain
+            src = src.filter(F.col("shard").isin(self.rank_shards(q)[:n_probe]))
         if allowed_df is not None:
             # inner join: shards holding no allowed ids are pruned before
             # their graph is even unpickled

@@ -569,7 +569,7 @@ class IVFFlatIndex:
         p = probe_lists if probe_lists is not None else self.probe_lists
         buckets = self.rank_buckets(query)[:p]
         fn = DIST_FNS[self.dist]
-        cand = self.assignments.filter(F.col(BUCKET_COL).isin(buckets))
+        cand = self.assignments.filter(F.expr(fold.sql_int_in(BUCKET_COL, buckets)))
         if where is not None:
             cand = cand.filter(where)
         out = cand.withColumn(dist_col, fn(self.vec_col, query))
@@ -620,15 +620,21 @@ class IVFFlatIndex:
         # distance scoring below is CPU-bound; an under-partitioned query
         # side (one file split) would pin it to one core (cf. dedup.minhash
         # _spread — same rationale, no-op at scale where inputs have
-        # thousands of splits). Partition by qid ALONE (r13): the item
-        # side broadcasts, so the join preserves this clustering and the
-        # per-query top-k window REUSES it — hashpartitioning(qid, bucket)
-        # cannot satisfy the window's qid distribution, which forced a
+        # thousands of splits). Partition by qid ALONE (r13): when the item
+        # side broadcasts, the join keeps this clustering and the per-query
+        # top-k window reuses it — hashpartitioning(qid, bucket) cannot
+        # satisfy the window's qid distribution, which forced a
         # partial/final WindowGroupLimit split around a second exchange
         # (measured 0.58-0.72 -> 0.40-0.44 s warm at sf0.1; 2 fewer
-        # exchanges, identical rows). Granularity is one task per group
-        # of qids (a query's probe_lists buckets score in one task, same
-        # total pair count); queries >> cores keeps tasks balanced.
+        # exchanges, identical rows). Which side broadcasts is Spark's
+        # size-based choice: a cached query side with enough partitions
+        # skips this repartition and is the side that broadcasts
+        # (BuildLeft), so the window then adds Exchange
+        # hashpartitioning(qid) with that partial/final split (the
+        # batch-probe plan of a 64-query cached DataFrame against 2,000
+        # rows). Granularity is one task per group of qids (a query's
+        # probe_lists buckets score in one task, same total pair count);
+        # queries >> cores keeps tasks balanced.
         want = queries.sparkSession.sparkContext.defaultParallelism
         if queries.rdd.getNumPartitions() < want:
             q = q.repartition(want, "qid")

@@ -347,7 +347,8 @@ class IVFCodesIndex:
             raise ValueError(f"rerank must be >= 1 (got {rerank})")
         form = self.form
         buckets = self.ivf.rank_buckets(query)[: (probe_lists or self.ivf.probe_lists)]
-        cand = self.codes.filter(F.col(BUCKET_COL).isin(buckets))
+        in_buckets = F.expr(fold.sql_int_in(BUCKET_COL, buckets))
+        cand = self.codes.filter(in_buckets)
         if where is not None:
             allowed = self.ivf.assignments.filter(where).select(self.id_col)
             cand = cand.join(allowed, self.id_col, "left_semi")
@@ -365,7 +366,7 @@ class IVFCodesIndex:
         # raw-vector fetch: only the probed buckets are scanned (partition
         # pruning on bucket-partitioned storage) and only shortlist ids
         # survive the broadcast semi-join
-        raw = self.ivf.assignments.filter(F.col(BUCKET_COL).isin(buckets)).select(
+        raw = self.ivf.assignments.filter(in_buckets).select(
             F.col(self.id_col), F.col(self.vec_col)
         )
         exact = DIST_FNS[self.ivf.dist](self.vec_col, query)

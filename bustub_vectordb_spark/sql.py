@@ -211,6 +211,18 @@ _INDEX_OPTION_NEEDS = {
     "ivfflat": {**_PQ_KEYS, "rerank": ("sq8", "pq")},
     "hnsw": {**_PQ_KEYS, "bq_rot_seed": ("bq",)},
 }
+# hnsw WITH keys that only the routed build reads -> what they configure
+# there; a driver-mode build (no shards, at most HNSW_DRIVER_BUILD_MAX_ROWS
+# rows) serves one exact full-precision graph and refuses them
+_HNSW_ROUTED_ONLY = {
+    "n_probe": "shard probing",
+    **dict.fromkeys(
+        ("sq8", "pq", "pq_m", "pq_k", "pq_residual", "bq", "bq_rot_seed"),
+        "shard codes",
+    ),
+    "rerank_mult": "rerank serving",
+    "rerank_harvest_ef": "rerank serving",
+}
 _INSERT_ANY_RE = re.compile(
     r"^\s*INSERT\s+INTO\s+(\w+)\s+(.*?)\s*$", re.IGNORECASE | re.DOTALL
 )
@@ -955,17 +967,15 @@ class SqlEngine:
                             )
                         idx.params["rerank_harvest_ef"] = hef
                 else:
-                    for opt in ("rerank_mult", "rerank_harvest_ef"):
-                        if opt in opts:
-                            # a driver-mode hnsw build serves exact
-                            # full-precision walks — there is no rerank
-                            # stage for these to configure; silently
-                            # dropping them hid misconfigured DDL
+                    for opt in opts:
+                        if opt in _HNSW_ROUTED_ONLY:
+                            # silently dropping these hid misconfigured DDL
                             raise ValueError(
-                                f"{opt} configures routed/sharded rerank "
-                                "serving — add shards=N (or exceed the "
-                                "driver-build row cap) to opt into the "
-                                "routed tier"
+                                f"{opt} configures routed/sharded "
+                                f"{_HNSW_ROUTED_ONLY[opt]}, which a driver-"
+                                "mode hnsw build has none of — add shards=N "
+                                "(or exceed the driver-build row cap) to opt "
+                                "into the routed tier"
                             )
                     idx = HNSWIndex.build(df, col, id_col, **common)
             self.indexes.create(
@@ -1080,22 +1090,42 @@ class SqlEngine:
         self.catalog.register(table, new, info.vector_lengths)
         return n
 
-    def _append(self, table: str, new: DataFrame) -> int:
-        info = self.catalog.tables[table]
+    def _typed(self, table: str, new: DataFrame) -> DataFrame:
+        """``new`` cast to ``table``'s schema, columns matched by position."""
         # toDF renames positionally — robust to duplicate source column
         # names (e.g. SELECT ..., 0, 0 FROM, p3.19-integration-2.slt)
-        renamed = new.toDF(*[f.name for f in info.schema.fields])
-        cast = renamed.select(
-            *[F.col(f.name).cast(f.dataType) for f in info.schema.fields]
-        )
-        n = cast.count()
-        self.catalog.register(table, info.df.unionByName(cast), info.vector_lengths)
-        return n
+        fields = self.catalog.tables[table].schema.fields
+        renamed = new.toDF(*[f.name for f in fields])
+        return renamed.select(*[F.col(f.name).cast(f.dataType) for f in fields])
+
+    def _append(self, table: str, typed: DataFrame) -> None:
+        info = self.catalog.tables[table]
+        self.catalog.register(table, info.df.unionByName(typed), info.vector_lengths)
 
     def _insert(self, table: str, values_clause: str) -> int:
-        return self._append(
+        """INSERT ... VALUES: the driver parsed these rows, so it counts
+        and checks them itself. The typed VALUES relation optimizes to a
+        local relation, and collecting one runs no Spark job where a
+        count() runs two; the casts still fail here, at INSERT."""
+        typed = self._typed(
             table, self.spark.sql(f"SELECT * FROM (VALUES {rewrite(values_clause)})")
         )
+        rows = typed.collect()
+        for col, n in self.catalog.tables[table].vector_lengths.items():
+            for r in rows:
+                if r[col] is not None and len(r[col]) != n:
+                    raise ValueError(
+                        f"INSERT INTO {table}: column {col} is VECTOR({n}), "
+                        f"got a vector of length {len(r[col])}"
+                    )
+        self._append(table, typed)
+        return len(rows)
 
     def _insert_select(self, table: str, select_stmt: str) -> int:
-        return self._append(table, self.spark.sql(rewrite(select_stmt)))
+        """INSERT ... SELECT: the rows exist only in Spark, so counting
+        them is a job (their VECTOR(n) lengths go unchecked: that would be
+        another)."""
+        typed = self._typed(table, self.spark.sql(rewrite(select_stmt)))
+        n = typed.count()
+        self._append(table, typed)
+        return n

@@ -927,6 +927,34 @@ def test_sharded_insert_delta_and_compaction(emb, spark, monkeypatch):
     assert idx.insert(empty) is idx
 
 
+def test_sharded_insert_of_empty_input_answers_as_before(emb, spark):
+    """An insert that routes no row returns the same index, which answers
+    as before: for an input with no partitions (its routing checkpoint
+    runs no job, so the touched-shard observation must complete without
+    one) and for rows filtered away. Each insert runs in a daemon thread
+    under a timeout, so an observation that never completes fails the
+    test instead of hanging it."""
+    import threading
+
+    routed = HNSWIndex.build_routed(
+        emb, "embedding", "vec_id", shards=4, m=8, ef_construction=48, ef_search=48
+    )
+    before = routed.probe(QUERY, 5, n_probe=4).collect()
+    schema = "vec_id long, embedding array<double>"
+    inputs = {
+        "zero partitions": spark.createDataFrame(spark.sparkContext.emptyRDD(), schema),
+        "filtered to empty": emb.select("vec_id", "embedding").filter(F.col("vec_id") < 0),
+    }
+    for name, rows in inputs.items():
+        got = []
+        t = threading.Thread(target=lambda: got.append(routed.insert(rows)), daemon=True)
+        t.start()
+        t.join(timeout=120)
+        assert not t.is_alive(), f"{name}: insert did not return within 120 s"
+        assert got and got[0] is routed, name
+        assert got[0].probe(QUERY, 5, n_probe=4).collect() == before, name
+
+
 def test_search_batch_chunked_rows_bounded_and_identical(emb, spark):
     """r6 scale fix: search_batch groups a shard's queries into BOUNDED
     (shard, chunk) collect_list rows instead of one row per shard (which

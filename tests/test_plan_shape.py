@@ -279,6 +279,85 @@ def test_index_build_job_counts(spark, tables):
     assert got == {"ivfflat": 6, "hnsw_routed": 6, "vamana": 6}, got
 
 
+def test_write_job_counts(spark, tables):
+    """Spark jobs of the write paths. SQL ``INSERT ... VALUES`` counts and
+    checks the rows the driver parsed, so it runs none (a ``count()`` ran
+    2). ``INSERT ... SELECT`` rows exist only in Spark: its count stays
+    (2 jobs). A one-row routed HNSW insert observes the shards it touches
+    on its routing checkpoint's job: 4 jobs, where a separate
+    ``distinct().collect()`` of the shard ids made it 6."""
+    from bustub_vectordb_spark.index import HNSWIndex
+    from bustub_vectordb_spark.shipping import release_checkpoint
+    from bustub_vectordb_spark.sql import SqlEngine
+
+    e = SqlEngine(spark)
+    e.execute("CREATE TABLE wj(id integer, v VECTOR(2))")
+    emb = tables["embeddings"].filter(F.col("vec_id") != -104729)
+    routed = HNSWIndex.build_routed(emb, "embedding", "vec_id", shards=4)
+    row = emb.limit(1).collect()[0]
+    new = spark.createDataFrame(
+        [(-1, list(row["embedding"]))], "vec_id long, embedding array<double>"
+    )
+    out = {}
+    got = {
+        "insert_values": _job_count(
+            spark, "jobs-insert-values",
+            lambda: out.setdefault("values", e.execute(
+                "INSERT INTO wj VALUES (1, ARRAY[1.0, 2.0]), (2, NULL)"
+            )),
+        ),
+        "insert_select": _job_count(
+            spark, "jobs-insert-select",
+            lambda: out.setdefault("select", e.execute(
+                "INSERT INTO wj SELECT id + 10, v FROM wj"
+            )),
+        ),
+        "routed_insert": _job_count(
+            spark, "jobs-routed-insert",
+            lambda: out.setdefault("routed", routed.insert(new)),
+        ),
+    }
+    assert (out["values"], out["select"]) == (2, 2)
+    assert sorted(r["id"] for r in e.execute("SELECT id FROM wj").collect()) == [1, 2, 11, 12]
+    hits = out["routed"].probe(list(row["embedding"]), 2, n_probe=4).collect()
+    assert {r["vec_id"] for r in hits} == {-1, row["vec_id"]}
+    for leaf in out["routed"]._leaves:
+        release_checkpoint(leaf)
+    assert got == {"insert_values": 0, "insert_select": 2, "routed_insert": 4}, got
+
+
+def test_probe_bucket_sets_compile_nothing_new(spark, tables):
+    """IVFFlat and IVF codes point probes that scan different bucket sets
+    reuse one generated class: the set is a literal array passed by
+    reference (``fold.sql_int_in``), not an IN list whose integers Spark
+    writes into the generated code (about 2 compiles per new set)."""
+    import random
+
+    from bustub_vectordb_spark.index import IVFFlatIndex
+    from bustub_vectordb_spark.shipping import release_checkpoint
+    from bustub_vectordb_spark.similarity.ivfcodes import IVFCodesIndex, SQ8Codes
+
+    emb = tables["embeddings"].filter(F.col("vec_id") != -130363)
+    ivf = IVFFlatIndex.build(emb, "embedding", lists=8, probe_lists=2)
+    sq = IVFCodesIndex.build(ivf, "embedding", "vec_id", SQ8Codes())
+    rnd = random.Random(11)
+    queries = [[rnd.gauss(0.0, 1.0) for _ in range(64)] for _ in range(8)]
+    assert len({tuple(ivf.rank_buckets(q)[:2]) for q in queries}) >= 3
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = {}
+    for name, probe in (
+        ("ivfflat", lambda q: ivf.probe(q, 5)),
+        ("ivf_sq8", lambda q: sq.probe(q, 5, rerank=2)),
+    ):
+        probe(queries[0]).collect()
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        for q in queries[1:]:
+            probe(q).collect()
+        compiles[name] = metrics.METRIC_COMPILATION_TIME().getCount() - before
+    release_checkpoint(ivf.assignments)
+    assert compiles == {"ivfflat": 0, "ivf_sq8": 0}, compiles
+
+
 def _py4j_commands(spark, fn) -> int:
     """py4j commands the driver sends to the JVM while ``fn`` runs. Proxy
     garbage-collection commands are left out: they follow Python's

@@ -59,3 +59,10 @@ def test_ivfflat_probe_is_partition_pruning(spark, tables, tmp_path):
     p = buf.getvalue()
     part_line = p.split("PartitionFilters")[1].splitlines()[0]
     assert BUCKET_COL in part_line and "IN" in part_line.upper()
+    # the probe itself tests bucket membership with array_contains over a
+    # literal array (fold.sql_int_in), and that still prunes partitions
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        loaded.probe([0.0] * 64, 5).explain("formatted")
+    part_line = buf.getvalue().split("PartitionFilters")[1].splitlines()[0]
+    assert BUCKET_COL in part_line and "array_contains" in part_line

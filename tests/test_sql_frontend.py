@@ -354,6 +354,63 @@ def test_create_index_refuses_keys_without_their_tier(spark, method, opts, key, 
     assert not e.indexes.lookup("mt9", "v1")
 
 
+def test_insert_values_checks_types_and_vector_lengths(spark):
+    """INSERT ... VALUES checks its rows on the driver: a vector of the
+    wrong length for VECTOR(n) is refused by table, column, n and length
+    (it used to be stored, and its NULL distance sorted it first in every
+    KNN query), a NULL vector is stored, and a value that does not cast to
+    the column type fails at INSERT. A refused INSERT stores no row."""
+    from bustub_vectordb_spark.sql import SqlEngine
+
+    e = SqlEngine(spark)
+    e.execute("CREATE TABLE vl(id integer, v VECTOR(3))")
+    assert e.execute("INSERT INTO vl VALUES (1, ARRAY[1.0, 2.0, 3.0]), (2, NULL)") == 2
+    with pytest.raises(ValueError, match=r"vl: column v is VECTOR\(3\), got .* length 2"):
+        e.execute("INSERT INTO vl VALUES (4, ARRAY[9.0, 9.0, 9.0]), (3, ARRAY[1.0, 2.0])")
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        e.execute("INSERT INTO vl VALUES ('abc', ARRAY[1.0, 2.0, 3.0])")
+    assert e.execute("INSERT INTO vl SELECT id + 10, v FROM vl") == 2
+    got = e.execute("SELECT id, v FROM vl").collect()
+    assert sorted((r["id"], r["v"]) for r in got if r["v"]) == [
+        (1, [1.0, 2.0, 3.0]), (11, [1.0, 2.0, 3.0])
+    ]
+    assert sorted(r["id"] for r in got if r["v"] is None) == [2, 12]
+
+
+@pytest.mark.parametrize(
+    "opts",
+    [
+        "n_probe = 3",
+        "sq8 = 1",
+        "pq = 1",
+        "pq_m = 2, pq = 1",
+        "pq_k = 4, pq = 1",
+        "pq_residual = 1, pq = 1",
+        "bq = 1",
+        "bq_rot_seed = 7, bq = 1",
+        "rerank_mult = 8",
+        "rerank_harvest_ef = 32",
+    ],
+)
+def test_create_index_driver_hnsw_refuses_routed_keys(spark, opts):
+    """A driver-mode hnsw build (no shards, under the driver-build row cap)
+    serves one full-precision graph: it has no shards to probe, no codes
+    and no rerank stage, so every key that configures those is refused by
+    name. WITH (m = 4, sq8 = 1, n_probe = 3) used to register a plain
+    graph with neither."""
+    from bustub_vectordb_spark.sql import SqlEngine
+
+    e = SqlEngine(spark)
+    e.execute("CREATE TABLE mr1(v1 VECTOR(4), v2 integer)")
+    e.execute("INSERT INTO mr1 VALUES (ARRAY [1.0, 2.0, 3.0, 4.0], 1)")
+    key = opts.split(" ")[0]
+    with pytest.raises(ValueError, match=f"^{key} configures routed/sharded .*shards=N"):
+        e.execute(
+            f"CREATE INDEX mr2 ON mr1 USING hnsw (v1 vector_l2_ops) WITH (m = 4, {opts})"
+        )
+    assert not e.indexes.lookup("mr1", "v1")
+
+
 def test_create_index_hnsw_routed_pq(spark):
     """CREATE INDEX ... USING hnsw WITH (shards=2, pq=1): the routed build
     PQ-quantizes its shard blobs (frozen codebooks in params), keeps

@@ -374,6 +374,23 @@ def test_fold_operands_quote_names_and_struct_fields(spark):
         assert _bits(r["d"]) == _bits(math.sqrt(want)), i
 
 
+def test_sql_int_in_matches_isin(spark):
+    """``fold.sql_int_in`` keeps exactly the rows ``isin`` keeps, on int
+    and bigint columns, with NULLs, for an empty set and for sets of one
+    and of several values."""
+    from bustub_vectordb_spark import fold
+
+    df = spark.createDataFrame(
+        [(i, None if i % 4 == 3 else i % 6) for i in range(24)], "id int, b int"
+    )
+    for col_type in ("int", "bigint"):
+        typed = df.withColumn("b", F.col("b").cast(col_type))
+        for values in ([], [2], [5, 0, 2]):
+            want = typed.filter(F.col("b").isin(values)).select("id").collect()
+            got = typed.filter(F.expr(fold.sql_int_in("b", values))).select("id").collect()
+            assert sorted(got) == sorted(want), (col_type, values)
+
+
 @pytest.mark.parametrize("dist", ["l2", "ip", "cosine"])
 def test_rank_centroids_matches_spark_array_sort(spark, dist):
     """``fold.rank_centroids`` (driver-side routing of a point probe) ranks
